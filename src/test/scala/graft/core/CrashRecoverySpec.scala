@@ -1,6 +1,6 @@
 package graft.core
 
-import graft.SparkSpec
+import graft.{SparkSpec, TestCorpus}
 import graft.apps.ReferenceApps
 import org.apache.spark.TaskContext
 import org.apache.spark.util.LongAccumulator
@@ -25,10 +25,14 @@ import scala.jdk.CollectionConverters._
   * discards accumulator updates from FAILED attempts, so counting at
   * crash time would read zero; a nonzero retry count is only possible
   * if an attempt-0 task really threw and was re-executed.
+  *
+  * Input is [[graft.TestCorpus]], the in-repo 8-file corpus: the
+  * contract is about task re-execution, not about the Gutenberg text.
   */
 class CrashRecoverySpec extends SparkSpec {
 
-  private val corpusGlob = "/root/reference/src/main/pg-*.txt"
+  private lazy val corpusDir: String = TestCorpus.write(bodyTokens = 20000)
+  private def corpusGlob: String = TestCorpus.glob(corpusDir)
 
   private def readSorted(outDir: String): Seq[String] =
     Files.list(Paths.get(outDir)).iterator().asScala
@@ -71,9 +75,7 @@ class CrashRecoverySpec extends SparkSpec {
       CrashRecoverySpec.crashingMap(ReferenceApps.profileMap, mapRetries),
       CrashRecoverySpec.crashingReduce(ReferenceApps.profileReduce, reduceRetries))
 
-    val corpus = Files.list(Paths.get("/root/reference/src/main")).iterator().asScala
-      .filter(_.getFileName.toString.matches("pg-.*\\.txt")).toVector.sortBy(_.toString)
-      .map(p => p.getFileName.toString -> new String(Files.readAllBytes(p), UTF_8))
+    val corpus = TestCorpus.read(corpusDir)
     val oracle = MapReduce
       .sequentialOracle(corpus, ReferenceApps.profileMap, ReferenceApps.profileReduce)
       .map(kv => s"${kv.key} ${kv.value}").sorted

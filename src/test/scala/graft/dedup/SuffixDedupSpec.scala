@@ -1,6 +1,6 @@
 package graft.dedup
 
-import graft.SparkSpec
+import graft.{SparkSpec, TestCorpus}
 import org.apache.spark.sql.functions._
 
 class SuffixDedupSpec extends SparkSpec {
@@ -140,19 +140,17 @@ class SuffixDedupSpec extends SparkSpec {
       "the 80-token span exactly; the 49-token span below threshold")
   }
 
-  test("real text: Gutenberg license boilerplate surfaces as cross-book spans") {
+  /** The 8 `pg-*.txt` files under `corpusDir` as documents in `dir`,
+    * then the boilerplate contract: a long block shared by every book
+    * surfaces as cross-book spans and pair matches. */
+  private def boilerplateCheck(corpusDir: String, dir: String): Unit = {
     import spark.implicits._
-    // the reference's actual 3.3 MB book corpus (~600k tokens, real
-    // English vocabulary) — every Project Gutenberg file carries the
-    // same license boilerplate, which is EXACTLY the cross-document
-    // duplicated-span shape this operator exists to find
     val books = graft.core.MapReduce
-      .wholeTextFiles(spark, "/root/reference/src/main/pg-*.txt")
+      .wholeTextFiles(spark, TestCorpus.glob(corpusDir))
       .toDF("name", "text")
       .select(dense_rank().over(
           org.apache.spark.sql.expressions.Window.orderBy(col("name")))
         .cast("long").as("doc_id"), col("text"))
-    val dir = "/tmp/graft_suffix_books"
     books.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val got = SuffixDedup.maximalSpans(spark, dir, minSpan = 50).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
@@ -173,6 +171,21 @@ class SuffixDedupSpec extends SparkSpec {
     assert(pairBest.size === 28, s"all C(8,2) book pairs: ${pairBest.size}")
     assert(pairBest.values.forall(_ >= 200L),
       s"license match per pair: ${pairBest.values.toSeq.sorted.take(3)}")
+  }
+
+  test("real text: Gutenberg license boilerplate surfaces as cross-book spans") {
+    // the reference's actual 3.3 MB book corpus (~600k tokens, real
+    // English vocabulary) — every Project Gutenberg file carries the
+    // same license boilerplate, which is EXACTLY the cross-document
+    // duplicated-span shape this operator exists to find
+    boilerplateCheck(TestCorpus.referenceDir(), "/tmp/graft_suffix_books")
+  }
+
+  test("in-repo text: a shared license block surfaces as cross-book spans") {
+    // the same contract on the in-repo corpus: 8 books of 40k seeded
+    // body words, each starting and ending with the same 320-token block
+    val out = java.nio.file.Files.createTempDirectory("graft-suffix-corpus").toString
+    boilerplateCheck(TestCorpus.write(bodyTokens = 40000), out)
   }
 
   test("pair matches: exact partner/offsets/length; disjoint spans stay separate") {
