@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query seconds.
@@ -9,7 +9,6 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // per-query attribution (r15 verdict "What's wrong #1"): the
     // 45s-vs-12s dedup_edit_pairs spike needed a judge re-run to
     // adjudicate because the artifact carried only wall time. These
@@ -20,35 +19,7 @@ object Bench {
     // plan itself).
     val taskMs = new java.util.concurrent.atomic.AtomicLong
     val gcMs = new java.util.concurrent.atomic.AtomicLong
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // force the SORT shuffle writer at local reduce counts (r19):
-      // with R = cpus ≤ 200 Spark picks the bypass-merge writer, which
-      // creates R partition files PER MAP TASK (M·R file creates +
-      // fsyncs + the shared IndexShuffleBlockResolver commit lock per
-      // exchange). Thread-dump sampling during 32-wide stages showed
-      // ~30% of worker time inside FileOutputStream.open0 /
-      // writeMetadataFileAndCommit — the long-unexplained uniform
-      // per-task non-CPU wait (r17/r18 widening losses, the 8c-beats-
-      // 32c inversion). Production reduce counts (> 200) never select
-      // the bypass writer, so this also makes local runs exercise the
-      // same writer path as a cluster. Measured (5-key subset, 32c):
-      // mm_image_dedup_png 5.30 → 3.50 s (task 89 → 43 s),
-      // mm_image_dedup_stream task 41.6 → 9.9 s.
-      // SPARK_GRAFT_BYPASS_THRESHOLD: dev-only A/B override (unset =
-      // the committed sort-writer behavior; the driver never sets it)
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS_THRESHOLD", "1"))
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      // if events.parquet carries TIMESTAMP(NANOS), surface it as long ns
-      // (Spark has no ns type); µs-precision fixtures arrive as
-      // TIMESTAMP/TIMESTAMP_NTZ — graft.sources.EventTime adapts per-schema
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Sessions.local()
     spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
       override def onTaskEnd(
           e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
@@ -59,50 +30,6 @@ object Bench {
         }
       }
     })
-    // opt-in per-stage diagnostics (SPARK_GRAFT_STAGE_DEBUG=1): one
-    // stderr line per completed stage — wall, summed task time, task
-    // count and the longest task — the skew/serialization breakdown
-    // the aggregate task_ms attribution can't show. Dev-loop only;
-    // never part of the JSON artifact.
-    if (sys.env.contains("SPARK_GRAFT_STAGE_DEBUG")) {
-      // per-stage rollup: run/deser/gc/cpu sums, longest task, task
-      // count, shuffle records read+written — enough to separate real
-      // row work from per-task fixed overhead (deser, GC, non-CPU wait)
-      final case class St(run: Long, mx: Long, n: Int, deser: Long,
-          gc: Long, cpuNs: Long, rRead: Long, rWrite: Long)
-      val stageTask = new java.util.concurrent.ConcurrentHashMap[Int, St]
-      spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = e.taskMetrics
-          if (m != null) stageTask.merge(e.stageId,
-            St(m.executorRunTime, m.executorRunTime, 1,
-              m.executorDeserializeTime, m.jvmGCTime, m.executorCpuTime,
-              m.shuffleReadMetrics.recordsRead,
-              m.shuffleWriteMetrics.recordsWritten),
-            (a, b) => St(a.run + b.run, math.max(a.mx, b.mx), a.n + b.n,
-              a.deser + b.deser, a.gc + b.gc, a.cpuNs + b.cpuNs,
-              a.rRead + b.rRead, a.rWrite + b.rWrite))
-        }
-        override def onStageCompleted(
-            e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          val i = e.stageInfo
-          val wall = (for {s <- i.submissionTime; c <- i.completionTime}
-            yield c - s).getOrElse(-1L)
-          // evict after printing: the map otherwise grows unboundedly
-          // over a long session and would fold any later re-attempt's
-          // tasks into a stale entry
-          val s = Option(stageTask.remove(i.stageId))
-            .getOrElse(St(0, 0, 0, 0, 0, 0, 0, 0))
-          System.err.println(f"[stage] id=${i.stageId}%-4d wall=${wall}%6dms " +
-            f"task_sum=${s.run}%7dms task_max=${s.mx}%6dms n=${s.n}%4d " +
-            f"planned=${i.numTasks}%4d deser=${s.deser}%5dms gc=${s.gc}%5dms " +
-            f"cpu=${s.cpuNs / 1000000}%7dms rin=${s.rRead}%8d rout=${s.rWrite}%8d " +
-            s"name=${i.name.takeWhile(_ != '\n').take(60)} " +
-            s"rdds=${i.rddInfos.map(_.name).filter(_ != null).distinct.mkString("|").take(120)}")
-        }
-      })
-    }
     // task-end events arrive on an async listener bus: after an action
     // returns, the counters may still be catching up. Settle = read
     // until two consecutive reads agree (50 ms apart, 2 s cap) —
@@ -123,7 +50,7 @@ object Bench {
       df.write.mode("overwrite").format("noop").save()
 
     // warmup: JIT + codegen + parquet footer caches on a small query
-    try force(SparkEntry.queries("q_wc")(spark, sfDir)) catch { case _: Throwable => () }
+    try force(SparkEntry.queries("q_wc")(spark, sfDir)) catch { case NonFatal(_) => () }
 
     // optional comma-separated query filter for local iteration
     val only = SparkEntry.parseOnlyFilter(sys.env.get("SPARK_GRAFT_ONLY"))
@@ -163,19 +90,15 @@ object Bench {
     final case class Run(wall: Double, taskMs: Long, gcMs: Long)
     val results = selected.map { case (name, fn) =>
       var lastDf: org.apache.spark.sql.DataFrame = null
-      val runsSeen = (0 until runs).map { r =>
+      val runsSeen = (0 until runs).map { _ =>
         quiesce()
-        // stage-debug runs need the [stage] lines attributable to a
-        // query without guessing from stage ids
-        if (sys.env.contains("SPARK_GRAFT_STAGE_DEBUG"))
-          System.err.println(s"[query] $name run=$r")
         // counters are already stable here: the previous run ended
         // with settle() and quiesce() runs no Spark jobs
         val (task0, gc0) = (taskMs.get, gcMs.get)
         val t0 = System.nanoTime()
         val ok =
           try { val df = fn(spark, sfDir); force(df); lastDf = df; true }
-          catch { case e: Throwable =>
+          catch { case NonFatal(e) =>
             System.err.println(s"[bench] $name failed: ${e.getClass.getName}: ${e.getMessage}")
             errors.getOrElseUpdate(name,
               s"${e.getClass.getName}: ${String.valueOf(e.getMessage).take(500)}")
@@ -189,7 +112,7 @@ object Bench {
       }
       if (lastDf != null)
         try plans(name) = graft.core.PlanFingerprint.of(lastDf)
-        catch { case e: Throwable =>
+        catch { case NonFatal(e) =>
           System.err.println(s"[bench] $name plan fingerprint failed: $e")
         }
       val best = runsSeen.minBy(_.wall)
@@ -254,7 +177,7 @@ object Bench {
             java.nio.file.StandardCopyOption.REPLACE_EXISTING)
       }
       java.nio.file.Files.writeString(java.nio.file.Paths.get(artifact), line + "\n")
-    } catch { case e: Throwable =>
+    } catch { case NonFatal(e) =>
       System.err.println(s"[bench] could not write $artifact: $e")
     }
     // the driver keeps only the LAST 2000 log chars (measured from the

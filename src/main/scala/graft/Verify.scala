@@ -1,38 +1,28 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the DuckDB oracle compare. A query that
+  * throws is recorded in `<outDir>/failed.json` (query → exception class
+  * and message; `{}` when none failed), and the run then exits 1 — after
+  * every other dump and oracle_sql.json are written. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // sort shuffle writer at local reduce counts — same rationale,
-      // evidence and measurements as Bench.scala (r19): the bypass
-      // writer's M·R file creates were the dominant per-task overhead
-      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // if events.parquet carries TIMESTAMP(NANOS), surface it as long ns
-      // (Spark has no ns type); µs-precision fixtures arrive as
-      // TIMESTAMP/TIMESTAMP_NTZ — graft.sources.EventTime adapts per-schema
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Sessions.local()
     new java.io.File(outDir).mkdirs()
     // optional comma-separated query filter for local iteration (same
     // contract as Bench); the driver never sets it, so the gate always
     // dumps the full surface
     val only = SparkEntry.parseOnlyFilter(sys.env.get("SPARK_GRAFT_ONLY"))
+    val failed = scala.collection.mutable.LinkedHashMap[String, Throwable]()
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
       .foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+      catch { case NonFatal(e) =>
+        failed(name) = e
         System.err.println(s"[verify] $name failed: ${e.getClass.getName}: ${e.getMessage}")
         Option(e.getCause).foreach(c =>
           System.err.println(s"[verify]   caused by: ${c.getClass.getName}: ${c.getMessage}"))
@@ -53,6 +43,14 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    val manifest = failed.map { case (k, e) =>
+      s"""${q(k)}: {"class": ${q(e.getClass.getName)}, "message": ${q(String.valueOf(e.getMessage).take(500))}}"""
+    }.mkString("{", ",", "}")
+    Files.writeString(Paths.get(s"$outDir/failed.json"), manifest)
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[verify] ${failed.size} queries failed: ${failed.keys.mkString(",")}")
+      sys.exit(1)
+    }
   }
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** Session-build-time injection of graft's native functions:
-  * `SparkSession.builder().withExtensions(new GraftExtensions)` or
+  * a session builder's `.withExtensions(new GraftExtensions)` or
   * `--conf spark.sql.extensions=graft.core.GraftExtensions` makes
   * `fnv_hash31` / `rolling_hash` available in every derived session
   * (cluster deployments); `GraftFunctions.register` is the post-hoc

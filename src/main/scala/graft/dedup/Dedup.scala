@@ -415,7 +415,7 @@ object Dedup {
     * the 133× rehearsal (~500 k docs) the 8-bit bands' 256 buckets
     * per band hold ~2 000 docs each, so virtually every bucket blows
     * the degenerate-bucket cap and candidate recall COLLAPSES to
-    * 0.003 (RecallBench, BENCH_NOTES r11) — the cap was doing exactly
+    * 0.003 (BENCH_NOTES r11, "banded-path RECALL measured") — the cap was doing exactly
     * what caps do, silently. The bucket space, not the cap, is the
     * broken knob: band width must grow with log n (Manku et al.,
     * "Detecting Near-Duplicates for Web Crawling", WWW 2007 — their
@@ -562,7 +562,7 @@ object Dedup {
   /** Wide-band pairs with EXACT-SIGNATURE COLLAPSE — the
     * [[EditDedup.editPairsOf]] collapse lever applied to the
     * SIGNATURE domain, motivated by a MEASURED rehearsal failure
-    * (MediaIngestBench r13 at 13×, BENCH_NOTES): tiny images hash to
+    * (the 13× ingest rehearsal, BENCH_NOTES r13): tiny images hash to
     * LOW-ENTROPY aHashes (a 2×2-block frame has ~4 independent aHash
     * cells), so at 65 k docs the 8-bit-band multi-probe scheme's
     * buckets blow the df-cap and planted-twin recall collapsed to
@@ -762,8 +762,9 @@ object Dedup {
 
   /** Iterations the last [[hashMinLabels]] run took to reach its
     * fixpoint (0 when the driver union-find path ran instead) — the
-    * scale rehearsal's observability knob ([[graft.sim.SemScaleBench]]
-    * records iterations-to-fixpoint alongside the wall). */
+    * scale rehearsal's observability knob (the r10 paper-scale
+    * SemDeDup rehearsal, BENCH_NOTES Round 9, recorded
+    * iterations-to-fixpoint alongside the wall). */
   @volatile private[graft] var lastHashMinIters: Int = 0
 
   /** Large-graph path: distributed hash-min label propagation. */
@@ -821,7 +822,7 @@ object Dedup {
     * toward the same min-id canonical labels as the driver union-find,
     * so this shares `dedup_clusters`' recursive-CTE oracle and stands
     * as the hash gate for the large-graph path (which a 100 TB corpus
-    * always takes; SemScaleBench measures it at 4.8M edges). */
+    * always takes; measured at 4.8M edges, BENCH_NOTES Round 9 r10). */
   def ngramClustersDist(spark: SparkSession, sfDir: String, tau: Double = 0.5): DataFrame =
     connectedComponents(
       documents(spark, sfDir).select(col("doc_id")),

@@ -164,8 +164,8 @@ object SemDedup {
 
   /** The assign + within-cell pairwise core over CALLER-SUPPLIED
     * vectors and trained centroids — the library surface for a corpus
-    * that does not live in an sfDir (and the scale-rehearsal entry
-    * point, [[graft.sim.SemScaleBench]]). Exactly the gate pipeline
+    * that does not live in an sfDir (and the entry point of the r10
+    * paper-scale rehearsal, BENCH_NOTES Round 9). Exactly the gate pipeline
     * minus the load and the codebook side dump. */
   def semanticOf(vecs: org.apache.spark.sql.Dataset[Vec],
       cents: Array[Kmeans.Centroid], tau: Double,

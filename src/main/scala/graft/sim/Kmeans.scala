@@ -102,28 +102,17 @@ object Kmeans {
     *    (cell, partition) order). */
   private[sim] def trainFrom(corpus: Dataset[Vec], seeds: Array[Centroid],
       iters: Int,
-      blockedAbove: Int = CentroidIndex.LinearBelow,
-      appendStages: Boolean = false): Array[Centroid] = {
+      blockedAbove: Int = CentroidIndex.LinearBelow): Array[Centroid] = {
     import corpus.sparkSession.implicits._
     val spark = corpus.sparkSession
-    // stage log is PER TRAIN RUN: the plain train/trainOrdered paths
-    // reset it on entry — without this a long-lived session's
-    // repeated small-k trains would append 'lloyd round N' entries
-    // unboundedly and bleed one bench's stage report into the next.
-    // trainParallel passes appendStages = true EXPLICITLY so its
-    // Lloyd rounds extend the seedParallel stages of the same run —
-    // composition state travels in the call, not in a shared mutable
-    // latch a seedParallel-without-trainFrom would leave dangling
-    // (ADVICE r11)
-    if (!appendStages) lastTrainStages = Nil
     var cents = seeds
     val blockedPrep =
       if (iters > 0 && seeds.length >= blockedAbove)
-        staged("lloyd blocked prepare") { PointBlocks.prepare(corpus) }
+        PointBlocks.prepare(corpus)
       else None
     lastTrainBlocked = blockedPrep.isDefined
     for (round <- 0 until iters) {
-      val sums: Array[(Int, Array[Double], Long)] = staged(s"lloyd round $round") { blockedPrep match {
+      val sums: Array[(Int, Array[Double], Long)] = blockedPrep match {
         case Some((blocked, model)) =>
           PointBlocks.assignSum(blocked, model, cents)
         case None =>
@@ -145,7 +134,7 @@ object Kmeans {
             .collect()
           bc.destroy()
           s
-      } }
+      }
       val byCell = sums.map { case (cell, sum, _) => cell -> sum }.toMap
       cents = cents.map { c =>
         byCell.get(c.cell) match {
@@ -165,21 +154,6 @@ object Kmeans {
     * deterministic "coin" k-means‖ selection flips per (vec_id,
     * round), so seeding is reproducible without any RNG state. */
   private def hashUniform(x: Long): Double = graft.core.Mix.unitDouble(x)
-
-  /** Stage walls of the last trainer run (label → seconds) — the
-    * scale benches' observability: optimizing a 19-minute train
-    * needs to know WHICH stage holds the 19 minutes
-    * ([[SemScaleBench]] prints this). Cleared by [[seedParallel]],
-    * appended by every timed stage; negligible overhead (one
-    * nanoTime pair per stage). */
-  @volatile private[sim] var lastTrainStages: List[(String, Double)] = Nil
-
-  private def staged[T](label: String)(f: => T): T = {
-    val t0 = System.nanoTime()
-    val r = f
-    lastTrainStages = lastTrainStages :+ (label -> (System.nanoTime() - t0) / 1e9)
-    r
-  }
 
   /** k-means‖ seeding (Bahmani et al., VLDB 2012) — the scalable
     * replacement for first-k seeding: `rounds` oversampling passes
@@ -212,7 +186,6 @@ object Kmeans {
       incrementalAbove: Int = 1024): Array[Centroid] = {
     import corpus.sparkSession.implicits._
     val spark = corpus.sparkSession
-    lastTrainStages = Nil
     val first = corpus.orderBy(col("vec_id")).head()
     var seeds: Array[Array[Double]] = Array(normalize(first.v))
     // SEEDING path switch (r11 adjudication of the r10 rebuild): the
@@ -243,43 +216,34 @@ object Kmeans {
       // ── small-k: stateless two-rescan rounds ──────────────────────
       for (r <- 1 to rounds) {
         val bc = spark.sparkContext.broadcast(seeds)
-        val phi = staged(s"seed round $r phi (|seeds|=${seeds.length})") {
-          corpus.mapPartitions { it =>
-            val s = it.foldLeft(0.0)((a, x) => a + seedCost(x, bc.value))
-            Iterator((org.apache.spark.TaskContext.getPartitionId(), s))
-          }.collect().sortBy(_._1).map(_._2).sum
-        }
+        val phi = corpus.mapPartitions { it =>
+          val s = it.foldLeft(0.0)((a, x) => a + seedCost(x, bc.value))
+          Iterator((org.apache.spark.TaskContext.getPartitionId(), s))
+        }.collect().sortBy(_._1).map(_._2).sum
         if (phi > 0) {
           val threshold = oversample * k / phi
-          val picked = staged(s"seed round $r pick") {
-            corpus.filter(x => hashUniform(x.vec_id * 1000003L + r) <
-                threshold * seedCost(x, bc.value))
-              .collect().sortBy(_.vec_id) // stable order for reproducibility
-          }
+          val picked = corpus.filter(x => hashUniform(x.vec_id * 1000003L + r) <
+              threshold * seedCost(x, bc.value))
+            .collect().sortBy(_.vec_id) // stable order for reproducibility
           seeds = seeds ++ picked.map(v => normalize(v.v))
         }
         bc.destroy()
       }
       // weights: one pruned-exact nearest pass (identical first-best
       // contract to the carried argmax the incremental path reads)
-      staged("seed weight count") {
-        val asSeedCents = seeds.zipWithIndex.map { case (v, i) => Centroid(i, v) }
-        val bcS = spark.sparkContext.broadcast(CentroidIndex.build(asSeedCents))
-        val ws = corpus.map(x => bcS.value.nearest(x))
-          .groupByKey(identity).count().collect().toMap
-        bcS.destroy()
-        ws
-      }
+      val asSeedCents = seeds.zipWithIndex.map { case (v, i) => Centroid(i, v) }
+      val bcS = spark.sparkContext.broadcast(CentroidIndex.build(asSeedCents))
+      val ws = corpus.map(x => bcS.value.nearest(x))
+        .groupByKey(identity).count().collect().toMap
+      bcS.destroy()
+      ws
     } else seedParallelIncremental(corpus, k, rounds, oversample,
       s => seeds = s, seeds)
     val w = seeds.indices.map(i => weights.getOrElse(i, 0L).toDouble.max(1e-9)).toArray
     lastReductionDistributed = seeds.length > reduceDistributedAbove
-    val cents: Array[Array[Double]] = staged("seed reduction") {
-      if (lastReductionDistributed)
-        reduceSeedsDistributed(spark, seeds, w, k)
-      else
-        reduceSeedsDriver(seeds, w, k)
-    }
+    val cents: Array[Array[Double]] =
+      if (lastReductionDistributed) reduceSeedsDistributed(spark, seeds, w, k)
+      else reduceSeedsDriver(seeds, w, k)
     // pad (degenerate corpora smaller than k) by reusing seeds
     val padded = (0 until k).map(i => cents(i % cents.length)).toArray
     padded.zipWithIndex.map { case (v, i) => Centroid(i, v) }
@@ -361,10 +325,8 @@ object Kmeans {
     def costOf(x: Vec, bestDot: Double): Double =
       1.0 - bestDot / (if (x.nrm == 0.0) 1.0 else x.nrm)
     var state: Dataset[(Vec, Int, Double)] =
-      staged("seed state init") {
-        updateState(
-          corpus.map(x => (x, -1, Double.NegativeInfinity)), seeds, 0)
-      }
+      updateState(
+        corpus.map(x => (x, -1, Double.NegativeInfinity)), seeds, 0)
     for (r <- 1 to rounds) {
       // φ summed from per-partition partials in FIXED partition-index
       // order: Dataset.reduce folds in task-completion order, which
@@ -372,27 +334,21 @@ object Kmeans {
       // hash-coin selections — breaking the "deterministic without RNG
       // state" contract. Partition-ordered summation is reproducible
       // for a fixed partitioning of the corpus.
-      val phi = staged(s"seed round $r phi (|seeds|=${seeds.length})") {
-        state.mapPartitions { it =>
-          val s = it.foldLeft(0.0)((a, x) => a + costOf(x._1, x._3))
-          Iterator((org.apache.spark.TaskContext.getPartitionId(), s))
-        }.collect().sortBy(_._1).map(_._2).sum
-      }
+      val phi = state.mapPartitions { it =>
+        val s = it.foldLeft(0.0)((a, x) => a + costOf(x._1, x._3))
+        Iterator((org.apache.spark.TaskContext.getPartitionId(), s))
+      }.collect().sortBy(_._1).map(_._2).sum
       if (phi > 0) {
         val threshold = oversample * k / phi
-        val picked = staged(s"seed round $r pick") {
-          state
-            .filter { case (x, _, bd) =>
-              hashUniform(x.vec_id * 1000003L + r) < threshold * costOf(x, bd)
-            }
-            .map(_._1)
-            .collect().sortBy(_.vec_id) // stable order for reproducibility
-        }
+        val picked = state
+          .filter { case (x, _, bd) =>
+            hashUniform(x.vec_id * 1000003L + r) < threshold * costOf(x, bd)
+          }
+          .map(_._1)
+          .collect().sortBy(_.vec_id) // stable order for reproducibility
         val newSeeds = picked.map(v => normalize(v.v))
         if (newSeeds.nonEmpty) {
-          state = staged(s"seed round $r state update (+${newSeeds.length})") {
-            updateState(state, newSeeds, seeds.length)
-          }
+          state = updateState(state, newSeeds, seeds.length)
           seeds = seeds ++ newSeeds
         }
       }
@@ -400,9 +356,7 @@ object Kmeans {
     // weights: points served by each oversampled seed — read straight
     // off the carried argmax (identical first-best contract to the
     // pruned/linear nearest sweep this replaces)
-    val weights = staged("seed weight count") {
-      state.map(_._2).groupByKey(identity).count().collect().toMap
-    }
+    val weights = state.map(_._2).groupByKey(identity).count().collect().toMap
     state.unpersist()
     setSeeds(seeds)
     weights
@@ -525,8 +479,7 @@ object Kmeans {
     * is invisible to the gates). */
   def trainParallel(corpus: Dataset[Vec], k: Int, iters: Int,
       rounds: Int = 3, oversample: Double = 2.0): Array[Centroid] =
-    trainFrom(corpus, seedParallel(corpus, k, rounds, oversample), iters,
-      appendStages = true)
+    trainFrom(corpus, seedParallel(corpus, k, rounds, oversample), iters)
 
   /** Mean within-cluster cosine (×1e6, integer) — the spherical
     * k-means objective; must be non-decreasing over training. */

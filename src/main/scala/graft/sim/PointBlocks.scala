@@ -108,7 +108,7 @@ object PointBlocks {
     * O(sampleCap·nBlocks·d) — 8192 samples place blocks well enough
     * (block quality only shifts constant factors; every kernel is
     * exact regardless), and a larger sample measurably eats the
-    * prepare budget (TrainBench).
+    * prepare budget (the r9 trainer rehearsal, BENCH_NOTES Round 9).
     *
     * The returned Dataset is localCheckpointed — call sites reuse it
     * across every Lloyd round and let it expire with the session. */
@@ -235,7 +235,7 @@ object PointBlocks {
   /** Above this many centroids the ψ-sorted per-block scan loses to
     * the multi-directional [[CentroidIndex]] coarse bound (the 1-D
     * angle gap saturates as centroid angles concentrate in high
-    * dimension — AssignBench: scan 1.8× faster at k = 4096, 0.7× at
+    * dimension — BENCH_NOTES Round 9: scan 1.8× faster at k = 4096, 0.7× at
     * k = 16384), so [[assignSum]] switches kernels there. Both are
     * EXACT, so the switch changes work, never results. */
   private[sim] val ScanBelow = 8192

@@ -23,9 +23,9 @@ import org.apache.spark.sql.functions._
   *
   * Scale posture: per batch the work is one map-only decode pass plus
   * one parquet append; cross-batch state is the on-disk index alone
-  * (nothing driver-resident grows with the stream) — the
-  * [[graft.sim.MediaIngestBench]] rehearsal measured the same loop at
-  * 13× (9.9 s ingest / 65 k docs, BENCH_NOTES r13). The index root
+  * (nothing driver-resident grows with the stream) — the r13 13×
+  * rehearsal measured the same loop at 9.9 s ingest / 65 k docs
+  * (BENCH_NOTES r13, "decode-heavy streaming ingest rehearsal"). The index root
   * goes through [[graft.core.SessionScratch]] (md5+appId keying,
   * shutdown-hook cleanup) like every other session index — not a
   * raw `createTempDirectory` that accumulates across runs and only

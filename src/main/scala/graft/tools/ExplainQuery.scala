@@ -1,42 +1,54 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Print a registered query's EXECUTED physical plan (AQE final, so
   * coalesced/replanned exchanges show as they actually ran) — the
   * plan-audit companion to Bench's fingerprint: when a fingerprint
   * drifts or a stage runs narrower than expected, this shows why.
-  * Usage: runMain graft.tools.ExplainQuery <query> [sfDir]. Not a
-  * gate; not registered. */
+  * Usage: runMain graft.tools.ExplainQuery <query> [sfDir]; it plans
+  * on Bench's session (`SPARK_GRAFT_CPUS`, default 4), so the width
+  * matches the Bench run whose fingerprint it explains. Not a gate;
+  * not registered. */
 object ExplainQuery {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // sort shuffle writer at local reduce counts — same rationale,
-      // evidence and measurements as Bench.scala (r19): the bypass
-      // writer's M·R file creates were the dominant per-task overhead
-      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // the same per-stage dump Bench offers behind
-    // SPARK_GRAFT_STAGE_DEBUG, always on here: stage widths and the
-    // plan must come from ONE execution to correlate
+    val spark = graft.core.Sessions.local()
+    // per-stage rollup on stderr, one line per completed stage: wall,
+    // run/deser/gc/cpu sums, longest task, task count, shuffle records
+    // read+written — enough to separate real row work from per-task
+    // fixed overhead (deser, GC, non-CPU wait). Stage widths and the
+    // plan must come from ONE execution to correlate.
+    final case class St(run: Long, mx: Long, n: Int, deser: Long,
+        gc: Long, cpuNs: Long, rRead: Long, rWrite: Long)
+    val stageTask = new java.util.concurrent.ConcurrentHashMap[Int, St]
     spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(
+          e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
+        val m = e.taskMetrics
+        if (m != null) stageTask.merge(e.stageId,
+          St(m.executorRunTime, m.executorRunTime, 1,
+            m.executorDeserializeTime, m.jvmGCTime, m.executorCpuTime,
+            m.shuffleReadMetrics.recordsRead,
+            m.shuffleWriteMetrics.recordsWritten),
+          (a, b) => St(a.run + b.run, math.max(a.mx, b.mx), a.n + b.n,
+            a.deser + b.deser, a.gc + b.gc, a.cpuNs + b.cpuNs,
+            a.rRead + b.rRead, a.rWrite + b.rWrite))
+      }
       override def onStageCompleted(
           e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
         val i = e.stageInfo
         val wall = (for {s <- i.submissionTime; c <- i.completionTime}
           yield c - s).getOrElse(-1L)
+        // evict after printing: a re-attempt's tasks must not fold
+        // into a stale entry
+        val s = Option(stageTask.remove(i.stageId))
+          .getOrElse(St(0, 0, 0, 0, 0, 0, 0, 0))
         System.err.println(f"[stage] id=${i.stageId}%-4d wall=${wall}%6dms " +
-          f"planned=${i.numTasks}%4d " +
-          s"rdds=${i.rddInfos.map(_.name).filter(_ != null).distinct.mkString("|").take(110)}")
+          f"task_sum=${s.run}%7dms task_max=${s.mx}%6dms n=${s.n}%4d " +
+          f"planned=${i.numTasks}%4d deser=${s.deser}%5dms gc=${s.gc}%5dms " +
+          f"cpu=${s.cpuNs / 1000000}%7dms rin=${s.rRead}%8d rout=${s.rWrite}%8d " +
+          s"name=${i.name.takeWhile(_ != '\n').take(60)} " +
+          s"rdds=${i.rddInfos.map(_.name).filter(_ != null).distinct.mkString("|").take(120)}")
       }
     })
     // SPARK_GRAFT_EXPLAIN_WARMUP=1 replicates the bench's prelude

@@ -124,18 +124,7 @@ object ScaleFixture {
     val inDir = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val outDir = args.lift(1).getOrElse("target/scale10x")
     val factor = args.lift(2).map(_.toInt).getOrElse(10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // sort shuffle writer at local reduce counts — same rationale,
-      // evidence and measurements as Bench.scala (r19): the bypass
-      // writer's M·R file creates were the dominant per-task overhead
-      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Sessions.local()
     try {
       import java.nio.file.{Files, Paths, StandardCopyOption}
       Files.createDirectories(Paths.get(outDir))

@@ -3,34 +3,17 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared session plumbing: one SparkSession per suite (lazy), UTC,
-  * small shuffle fan-out for local test speed. */
+/** Shared session plumbing: one SparkSession per suite (lazy), built
+  * by [[graft.core.Sessions]] with 4 cores. */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   def sf(dir: String = "sf0.001"): String = s"/root/testdata/$dir"
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      // local[N, maxFailures]: task retry is ON (2 attempts) so the
-      // crash-recovery differential (CrashRecoverySpec) can exercise
-      // Spark's re-execution guarantee — spark.task.maxFailures is
-      // ignored by the local scheduler, only the master string counts.
-      .master("local[4, 2]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      // sort shuffle writer at local reduce counts — same rationale,
-      // evidence and measurements as Bench.scala (r19): the bypass
-      // writer's M·R file creates were the dominant per-task overhead
-      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // if a fixture carries TIMESTAMP(NANOS), surface it as long ns;
-      // µs fixtures read as TIMESTAMP(_NTZ) — EventTime adapts per-schema
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  // local[N, maxFailures]: task retry is ON (2 attempts) so the
+  // crash-recovery differential (CrashRecoverySpec) can exercise
+  // Spark's re-execution guarantee — spark.task.maxFailures is
+  // ignored by the local scheduler, only the master string counts.
+  lazy val session: SparkSession = graft.core.Sessions.create("local[4, 2]", 4)
 }
