@@ -120,17 +120,6 @@ object Bench {
       val failed = runsSeen.exists(_.wall < 0)
       (name, (if (failed) Run(-1.0, best.taskMs, best.gcMs) else best, worst))
     }
-    // minimal JSON string escape for error payloads (quotes, backslash,
-    // control chars) — exception text is arbitrary
-    def jstr(s: String): String = "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val qs = results.map { case (k, (best, _)) => "\"" + k + f"""\":${best.wall}%.3f""" }
       .mkString("{", ",", "}")
     // per-query worst run alongside the reported min: a large max/min
@@ -148,11 +137,10 @@ object Bench {
     val gcJson = attrib { case (_, (best, _)) => best.gcMs }
     val taskMaxJson = attrib { case (_, (_, worst)) => worst.taskMs }
     val gcMaxJson = attrib { case (_, (_, worst)) => worst.gcMs }
-    val errs = errors.map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }
-      .mkString("{", ",", "}")
+    // exception text is arbitrary: Jackson escapes it
+    val errs = SelfCheck.jsonObject(errors)
     val total = results.map(_._2._1.wall).filter(_ >= 0).sum
-    val plansJson = plans.map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }
-      .mkString("{", ",", "}")
+    val plansJson = SelfCheck.jsonObject(plans)
     val line =
       f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"queries_max":$worsts,"task_ms":$taskJson,"gc_ms":$gcJson,"task_ms_max":$taskMaxJson,"gc_ms_max":$gcMaxJson,"plans":$plansJson,"errors":$errs,"sf":"$sfDir"}"""
     println(line)

@@ -23,8 +23,18 @@ object SelfCheck {
       taskMs: Map[String, Long] = Map.empty,
       gcMs: Map[String, Long] = Map.empty)
 
+  /** The one JSON codec of the run artifacts: Bench's line, Verify's
+    * `oracle_sql.json` and `failed.json`, and [[parse]]. */
+  private[graft] val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  /** `m` as one JSON object of strings, keys in `m`'s order. */
+  private[graft] def jsonObject(m: Iterable[(String, String)]): String = {
+    val o = mapper.createObjectNode()
+    m.foreach { case (k, v) => o.put(k, v) }
+    mapper.writeValueAsString(o)
+  }
+
   def parse(json: String): BenchArtifact = {
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     val root = mapper.readTree(json)
     def obj(name: String): Map[String, com.fasterxml.jackson.databind.JsonNode] = {
       val n = root.get(name)

@@ -1,15 +1,14 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.queries.{MrQueries, RelQueries}
-import graft.kv.{Kv, ShardCtrler}
+import graft.gates._
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract (SURVEY.md §7).
   *
-  * Every implemented operator from SURVEY.md §2 has an entry in
-  * `queries`; each SQL-expressible one has a matching DuckDB oracle in
-  * `oracleSql` with IDENTICAL output column names (the driver's compare
-  * sorts columns by name before hashing values).
+  * Every implemented operator from SURVEY.md §2 is a [[Gate]]: its
+  * query and its DuckDB oracle, declared together in its family's
+  * object under `graft.gates`. `queries` and `oracleSql` are the two
+  * driver-facing views of that one registry.
   */
 object SparkEntry {
 
@@ -37,4307 +36,20 @@ object SparkEntry {
     // front (excise → scrub → quality → dedup → pack, one program)
     graft.text.CorpusPipeline.prepareDecontaminated(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // ---- §2.2 reference query library (MR apps over documents) ----
-    "q_wc" -> ((s, dir) => MrQueries.wordCount(s, dir)),
-    "q_indexer" -> ((s, dir) => MrQueries.invertedIndex(s, dir)),
-    "q_profile" -> ((s, dir) => MrQueries.scalarProfile(s, dir)),
-    "q_filecount" -> ((s, dir) => MrQueries.perFileCount(s, dir)),
-    "q_wc_salted" -> ((s, dir) => MrQueries.wordCountSalted(s, dir)),
-    "q_profile_udaf" -> ((s, dir) => MrQueries.scalarProfileUdaf(s, dir)),
-    "q_wc_cms" -> ((s, dir) => graft.functions.CountMin.wordEstimates(s, dir)),
-    // ---- §2.3 KV / sharding semantics as data processing (K1-K9) ----
-    "k_replay" -> ((s, dir) => Kv.replay(Kv.opsFromEvents(s, dir)).toDF()),
-    "k_replay_dedup" -> ((s, dir) =>
-      Kv.replay(Kv.opsFromEvents(s, dir), exactlyOnce = true).toDF()),
-    "k_getlog" -> ((s, dir) => Kv.getLog(Kv.opsFromEvents(s, dir)).toDF()),
-    "k_replay_stream" -> ((s, dir) => {
-      // the streaming machine's semantics executed in batch mode via the
-      // sorted-group scan (no per-key log buffer); stream ≡ batch is
-      // asserted in KvStreamSpec, same oracle as k_replay
-      import org.apache.spark.sql.functions.col
-      graft.streaming.KvStream.replayBatch(Kv.opsFromEvents(s, dir))
-        .toDF().select(col("key"), col("state"))
-    }),
-    "k_shard" -> ((s, dir) => {
-      import org.apache.spark.sql.functions.col
-      Kv.shardAssignment(
-        s.read.parquet(s"$dir/part.parquet").select(col("p_name")), "p_name")
-    }),
-    // the three history consumers materialize the fold to the oracle
-    // side path (ShardCtrler.historyWithSideDump) so DuckDB can join it
-    "k_config_history" -> ((s, dir) => ShardCtrler.historyWithSideDump(s, dir)),
-    "k_route" -> ((s, dir) =>
-      Kv.routeOps(Kv.opsFromEvents(s, dir),
-        ShardCtrler.historyWithSideDump(s, dir), epochLen = 100L)),
-    // segmented (two-level) fold: shards × ranges task parallelism
-    // instead of the NShards=10 ceiling; identical records to the
-    // sorted-group walker (differential in ShardMigrationSpec)
-    "k_migrations" -> ((s, dir) =>
-      graft.streaming.ShardMigration.migrationsBatchSegmented(
-        graft.streaming.ShardMigration.shardOps(
-          Kv.routeOps(Kv.opsFromEvents(s, dir),
-            ShardCtrler.historyWithSideDump(s, dir), epochLen = 100L))).toDF()),
-    // Challenge1Delete twin: state dropped at handoff, so n_keys counts
-    // the outgoing owner's era only — per-era distinct counts are
-    // window SQL, hence a hash gate of its own
-    "k_migrations_evict" -> ((s, dir) =>
-      graft.streaming.ShardMigration.migrationsEvictingBatchSegmented(
-        graft.streaming.ShardMigration.shardOps(
-          Kv.routeOps(Kv.opsFromEvents(s, dir),
-            ShardCtrler.historyWithSideDump(s, dir), epochLen = 100L))).toDF()),
-    // Challenge2 twin: serving-during-reconfiguration timing — ops on
-    // shards not in an in-flight handoff apply immediately; the
-    // whole defer/apply schedule is re-derived in SQL (hash gate)
-    "k_serve" -> ((s, dir) =>
-      graft.streaming.ShardServe.serveBatchSegmented(
-        graft.streaming.ShardMigration.shardOps(
-          Kv.routeOps(Kv.opsFromEvents(s, dir),
-            ShardCtrler.historyWithSideDump(s, dir), epochLen = 100L))).toDF()),
-    // bounded-state ledger fold: tail + total length are SQL over the
-    // uncompacted fold (the fnv digest column is engine-side only)
-    "k_replay_compact" -> ((s, dir) => {
-      import org.apache.spark.sql.functions.col
-      graft.streaming.KvStream.replayBatchCompacting(Kv.opsFromEvents(s, dir))
-        .toDF().select(col("key"), col("state_tail"), col("total_len"))
-    }),
-    // ---- §7 phase-7 relational extensions (TPC-H-ish) ----
-    "rel_pricing" -> ((s, dir) => RelQueries.pricingSummary(s, dir)),
-    "rel_shipping_priority" -> ((s, dir) => RelQueries.shippingPriority(s, dir)),
-    "rel_local_volume" -> ((s, dir) => RelQueries.localSupplierVolume(s, dir)),
-    "rel_top_orders" -> ((s, dir) => RelQueries.topOrders(s, dir)),
-    "rel_first_orders" -> ((s, dir) => RelQueries.firstOrdersPerCustomer(s, dir)),
-    "rel_events_daily" -> ((s, dir) => RelQueries.eventsDaily(s, dir)),
-    "rel_running" -> ((s, dir) => RelQueries.runningCustomerTotals(s, dir)),
-    "rel_daily_delta" -> ((s, dir) => RelQueries.eventsDailyDelta(s, dir)),
-    "rel_distinct_users" -> ((s, dir) => RelQueries.distinctUsers(s, dir)),
-    // BANDED: exact count + HLL-verdict column, hash-gated (the oracle
-    // pins the exact twin and asserts within_band = TRUE)
-    "rel_approx_users" -> ((s, dir) => RelQueries.approxDistinctUsersBanded(s, dir)),
-    "rel_rollup" -> ((s, dir) => RelQueries.pricingRollup(s, dir)),
-    "rel_cube" -> ((s, dir) => RelQueries.orderPriorityCube(s, dir)),
-    "rel_upsert" -> ((s, dir) => RelQueries.changelogSnapshot(s, dir)),
-    "rel_scd2" -> ((s, dir) => RelQueries.scd2History(s, dir)),
-    "rel_json_props" -> ((s, dir) => RelQueries.jsonPropsStats(s, dir)),
-    "rel_range" -> ((s, dir) => RelQueries.valueBandCounts(s, dir)),
-    "rel_anti" -> ((s, dir) => RelQueries.customersWithoutOrders(s, dir)),
-    "rel_except" -> ((s, dir) => RelQueries.lapsedCustomers(s, dir)),
-    "rel_asof" -> ((s, dir) => RelQueries.eventOrderAsof(s, dir)),
-    "rel_sessions" -> ((s, dir) => RelQueries.sessionize(s, dir)),
-    // TPC-H streaming-join twin executed in batch mode (the
-    // k_replay_stream pattern; stream ≡ batch in StreamJoinSpec)
-    "rel_ship_attrib" -> ((s, dir) =>
-      graft.streaming.StreamJoin.shippedLinesBatch(s, dir)),
-    "rel_median" -> ((s, dir) => RelQueries.medianValue(s, dir)),
-    // sketch-based scale paths of the two exact rank queries, BANDED:
-    // each emits the exact value plus a rank-band verdict on the
-    // sketch output, so the DuckDB oracle hash-checks what used to be
-    // rows-only (sketch internals stay engine-specific; their error
-    // CONTRACT is now the gated claim)
-    "rel_median_approx" -> ((s, dir) => RelQueries.medianApproxBanded(s, dir)),
-    "rel_quantiles_approx" -> ((s, dir) => RelQueries.quantilesApproxBanded(s, dir)),
-    // exact two-pass histogram selection (scale-safe for bounded value
-    // domains) — reproduces the exact operators' outputs bit-for-bit,
-    // so both share the exact hash oracles
-    "rel_median_hist" -> ((s, dir) => RelQueries.medianValueHist(s, dir)),
-    "rel_quantiles_hist" -> ((s, dir) => RelQueries.valueQuantilesHist(s, dir)),
-    "rel_semi" -> ((s, dir) => RelQueries.latePriorityCounts(s, dir)),
-    "rel_quantiles" -> ((s, dir) => RelQueries.valueQuantiles(s, dir)),
-    "rel_pivot" -> ((s, dir) => RelQueries.eventTypePivot(s, dir)),
-    "rel_intersect" -> ((s, dir) => RelQueries.retainedCustomers(s, dir)),
-    "rel_above_avg" -> ((s, dir) => RelQueries.aboveAverageOrders(s, dir)),
-    "rel_outer" -> ((s, dir) => RelQueries.nationCoverage(s, dir)),
-    "rel_funnel" -> ((s, dir) => RelQueries.signupFunnel(s, dir)),
-    "text_sample" -> ((s, dir) => graft.text.Sampling.sampleDocuments(s, dir)),
-    "text_sample_topk" -> ((s, dir) => graft.text.Sampling.sampleTopKDocuments(s, dir)),
-    // ---- dedup family (training-data pipeline extensions) ----
-    "dedup_exact" -> ((s, dir) => graft.dedup.Dedup.exact(s, dir)),
-    "dedup_ngram" -> ((s, dir) => graft.dedup.Dedup.ngramJaccard(s, dir)),
-    "dedup_minhash" -> ((s, dir) => graft.dedup.Dedup.minhashLsh(s, dir)),
-    "dedup_simhash" -> ((s, dir) => graft.dedup.Dedup.simhashPairs(s, dir)),
-    // radius-1 multi-probe: Hamming radius 15 from the same 8 bands
-    "dedup_simhash_multiprobe" -> ((s, dir) =>
-      graft.dedup.Dedup.simhashPairsMultiProbe(s, dir)),
-    // the corpus-scale banding: 4 x 16-bit bands (65536 buckets/band
-    // -- occupancy n/65536 keeps caps non-binding where the 8-bit
-    // bands' 256 buckets collapse at ~500k docs, a MEASURED 0.003
-    // recall; BENCH_NOTES r11) with radius-3 query-side probes; the
-    // oracle is the Hamming <= 15 ALL-PAIRS ground truth itself, so
-    // the gate pins the pigeonhole guarantee, not just the plumbing
-    "dedup_simhash_wide" -> ((s, dir) =>
-      graft.dedup.Dedup.simhashPairsWide(s, dir)),
-    // the balanced build<=1 x probe<=2 split simhashPairsWide actually
-    // runs ABOVE the WideBalancedAbove switch (i.e. at exactly the
-    // scale gates can't reach) — forced here below the switch so the
-    // regime that is the only correct choice at corpus scale is
-    // hash-pinned by the same all-pairs oracle, not just spec-pinned
-    "dedup_simhash_wide_balanced" -> ((s, dir) =>
-      graft.dedup.Dedup.simhashPairsWideBalanced(s, dir)),
-    "dedup_ngram_capped" -> ((s, dir) => graft.dedup.Dedup.ngramJaccardCapped(s, dir)),
-    // blocked Levenshtein (record-linkage classic): q-chunk pigeonhole
-    // blocking (PassJoin family — structural recall 1.0, the oracle is
-    // the all-pairs ground truth), df-capped keys, banded 3-arg DP
-    // (O(len*65), never the full matrix); dist <= min(64, 10% of the
-    // mean length). ASCII-normalized so DuckDB's byte-based
-    // levenshtein equals Spark's codepoint-based one
-    "dedup_edit_pairs" -> ((s, dir) => graft.dedup.EditDedup.editPairs(s, dir)),
-    // the exact-duplicate collapse lever forced through a hash gate
-    // on a fixture where it bites (1 + id%3 copies of every even doc)
-    "dedup_edit_pairs_collapsed" -> ((s, dir) =>
-      graft.dedup.EditDedup.editPairsCollapsed(s, dir)),
-    // exact dedup -> edit dedup on the residue, the production
-    // composition as one operator with a chained-CTE oracle
-    "dedup_residue_pipeline" -> ((s, dir) =>
-      graft.dedup.EditDedup.residuePipeline(s, dir)),
-    // output-capped form: each doc keeps its k=1 best match at BOTH
-    // endpoints (<= n*k rows on any corpus); k=1 bites on the gate
-    // fixture (25 -> 23 pairs), so the rank bound is exercised
-    "dedup_edit_pairs_capped" -> ((s, dir) =>
-      graft.dedup.EditDedup.editPairsCapped(s, dir, k = 1)),
-    // connected components over the edit-pair graph (typo/OCR variant
-    // cliques collapse to the min-id canonical copy) via the shared
-    // union-find / hash-min switch
-    "dedup_edit_clusters" -> ((s, dir) => graft.dedup.EditDedup.editClusters(s, dir)),
-    // dedup-family agreement audit: pair counts for the token-level
-    // (ngram Jaccard) and character-level (edit) families + overlap —
-    // one full-outer join, one aggregate, a one-row report
-    "dedup_family_report" -> ((s, dir) => graft.dedup.EditDedup.familyReport(s, dir)),
-    "dedup_embed" -> ((s, dir) => graft.dedup.Dedup.embeddingCosineBlocked(s, dir)),
-    "dedup_embed_ivf" -> ((s, dir) => graft.dedup.Dedup.embeddingCosineIvf(s, dir)),
-    // SemDeDup (Abbas et al. 2023): cluster-then-prune semantic dedup;
-    // centroids side-dumped, keep/drop rule re-derived by the oracle
-    "dedup_semantic" -> ((s, dir) => graft.dedup.SemDedup.semantic(s, dir)),
-    // skew-capped semantic dedup: each member compared only against
-    // its cell's `cap` highest-priority members (degenerate-cluster
-    // work bound; equals the one-shot rule when every cell <= cap)
-    "dedup_semantic_capped" -> ((s, dir) =>
-      graft.dedup.SemDedup.semanticCapped(s, dir)),
-    // k=256 on the k-means|| trainer: the gate crosses the
-    // distributed-seed-reduction AND blocked-assignment thresholds,
-    // pinning both scale paths to the dumped-codebook oracle
-    "dedup_semantic_par" -> ((s, dir) =>
-      graft.dedup.SemDedup.semanticPar(s, dir)),
-    // persisted semantic index: build-once on the %10!=0 slice, probe
-    // the %10==0 batch — index members always outrank batch vectors
-    "dedup_semantic_incremental" -> ((s, dir) =>
-      graft.dedup.SemIndex.dedupSemanticIncremental(s, dir)),
-    // the STREAMING chunk -> embed -> probe crawl loop: doc micro-
-    // batches chunked, integer-hash embedded, probed against the
-    // persisted chunk-vector index, kept survivors appended before
-    // the next batch — the gate replays contiguous doc_id-range
-    // batches in stream order (the text_chunk_pack_stream pattern;
-    // foreachBatch ≡ this replay is pinned in SemStreamSpec)
-    "dedup_semantic_stream" -> ((s, dir) =>
-      graft.streaming.SemStream.chunkProbeStream(s, dir)),
-    // STREAMING exact dedup at the chunk level — the dedup step a
-    // crawl ingest runs before paying to embed/index a chunk it has
-    // already seen: per micro-batch, first-in-batch per md5, anti-
-    // join against the persisted seen-hash index, survivors appended
-    // (idempotent per-batch subdir overwrite). Stream order = doc_id
-    // order, so the kept set is exactly the global lexicographic-min
-    // occurrence per distinct chunk text (the one-shot oracle)
-    "dedup_exact_stream" -> ((s, dir) =>
-      graft.streaming.ExactStream.chunkDedupStream(s, dir)),
-    // same replay with a MID-STREAM COMPACTION of the seen-hash delta
-    // log (committed subdirs folded to one DISTINCT subdir via the
-    // staged, roll-forward-safe DeltaIndex protocol) — the kept set
-    // must still equal the one-shot oracle, so a compaction bug is a
-    // hash mismatch (the text_source_drift_compact treatment)
-    "dedup_exact_stream_compact" -> ((s, dir) =>
-      graft.streaming.ExactStream.chunkDedupCompactStream(s, dir)),
-    "dedup_clusters" -> ((s, dir) => graft.dedup.Dedup.ngramClusters(s, dir)),
-    "dedup_split_leakage" -> ((s, dir) => graft.dedup.Dedup.splitLeakage(s, dir)),
-    // scale compositions over the banded/capped LSH pair generator;
-    // at the planted J>=0.9 dups LSH pairs equal exact pairs (recall
-    // 1-4e-8), so both share the exact operators' hash oracles
-    "dedup_clusters_lsh" -> ((s, dir) => graft.dedup.Dedup.ngramClustersLsh(s, dir)),
-    // same clustering forced through the distributed hash-min regime
-    // (the path a 100 TB pair graph always takes)
-    "dedup_clusters_dist" -> ((s, dir) => graft.dedup.Dedup.ngramClustersDist(s, dir)),
-    "dedup_split_leakage_lsh" -> ((s, dir) => graft.dedup.Dedup.splitLeakageLsh(s, dir)),
-    // constructive twin of the leakage detector: split key = near-dup
-    // CLUSTER id, so no pair can straddle a split by construction
-    "dedup_split_safe" -> ((s, dir) => graft.dedup.Dedup.leakSafeSplit(s, dir)),
-    // the PRODUCTION split rule: salted md5 of the cluster id (epoch-
-    // blind), byte-identical hex-threshold convention on both engines;
-    // the mod form above stays as the shared-convention twin
-    "dedup_split_safe_salted" -> ((s, dir) =>
-      graft.dedup.Dedup.leakSafeSplitSalted(s, dir)),
-    // the same constructor plugged into the EMBEDDING near-dup graph:
-    // semantic clusters stay on one side (out-of-neighborhood eval)
-    "dedup_split_safe_embed" -> ((s, dir) =>
-      graft.dedup.Dedup.leakSafeSplitEmbed(s, dir)),
-    // windowed exact-substring dedup (Lee et al. 2022, Spark-first)
-    "dedup_incremental" -> ((s, dir) => graft.dedup.LshIndex.dedupIncremental(s, dir)),
-    "dedup_passages" -> ((s, dir) => graft.dedup.Dedup.duplicatePassages(s, dir)),
-    "dedup_passage_spans" -> ((s, dir) => graft.dedup.Dedup.duplicatePassageSpans(s, dir)),
-    // boilerplate-capped scale path (digests in >= cap docs dropped);
-    // cap=3 bites on the gate corpus (max n_docs there is 3)
-    "dedup_passages_capped" -> ((s, dir) =>
-      graft.dedup.Dedup.duplicatePassagesCapped(s, dir, cap = 3)),
-    // distributed-suffix-array maximal duplicated extents (exact,
-    // hash-free); equals the window-string grouping the oracle runs
-    "dedup_spans_exact" -> ((s, dir) =>
-      graft.dedup.SuffixDedup.maximalSpans(s, dir, minSpan = 8)),
-    // span-level decontamination: extents shared with benchmark docs
-    // (doc_id % 37 == 0, text_decontam's split) — the excision list
-    "text_decontam_spans" -> ((s, dir) =>
-      graft.dedup.SuffixDedup.benchmarkSpans(s, dir, minSpan = 8)),
-    // persisted span index: batch (doc_id % 10 == 0) probed against
-    // the indexed rest — the crawl-loop lifecycle for exact spans
-    "dedup_spans_incremental" -> ((s, dir) =>
-      graft.dedup.SpanIndex.dedupIncrementalSpans(s, dir)),
-    // offset-bearing index probe: the partner/offset/length diagnosis
-    // view for the crawl loop, from per-digest witness samples
-    "dedup_spans_incremental_matches" -> ((s, dir) =>
-      graft.dedup.SpanIndex.dedupIncrementalMatches(s, dir)),
-    // per-pair maximal matches (which partner, where, how long) via
-    // the diagonal-run scan over rank groups
-    "dedup_pair_matches" -> ((s, dir) =>
-      graft.dedup.SuffixDedup.maximalMatches(s, dir, minSpan = 8)),
-    // detect ∘ excise: the training corpus with benchmark-overlapping
-    // extents cut out — the decontamination act itself
-    "text_excise" -> ((s, dir) =>
-      graft.dedup.SuffixDedup.exciseBenchmarkSpans(s, dir)),
-    // the flagship pipeline with span decontamination up front —
-    // excise → scrub → quality → dedup → pack, one program, one oracle
-    "text_pipeline_decontam" -> ((s, dir) =>
-      graft.text.CorpusPipeline.prepareDecontaminated(s, dir)),
-    // the eval-integrity report: per benchmark doc, how much of it
-    // appears verbatim in the training corpus
-    "text_leak_profile" -> ((s, dir) =>
-      graft.dedup.SuffixDedup.benchmarkLeakProfile(s, dir)),
-    // the amortized production shape: ONE rank pass, all four span
-    // consumers (spans/excise/leak/pack) as a tagged union
-    "text_decontam_suite" -> ((s, dir) =>
-      graft.dedup.SuffixDedup.decontamSuite(s, dir)),
-    // ---- similarity search ----
-    "ann_topk" -> ((s, dir) => graft.sim.Similarity.topKExact(s, dir)),
-    "ann_ivf" -> ((s, dir) => graft.sim.Similarity.topKIvf(s, dir)),
-    "ann_pq" -> ((s, dir) => graft.sim.Pq.topKPq(s, dir)),
-    "ann_ivf_trained" -> ((s, dir) => graft.sim.Kmeans.topKIvfTrained(s, dir)),
-    // same probe machinery over a k-means|| (oversampled-seed) codebook
-    "ann_ivf_trained_par" -> ((s, dir) => graft.sim.Kmeans.topKIvfTrainedPar(s, dir)),
-    "ann_ivfpq" -> ((s, dir) => graft.sim.IvfIndex.topKIvfPq(s, dir)),
-    "ann_ivfpq_adaptive" -> ((s, dir) => graft.sim.IvfIndex.topKIvfPqAdaptive(s, dir)),
-    "ann_ivfpq_graph" -> ((s, dir) => graft.sim.IvfIndex.topKIvfPqGraph(s, dir)),
-    // full-probe twins: candidate set = corpus, exact scoring → equal
-    // brute force, so the index scan/ADC/rerank machinery is HASH-gated
-    "ann_ivf_full" -> ((s, dir) => graft.sim.IvfIndex.topKIvfFull(s, dir)),
-    "ann_ivfpq_rerank_all" -> ((s, dir) => graft.sim.IvfIndex.topKIvfPqRerankAll(s, dir)),
-    "ann_kmeans_cells" -> ((s, dir) => graft.sim.Kmeans.cellSizes(s, dir)),
-    "ann_sq8" -> ((s, dir) => graft.sim.Sq.topKSq(s, dir)),
-    "ann_pq_opq" -> ((s, dir) => graft.sim.Opq.topKPqOpq(s, dir)),
-    "ann_topk_l2" -> ((s, dir) => graft.sim.Pca.topKL2(s, dir)),
-    "ann_pca_topk" -> ((s, dir) => graft.sim.Pca.topKL2Pca(s, dir)),
-    "ann_pca_reduced" -> ((s, dir) => graft.sim.Pca.topKL2PcaReduced(s, dir)),
-    // ---- text analysis ----
-    // compressed-crawl ingestion: per-doc gzip members decoded
-    // through the production gunzip (truncated rows pin the
-    // fallback); counts of the DECODED text against the plain column
-    // deflate content-encoding ingest: BOTH wild flavors (zlib
-    // wrapper and raw deflate) through one sniff; oracle = the
-    // decoded text's counts (the gzip gate's shape)
-    "text_deflate_ingest" -> ((s, dir) =>
-      graft.text.CompressedIngest.deflateIngestReport(s, dir)),
-    // zstd ingest: real RFC 8878 frames (Huffman literals, FSE
-    // sequences, repcodes, checksum) through the pure-JVM decoder;
-    // skippable-frame, multi-frame (.jsonl.zst shard) and DICTIONARY
-    // (id-resolved, content-prefixed) classes
-    "text_zstd_ingest" -> ((s, dir) =>
-      graft.text.CompressedIngest.zstdIngestReport(s, dir)),
-    // LZ4 ingest: real frame-format payloads (the Kafka/Hadoop-side
-    // compression) through the pure-JVM decoder, lz4-java-pinned
-    "text_lz4_ingest" -> ((s, dir) =>
-      graft.text.CompressedIngest.lz4IngestReport(s, dir)),
-    // snappy ingest: raw blocks (the Parquet/Kafka shape) + framed
-    // .sz chunks through the pure-JVM decoder, snappy-java-pinned
-    "text_snappy_ingest" -> ((s, dir) =>
-      graft.text.CompressedIngest.snappyIngestReport(s, dir)),
-    // WARC ingest: the crawl container itself (ISO 28500, the
-    // CommonCrawl per-record-gzip shape) down to the HTTP payload
-    "text_warc_ingest" -> ((s, dir) =>
-      graft.text.CompressedIngest.warcIngestReport(s, dir)),
-    // WARC shard → slice splitting by gzip member boundaries (the
-    // random-access CommonCrawl property): slice-parse must equal
-    // whole-shard parse before any row reports
-    "text_warc_split" -> ((s, dir) =>
-      graft.text.CompressedIngest.warcSplitReport(s, dir)),
-    // HTML → text extraction (WHATWG rules, HTMLEditorKit-pinned):
-    // tag/script/style/template strip, entities, block newlines
-    "text_html_extract" -> ((s, dir) =>
-      graft.text.HtmlIngest.htmlExtractReport(s, dir)),
-    // the crawl chain end-to-end: warc → http → charset (WHATWG
-    // precedence incl. lying signals) → html → text
-    "text_warc_html" -> ((s, dir) =>
-      graft.text.HtmlIngest.warcHtmlReport(s, dir)),
-    // the whole chain as ONE operator (shard → slices → records →
-    // content-coding → charset → html → text): truncated shards
-    // yield NO rows — the failure-honesty contract
-    "text_crawl_extract" -> ((s, dir) =>
-      graft.text.CrawlExtract.crawlExtractReport(s, dir)),
-    // WET extracted-text containers (the OTHER CommonCrawl shape:
-    // conversion records carrying already-extracted plain text)
-    "text_wet_ingest" -> ((s, dir) =>
-      graft.text.CompressedIngest.wetIngestReport(s, dir)),
-    // boilerplate removal (jusText/boilerpipe-style link-density
-    // blocks): nav/share/footer dropped, main content kept exactly
-    "text_html_main" -> ((s, dir) =>
-      graft.text.Boilerplate.htmlMainReport(s, dir)),
-    // streaming zstd ingest: ordered batches through the delta-log
-    // must reassemble to EXACTLY the one-shot batch report
-    "text_zstd_ingest_stream" -> ((s, dir) =>
-      graft.streaming.ZstdStream.ingestStream(s, dir)),
-    // streaming gzip ingest: ordered batches through the delta-log
-    // (mid-stream staged compaction) must reassemble to EXACTLY the
-    // one-shot batch report — the oracle is the batch twin's SQL
-    "text_gzip_ingest_stream" -> ((s, dir) =>
-      graft.streaming.GzipStream.ingestStream(s, dir)),
-    "text_gzip_ingest" -> ((s, dir) =>
-      graft.text.CompressedIngest.ingestReport(s, dir)),
-    "text_tokens" -> ((s, dir) => graft.text.TextAnalysis.tokenCount(s, dir)),
-    // token-budget mixture plan: per-language available tokens vs the
-    // mixture weights' targets, and the epochs/resid-sampling rates
-    // the targets imply (one scan, <=|langs| groups — the LLaMA-style
-    // domain-mixture table a training run starts from)
-    "text_mix_plan" -> ((s, dir) => graft.text.TextAnalysis.mixPlan(s, dir)),
-    // the plan EXECUTED: one (lang, doc_id, epoch) membership row per
-    // prescribed pass — full epochs for every domain doc, the
-    // residual pass as a deterministic id-hash sample at resid_ppm
-    // (threshold computed in-plan; broadcast join + explode, no
-    // shuffle)
-    "text_mix_epochs" -> ((s, dir) => graft.text.TextAnalysis.mixEpochs(s, dir)),
-    // the training ORDER over that membership: epochs sequential,
-    // per-epoch deterministic md5 shuffle, two-pass globalRank (no
-    // single-partition window)
-    "text_mix_order" -> ((s, dir) => graft.text.TextAnalysis.mixOrder(s, dir)),
-    // the curriculum twin: every epoch presents clean docs first
-    // (is_quality DESC inside the epoch, fresh shuffle among equals);
-    // same membership, flag carried from the one scan
-    "text_mix_order_curriculum" -> ((s, dir) =>
-      graft.text.TextAnalysis.mixOrderCurriculum(s, dir)),
-    // decile-graded curriculum: corpus-wide stopword-ppm deciles via
-    // the histogram-selection machinery, cleanest decile first
-    "text_mix_order_bucketed" -> ((s, dir) =>
-      graft.text.TextAnalysis.mixOrderBucketed(s, dir)),
-    // the ordered mixture cut into fixed-token-budget OUTPUT SHARDS
-    // (the artifact a data loader mounts): rank + token prefix-sum
-    // fused into ONE globalRankPack layout — one shuffle where
-    // order-then-pack would take two
-    "text_mix_shards" -> ((s, dir) => graft.text.TextAnalysis.mixShards(s, dir)),
-    // crawl-snapshot QA: per source, the top-3 tokens most over/
-    // under-represented vs the REST of the corpus — integer ppm
-    // rates (overflow-safe form), window partitioned by source
-    "text_source_drift" -> ((s, dir) => graft.text.TextAnalysis.sourceDrift(s, dir)),
-    // the STREAMING monitor: per-batch additive count subdirs
-    // (retry-idempotent overwrite), report over everything ingested —
-    // equals the one-shot report exactly (counts are additive)
-    "text_source_drift_stream" -> ((s, dir) =>
-      graft.streaming.DriftStream.sourceDriftStream(s, dir)),
-    // the monitor's COMPACTION forced through the same oracle: the
-    // committed prefix folds mid-stream, the last batch lands above,
-    // the report must still hash-match the one-shot form
-    "text_source_drift_compact" -> ((s, dir) =>
-      graft.streaming.DriftStream.sourceDriftCompactStream(s, dir)),
-    // semantic drift: which embedding-space regions a source over/
-    // under-populates — axis-sign buckets, shared report stage
-    "text_source_drift_semantic" -> ((s, dir) =>
-      graft.text.TextAnalysis.sourceDriftSemantic(s, dir)),
-    // sliding token-window chunking (RAG / context-window splitter):
-    // map-only, no shuffle; boundaries line up with Tok.alphaToks
-    "text_chunk" -> ((s, dir) => graft.text.Chunking.chunks(s, dir)),
-    // chunking over the BPE token-id stream (the production context-
-    // budget unit): flat (doc, chunk, pos_in_chunk, token_id) rows
-    "text_chunk_ids" -> ((s, dir) => graft.text.Chunking.chunkIds(s, dir)),
-    // chunk-then-pack: split long docs into windows, then fill fixed
-    // token budgets — the pretraining batch-assembly shape
-    "text_chunk_pack" -> ((s, dir) => graft.text.SequencePacking.packChunks(s, dir)),
-    // the STREAMING packer's semantics as a gate: four contiguous
-    // doc_id-range micro-batches replayed in stream order, pack ids
-    // continuing the carried token total — equals one-shot packChunks
-    // (same oracle); arbitrary MemoryStream batching ≡ one-shot is
-    // pinned in ChunkStreamSpec
-    "text_chunk_pack_stream" -> ((s, dir) => {
-      import org.apache.spark.sql.functions.{coalesce, col, lit, max}
-      val docs = s.read.parquet(s"$dir/documents.parquet")
-      // coalesce: an empty corpus must yield an empty frame (the
-      // registry-wide contract), not an NPE off the null max
-      val maxId = docs.agg(coalesce(max(col("doc_id")), lit(-1L)))
-        .head().getLong(0)
-      val step = maxId / 4 + 1
-      val packer = new graft.streaming.ChunkIngest.StreamPacker()
-      (0 until 4).map { b =>
-        packer.packBatch(docs.filter(
-          col("doc_id") >= b * step && col("doc_id") < (b + 1) * step))
-      }.reduce(_ unionByName _)
-    }),
-    "text_quality" -> ((s, dir) => graft.text.TextAnalysis.quality(s, dir)),
-    "text_langid" -> ((s, dir) => graft.text.TextAnalysis.langId(s, dir)),
-    "text_fingerprint" -> ((s, dir) => graft.text.TextAnalysis.fingerprint(s, dir)),
-    // integer feature-hash embedding (the hashing trick, FNV-31
-    // buckets) + lexical nearest-neighbors over it — the hash-gated
-    // twin of the Embed seam's HashEncoder
-    "text_embed_buckets" -> ((s, dir) => graft.text.Embed.hashBuckets(s, dir)),
-    "text_embed_topk" -> ((s, dir) => graft.text.Embed.bucketTopK(s, dir)),
-    // chunk -> embed composed in one hash gate (the ingest pipeline's
-    // chunk-level vectors)
-    "text_chunk_embed" -> ((s, dir) => graft.text.Embed.chunkHashBuckets(s, dir)),
-    "text_repetition" -> ((s, dir) => graft.text.TextAnalysis.repetition(s, dir)),
-    "text_lm_score" -> ((s, dir) => graft.text.TextAnalysis.lmScore(s, dir)),
-    "text_tfidf" -> ((s, dir) => graft.text.TextAnalysis.tfIdfTop(s, dir)),
-    "text_classify" -> ((s, dir) => graft.text.TextAnalysis.classify(s, dir)),
-    "text_pack" -> ((s, dir) => graft.text.SequencePacking.packDocuments(s, dir)),
-    // deterministic seeded training-order permutation of the packs,
-    // computed via the distributed global-rank primitive
-    "text_pack_order" -> ((s, dir) =>
-      graft.text.SequencePacking.shuffledPackOrder(s, dir)),
-    "text_clean" -> ((s, dir) => graft.text.Cleaning.clean(s, dir)),
-    "text_decontam" -> ((s, dir) => graft.text.Cleaning.contamination(s, dir)),
-    "text_decontam_bloom" -> ((s, dir) => graft.text.Cleaning.contaminationBloom(s, dir)),
-    "text_entropy" -> ((s, dir) => graft.text.TextAnalysis.tokenEntropy(s, dir)),
-    // the per-(split, lang) rollup shipped with a curated corpus:
-    // leak-safe split x langid x quality, one map-side-combined rollup
-    "text_corpus_report" -> ((s, dir) =>
-      graft.text.TextAnalysis.corpusReport(s, dir)),
-    // the "why was this doc kept/dropped" report: every hygiene
-    // verdict joined per doc + the combined keep bit
-    "text_filter_funnel" -> ((s, dir) => graft.text.TextAnalysis.filterFunnel(s, dir)),
-    // the six-verdict multimodal funnel: text verdicts + the SemDeDup
-    // keeper bit over the document's embedding (vec_id == doc_id)
-    "text_filter_funnel_semantic" -> ((s, dir) =>
-      graft.text.TextAnalysis.filterFunnelSemantic(s, dir)),
-    "text_pii" -> ((s, dir) => graft.text.Cleaning.pii(s, dir)),
-    // trained quality classifier: weights side-dumped; the oracle
-    // re-hashes features and recomputes the margin from raw text
-    // (accuracy/agreement still asserted in QualityClassifierSpec)
-    "text_quality_clf" -> ((s, dir) => graft.text.QualityClassifier.classifyTrained(s, dir)),
-    "text_mixture" -> ((s, dir) => graft.text.Sampling.sourceMixture(s, dir)),
-    "text_sample_weighted" -> ((s, dir) => graft.text.Sampling.weightedSample(s, dir)),
-    "text_bpe_pairs" -> ((s, dir) => graft.text.Bpe.pairCounts(s, dir)),
-    "text_bpe_encode" -> ((s, dir) => graft.text.Bpe.encode(s, dir)),
-    // token-id product surface: per-position ids + the vocab table;
-    // the merge table is side-dumped and the oracle re-applies it
-    // (BpeSpec still carries the sequential-oracle differential)
-    "text_bpe_ids" -> ((s, dir) => graft.text.Bpe.encodeIds(s, dir)),
-    "text_bpe_vocab" -> ((s, dir) => graft.text.Bpe.vocabDf(s, dir)),
-    "text_pipeline" -> ((s, dir) => graft.text.CorpusPipeline.prepare(s, dir)),
-    // the pipeline emitting the real artifact: BPE-id counts + packs,
-    // re-derived by the oracle from the dumped merges
-    "text_pipeline_ids" -> ((s, dir) => graft.text.CorpusPipeline.prepareIds(s, dir)),
-    // ---- multimodal (stubbed decode; real plumbing) ----
-    "mm_features" -> ((s, dir) => graft.multimodal.Multimodal.features(s, dir)),
-    // perceptual image near-dup: real QOI/BMP pixel decode + aHash
-    // where possible, stub hash elsewhere; SimHash band machinery
-    "mm_image_dedup" -> ((s, dir) =>
-      graft.multimodal.ImageDedup.imageDedup(s, dir)),
-    // the JPEG path through the same decode -> aHash -> multi-probe
-    // pipeline: odd docs carry their even neighbor's image with one
-    // block perturbed (real near-dups, not byte copies); id%7==5 rows
-    // are truncated streams pinning the stub fallback in-gate
-    "mm_image_dedup_jpeg" -> ((s, dir) =>
-      graft.multimodal.Jpeg.imageDedupJpeg(s, dir)),
-    // the media near-dup SCALE path: exact-signature collapse +
-    // 4x16-bit wide bands + radius-3 probes over the same JPEG
-    // fixture, pinned by the all-pairs Hamming <= 15 truth (the r13
-    // rehearsal finding: 8-bit bands + identical-sig cliques lose
-    // twins at 13x; this formulation keeps recall 1.0)
-    "mm_image_dedup_wide" -> ((s, dir) =>
-      graft.multimodal.Jpeg.imageDedupWide(s, dir)),
-    // the streaming crawl twin: per-batch decode+hash landed as
-    // DeltaIndex subdirs with a mid-stream staged compaction, then
-    // the same banded pair machinery over the reassembled index
-    "mm_image_dedup_stream" -> ((s, dir) =>
-      graft.streaming.MediaStream.imageDedupStream(s, dir)),
-    // audio features: real PCM WAV sample decode on the gate corpus'
-    // real rows, byte-length stub on the fakes
-    // extended WAV profile: stereo mean-downmix (truncating) +
-    // 8-bit widening + rate/channel readout, closed-form oracle
-    "mm_audio_features_ext" -> ((s, dir) =>
-      graft.multimodal.AudioFeatures.extFeatureReport(s, dir)),
-    "mm_audio_features" -> ((s, dir) =>
-      graft.multimodal.AudioFeatures.audioFeatures(s, dir)),
-    // perceptual audio near-dup: energy-delta fingerprint over real
-    // PCM where decodable, byte-delta fallback elsewhere; same
-    // multi-probe SimHash band machinery as mm_image_dedup
-    "mm_audio_dedup" -> ((s, dir) =>
-      graft.multimodal.AudioDedup.audioDedup(s, dir)),
-    // the Haitsma-Kalker filterbank form: lag-difference comb
-    // filterbank band energies, the HK time x band gradient bit rule
-    // (integer arithmetic end to end); same banded pair machinery
-    "mm_audio_dedup_fb" -> ((s, dir) =>
-      graft.multimodal.AudioDedup.audioDedupFb(s, dir)),
-    // REAL baseline-TIFF decode (TIFF 6.0: both byte orders, IFD
-    // walk, gray/RGB/RGBA/palette/WhiteIsZero photometrics,
-    // multi-strip, PackBits): lossless, so the oracle recomputes
-    // pixel sums from doc_id closed forms (the WhiteIsZero class
-    // stores inverted samples and decodes back to the same forms);
-    // truncated rows (id % 5 == 3) pin the fallback
-    "mm_tiff_decode" -> ((s, dir) => graft.multimodal.Tiff.decodeReport(s, dir)),
-    // REAL FLAC decode (RFC 9639: metadata walk, frame headers with
-    // CRC-8, all four subframe types, Rice/Rice2/escape residuals,
-    // the four channel assignments, wasted bits, frame CRC-16):
-    // FLAC is lossless, so the oracle re-synthesizes the exact
-    // closed-form samples and refolds the features in SQL; truncated
-    // rows (id % 5 == 3) pin the all-(-1) fallback
-    "mm_flac_decode" -> ((s, dir) => graft.multimodal.Flac.decodeReport(s, dir)),
-    // compressed audio in the fingerprint near-dup family: odd docs
-    // are LOSSLESS RE-ENCODES of their even neighbor (same samples,
-    // different subframe/assignment/residual choices -> identical
-    // fingerprints at completely different bytes); id%9==5 truncated
-    "mm_audio_dedup_flac" -> ((s, dir) =>
-      graft.multimodal.Flac.audioDedupFlac(s, dir)),
-    "mm_kind_summary" -> ((s, dir) => graft.multimodal.Multimodal.kindSummary(s, dir)),
-    "mm_frames" -> ((s, dir) => graft.multimodal.Multimodal.frameSample(s, dir)),
-    // REAL baseline-JPEG decode (T.81: marker walk, DHT canonical
-    // codes, byte-stuffed entropy scan, dequant, full 2-D IDCT):
-    // block-constant fixtures make the lossy codec gate-exact (solid
-    // blocks carry only their DC coefficient, quant 1 keeps it, the
-    // IDCT reconstructs the gray exactly), so the oracle recomputes
-    // pixel sums from doc_id closed forms; doc_id % 5 == 3 rows are
-    // truncated streams pinning the (-1,...) fallback in-gate
-    "mm_jpeg_decode" -> ((s, dir) => graft.multimodal.Jpeg.decodeReport(s, dir)),
-    // REAL PNG decode (RFC 2083: CRC'd chunk walk, multi-IDAT
-    // inflate, all five scanline filters, gray/truecolor/RGBA/
-    // gray+alpha): DEFLATE is lossless so every pixel is the doc_id
-    // closed form verbatim and the oracle recomputes the sums;
-    // doc_id % 5 == 3 rows are truncated streams pinning the
-    // (-1,...) fallback in-gate
-    "mm_png_decode" -> ((s, dir) => graft.multimodal.Png.decodeReport(s, dir)),
-    // REAL GIF decode (GIF89a: block walk, the full variable-width
-    // LZW, palette lookup, 4-pass row de-interlace): LZW is lossless
-    // so every pixel is the doc_id closed form verbatim; truncated
-    // rows pin the fallback
-    "mm_gif_decode" -> ((s, dir) => graft.multimodal.Gif.decodeReport(s, dir)),
-    // the GIF path through the decode -> aHash -> multi-probe
-    // near-dup pipeline (the JPEG/PNG twins' shape)
-    "mm_image_dedup_gif" -> ((s, dir) =>
-      graft.multimodal.Gif.imageDedupGif(s, dir)),
-    // the PNG path through the same decode -> aHash -> multi-probe
-    // near-dup pipeline (the mm_image_dedup_jpeg twin): odd docs
-    // carry their even neighbor's frame with the top-left 8x8
-    // region brightened (re-filtered and re-deflated, so the byte
-    // streams differ completely); id%7==5 rows are truncated
-    "mm_image_dedup_png" -> ((s, dir) =>
-      graft.multimodal.Png.imageDedupPng(s, dir)),
-    // REAL VP8L WebP decode (RFC 9649: RIFF walk, LSB-first bit
-    // reading, simple/normal prefix codes, color cache, LZ77 with 2D
-    // distance codes, meta prefix codes, all four transforms): VP8L
-    // is lossless so every variant decodes to the closed-form pixels
-    // and the oracle recomputes the sums; the doc_id % 7 variant
-    // cycles the whole spec surface; truncated rows (id % 5 == 3)
-    // pin the (-1,...) fallback
-    "mm_webp_decode" -> ((s, dir) => graft.multimodal.Webp.decodeReport(s, dir)),
-    // the WebP path through the decode -> aHash -> multi-probe
-    // near-dup pipeline (the JPEG/PNG/GIF twins' shape): odd docs
-    // re-encode their even neighbor (same VP8L variant) with the
-    // top-left 8x8 region brightened; id%9==5 rows are truncated
-    "mm_image_dedup_webp" -> ((s, dir) =>
-      graft.multimodal.Webp.imageDedupWebp(s, dir)),
-    // MJPEG-in-AVI: the first COMPRESSED-video pixel path — the RIFF
-    // walker composes with the T.81 decoder, one full JPEG per frame
-    // chunk; both sums recomputed from doc_id closed forms (the
-    // frame-weighted variant catches dropped/reordered frames)
-    "mm_video_frames_mjpeg" -> ((s, dir) =>
-      graft.multimodal.VideoFrames.videoFrameReportMjpeg(s, dir)),
-    // compressed-video near-dup: per-frame JPEG decode -> aHash ->
-    // temporal-majority fold -> banded Hamming; odd docs re-encode
-    // their even neighbor with one block of frame 0 perturbed
-    "mm_video_dedup_mjpeg" -> ((s, dir) =>
-      graft.multimodal.VideoFrames.videoDedupMjpeg(s, dir)),
-    // image resize: decode -> box-average -> QOI re-encode -> decode,
-    // integer-exact; the oracle recomputes the PIXEL arithmetic from
-    // the gate corpus' closed-form images (no dump taken on faith)
-    "mm_resize" -> ((s, dir) => graft.multimodal.ImageResize.resizeReport(s, dir)),
-    // audio resample: decode -> window-mean decimate -> WAV re-encode
-    // -> decode, integer-exact; the oracle recomputes the SAMPLE
-    // arithmetic from the closed-form gate WAVs (same shape as resize)
-    "mm_resample" -> ((s, dir) =>
-      graft.multimodal.AudioResample.resampleReport(s, dir)),
-    // real VIDEO frame decode: uncompressed AVI (raw DIB frames), the
-    // oracle recomputes frame content, count, dims AND the container
-    // byte length from closed forms (the resize/resample shape on the
-    // time axis); MP4 rows keep their honest header-only boundary
-    "mm_video_frames" -> ((s, dir) =>
-      graft.multimodal.VideoFrames.videoFrameReport(s, dir)),
-    // video thumbnails: decode -> middle frame -> box resize -> QOI
-    // re-encode -> decode, one recomputing oracle across modalities
-    "mm_video_thumbs" -> ((s, dir) =>
-      graft.multimodal.VideoFrames.thumbnailReport(s, dir)),
-    // perceptual video near-dup: temporal-majority fold of per-frame
-    // aHashes over real decoded frames, byte fallback elsewhere; the
-    // same multi-probe band machinery as the image and audio twins
-    "mm_video_dedup" -> ((s, dir) =>
-      graft.multimodal.VideoFrames.videoDedup(s, dir)),
-  )
+  /** Every gate, in family order; names are distinct. */
+  val gates: Seq[Gate] = Gate.registry(QueryGates.gates ++ KvGates.gates ++
+    RelGates.gates ++ DedupGates.gates ++ AnnGates.gates ++ TextGates.gates ++
+    MediaGates.gates)
 
-  /** Shared events→KvOp projection, kept textually identical across the
-    * KV oracles (FIXTURES.md §2 mapping). */
-  private val kvOpsCte: String =
-    """ops AS (
-      |  SELECT event_id AS seq,
-      |         CASE event_type WHEN 'click' THEN 'append'
-      |              WHEN 'purchase' THEN 'put' WHEN 'signup' THEN 'put'
-      |              ELSE 'get' END AS op,
-      |         'u' || CAST(user_id % 97 AS VARCHAR) AS key,
-      |         'v' || CAST(event_id AS VARCHAR) || ';' AS value
-      |  FROM events)""".stripMargin
+  /** Query name → the query over a corpus dir. */
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    gates.map(g => g.name -> g.run).toMap
 
-  /** This run's config-history side dump (the gate runs at sf0.01) —
-    * see ShardCtrler.sideDumpToken for why the path is run-scoped. */
-  private def sideDumpGlob: String =
-    s"${ShardCtrler.sideDumpPath(ShardCtrler.lastDumpBase)}/*.parquet"
-
-  /** This run's BPE merge-table side dump (graft.text.Bpe
-    * .trainMergesWithDump) — the trained merges are the ONLY artifact
-    * the BPE oracles take on faith; everything downstream (the merge
-    * APPLY, ids, counts, vocab) is re-derived in DuckDB. */
-  private def bpeMergesGlob: String =
-    s"${graft.text.Bpe.sideDumpPath(graft.text.Bpe.lastDumpBase)}/*.parquet"
-
-  /** This run's trained-classifier weight dump (graft.text
-    * .QualityClassifier.classifyTrained). */
-  private def clfWeightsGlob: String =
-    s"${graft.text.QualityClassifier.sideDumpPath(
-      graft.text.QualityClassifier.lastDumpBase)}/*.parquet"
-
-  /** This run's SimHash signature dump (graft.dedup.Dedup
-    * .simhashSigs) — the map-only per-doc signature pass is the only
-    * thing the simhash oracles take on faith; banding, caps, probes,
-    * Hamming filter and pair generation are re-derived in SQL. */
-  private def simhashSigsGlob: String =
-    s"${graft.dedup.Dedup.simhashDumpPath(graft.dedup.Dedup.lastSimhashBase)}/*.parquet"
-
-  /** This run's trained-centroid dumps (graft.sim.Kmeans) — the Lloyd
-    * iterations are taken on faith; assignment, probe selection,
-    * scoring and ranks are re-derived from embeddings + codebook. */
-  private def kmeansCellsGlob: String =
-    s"${graft.sim.Kmeans.cellsDumpPath(graft.sim.Kmeans.lastCellsBase)}/*.parquet"
-  private def ivfTrainedGlob: String =
-    s"${graft.sim.Kmeans.ivfTrainedDumpPath(graft.sim.Kmeans.lastIvfTrainedBase)}/*.parquet"
-  private def ivfTrainedParGlob: String =
-    s"${graft.sim.Kmeans.ivfTrainedParDumpPath(graft.sim.Kmeans.lastIvfTrainedParBase)}/*.parquet"
-  private def semDedupGlob: String =
-    s"${graft.dedup.SemDedup.dumpPath(graft.dedup.SemDedup.lastBase)}/*.parquet"
-  private def semIdxCentsGlob: String =
-    s"${graft.dedup.SemIndex.centsDumpPath(graft.dedup.SemIndex.lastBase)}/*.parquet"
-  private def semStreamCentsGlob: String =
-    s"${graft.streaming.SemStream.centsDumpPath(graft.streaming.SemStream.lastBase)}/*.parquet"
-  private def semFunnelGlob: String =
-    s"${graft.dedup.SemDedup.funnelDumpPath(graft.dedup.SemDedup.lastFunnelBase)}/*.parquet"
-  /** The SemDeDup re-derivation against a dumped codebook glob —
-    * shared by the first-k and k-means|| trainer gates (assignment,
-    * keep priority, τ-test and drop verdicts re-derived; only the
-    * trainer behind the dump differs). */
-  private def semDedupSql(glob: String): String =
-    s"""WITH e AS (SELECT vec_id,
-       |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-       |  FROM embeddings),
-       |c AS (SELECT cell, v FROM read_parquet('$glob')),
-       |asg AS (
-       |  SELECT vec_id, cell, sim FROM (
-       |    SELECT e.vec_id, c.cell, list_cosine_similarity(e.v, c.v) AS sim,
-       |      row_number() OVER (PARTITION BY e.vec_id
-       |        ORDER BY list_cosine_similarity(e.v, c.v) DESC, c.cell) AS rn
-       |    FROM e, c) WHERE rn = 1),
-       |m AS (SELECT a.vec_id, a.cell, a.sim, e.v
-       |      FROM asg a JOIN e ON e.vec_id = a.vec_id),
-       |drops AS (
-       |  SELECT DISTINCT x.vec_id
-       |  FROM m x JOIN m y ON x.cell = y.cell AND x.vec_id <> y.vec_id
-       |  WHERE (y.sim < x.sim OR (y.sim = x.sim AND y.vec_id < x.vec_id))
-       |    AND list_cosine_similarity(x.v, y.v) >= 0.45)
-       |SELECT m.vec_id, m.cell,
-       |  CAST(round(m.sim * 1000000) AS BIGINT) AS cent_sim_micro,
-       |  (d.vec_id IS NULL) AS kept
-       |FROM m LEFT JOIN drops d ON d.vec_id = m.vec_id""".stripMargin
-
-  private def semDedupCapGlob: String =
-    s"${graft.dedup.SemDedup.cappedDumpPath(graft.dedup.SemDedup.lastCappedBase)}/*.parquet"
-  private def semDedupParGlob: String =
-    s"${graft.dedup.SemDedup.parDumpPath(graft.dedup.SemDedup.lastParBase)}/*.parquet"
-  private def imgHashGlob: String =
-    s"${graft.multimodal.ImageDedup.dumpPath(graft.multimodal.ImageDedup.lastBase)}/*.parquet"
-  private def jpegHashGlob: String =
-    s"${graft.multimodal.Jpeg.dedupDumpPath(graft.multimodal.Jpeg.lastDedupBase)}/*.parquet"
-  private def pngHashGlob: String =
-    s"${graft.multimodal.Png.dedupDumpPath(graft.multimodal.Png.lastDedupBase)}/*.parquet"
-  private def gifHashGlob: String =
-    s"${graft.multimodal.Gif.dedupDumpPath(graft.multimodal.Gif.lastDedupBase)}/*.parquet"
-  private def webpHashGlob: String =
-    s"${graft.multimodal.Webp.dedupDumpPath(graft.multimodal.Webp.lastDedupBase)}/*.parquet"
-  private def flacHashGlob: String =
-    s"${graft.multimodal.Flac.dedupDumpPath(graft.multimodal.Flac.lastDedupBase)}/*.parquet"
-
-  /** The `mm_flac_decode` oracle: FLAC is lossless, so the features
-    * refold from the closed-form samples alone — the per-(ch, i)
-    * source (the wasted-bits class id % 13 = 6 uses even samples of
-    * half range), the CONSTANT-block override ((doc_id + i/64) % 5 =
-    * 0 pins every sample in the block to the block-start form), the
-    * truncating mean downmix, and the same lag-based
-    * feature fold as mm_audio_features_ext. */
-  private def flacDecodeSql: String = {
-    def base(j: String): String =
-      s"""CASE WHEN si.doc_id % 13 = 6
-         |      THEN ((si.doc_id * 37 + ($j) * 101 + cs.ch * 59) % 2001 - 1000) * 2
-         |      ELSE (si.doc_id * 37 + ($j) * 101 + cs.ch * 59) % 4001 - 2000
-         |      END""".stripMargin
-    s"""WITH ext AS (
-       |  SELECT doc_id, 1 + doc_id % 2 AS c, 64 + doc_id % 96 AS n,
-       |    8000 + 525 * (doc_id % 4) AS rate
-       |  FROM documents),
-       |si AS (SELECT doc_id, c, unnest(range(0, n)) AS i FROM ext),
-       |cs AS (SELECT unnest(range(0, 2)) AS ch),
-       |smp AS (
-       |  SELECT si.doc_id, si.c, si.i,
-       |    CASE WHEN (si.doc_id + si.i // 64) % 5 = 0
-       |      THEN ${base("(si.i // 64) * 64")}
-       |      ELSE ${base("si.i")}
-       |    END AS s
-       |  FROM si, cs WHERE cs.ch < si.c),
-       |mix AS (SELECT doc_id, i, CAST(sum(s) AS BIGINT) // max(c) AS m
-       |  FROM smp GROUP BY doc_id, i),
-       |lagd AS (SELECT doc_id, m,
-       |    lag(m) OVER (PARTITION BY doc_id ORDER BY i) AS prev
-       |  FROM mix),
-       |f AS (
-       |  SELECT doc_id, count(*) AS n_samples, max(abs(m)) AS peak_abs,
-       |    coalesce(sum(CASE WHEN m <> 0 AND prev <> 0
-       |                       AND sign(m) <> sign(prev) THEN 1 ELSE 0 END), 0)
-       |      AS zero_crossings,
-       |    sum(m * m) AS energy
-       |  FROM lagd GROUP BY doc_id)
-       |SELECT e.doc_id,
-       |  CAST(CASE WHEN e.doc_id % 5 = 3 THEN -1 ELSE e.rate END AS BIGINT) AS rate,
-       |  CAST(CASE WHEN e.doc_id % 5 = 3 THEN -1 ELSE e.c END AS BIGINT) AS channels,
-       |  CAST(CASE WHEN e.doc_id % 5 = 3 THEN -1 ELSE f.n_samples END AS BIGINT) AS n_samples,
-       |  CAST(CASE WHEN e.doc_id % 5 = 3 THEN -1 ELSE f.peak_abs END AS BIGINT) AS peak_abs,
-       |  CAST(CASE WHEN e.doc_id % 5 = 3 THEN -1 ELSE f.zero_crossings END AS BIGINT) AS zero_crossings,
-       |  CAST(CASE WHEN e.doc_id % 5 = 3 THEN -1 ELSE f.energy END AS BIGINT) AS energy
-       |FROM ext e JOIN f ON f.doc_id = e.doc_id""".stripMargin
-  }
-  private def jpegStreamHashGlob: String =
-    s"${graft.streaming.MediaStream.dumpPath(graft.streaming.MediaStream.lastBase)}/*.parquet"
-  private def jpegWideHashGlob: String =
-    s"${graft.multimodal.Jpeg.wideDumpPath(graft.multimodal.Jpeg.lastWideBase)}/*.parquet"
-  private def audHashGlob: String =
-    s"${graft.multimodal.AudioDedup.dumpPath(graft.multimodal.AudioDedup.lastBase)}/*.parquet"
-  private def audFbGlob: String =
-    s"${graft.multimodal.AudioDedup.fbDumpPath(graft.multimodal.AudioDedup.lastFbBase)}/*.parquet"
-  private def vidHashGlob: String =
-    s"${graft.multimodal.VideoFrames.dumpPath(graft.multimodal.VideoFrames.lastBase)}/*.parquet"
-  private def vidMjpegGlob: String =
-    s"${graft.multimodal.VideoFrames.mjpegDumpPath(graft.multimodal.VideoFrames.lastMjpegBase)}/*.parquet"
-
-  /** This run's PQ codebook dumps: the standalone PQ trainer's books
-    * (graft.sim.Pq.topKPq) and the session IVF-PQ index model
-    * (graft.sim.IvfIndex.buildOrLoadPq — centroids + books). */
-  private def pqBooksGlob: String =
-    s"${graft.sim.Pq.booksDumpPath(graft.sim.Pq.lastPqBase)}/*.parquet"
-  private def ivfpqCentsGlob: String =
-    s"${graft.sim.IvfIndex.centsDumpPath(graft.sim.IvfIndex.lastModelBase)}/*.parquet"
-  private def ivfpqBooksGlob: String =
-    s"${graft.sim.IvfIndex.booksDumpPath(graft.sim.IvfIndex.lastModelBase)}/*.parquet"
-  private def ivfpqADepthGlob: String =
-    s"${graft.sim.IvfIndex.adepthDumpPath(graft.sim.IvfIndex.lastModelBase)}/*.parquet"
-
-  /** This run's OPQ rotation + rotated-space codebooks
-    * (graft.sim.Opq.topKPqOpq) and reduced-PCA model
-    * (graft.sim.Pca.topKL2PcaReduced). */
-  private def opqRotGlob: String =
-    s"${graft.sim.Opq.rotDumpPath(graft.sim.Opq.lastOpqBase)}/*.parquet"
-  private def opqBooksGlob: String =
-    s"${graft.sim.Opq.booksDumpPath(graft.sim.Opq.lastOpqBase)}/*.parquet"
-  private def pcaModelGlob: String =
-    s"${graft.sim.Pca.modelDumpPath(graft.sim.Pca.lastPcaBase)}/*.parquet"
-
-  /** The BPE re-derivation CTE chain: given `bmerges(ord, a, b)` (the
-    * side-dumped merge table) and `dw(doc_id, ws)` (per-doc ordered
-    * word lists) defined upstream, re-applies the merges to the
-    * DISTINCT words and yields `btoks(w, ts)` — per word, the final
-    * symbol list. The mechanism is independent of the Scala apply:
-    * a word is a chr(31)-wrapped symbol string ("<us>a<us><us>b<us>")
-    * and ONE merge round is ONE `replace` of "<us>a<us><us>b<us>"
-    * with "<us>ab<us>" — string replace scans left-to-right and never
-    * rescans replaced output, which is exactly mergePair's greedy
-    * non-overlapping semantics (Bpe.mergePair); the wrapping makes a
-    * cross-symbol false match impossible. The recursion is driven by
-    * the DUMPED ord column, so a tampered or reordered merge table
-    * changes the derivation and fails the gate. */
-  /** text_filter_funnel's five component-verdict CTEs (q/l/r/e/k) —
-    * shared verbatim with the semantic-extended funnel so the two
-    * gates cannot drift. Pre-stripped (inserted into s-interpolated
-    * oracles whose own margins strip around it). */
-  private val funnelCtes: String =
-    """q AS (
-      |  SELECT doc_id,
-      |    CAST(len(list_filter(string_split_regex(text, '\s+'), x -> x <> ''))
-      |         BETWEEN 5 AND 10000
-      |     AND len(list_filter(string_split_regex(lower(text), '[^a-z]+'),
-      |             x -> x IN ('the','a','of','and','to','is','in'))) * 20
-      |         >= len(list_filter(string_split_regex(text, '\s+'), x -> x <> ''))
-      |     AS INT) AS q_ok
-      |  FROM documents),
-      |lc AS (
-      |  SELECT doc_id,
-      |    len(list_filter(string_split_regex(lower(text), '[^a-z]+'),
-      |        x -> x IN ('the','and','of','with'))) AS c_en,
-      |    len(list_filter(string_split_regex(lower(text), '[^a-z]+'),
-      |        x -> x IN ('der','die','das','und'))) AS c_de,
-      |    len(list_filter(string_split_regex(lower(text), '[^a-z]+'),
-      |        x -> x IN ('el','los','las','y'))) AS c_es,
-      |    len(list_filter(string_split_regex(lower(text), '[^a-z]+'),
-      |        x -> x IN ('le','les','et','une'))) AS c_fr
-      |  FROM documents),
-      |l AS (SELECT doc_id,
-      |    CAST(c_en >= c_de AND c_en >= c_es AND c_en >= c_fr AS INT) AS lang_ok
-      |  FROM lc),
-      |rb AS (
-      |  SELECT doc_id,
-      |    CASE WHEN len(t) >= 2 THEN
-      |      list_transform(range(1, len(t)), i -> t[i] || ' ' || t[i+1])
-      |    ELSE [] END AS bigrams
-      |  FROM (SELECT doc_id,
-      |          list_filter(string_split_regex(lower(text), '[^a-z]+'),
-      |                      x -> x <> '') AS t
-      |        FROM documents)),
-      |r AS (SELECT doc_id,
-      |    CAST(NOT ((len(bigrams) - len(list_distinct(bigrams))) * 10
-      |              >= len(bigrams) AND len(bigrams) > 0) AS INT) AS rep_ok
-      |  FROM rb),
-      |etoks AS (
-      |  SELECT doc_id,
-      |    unnest(list_filter(string_split_regex(lower(text), '[^a-z]+'),
-      |                       x -> x <> '')) AS tok
-      |  FROM documents),
-      |ec AS (SELECT doc_id, tok, count(*) AS cnt FROM etoks GROUP BY doc_id, tok),
-      |eh AS (SELECT doc_id, sum(cnt) AS n, sum(cnt * ln(cnt)) AS clogc
-      |       FROM ec GROUP BY doc_id),
-      |e AS (SELECT d.doc_id,
-      |    CAST(coalesce(round((ln(eh.n) - eh.clogc / eh.n) * 1000000), 0)
-      |         >= 2000000 AS INT) AS ent_ok
-      |  FROM documents d LEFT JOIN eh ON d.doc_id = eh.doc_id),
-      |k AS (SELECT doc_id,
-      |    CAST(doc_id = min(doc_id) OVER (PARTITION BY md5(text)) AS INT)
-      |      AS is_keeper
-      |  FROM documents)""".stripMargin
-
-  private val bpeDeriveCtes: String =
-    """bwords AS (SELECT DISTINCT unnest(ws) AS w FROM dw),
-      |binit AS (
-      |  SELECT w,
-      |    array_to_string(list_transform(range(1, strlen(w) + 1),
-      |      i -> chr(31) || substr(w, CAST(i AS INT), 1) || chr(31)), '') ||
-      |      chr(31) || '</w>' || chr(31) AS s
-      |  FROM bwords),
-      |brec AS (
-      |  SELECT w, s, 0 AS ord FROM binit
-      |  UNION ALL
-      |  SELECT r.w,
-      |    replace(r.s, chr(31) || m.a || chr(31) || chr(31) || m.b || chr(31),
-      |                 chr(31) || m.a || m.b || chr(31)),
-      |    r.ord + 1
-      |  FROM brec r JOIN bmerges m ON m.ord = r.ord + 1),
-      |btoks AS (
-      |  SELECT w, list_filter(string_split(s, chr(31)), x -> x <> '') AS ts
-      |  FROM brec WHERE ord = (SELECT coalesce(max(ord), 0) FROM bmerges))""".stripMargin
-
-  /** Deterministic BPE vocab re-derived from the dumped merges (the
-    * Bpe.vocabOf id space: 0–25 letters, 26 terminal, 27+i merges). */
-  private val bpeVocabCte: String =
-    """bvocab AS (
-      |  SELECT CAST(i - 1 AS INT) AS token_id, chr(CAST(96 + i AS INT)) AS token
-      |  FROM range(1, 27) t(i)
-      |  UNION ALL SELECT 26, '</w>'
-      |  UNION ALL SELECT CAST(26 + ord AS INT), a || b FROM bmerges)""".stripMargin
-
-  private val profileSql: String =
-    """WITH d AS (SELECT printf('%09d', doc_id) AS name, text FROM documents),
-      |pairs AS (
-      |  SELECT 'a' AS key, name AS value FROM d
-      |  UNION ALL SELECT 'b', CAST(length(name) AS VARCHAR) FROM d
-      |  UNION ALL SELECT 'c', CAST(length(text) AS VARCHAR) FROM d
-      |  UNION ALL SELECT 'd', 'xyzzy' FROM d)
-      |SELECT key, string_agg(value, ' ' ORDER BY value) AS profile
-      |FROM pairs GROUP BY key""".stripMargin
-
-  private val wcSql: String =
-    """SELECT word, count(*) AS cnt
-      |FROM (SELECT unnest(string_split_regex(text, '[^\p{L}]+')) AS word FROM documents)
-      |WHERE length(word) > 0 GROUP BY word""".stripMargin
-
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] = Map(
-    "q_wc" -> wcSql,
-    // Count-Min estimates are one-sided (est ≥ true, within εN) and
-    // EXACT whenever a word avoids collision in at least one of the 4
-    // rows — at width 1024 over this corpus' ~31-word vocabulary a
-    // 4-row total collision has probability ~(31/1024)⁴ ≈ 9e-7 per
-    // word, and CountMinSpec pins estimate==count on the gate corpora,
-    // so the sketch gate carries the exact word-count oracle (the
-    // operator's own lowercase tokenization, estimates aliased `est`).
-    "q_wc_cms" ->
-      """SELECT word, count(*) AS est
-        |FROM (SELECT unnest(string_split_regex(lower(text), '[^\p{L}]+')) AS word
-        |      FROM documents)
-        |WHERE length(word) > 0 GROUP BY word""".stripMargin,
-    // two-phase salted aggregation must be bit-identical to the direct one
-    "q_wc_salted" -> wcSql,
-    // k_route: joins a Scala-fold config history → rows-only check
-    "q_indexer" ->
-      """WITH t AS (
-        |  SELECT DISTINCT printf('%09d', doc_id) AS doc,
-        |         unnest(string_split_regex(text, '[^\p{L}]+')) AS word
-        |  FROM documents)
-        |SELECT word, count(*) AS n_docs, string_agg(doc, ',' ORDER BY doc) AS docs
-        |FROM t WHERE length(word) > 0 GROUP BY word""".stripMargin,
-    "q_profile" -> profileSql,
-    "q_profile_udaf" -> profileSql, // typed Aggregator path, same semantics
-    "q_filecount" ->
-      """SELECT doc_id, count(*) AS n_tokens
-        |FROM (SELECT doc_id, unnest(string_split_regex(text, '[^\p{L}]+')) AS word
-        |      FROM documents)
-        |WHERE length(word) > 0 GROUP BY doc_id""".stripMargin,
-    "k_replay" -> kvReplaySql,
-    "k_replay_dedup" -> kvReplaySql, // events have unique (client, clientSeq)
-    "k_replay_stream" -> kvReplaySql, // stream fold ≡ batch fold on ordered log
-    "k_getlog" ->
-      s"""WITH $kvOpsCte,
-         |st AS (
-         |  SELECT *,
-         |    count(CASE WHEN op = 'put' THEN 1 END)
-         |      OVER (PARTITION BY key ORDER BY seq ROWS UNBOUNDED PRECEDING) AS era
-         |  FROM ops),
-         |run AS (
-         |  SELECT key, seq, op,
-         |    coalesce(string_agg(CASE WHEN op IN ('put','append') THEN value END, '')
-         |      OVER (PARTITION BY key, era ORDER BY seq ROWS UNBOUNDED PRECEDING), '')
-         |      AS observed
-         |  FROM st)
-         |SELECT key, seq, observed FROM run WHERE op = 'get'""".stripMargin,
-    "k_shard" ->
-      """SELECT DISTINCT p_name AS key, ascii(substr(p_name, 1, 1)) % 10 AS shard
-        |FROM part""".stripMargin,
-    // The rebalance fold itself is not SQL-expressible, but the query
-    // closures materialize it to a RUN-SCOPED side path (the token in
-    // ShardCtrler.sideDumpPath ties this SQL — emitted by the same JVM
-    // that ran the queries — to this run's dump, so a stale dump can
-    // never be compared). k_route / k_migrations RE-DERIVE routing and
-    // handoffs in SQL (epoch assignment, shard function, lag windows)
-    // against the dump; k_config_history itself verifies the FOLD'S
-    // INVARIANTS independently in SQL — balance, liveness, config-0,
-    // shard completeness, and minimal movement between consecutive
-    // configs (the reference controller tests' full invariant set) —
-    // and returns ZERO rows (failing the gate) if any is violated, so
-    // it checks the rebalance semantics, not just an IO round-trip.
-    // The SQL text lives in ShardCtrler.invariantGateSql; the spec
-    // runs the same text in Spark over injected violations to prove
-    // each invariant can fail.
-    "k_config_history" -> ShardCtrler.invariantGateSql(
-      s"SELECT config_num, shard, gid, servers FROM read_parquet('$sideDumpGlob')"),
-    "k_route" -> s"""WITH $kvOpsCte,
-       |hist AS (SELECT config_num, shard, gid
-       |  FROM read_parquet('$sideDumpGlob')),
-       |mx AS (SELECT max(config_num) AS m FROM hist),
-       |r AS (SELECT seq, key, ascii(substr(key, 1, 1)) % 10 AS shard,
-       |        least(seq // 100, (SELECT m FROM mx)) AS config_num
-       |      FROM ops)
-       |SELECT r.seq, r.key, r.shard, r.config_num, h.gid
-       |FROM r LEFT JOIN hist h
-       |  ON h.config_num = r.config_num AND h.shard = r.shard""".stripMargin,
-    "k_migrations" -> s"""WITH $kvOpsCte,
-       |hist AS (SELECT config_num, shard, gid
-       |  FROM read_parquet('$sideDumpGlob')),
-       |mx AS (SELECT max(config_num) AS m FROM hist),
-       |routed AS (
-       |  SELECT o.seq, o.key, o.shard2 AS shard, h.gid
-       |  FROM (SELECT seq, key, ascii(substr(key, 1, 1)) % 10 AS shard2,
-       |          least(seq // 100, (SELECT m FROM mx)) AS config_num FROM ops) o
-       |  JOIN hist h ON h.config_num = o.config_num AND h.shard = o.shard2),
-       |seqd AS (
-       |  SELECT shard, seq, gid,
-       |    lag(gid) OVER (PARTITION BY shard ORDER BY seq) AS prev_gid,
-       |    CASE WHEN row_number() OVER (PARTITION BY shard, key ORDER BY seq) = 1
-       |         THEN 1 ELSE 0 END AS first_k
-       |  FROM routed),
-       |pop AS (
-       |  SELECT *, coalesce(sum(first_k) OVER (PARTITION BY shard ORDER BY seq
-       |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS n_keys
-       |  FROM seqd)
-       |SELECT shard, seq AS at_seq, prev_gid AS from_gid, gid AS to_gid,
-       |  CAST(n_keys AS BIGINT) AS n_keys
-       |FROM pop WHERE prev_gid IS NOT NULL AND prev_gid <> gid""".stripMargin,
-    "k_migrations_evict" -> s"""WITH $kvOpsCte,
-       |hist AS (SELECT config_num, shard, gid
-       |  FROM read_parquet('$sideDumpGlob')),
-       |mx AS (SELECT max(config_num) AS m FROM hist),
-       |routed AS (
-       |  SELECT o.seq, o.key, o.shard2 AS shard, h.gid
-       |  FROM (SELECT seq, key, ascii(substr(key, 1, 1)) % 10 AS shard2,
-       |          least(seq // 100, (SELECT m FROM mx)) AS config_num FROM ops) o
-       |  JOIN hist h ON h.config_num = o.config_num AND h.shard = o.shard2),
-       |seqd AS (
-       |  SELECT shard, seq, key, gid,
-       |    lag(gid) OVER (PARTITION BY shard ORDER BY seq) AS prev_gid
-       |  FROM routed),
-       |erad AS (
-       |  SELECT *, sum(CASE WHEN prev_gid IS NULL OR prev_gid <> gid
-       |                     THEN 1 ELSE 0 END)
-       |    OVER (PARTITION BY shard ORDER BY seq ROWS UNBOUNDED PRECEDING) AS era
-       |  FROM seqd),
-       |era_pop AS (
-       |  SELECT shard, era, count(DISTINCT key) AS pop FROM erad GROUP BY 1, 2)
-       |SELECT e.shard, e.seq AS at_seq, e.prev_gid AS from_gid,
-       |  e.gid AS to_gid, CAST(p.pop AS BIGINT) AS n_keys
-       |FROM erad e JOIN era_pop p ON p.shard = e.shard AND p.era = e.era - 1
-       |WHERE e.prev_gid IS NOT NULL AND e.prev_gid <> e.gid""".stripMargin,
-    "k_serve" -> s"""WITH $kvOpsCte,
-       |hist AS (SELECT config_num, shard, gid
-       |  FROM read_parquet('$sideDumpGlob')),
-       |mx AS (SELECT max(config_num) AS m FROM hist),
-       |routed AS (
-       |  SELECT o.seq, o.shard2 AS shard, h.gid
-       |  FROM (SELECT seq, ascii(substr(key, 1, 1)) % 10 AS shard2,
-       |          least(seq // 100, (SELECT m FROM mx)) AS config_num FROM ops) o
-       |  JOIN hist h ON h.config_num = o.config_num AND h.shard = o.shard2),
-       |hand AS (
-       |  SELECT shard, seq AS h FROM (
-       |    SELECT shard, seq, gid,
-       |      lag(gid) OVER (PARTITION BY shard ORDER BY seq) AS pg
-       |    FROM routed)
-       |  WHERE pg IS NOT NULL AND pg <> gid),
-       |deferred AS (
-       |  SELECT r.shard, r.seq, min(h.h) AS h
-       |  FROM routed r JOIN hand h
-       |    ON h.shard = r.shard AND r.seq >= h.h AND r.seq < h.h + 50
-       |  GROUP BY 1, 2),
-       |trig AS (
-       |  SELECT d.shard, d.h, min(r2.seq) AS t
-       |  FROM (SELECT DISTINCT shard, h FROM deferred) d
-       |  LEFT JOIN routed r2 ON r2.shard = d.shard AND r2.seq >= d.h + 50
-       |  GROUP BY 1, 2)
-       |SELECT r.shard, r.seq,
-       |  CAST(CASE WHEN d.seq IS NOT NULL THEN 1 ELSE 0 END AS INT) AS deferred,
-       |  CASE WHEN d.seq IS NOT NULL THEN coalesce(t.t, d.h + 50)
-       |       ELSE r.seq END AS applied_at
-       |FROM routed r
-       |LEFT JOIN deferred d ON d.shard = r.shard AND d.seq = r.seq
-       |LEFT JOIN trig t ON t.shard = d.shard AND t.h = d.h""".stripMargin,
-    "k_replay_compact" ->
-      s"""WITH base AS ($kvReplaySql)
-         |SELECT key,
-         |  CASE WHEN length(state) > 500
-         |       THEN substr(state, length(state) - 499) ELSE state END AS state_tail,
-         |  CAST(length(state) AS BIGINT) AS total_len
-         |FROM base""".stripMargin,
-    "rel_pricing" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sum_qty,
-        |  CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)) AS BIGINT) AS sum_base_cents,
-        |  CAST(sum(CAST(round(l_extendedprice * (1 - l_discount) * 100) AS BIGINT)) AS BIGINT) AS sum_disc_cents,
-        |  count(*) AS count_order
-        |FROM lineitem
-        |WHERE l_shipdate <= TIMESTAMP '2001-09-01'
-        |GROUP BY l_returnflag, l_linestatus""".stripMargin,
-    "rel_shipping_priority" ->
-      """SELECT l_orderkey, strftime(o_orderdate, '%Y-%m-%d') AS o_orderdate,
-        |  o_orderpriority,
-        |  CAST(sum(CAST(round(l_extendedprice * (1 - l_discount) * 100) AS BIGINT)) AS BIGINT) AS revenue_cents
-        |FROM customer, orders, lineitem
-        |WHERE c_mktsegment = 'BUILDING' AND c_custkey = o_custkey
-        |  AND l_orderkey = o_orderkey
-        |  AND o_orderdate < TIMESTAMP '1998-06-01'
-        |  AND l_shipdate > TIMESTAMP '1998-06-01'
-        |GROUP BY 1, 2, 3
-        |ORDER BY revenue_cents DESC, l_orderkey LIMIT 10""".stripMargin,
-    "rel_local_volume" ->
-      """SELECT n_name,
-        |  CAST(sum(CAST(round(l_extendedprice * (1 - l_discount) * 100) AS BIGINT)) AS BIGINT) AS revenue_cents
-        |FROM region, nation, customer, supplier, orders, lineitem
-        |WHERE r_name = 'ASIA' AND n_regionkey = r_regionkey
-        |  AND s_nationkey = n_nationkey AND c_nationkey = s_nationkey
-        |  AND c_custkey = o_custkey AND l_orderkey = o_orderkey
-        |  AND l_suppkey = s_suppkey
-        |  AND o_orderdate >= TIMESTAMP '1996-01-01'
-        |  AND o_orderdate < TIMESTAMP '1999-01-01'
-        |GROUP BY n_name""".stripMargin,
-    "rel_top_orders" ->
-      """SELECT o_orderkey, CAST(round(o_totalprice * 100) AS BIGINT) AS total_cents
-        |FROM orders ORDER BY total_cents DESC, o_orderkey LIMIT 100""".stripMargin,
-    "rel_first_orders" ->
-      """SELECT o_custkey, o_orderkey, rn FROM (
-        |  SELECT o_custkey, o_orderkey,
-        |    row_number() OVER (PARTITION BY o_custkey
-        |                       ORDER BY o_orderdate, o_orderkey) AS rn
-        |  FROM orders) WHERE rn <= 3""".stripMargin,
-    "rel_events_daily" ->
-      """SELECT strftime(date_trunc('day', ts), '%Y-%m-%d') AS day, event_type,
-        |  count(*) AS n,
-        |  CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS value_cents
-        |FROM events GROUP BY 1, 2""".stripMargin,
-    "rel_running" ->
-      """SELECT o_custkey, o_orderkey,
-        |  CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT))
-        |    OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
-        |    AS BIGINT) AS run_cents
-        |FROM orders""".stripMargin,
-    "rel_daily_delta" ->
-      """WITH d AS (
-        |  SELECT strftime(date_trunc('day', ts), '%Y-%m-%d') AS day,
-        |    event_type, count(*) AS n
-        |  FROM events GROUP BY 1, 2)
-        |SELECT day, event_type, n,
-        |  CAST(n - coalesce(lag(n) OVER (PARTITION BY event_type ORDER BY day), 0)
-        |    AS BIGINT) AS delta
-        |FROM d""".stripMargin,
-    "rel_distinct_users" ->
-      """SELECT event_type, count(DISTINCT user_id) AS n_users
-        |FROM events GROUP BY event_type""".stripMargin,
-    // banded approx gates: the oracle re-derives the EXACT twin and
-    // asserts the verdict column is TRUE — a sketch leaving its error
-    // band flips within_band and breaks the hash. The sketch VALUE is
-    // deliberately not in the output (engine-specific); its error
-    // contract is the gated claim.
-    "rel_approx_users" ->
-      """SELECT event_type, count(DISTINCT user_id) AS n_users,
-        |  TRUE AS within_band
-        |FROM events GROUP BY event_type""".stripMargin,
-    "rel_rollup" ->
-      """SELECT coalesce(l_returnflag, 'ALL') AS flag,
-        |  coalesce(l_linestatus, 'ALL') AS status,
-        |  CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sum_qty,
-        |  count(*) AS n
-        |FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)""".stripMargin,
-    "rel_cube" ->
-      """SELECT
-        |  CASE WHEN GROUPING(o_orderpriority) = 1 THEN 'ALL'
-        |       ELSE o_orderpriority END AS priority,
-        |  CASE WHEN GROUPING(o_year) = 1 THEN -1 ELSE o_year END AS o_year,
-        |  count(*) AS n, CAST(sum(c) AS BIGINT) AS total_cents
-        |FROM (SELECT o_orderpriority, year(o_orderdate) AS o_year,
-        |        CAST(round(o_totalprice * 100) AS BIGINT) AS c
-        |      FROM orders)
-        |GROUP BY CUBE (o_orderpriority, o_year)""".stripMargin,
-    // arg_max ≡ max_by; version (event_id) is unique per key
-    "rel_upsert" ->
-      """WITH c AS (
-        |  SELECT user_id, event_id AS version,
-        |    event_type = 'error' AS is_delete,
-        |    CAST(round(value * 100) AS BIGINT) AS value_cents
-        |  FROM events),
-        |last AS (
-        |  SELECT user_id,
-        |    arg_max(version, version) AS version,
-        |    arg_max(is_delete, version) AS is_delete,
-        |    arg_max(value_cents, version) AS value_cents
-        |  FROM c GROUP BY user_id)
-        |SELECT user_id, version, value_cents FROM last
-        |WHERE NOT is_delete""".stripMargin,
-    "rel_json_props" ->
-      """SELECT event_type,
-        |  count(*) AS n_events,
-        |  count(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS n_with_k,
-        |  CAST(sum(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS sum_k,
-        |  min(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS min_k,
-        |  max(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS max_k
-        |FROM events GROUP BY event_type""".stripMargin,
-    "rel_scd2" ->
-      """WITH c AS (
-        |  SELECT user_id, event_id AS version,
-        |    CAST(event_type = 'error' AS INT) AS is_delete,
-        |    CAST(round(value * 100) AS BIGINT) AS value_cents
-        |  FROM events)
-        |SELECT user_id, version, is_delete, value_cents,
-        |  coalesce(lead(version) OVER (PARTITION BY user_id ORDER BY version),
-        |           -1) AS valid_to,
-        |  CAST(coalesce(lead(version) OVER (PARTITION BY user_id ORDER BY version),
-        |                -1) = -1 AND is_delete = 0 AS INT) AS is_current
-        |FROM c""".stripMargin,
-    // the oracle states the range join declaratively; the engine's
-    // binned rewrite must produce identical band aggregates
-    "rel_range" ->
-      """WITH bands AS (
-        |  SELECT j AS band_id, j * 2500 AS lo, j * 2500 + 5000 AS hi
-        |  FROM range(20) t(j)),
-        |pts AS (SELECT CAST(round(value * 100) AS BIGINT) AS cents FROM events)
-        |SELECT band_id, count(*) AS n, CAST(sum(cents) AS BIGINT) AS sum_cents
-        |FROM bands JOIN pts ON cents >= lo AND cents < hi
-        |GROUP BY band_id""".stripMargin,
-    "rel_anti" ->
-      """SELECT c_custkey FROM customer
-        |WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)""".stripMargin,
-    "rel_except" ->
-      """SELECT o_custkey FROM orders
-        |WHERE o_orderdate >= TIMESTAMP '1996-01-01' AND o_orderdate < TIMESTAMP '1997-01-01'
-        |EXCEPT
-        |SELECT o_custkey FROM orders
-        |WHERE o_orderdate >= TIMESTAMP '1997-01-01' AND o_orderdate < TIMESTAMP '1998-01-01'""".stripMargin,
-    "rel_asof" ->
-      """WITH ev AS (
-        |  SELECT event_id,
-        |    user_id % (SELECT count(*) FROM customer) AS user_key,
-        |    DATE '1995-01-01' + INTERVAL ((event_id % 2500)) DAY AS day
-        |  FROM events),
-        |ord AS (
-        |  SELECT o_custkey AS user_key, CAST(o_orderdate AS DATE) AS day,
-        |    max(o_orderkey) AS o_orderkey
-        |  FROM orders GROUP BY 1, 2)
-        |SELECT e.event_id, e.user_key, strftime(e.day, '%Y-%m-%d') AS day,
-        |  o.o_orderkey
-        |FROM ev e ASOF LEFT JOIN ord o
-        |  ON e.user_key = o.user_key AND e.day >= o.day""".stripMargin,
-    "rel_sessions" ->
-      """WITH ev AS (
-        |  SELECT user_id, epoch_us(ts) AS us, event_id FROM events),
-        |marked AS (
-        |  SELECT user_id, us,
-        |    CASE WHEN lag(us) OVER w IS NULL
-        |           OR us - lag(us) OVER w > 30 * 60 * 1000000
-        |         THEN 1 ELSE 0 END AS brk
-        |  FROM ev WINDOW w AS (PARTITION BY user_id ORDER BY us)),
-        |sessions AS (
-        |  SELECT user_id, us,
-        |    CAST(sum(brk) OVER (PARTITION BY user_id ORDER BY us
-        |                        ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_idx
-        |  FROM marked)
-        |SELECT user_id, session_idx, count(*) AS n_events,
-        |  min(us) AS start_us, max(us) AS end_us
-        |FROM sessions GROUP BY user_id, session_idx""".stripMargin,
-    "rel_median" -> relMedianSql,
-    // exact histogram selection reproduces the exact median/quantiles
-    "rel_median_hist" -> relMedianSql,
-    "rel_quantiles_hist" -> relQuantilesSql,
-    "rel_median_approx" ->
-      s"""SELECT event_type, median_cents, TRUE AS within_band
-         |FROM ($relMedianSql)""".stripMargin,
-    "rel_quantiles_approx" ->
-      s"""SELECT event_type, q, cents, TRUE AS within_band
-         |FROM ($relQuantilesSql)""".stripMargin,
-    "rel_pivot" ->
-      """SELECT user_id % 10 AS user_decile,
-        |  count(*) FILTER (WHERE event_type = 'click') AS click,
-        |  count(*) FILTER (WHERE event_type = 'view') AS view,
-        |  count(*) FILTER (WHERE event_type = 'purchase') AS purchase,
-        |  count(*) FILTER (WHERE event_type = 'signup') AS signup,
-        |  count(*) FILTER (WHERE event_type = 'error') AS error
-        |FROM events GROUP BY 1""".stripMargin,
-    "rel_outer" ->
-      """SELECT nationkey,
-        |  coalesce(n_customers, 0) AS n_customers,
-        |  coalesce(n_suppliers, 0) AS n_suppliers
-        |FROM (SELECT c_nationkey AS nationkey, count(*) AS n_customers
-        |      FROM customer GROUP BY 1) c
-        |FULL OUTER JOIN (SELECT s_nationkey AS nationkey, count(*) AS n_suppliers
-        |      FROM supplier GROUP BY 1) s
-        |USING (nationkey)""".stripMargin,
-    "rel_funnel" ->
-      """WITH m AS (
-        |  SELECT user_id,
-        |    min(CASE WHEN event_type = 'signup' THEN epoch_us(ts) END) AS t_signup,
-        |    min(CASE WHEN event_type = 'click' THEN epoch_us(ts) END) AS t_click,
-        |    min(CASE WHEN event_type = 'purchase' THEN epoch_us(ts) END) AS t_purchase
-        |  FROM events GROUP BY user_id)
-        |SELECT count(t_signup) AS n_signup,
-        |  count(CASE WHEN t_click > t_signup THEN 1 END) AS n_signup_click,
-        |  count(CASE WHEN t_click > t_signup AND t_purchase > t_click
-        |        THEN 1 END) AS n_full_funnel
-        |FROM m""".stripMargin,
-    // text_sample: md5-prefix threshold — byte-identical across engines
-    "text_sample" -> graft.text.Sampling.sampleDocumentsOracleSql,
-    "text_sample_topk" ->
-      """WITH r AS (
-        |  SELECT doc_id, lang,
-        |    row_number() OVER (PARTITION BY lang
-        |      ORDER BY substr(md5(CAST(doc_id AS VARCHAR) || ':42'), 1, 15),
-        |               doc_id) AS rn
-        |  FROM documents)
-        |SELECT doc_id, lang FROM r WHERE rn <= 20""".stripMargin,
-    "rel_intersect" ->
-      """SELECT o_custkey FROM orders
-        |WHERE o_orderdate >= TIMESTAMP '1996-01-01' AND o_orderdate < TIMESTAMP '1997-01-01'
-        |INTERSECT
-        |SELECT o_custkey FROM orders
-        |WHERE o_orderdate >= TIMESTAMP '1997-01-01' AND o_orderdate < TIMESTAMP '1998-01-01'""".stripMargin,
-    "rel_above_avg" ->
-      """WITH o AS (
-        |  SELECT o_orderkey, o_custkey,
-        |    CAST(round(o_totalprice * 100) AS BIGINT) AS c
-        |  FROM orders),
-        |w AS (
-        |  SELECT o_orderkey, o_custkey, c,
-        |    count(*) OVER (PARTITION BY o_custkey) AS n,
-        |    CAST(sum(c) OVER (PARTITION BY o_custkey) AS BIGINT) AS s
-        |  FROM o)
-        |SELECT o_orderkey, o_custkey FROM w WHERE c * n > s""".stripMargin,
-    "rel_semi" ->
-      """SELECT o_orderpriority, count(*) AS n_orders
-        |FROM orders
-        |WHERE EXISTS (
-        |  SELECT 1 FROM lineitem
-        |  WHERE l_orderkey = o_orderkey
-        |    AND l_shipdate > o_orderdate + INTERVAL 90 DAY)
-        |GROUP BY o_orderpriority""".stripMargin,
-    "rel_quantiles" -> relQuantilesSql,
-    // TPC-H streaming-join twin, batch surface (stream ≡ batch in
-    // StreamJoinSpec); integer epoch-days + cents so the compare is
-    // rendering-free
-    "rel_ship_attrib" ->
-      """SELECT o.o_orderkey, o.o_orderpriority,
-        |  datediff('day', DATE '1970-01-01', l.l_shipdate) AS ship_day,
-        |  CAST(round(l.l_extendedprice * 100) AS BIGINT) AS price_cents
-        |FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-        |  AND l.l_shipdate >= o.o_orderdate
-        |  AND l.l_shipdate <= o.o_orderdate + INTERVAL 90 DAY""".stripMargin,
-    "dedup_exact" ->
-      """SELECT md5(text) AS text_md5, min(doc_id) AS doc_id, count(*) AS n_copies
-        |FROM documents GROUP BY 1""".stripMargin,
-    "dedup_ngram" -> ngramJaccardSql,
-    "dedup_split_leakage" -> splitLeakageSql,
-    // LSH pair recall at the planted dups is 1-4e-8 → same oracles
-    "dedup_split_leakage_lsh" -> splitLeakageSql,
-    "dedup_passages" ->
-      s"""WITH $passagePdCte,
-         |nd AS (SELECT h, count(*) AS n_docs FROM pd GROUP BY h)
-         |SELECT pd.doc_id,
-         |  CAST(sum(pd.occ) AS BIGINT) AS n_windows,
-         |  CAST(coalesce(sum(CASE WHEN nd.n_docs >= 2 THEN pd.occ END), 0)
-         |       AS BIGINT) AS n_dup_windows,
-         |  CAST(coalesce(sum(CASE WHEN nd.n_docs >= 2 THEN pd.occ END), 0) * 5
-         |       >= sum(pd.occ) AS INT) AS is_dup_heavy
-         |FROM pd JOIN nd ON pd.h = nd.h
-         |GROUP BY pd.doc_id""".stripMargin,
-    "dedup_passage_spans" ->
-      s"""WITH $passagePdCte
-         |SELECT h, count(*) AS n_docs, CAST(sum(occ) AS BIGINT) AS n_occ
-         |FROM pd GROUP BY h HAVING count(*) >= 2""".stripMargin,
-    // suffix-array maximal extents ≡ union of duplicated 8-token
-    // windows merged into islands per doc (contiguity of equal-prefix
-    // blocks in SA order makes the two formulations provably equal;
-    // SuffixDedupSpec pins it on a planted fixture + the corpus) —
-    // the oracle groups RAW window strings, so both sides are hash-free
-    "dedup_spans_exact" ->
-      """WITH toks AS (
-        |  SELECT doc_id,
-        |    list_filter(string_split_regex(lower(text), '[^a-z]+'), x -> x <> '') AS t
-        |  FROM documents),
-        |w AS (
-        |  SELECT doc_id,
-        |    unnest(list_transform(range(1, len(t) - 6),
-        |      i -> struct_pack(off := i - 1, win := array_to_string(t[i:i+7], ' ')))) AS p
-        |  FROM toks WHERE len(t) >= 8),
-        |pos AS (SELECT doc_id, p.off AS off, p.win AS win FROM w),
-        |shared AS (SELECT win FROM pos GROUP BY win
-        |           HAVING count(DISTINCT doc_id) >= 2),
-        |f AS (SELECT p.doc_id, p.off FROM pos p JOIN shared s ON p.win = s.win),
-        |lagged AS (SELECT doc_id, off,
-        |    lag(off) OVER (PARTITION BY doc_id ORDER BY off) AS prev
-        |  FROM f),
-        |isl AS (SELECT doc_id, off,
-        |    sum(CASE WHEN prev IS NULL OR off - prev > 8 THEN 1 ELSE 0 END)
-        |      OVER (PARTITION BY doc_id ORDER BY off) AS isle
-        |  FROM lagged)
-        |SELECT doc_id, CAST(min(off) AS BIGINT) AS span_start,
-        |  CAST(max(off) + 8 AS BIGINT) AS span_end
-        |FROM isl GROUP BY doc_id, isle""".stripMargin,
-    // span-level decontamination: same island merge, flagging = window
-    // present in any benchmark (doc_id % 37 = 0) document
-    "text_decontam_spans" ->
-      """WITH toks AS (
-        |  SELECT doc_id,
-        |    list_filter(string_split_regex(lower(text), '[^a-z]+'), x -> x <> '') AS t
-        |  FROM documents),
-        |w AS (
-        |  SELECT doc_id,
-        |    unnest(list_transform(range(1, len(t) - 6),
-        |      i -> struct_pack(off := i - 1, win := array_to_string(t[i:i+7], ' ')))) AS p
-        |  FROM toks WHERE len(t) >= 8),
-        |pos AS (SELECT doc_id, p.off AS off, p.win AS win FROM w),
-        |hot AS (SELECT DISTINCT win FROM pos WHERE doc_id % 37 = 0),
-        |f AS (SELECT p.doc_id, p.off FROM pos p JOIN hot h ON p.win = h.win
-        |      WHERE p.doc_id % 37 <> 0),
-        |lagged AS (SELECT doc_id, off,
-        |    lag(off) OVER (PARTITION BY doc_id ORDER BY off) AS prev FROM f),
-        |isl AS (SELECT doc_id, off,
-        |    sum(CASE WHEN prev IS NULL OR off - prev > 8 THEN 1 ELSE 0 END)
-        |      OVER (PARTITION BY doc_id ORDER BY off) AS isle FROM lagged)
-        |SELECT doc_id, CAST(min(off) AS BIGINT) AS span_start,
-        |  CAST(max(off) + 8 AS BIGINT) AS span_end
-        |FROM isl GROUP BY doc_id, isle""".stripMargin,
-    // per-pair maximal matches: window-equality pairs grouped by
-    // (pair, diagonal); islands of consecutive offsets are the
-    // maximal matches, len = run + 8 - 1 (gate corpus group sizes are
-    // far under the operator's maxGroup cap, so the uncapped SQL is
-    // the exact oracle)
-    "dedup_pair_matches" ->
-      """WITH toks AS (
-        |  SELECT doc_id,
-        |    list_filter(string_split_regex(lower(text), '[^a-z]+'), x -> x <> '') AS t
-        |  FROM documents),
-        |w AS (
-        |  SELECT doc_id,
-        |    unnest(list_transform(range(1, len(t) - 6),
-        |      i -> struct_pack(off := i - 1, win := array_to_string(t[i:i+7], ' ')))) AS p
-        |  FROM toks WHERE len(t) >= 8),
-        |pos AS (SELECT doc_id, p.off AS off, p.win AS win FROM w),
-        |pr AS (
-        |  SELECT a.doc_id AS di, a.off AS oi, b.doc_id AS dj, b.off AS oj
-        |  FROM pos a JOIN pos b ON a.win = b.win AND a.doc_id < b.doc_id),
-        |lagged AS (SELECT di, dj, oi, oj,
-        |    lag(oi) OVER (PARTITION BY di, dj, oi - oj ORDER BY oi) AS prev
-        |  FROM pr),
-        |isl AS (SELECT di, dj, oi, oj,
-        |    sum(CASE WHEN prev IS NULL OR oi - prev > 1 THEN 1 ELSE 0 END)
-        |      OVER (PARTITION BY di, dj, oi - oj ORDER BY oi) AS isle
-        |  FROM lagged)
-        |SELECT di AS doc_i, dj AS doc_j,
-        |  CAST(min(oi) AS BIGINT) AS off_i, CAST(min(oj) AS BIGINT) AS off_j,
-        |  CAST(max(oi) - min(oi) + 8 AS BIGINT) AS match_len
-        |FROM isl GROUP BY di, dj, oi - oj, isle""".stripMargin,
-    // detect ∘ excise: extents from the text_decontam_spans chain,
-    // then token-level anti-join + ordered re-join; empty-after-cut
-    // and span-free docs kept via the documents left join
-    "text_excise" ->
-      """WITH toks AS (
-        |  SELECT doc_id,
-        |    list_filter(string_split_regex(lower(text), '[^a-z]+'), x -> x <> '') AS t
-        |  FROM documents),
-        |w AS (
-        |  SELECT doc_id,
-        |    unnest(list_transform(range(1, len(t) - 6),
-        |      i -> struct_pack(off := i - 1, win := array_to_string(t[i:i+7], ' ')))) AS p
-        |  FROM toks WHERE len(t) >= 8),
-        |pos AS (SELECT doc_id, p.off AS off, p.win AS win FROM w),
-        |hot AS (SELECT DISTINCT win FROM pos WHERE doc_id % 37 = 0),
-        |f AS (SELECT p.doc_id, p.off FROM pos p JOIN hot h ON p.win = h.win
-        |      WHERE p.doc_id % 37 <> 0),
-        |lagged AS (SELECT doc_id, off,
-        |    lag(off) OVER (PARTITION BY doc_id ORDER BY off) AS prev FROM f),
-        |isl AS (SELECT doc_id, off,
-        |    sum(CASE WHEN prev IS NULL OR off - prev > 8 THEN 1 ELSE 0 END)
-        |      OVER (PARTITION BY doc_id ORDER BY off) AS isle FROM lagged),
-        |ext AS (SELECT doc_id, min(off) AS s, max(off) + 8 AS e
-        |        FROM isl GROUP BY doc_id, isle),
-        |tokpos AS (
-        |  SELECT doc_id,
-        |    unnest(list_transform(range(1, len(t) + 1),
-        |      i -> struct_pack(off := i - 1, tok := t[i]))) AS q
-        |  FROM toks),
-        |kept AS (
-        |  SELECT tp.doc_id, tp.q.off AS off, tp.q.tok AS tok
-        |  FROM tokpos tp
-        |  WHERE tp.doc_id % 37 <> 0 AND NOT EXISTS (
-        |    SELECT 1 FROM ext e WHERE e.doc_id = tp.doc_id
-        |      AND tp.q.off >= e.s AND tp.q.off < e.e)),
-        |agg AS (SELECT doc_id, string_agg(tok, ' ' ORDER BY off) AS clean_text,
-        |        count(*) AS n_kept FROM kept GROUP BY doc_id),
-        |nt AS (SELECT doc_id, len(t) AS n_toks FROM toks)
-        |SELECT d.doc_id, coalesce(a.clean_text, '') AS clean_text,
-        |  CAST(nt.n_toks - coalesce(a.n_kept, 0) AS BIGINT) AS n_removed
-        |FROM documents d
-        |JOIN nt ON nt.doc_id = d.doc_id
-        |LEFT JOIN agg a ON a.doc_id = d.doc_id
-        |WHERE d.doc_id % 37 <> 0""".stripMargin,
-    // leak profile: benchmark-side window membership in the corpus
-    // window set, counted per benchmark doc
-    "text_leak_profile" ->
-      """WITH toks AS (
-        |  SELECT doc_id,
-        |    list_filter(string_split_regex(lower(text), '[^a-z]+'), x -> x <> '') AS t
-        |  FROM documents),
-        |w AS (
-        |  SELECT doc_id,
-        |    unnest(list_transform(range(1, len(t) - 6),
-        |      i -> array_to_string(t[i:i+7], ' '))) AS win
-        |  FROM toks WHERE len(t) >= 8),
-        |corpus AS (SELECT DISTINCT win FROM w WHERE doc_id % 37 <> 0),
-        |bench AS (SELECT doc_id, win FROM w WHERE doc_id % 37 = 0)
-        |SELECT b.doc_id,
-        |  count(*) AS n_windows,
-        |  CAST(coalesce(sum(CASE WHEN c.win IS NOT NULL THEN 1 END), 0)
-        |       AS BIGINT) AS n_leaked,
-        |  CAST(coalesce(sum(CASE WHEN c.win IS NOT NULL THEN 1 END), 0) * 100
-        |       >= count(*) * 10 AS INT) AS is_compromised
-        |FROM bench b LEFT JOIN corpus c ON b.win = c.win
-        |GROUP BY b.doc_id""".stripMargin,
-    // flagship composition: the text_excise chain feeding the packing
-    // chain. The scrub stage is a provable no-op on excised text
-    // (alpha tokens only — no URLs/emails/extra whitespace survive
-    // tokenization), so the oracle chains excision straight into the
-    // token-count/quality/dedup/pack CTEs of text_pipeline.
-    "text_pipeline_decontam" ->
-      """WITH toks AS (
-        |  SELECT doc_id,
-        |    list_filter(string_split_regex(lower(text), '[^a-z]+'), x -> x <> '') AS t
-        |  FROM documents),
-        |w AS (
-        |  SELECT doc_id,
-        |    unnest(list_transform(range(1, len(t) - 6),
-        |      i -> struct_pack(off := i - 1, win := array_to_string(t[i:i+7], ' ')))) AS p
-        |  FROM toks WHERE len(t) >= 8),
-        |pos AS (SELECT doc_id, p.off AS off, p.win AS win FROM w),
-        |hot AS (SELECT DISTINCT win FROM pos WHERE doc_id % 37 = 0),
-        |f AS (SELECT p.doc_id, p.off FROM pos p JOIN hot h ON p.win = h.win
-        |      WHERE p.doc_id % 37 <> 0),
-        |lagged AS (SELECT doc_id, off,
-        |    lag(off) OVER (PARTITION BY doc_id ORDER BY off) AS prev FROM f),
-        |isl AS (SELECT doc_id, off,
-        |    sum(CASE WHEN prev IS NULL OR off - prev > 8 THEN 1 ELSE 0 END)
-        |      OVER (PARTITION BY doc_id ORDER BY off) AS isle FROM lagged),
-        |ext AS (SELECT doc_id, min(off) AS s, max(off) + 8 AS e
-        |        FROM isl GROUP BY doc_id, isle),
-        |tokpos AS (
-        |  SELECT doc_id,
-        |    unnest(list_transform(range(1, len(t) + 1),
-        |      i -> struct_pack(off := i - 1, tok := t[i]))) AS q
-        |  FROM toks),
-        |kept AS (
-        |  SELECT tp.doc_id, tp.q.off AS off, tp.q.tok AS tok
-        |  FROM tokpos tp
-        |  WHERE tp.doc_id % 37 <> 0 AND NOT EXISTS (
-        |    SELECT 1 FROM ext e WHERE e.doc_id = tp.doc_id
-        |      AND tp.q.off >= e.s AND tp.q.off < e.e)),
-        |exc AS (
-        |  SELECT d.doc_id, coalesce(a.ct, '') AS ct, coalesce(a.n_kept, 0) AS n_tokens
-        |  FROM (SELECT doc_id FROM documents WHERE doc_id % 37 <> 0) d
-        |  LEFT JOIN (SELECT doc_id, string_agg(tok, ' ' ORDER BY off) AS ct,
-        |             count(*) AS n_kept FROM kept GROUP BY doc_id) a
-        |    ON a.doc_id = d.doc_id),
-        |q AS (SELECT * FROM exc WHERE n_tokens >= 5),
-        |dd AS (SELECT min(doc_id) AS doc_id FROM q GROUP BY md5(ct)),
-        |k AS (SELECT q.doc_id, q.n_tokens FROM q JOIN dd ON q.doc_id = dd.doc_id),
-        |pk AS (
-        |  SELECT doc_id, n_tokens,
-        |    coalesce(sum(n_tokens) OVER (ORDER BY doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS pre
-        |  FROM k)
-        |SELECT doc_id, CAST(n_tokens AS BIGINT) AS n_tokens,
-        |  CAST(pre // 512 AS BIGINT) AS pack_id
-        |FROM pk""".stripMargin,
-    // the amortized suite: the four span-gate CTE chains fused into
-    // ONE shared WITH (toks→pos→hot→f→isl→ext→kept→agg feeds all
-    // four heads) + a tagged UNION ALL — exactly the one-rank-pass
-    // program the Spark side runs
-    "text_decontam_suite" ->
-      """WITH toks AS (
-        |  SELECT doc_id,
-        |    list_filter(string_split_regex(lower(text), '[^a-z]+'), x -> x <> '') AS t
-        |  FROM documents),
-        |w AS (
-        |  SELECT doc_id,
-        |    unnest(list_transform(range(1, len(t) - 6),
-        |      i -> struct_pack(off := i - 1, win := array_to_string(t[i:i+7], ' ')))) AS p
-        |  FROM toks WHERE len(t) >= 8),
-        |pos AS (SELECT doc_id, p.off AS off, p.win AS win FROM w),
-        |hot AS (SELECT DISTINCT win FROM pos WHERE doc_id % 37 = 0),
-        |f AS (SELECT p.doc_id, p.off FROM pos p JOIN hot h ON p.win = h.win
-        |      WHERE p.doc_id % 37 <> 0),
-        |lagged AS (SELECT doc_id, off,
-        |    lag(off) OVER (PARTITION BY doc_id ORDER BY off) AS prev FROM f),
-        |isl AS (SELECT doc_id, off,
-        |    sum(CASE WHEN prev IS NULL OR off - prev > 8 THEN 1 ELSE 0 END)
-        |      OVER (PARTITION BY doc_id ORDER BY off) AS isle FROM lagged),
-        |ext AS (SELECT doc_id, min(off) AS s, max(off) + 8 AS e
-        |        FROM isl GROUP BY doc_id, isle),
-        |tokpos AS (
-        |  SELECT doc_id,
-        |    unnest(list_transform(range(1, len(t) + 1),
-        |      i -> struct_pack(off := i - 1, tok := t[i]))) AS q
-        |  FROM toks),
-        |kept AS (
-        |  SELECT tp.doc_id, tp.q.off AS off, tp.q.tok AS tok
-        |  FROM tokpos tp
-        |  WHERE tp.doc_id % 37 <> 0 AND NOT EXISTS (
-        |    SELECT 1 FROM ext e WHERE e.doc_id = tp.doc_id
-        |      AND tp.q.off >= e.s AND tp.q.off < e.e)),
-        |agg AS (SELECT doc_id, string_agg(tok, ' ' ORDER BY off) AS ct,
-        |        count(*) AS n_kept FROM kept GROUP BY doc_id),
-        |nt AS (SELECT doc_id, len(t) AS n_toks FROM toks),
-        |exc AS (
-        |  SELECT d.doc_id, coalesce(a.ct, '') AS ct, coalesce(a.n_kept, 0) AS n_tokens
-        |  FROM (SELECT doc_id FROM documents WHERE doc_id % 37 <> 0) d
-        |  LEFT JOIN agg a ON a.doc_id = d.doc_id),
-        |q AS (SELECT * FROM exc WHERE n_tokens >= 5),
-        |dd AS (SELECT min(doc_id) AS doc_id FROM q GROUP BY md5(ct)),
-        |k AS (SELECT q.doc_id, q.n_tokens FROM q JOIN dd ON q.doc_id = dd.doc_id),
-        |pk AS (
-        |  SELECT doc_id, n_tokens,
-        |    coalesce(sum(n_tokens) OVER (ORDER BY doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS pre
-        |  FROM k),
-        |corpus AS (SELECT DISTINCT win FROM pos WHERE doc_id % 37 <> 0),
-        |bench AS (SELECT doc_id, win FROM pos WHERE doc_id % 37 = 0)
-        |SELECT 'spans' AS part, doc_id, CAST(min(off) AS BIGINT) AS v1,
-        |  CAST(max(off) + 8 AS BIGINT) AS v2, CAST(NULL AS BIGINT) AS v3,
-        |  CAST(NULL AS VARCHAR) AS txt
-        |FROM isl GROUP BY doc_id, isle
-        |UNION ALL
-        |SELECT 'excise', d.doc_id,
-        |  CAST(nt.n_toks - coalesce(a.n_kept, 0) AS BIGINT),
-        |  CAST(NULL AS BIGINT), CAST(NULL AS BIGINT), coalesce(a.ct, '')
-        |FROM documents d
-        |JOIN nt ON nt.doc_id = d.doc_id
-        |LEFT JOIN agg a ON a.doc_id = d.doc_id
-        |WHERE d.doc_id % 37 <> 0
-        |UNION ALL
-        |SELECT 'leak', b.doc_id, CAST(count(*) AS BIGINT),
-        |  CAST(coalesce(sum(CASE WHEN c.win IS NOT NULL THEN 1 END), 0) AS BIGINT),
-        |  CAST(coalesce(sum(CASE WHEN c.win IS NOT NULL THEN 1 END), 0) * 100
-        |       >= count(*) * 10 AS BIGINT),
-        |  CAST(NULL AS VARCHAR)
-        |FROM bench b LEFT JOIN corpus c ON b.win = c.win
-        |GROUP BY b.doc_id
-        |UNION ALL
-        |SELECT 'pack', doc_id, CAST(n_tokens AS BIGINT),
-        |  CAST(pre // 512 AS BIGINT), CAST(NULL AS BIGINT),
-        |  CAST(NULL AS VARCHAR)
-        |FROM pk""".stripMargin,
-    // incremental probe: batch (doc_id % 10 = 0) positions flag iff
-    // their window is in the indexed rest OR duplicated cross-doc
-    // inside the batch — together the one-shot "shared with any other
-    // doc" rule restricted to batch docs
-    "dedup_spans_incremental" ->
-      """WITH toks AS (
-        |  SELECT doc_id,
-        |    list_filter(string_split_regex(lower(text), '[^a-z]+'), x -> x <> '') AS t
-        |  FROM documents),
-        |w AS (
-        |  SELECT doc_id,
-        |    unnest(list_transform(range(1, len(t) - 6),
-        |      i -> struct_pack(off := i - 1, win := array_to_string(t[i:i+7], ' ')))) AS p
-        |  FROM toks WHERE len(t) >= 8),
-        |pos AS (SELECT doc_id, p.off AS off, p.win AS win FROM w),
-        |idx AS (SELECT DISTINCT win FROM pos WHERE doc_id % 10 <> 0),
-        |bcross AS (SELECT win FROM pos WHERE doc_id % 10 = 0
-        |           GROUP BY win HAVING count(DISTINCT doc_id) >= 2),
-        |f AS (SELECT p.doc_id, p.off FROM pos p
-        |      WHERE p.doc_id % 10 = 0
-        |        AND (p.win IN (SELECT win FROM idx)
-        |             OR p.win IN (SELECT win FROM bcross))),
-        |lagged AS (SELECT doc_id, off,
-        |    lag(off) OVER (PARTITION BY doc_id ORDER BY off) AS prev FROM f),
-        |isl AS (SELECT doc_id, off,
-        |    sum(CASE WHEN prev IS NULL OR off - prev > 8 THEN 1 ELSE 0 END)
-        |      OVER (PARTITION BY doc_id ORDER BY off) AS isle FROM lagged)
-        |SELECT doc_id, CAST(min(off) AS BIGINT) AS span_start,
-        |  CAST(max(off) + 8 AS BIGINT) AS span_end
-        |FROM isl GROUP BY doc_id, isle""".stripMargin,
-    // offset-bearing probe: the witness rule (first (doc, off) per
-    // window string among index docs) + the diagonal-run merge,
-    // re-derived from raw text — mirrors SpanIndex.probeMatches
-    "dedup_spans_incremental_matches" ->
-      """WITH toks AS (
-        |  SELECT doc_id,
-        |    list_filter(string_split_regex(lower(text), '[^a-z]+'), x -> x <> '') AS t
-        |  FROM documents),
-        |w AS (
-        |  SELECT doc_id,
-        |    unnest(list_transform(range(1, len(t) - 6),
-        |      i -> struct_pack(off := i - 1, win := array_to_string(t[i:i+7], ' ')))) AS p
-        |  FROM toks WHERE len(t) >= 8),
-        |pos AS (SELECT doc_id, p.off AS off, p.win AS win FROM w),
-        |samp AS (
-        |  SELECT win, doc_id AS dj, off AS oj FROM (
-        |    SELECT doc_id, off, win,
-        |      row_number() OVER (PARTITION BY win ORDER BY doc_id, off) AS rn
-        |    FROM pos WHERE doc_id % 10 <> 0)
-        |  WHERE rn = 1),
-        |pr AS (
-        |  SELECT b.doc_id AS di, b.off AS oi, s.dj, s.oj
-        |  FROM pos b JOIN samp s ON b.win = s.win
-        |  WHERE b.doc_id % 10 = 0),
-        |lagged AS (SELECT di, dj, oi, oj,
-        |    lag(oi) OVER (PARTITION BY di, dj, oi - oj ORDER BY oi) AS prev
-        |  FROM pr),
-        |isl AS (SELECT di, dj, oi, oj,
-        |    sum(CASE WHEN prev IS NULL OR oi - prev > 1 THEN 1 ELSE 0 END)
-        |      OVER (PARTITION BY di, dj, oi - oj ORDER BY oi) AS isle
-        |  FROM lagged)
-        |SELECT di AS doc_i, dj AS doc_j,
-        |  CAST(min(oi) AS BIGINT) AS off_i, CAST(min(oj) AS BIGINT) AS off_j,
-        |  CAST(max(oi) - min(oi) + 8 AS BIGINT) AS match_len
-        |FROM isl GROUP BY di, dj, oi - oj, isle""".stripMargin,
-    // the capped composition is one extra bound on the same CTE —
-    // digests in >= 3 docs are boilerplate and don't count as dups
-    "dedup_passages_capped" ->
-      s"""WITH $passagePdCte,
-         |nd AS (SELECT h, count(*) AS n_docs FROM pd GROUP BY h)
-         |SELECT pd.doc_id,
-         |  CAST(sum(pd.occ) AS BIGINT) AS n_windows,
-         |  CAST(coalesce(sum(CASE WHEN nd.n_docs >= 2 AND nd.n_docs < 3
-         |                         THEN pd.occ END), 0)
-         |       AS BIGINT) AS n_dup_windows,
-         |  CAST(coalesce(sum(CASE WHEN nd.n_docs >= 2 AND nd.n_docs < 3
-         |                         THEN pd.occ END), 0) * 5
-         |       >= sum(pd.occ) AS INT) AS is_dup_heavy
-         |FROM pd JOIN nd ON pd.h = nd.h
-         |GROUP BY pd.doc_id""".stripMargin,
-    // MinHash LSH (16 bands x 4 rows, 64 perms) has per-pair recall
-    // 1-(1-J^4)^16 ≈ 1-4e-8 at the planted J≥0.9 dups, so its verified
-    // output must equal the exact operator's — same oracle.
-    "dedup_minhash" -> ngramJaccardSql,
-    // incremental probe of a persisted LSH index: same banding scheme
-    // as dedup_minhash (recall 1−4e-8 at the planted J ≥ 0.9), output
-    // restricted to pairs touching the "new batch" split — the exact
-    // oracle carries the same restriction
-    "dedup_incremental" ->
-      s"""WITH pairs AS ($ngramJaccardSql)
-         |SELECT i, j FROM pairs
-         |WHERE i % 10 = 0 OR j % 10 = 0""".stripMargin,
-    // capped variant: Jaccard over the df<=100 discriminative-shingle
-    // universe — integer counts + one exact int-ratio compare, so the
-    // scale path is fully oracle-checkable too
-    "dedup_ngram_capped" ->
-      """WITH toks AS (
-        |  SELECT doc_id,
-        |    list_filter(string_split_regex(lower(text), '[^a-z]+'), x -> x <> '') AS t
-        |  FROM documents),
-        |sh AS (
-        |  SELECT DISTINCT doc_id,
-        |    unnest(list_transform(range(1, len(t) - 1),
-        |      i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS s
-        |  FROM toks WHERE len(t) >= 3),
-        |capped AS (
-        |  SELECT doc_id, s FROM sh
-        |  QUALIFY count(*) OVER (PARTITION BY s) <= 100),
-        |cnt AS (SELECT doc_id, count(*) AS n FROM capped GROUP BY doc_id),
-        |common AS (
-        |  SELECT a.doc_id AS i, b.doc_id AS j, count(*) AS c
-        |  FROM capped a JOIN capped b ON a.s = b.s AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2)
-        |SELECT i, j FROM common
-        |JOIN cnt ca ON ca.doc_id = i
-        |JOIN cnt cb ON cb.doc_id = j
-        |WHERE CAST(c AS DOUBLE) / (ca.n + cb.n - c) >= 0.5""".stripMargin,
-    // blocked Levenshtein: the oracle is the ALL-PAIRS banded-
-    // Levenshtein ground truth itself (no blocking — the
-    // dedup_simhash_wide treatment), dist <= min(64,
-    // (len_a+len_b)//20); the engine's q-chunk pigeonhole blocking
-    // must therefore deliver structural recall 1.0 (its df-cap
-    // provably doesn't bite on the fixture — spec-asserted).
-    // ASCII normalization makes byte-based (DuckDB) == codepoint-
-    // based (Spark) distances
-    "dedup_edit_pairs" -> dedupEditPairsSql,
-    // the exact-duplicate collapse forced to BITE: the corpus has no
-    // byte-identical texts, so the gate replicates every even doc
-    // 1 + id%3 times and the same all-pairs truth (which knows
-    // nothing of the collapse) must match the collapsed engine's
-    // within-group dist-0 pairs + algebraic cross-group expansion
-    "dedup_edit_pairs_collapsed" -> dedupEditPairsSqlOver(dupFixtureSql),
-    // the documented production composition, chained-CTE oracle:
-    // exact dedup (min-id keeper per byte-identical text) over the
-    // duplicated fixture, then the edit all-pairs truth on the RESIDUE
-    "dedup_residue_pipeline" -> dedupEditPairsSqlOver(
-      s"""(SELECT min(doc_id) AS doc_id, text
-         |   FROM $dupFixtureSql fx GROUP BY text)""".stripMargin),
-    // both-endpoint rank <= 1 output cap over the same exact pair
-    // set; bites at gate scale (25 -> 23)
-    "dedup_edit_pairs_capped" -> dedupEditPairsCappedSql(1),
-    // connected components over the edit-pair graph — same recursive
-    // closure as the ngram/LSH cluster oracles, min-id canonical copy
-    "dedup_edit_clusters" ->
-      s"""WITH RECURSIVE pairs AS (
-         |  SELECT doc_a AS i, doc_b AS j FROM ($dedupEditPairsSql)),
-         |e AS (SELECT i AS a, j AS b FROM pairs
-         |      UNION ALL SELECT j, i FROM pairs),
-         |reach(a, b) AS (
-         |  SELECT a, b FROM e
-         |  UNION
-         |  SELECT r.a, e2.b FROM reach r JOIN e e2 ON r.b = e2.a),
-         |m AS (SELECT a, min(b) AS mn FROM reach GROUP BY a)
-         |SELECT d.doc_id,
-         |  least(d.doc_id, coalesce(m.mn, d.doc_id)) AS cluster_id
-         |FROM documents d LEFT JOIN m ON m.a = d.doc_id""".stripMargin,
-    // family agreement: ngram pairs vs edit pairs, full-outer on the
-    // (i, j) pair key, one-row rollup (sums CAST — HUGEINT gotcha)
-    "dedup_family_report" ->
-      s"""WITH gp AS (SELECT i, j FROM ($ngramJaccardSql)),
-         |ep AS (SELECT doc_a AS i, doc_b AS j FROM ($dedupEditPairsSql)),
-         |u AS (
-         |  SELECT coalesce(g.i, e.i) AS i, coalesce(g.j, e.j) AS j,
-         |    CASE WHEN g.i IS NULL THEN 0 ELSE 1 END AS g,
-         |    CASE WHEN e.i IS NULL THEN 0 ELSE 1 END AS e
-         |  FROM gp g FULL OUTER JOIN ep e ON g.i = e.i AND g.j = e.j)
-         |SELECT CAST(coalesce(sum(g), 0) AS BIGINT) AS n_ngram,
-         |  CAST(coalesce(sum(e), 0) AS BIGINT) AS n_edit,
-         |  CAST(coalesce(sum(g * e), 0) AS BIGINT) AS n_both,
-         |  CAST(count(*) AS BIGINT) AS n_either
-         |FROM u""".stripMargin,
-    // connected components: recursive closure over the ngram pairs;
-    // cluster id = min doc_id reachable (matches hash-min propagation)
-    "dedup_clusters" -> dedupClustersSql,
-    "dedup_clusters_lsh" -> dedupClustersSql,
-    // hash-min label propagation converges to the same min-id labels
-    "dedup_clusters_dist" -> dedupClustersSql,
-    // cluster-keyed split over the same recursive closure: mod 10 of
-    // the min-id cluster rep, 0 -> val, 1 -> test, else train
-    "dedup_split_safe" -> dedupSplitSafeSql,
-    // the production rule: salted md5-prefix of the cluster rep
-    // against fixed hex thresholds — both engines compare identical
-    // lowercase hex strings (the text_sample convention)
-    "dedup_split_safe_salted" ->
-      s"""SELECT doc_id, cluster_id,
-         |  CASE WHEN substr(md5(CAST(cluster_id AS VARCHAR) || ':split42'),
-         |         1, 15) < '199999999999999' THEN 'val'
-         |       WHEN substr(md5(CAST(cluster_id AS VARCHAR) || ':split42'),
-         |         1, 15) < '333333333333333' THEN 'test'
-         |       ELSE 'train' END AS split
-         |FROM ($dedupClustersSql)""".stripMargin,
-    // the semantic variant: the same closure + split CASE over the
-    // exact embedding cosine pair oracle, universe = embeddings
-    "dedup_split_safe_embed" ->
-      s"""WITH RECURSIVE spairs AS ($dedupEmbedSql),
-         |sed AS (SELECT i AS sa, j AS sb FROM spairs
-         |        UNION ALL SELECT j, i FROM spairs),
-         |sreach(sa, sb) AS (
-         |  SELECT sa, sb FROM sed
-         |  UNION
-         |  SELECT r.sa, e2.sb FROM sreach r JOIN sed e2 ON r.sb = e2.sa),
-         |sm AS (SELECT sa, min(sb) AS mn FROM sreach GROUP BY sa),
-         |sc AS (SELECT v.vec_id AS doc_id,
-         |    least(v.vec_id, coalesce(sm.mn, v.vec_id)) AS cluster_id
-         |  FROM embeddings v LEFT JOIN sm ON sm.sa = v.vec_id)
-         |SELECT doc_id, cluster_id,
-         |  CASE WHEN cluster_id % 10 = 0 THEN 'val'
-         |       WHEN cluster_id % 10 = 1 THEN 'test'
-         |       ELSE 'train' END AS split
-         |FROM sc""".stripMargin,
-    // simhash gates: the per-doc SIGNATURES are side-dumped run-scoped
-    // (simhashSigsGlob) and are the only artifact taken on faith — the
-    // banding, bucket caps, radius-1 probe fan-out, Hamming filter and
-    // pair generation are re-derived in DuckDB as 64-bit arithmetic
-    "dedup_simhash" ->
-      s"""WITH sigs AS (SELECT doc_id, sig FROM read_parquet('$simhashSigsGlob')),
-         |$simhashBandCte
-         |SELECT DISTINCT x.doc_id AS i, y.doc_id AS j
-         |FROM b x
-         |JOIN b y ON x.band = y.band AND x.h = y.h AND x.doc_id < y.doc_id
-         |JOIN sz ON sz.band = x.band AND sz.h = x.h
-         |WHERE sz.n BETWEEN 2 AND 1000
-         |  AND bit_count(xor(x.sig, y.sig)) <= 7""".stripMargin,
-    // wide-band scale formulation: the oracle is the Hamming <= 15
-    // ALL-PAIRS ground truth over the dumped signatures — the gate
-    // passes only if the 4 x 16-bit banding + radius-3 probes achieve
-    // FULL recall (the pigeonhole guarantee), not merely reproduce
-    // their own plumbing
-    "dedup_simhash_wide" ->
-      s"""WITH sigs AS (SELECT doc_id, sig FROM read_parquet('$simhashSigsGlob'))
-         |SELECT x.doc_id AS i, y.doc_id AS j
-         |FROM sigs x JOIN sigs y ON x.doc_id < y.doc_id
-         |WHERE bit_count(xor(x.sig, y.sig)) <= 15""".stripMargin,
-    // the balanced regime owes the IDENTICAL all-pairs ground truth:
-    // the build<=1 x probe<=2 mask split with the canonical-witness
-    // filter is recall- and emission-equivalent to radius-3 probing
-    "dedup_simhash_wide_balanced" ->
-      s"""WITH sigs AS (SELECT doc_id, sig FROM read_parquet('$simhashSigsGlob'))
-         |SELECT x.doc_id AS i, y.doc_id AS j
-         |FROM sigs x JOIN sigs y ON x.doc_id < y.doc_id
-         |WHERE bit_count(xor(x.sig, y.sig)) <= 15""".stripMargin,
-    "dedup_simhash_multiprobe" ->
-      s"""WITH sigs AS (SELECT doc_id, sig FROM read_parquet('$simhashSigsGlob')),
-         |$simhashBandCte,
-         |exact AS (
-         |  SELECT x.doc_id AS i, y.doc_id AS j,
-         |    bit_count(xor(x.sig, y.sig)) AS dist
-         |  FROM b x
-         |  JOIN b y ON x.band = y.band AND x.h = y.h AND x.doc_id < y.doc_id
-         |  JOIN sz ON sz.band = x.band AND sz.h = x.h
-         |  WHERE sz.n BETWEEN 2 AND 1000),
-         |probes AS (
-         |  SELECT doc_id, sig, band, xor(h, (CAST(1 AS BIGINT) << p)) AS h
-         |  FROM b CROSS JOIN (SELECT unnest(range(0, 8)) AS p)),
-         |viap AS (
-         |  SELECT least(pr.doc_id, m.doc_id) AS i,
-         |    greatest(pr.doc_id, m.doc_id) AS j,
-         |    bit_count(xor(pr.sig, m.sig)) AS dist
-         |  FROM probes pr
-         |  JOIN sz ON sz.band = pr.band AND sz.h = pr.h
-         |    AND sz.n BETWEEN 1 AND 1000
-         |  JOIN b m ON m.band = pr.band AND m.h = pr.h
-         |    AND m.doc_id <> pr.doc_id)
-         |SELECT DISTINCT i, j
-         |FROM (SELECT i, j, dist FROM exact
-         |      UNION ALL SELECT i, j, dist FROM viap)
-         |WHERE dist <= 15""".stripMargin,
-    "dedup_embed" -> dedupEmbedSql,
-    // IVF pruning only PRUNES candidates — verification is still exact
-    // cosine ≥ τ, so precision is 1 by construction, and DedupEmbedSpec
-    // measures recall 1.0 at the gate's (k=16, nprobe=6, τ=0.45) on the
-    // gate corpus → the output EQUALS the exact set and shares its
-    // oracle (the same upgrade the LSH cluster/leakage gates got).
-    "dedup_embed_ivf" -> dedupEmbedSql,
-    // SemDeDup: the trained centroids are the dumped faith; the oracle
-    // re-derives assignment (argmax cosine, lowest-cell tie), the
-    // centroid-sim keep priority (lower sim kept, ties to lower id),
-    // the within-cluster pairwise τ-test and the drop verdicts.
-    // Priority comparisons use raw doubles on both sides (the proven
-    // ann ordering pattern); only the OUTPUT value is micro-quantized.
-    "dedup_semantic" -> semDedupSql(semDedupGlob),
-    // same re-derivation against the k-means|| gate's own codebook:
-    // the trainer differs, the oracle machinery does not
-    "dedup_semantic_par" -> semDedupSql(semDedupParGlob),
-    // capped SemDeDup: same re-derivation as dedup_semantic (own dump
-    // kind — this gate trains its own run's codebook), with the drop
-    // join additionally bounded to the cell's `cap` = 64 highest-
-    // priority members via a per-cell rank
-    "dedup_semantic_capped" ->
-      s"""WITH e AS (SELECT vec_id,
-         |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-         |  FROM embeddings),
-         |c AS (SELECT cell, v FROM read_parquet('$semDedupCapGlob')),
-         |asg AS (
-         |  SELECT vec_id, cell, sim FROM (
-         |    SELECT e.vec_id, c.cell, list_cosine_similarity(e.v, c.v) AS sim,
-         |      row_number() OVER (PARTITION BY e.vec_id
-         |        ORDER BY list_cosine_similarity(e.v, c.v) DESC, c.cell) AS rn
-         |    FROM e, c) WHERE rn = 1),
-         |m AS (SELECT a.vec_id, a.cell, a.sim, e.v,
-         |        row_number() OVER (PARTITION BY a.cell
-         |          ORDER BY a.sim, a.vec_id) AS rnk
-         |      FROM asg a JOIN e ON e.vec_id = a.vec_id),
-         |drops AS (
-         |  SELECT DISTINCT x.vec_id
-         |  FROM m x JOIN m y ON x.cell = y.cell AND x.vec_id <> y.vec_id
-         |  WHERE y.rnk <= 64
-         |    AND (y.sim < x.sim OR (y.sim = x.sim AND y.vec_id < x.vec_id))
-         |    AND list_cosine_similarity(x.v, y.v) >= 0.45)
-         |SELECT m.vec_id, m.cell,
-         |  CAST(round(m.sim * 1000000) AS BIGINT) AS cent_sim_micro,
-         |  (d.vec_id IS NULL) AS kept
-         |FROM m LEFT JOIN drops d ON d.vec_id = m.vec_id""".stripMargin,
-    // incremental semantic dedup: the stored codebook is the dumped
-    // faith; the oracle re-derives BOTH slices' assignment from it,
-    // then the batch drop rule — index members always outrank batch,
-    // batch-internal priority is the SemDeDup (cent_sim, id) order
-    "dedup_semantic_incremental" ->
-      s"""WITH e AS (SELECT vec_id,
-         |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-         |  FROM embeddings),
-         |c AS (SELECT cell, v FROM read_parquet('$semIdxCentsGlob')),
-         |asg AS (
-         |  SELECT vec_id, cell, sim FROM (
-         |    SELECT e.vec_id, c.cell, list_cosine_similarity(e.v, c.v) AS sim,
-         |      row_number() OVER (PARTITION BY e.vec_id
-         |        ORDER BY list_cosine_similarity(e.v, c.v) DESC, c.cell) AS rn
-         |    FROM e, c) WHERE rn = 1),
-         |idx AS (SELECT a.vec_id, a.cell, e.v
-         |        FROM asg a JOIN e ON e.vec_id = a.vec_id
-         |        WHERE a.vec_id % 10 <> 0),
-         |bat AS (SELECT a.vec_id, a.cell, a.sim, e.v
-         |        FROM asg a JOIN e ON e.vec_id = a.vec_id
-         |        WHERE a.vec_id % 10 = 0),
-         |drops AS (
-         |  SELECT DISTINCT b.vec_id FROM bat b JOIN idx i ON b.cell = i.cell
-         |    AND list_cosine_similarity(b.v, i.v) >= 0.45
-         |  UNION
-         |  SELECT DISTINCT x.vec_id
-         |  FROM bat x JOIN bat y ON x.cell = y.cell AND x.vec_id <> y.vec_id
-         |  WHERE (y.sim < x.sim OR (y.sim = x.sim AND y.vec_id < x.vec_id))
-         |    AND list_cosine_similarity(x.v, y.v) >= 0.45)
-         |SELECT b.vec_id, b.cell,
-         |  CAST(round(b.sim * 1000000) AS BIGINT) AS cent_sim_micro,
-         |  (d.vec_id IS NULL) AS kept
-         |FROM bat b LEFT JOIN drops d ON d.vec_id = b.vec_id""".stripMargin,
-    // streaming chunk -> embed -> probe: chunk vectors re-derived
-    // integer-exact (the text_chunk_embed fold, densified), then the
-    // incremental drop rule UNROLLED over the four replayed micro-
-    // batches — each stage's keep set feeds the next stage's index
-    // side, exactly the probe-then-append loop the engine ran
-    "dedup_semantic_stream" -> dedupSemanticStreamSql,
-    // streaming exact chunk dedup: micro-batches in doc_id order make
-    // "first batch to see the hash, then first in batch" the GLOBAL
-    // lexicographic-min occurrence per hash, so the one-shot dedup is
-    // the oracle verbatim — chunk CTE (the text_chunk fragment), md5,
-    // min (doc_id, chunk_id) per hash
-    "dedup_exact_stream" -> dedupExactStreamSql,
-    // the fold (DISTINCT over committed hash subdirs) is invariant for
-    // the anti-join, so the compacted replay owes the same one-shot
-    // ground truth verbatim
-    "dedup_exact_stream_compact" -> dedupExactStreamSql,
-    "ann_topk" -> annTopkCosineSql,
-    // SQ8's distortion is bounded by one 1/255 step per dimension and
-    // its candidate budget (rerank = 50 ≫ k = 5) is re-scored with
-    // EXACT cosine — SqSpec asserts the output is set-identical to the
-    // exact path on the gate corpora, so it shares the exact oracle.
-    "ann_sq8" -> annTopkCosineSql,
-    // Euclidean top-k baseline, and the same search THROUGH full-rank
-    // PCA: centering + orthogonal rotation preserve L2 distances (to
-    // ~1e-13, far under the corpus' smallest top-k gap ~4e-5), so both
-    // share this exact oracle — the PCA gate hash-proves the entire
-    // fit/eigen/project stack. ann_pca_reduced (lossy by design) gets
-    // its own model-dump oracle below.
-    "ann_topk_l2" -> annTopkL2Sql,
-    "ann_pca_topk" -> annTopkL2Sql,
-    // full-probe twins: every cell read + (for PQ) unbounded rerank →
-    // candidate set = corpus, exact re-scoring → equals brute force;
-    // IvfIndexSpec pins the equality before the driver gate sees it
-    "ann_ivf_full" -> annTopkCosineSql,
-    "ann_ivfpq_rerank_all" -> annTopkCosineSql,
-    // the IVF probe machinery is DETERMINISTIC (approximate only
-    // w.r.t. exact top-k): seed-codebook search derives fully from
-    // the embeddings table; the trained variants take only the
-    // Lloyd centroids on faith (run-scoped side dumps)
-    "ann_ivf" -> annIvfSql(annIvfSeedCte),
-    "ann_ivf_trained" ->
-      annIvfSql(s"SELECT cell, v FROM read_parquet('$ivfTrainedGlob')"),
-    "ann_ivf_trained_par" ->
-      annIvfSql(s"SELECT cell, v FROM read_parquet('$ivfTrainedParGlob')"),
-    "ann_kmeans_cells" ->
-      s"""WITH e AS (SELECT vec_id,
-         |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-         |  FROM embeddings),
-         |c AS (SELECT cell, v FROM read_parquet('$kmeansCellsGlob')),
-         |asg AS (
-         |  SELECT vec_id, cell FROM (
-         |    SELECT e.vec_id, c.cell,
-         |      row_number() OVER (PARTITION BY e.vec_id
-         |        ORDER BY list_cosine_similarity(e.v, c.v) DESC, c.cell) AS rn
-         |    FROM e, c) WHERE rn = 1)
-         |SELECT cell, CAST(count(*) AS BIGINT) AS n
-         |FROM asg GROUP BY cell""".stripMargin,
-    // PQ pipelines: the trained codebooks (and the IVF-PQ index
-    // model) are side-dumped and taken on faith; encode, ADC, the
-    // global candidate cut and the exact re-rank are re-derived in
-    // SQL. ann_ivfpq_graph shares ann_ivfpq's oracle: at the gate's
-    // 16 cells the beam is exhaustive and CentroidGraphSpec pins the
-    // outputs equal (the ann_sq8 shares-the-exact-oracle pattern).
-    "ann_pq" ->
-      annPqPipelineSql(pqBooksGlob, "", "SELECT vec_id FROM nv"),
-    "ann_ivfpq" ->
-      annPqPipelineSql(ivfpqBooksGlob, ivfpqPoolCtes(ivfpqCentsGlob),
-        "SELECT a.vec_id FROM asg a JOIN cellu u ON u.cell = a.cell"),
-    "ann_ivfpq_graph" ->
-      annPqPipelineSql(ivfpqBooksGlob, ivfpqPoolCtes(ivfpqCentsGlob),
-        "SELECT a.vec_id FROM asg a JOIN cellu u ON u.cell = a.cell"),
-    // OPQ: same PQ pipeline in the dumped-rotation space — the
-    // rotation application (ordered dot per permuted basis row) is
-    // re-derived; eigensolve/allocation/trainer are the dumped faith
-    "ann_pq_opq" ->
-      annPqPipelineSql(opqBooksGlob, "", "SELECT vec_id FROM nv",
-        spaceCtes =
-          s"""rot AS (SELECT p, b FROM read_parquet('$opqRotGlob')),
-             |rproj AS (
-             |  SELECT n.vec_id, r.p,
-             |    list_reduce(list_prepend(CAST(0 AS DOUBLE),
-             |      list_transform(range(1, 65), i -> n.v[i] * r.b[i])),
-             |      (a, c) -> a + c) AS y
-             |  FROM nv0 n CROSS JOIN rot r),
-             |nv AS (SELECT vec_id, list(y ORDER BY p) AS v
-             |       FROM rproj GROUP BY vec_id),""".stripMargin),
-    // reduced-rank PCA search: the dumped mean + top-16 basis rows are
-    // the faith; projection (ordered centered dots) and the squared-L2
-    // rank are re-derived from raw embeddings
-    "ann_pca_reduced" ->
-      s"""WITH raw AS (SELECT vec_id,
-         |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v0
-         |  FROM embeddings),
-         |md AS (SELECT comp, v FROM read_parquet('$pcaModelGlob')),
-         |mn AS (SELECT v AS mv FROM md WHERE comp = -1),
-         |basis AS (SELECT comp, v AS bv FROM md WHERE comp >= 0),
-         |proj AS (
-         |  SELECT r.vec_id, b.comp,
-         |    list_reduce(list_prepend(CAST(0 AS DOUBLE),
-         |      list_transform(range(1, 65),
-         |        i -> (r.v0[i] - m.mv[i]) * b.bv[i])), (a, c) -> a + c) AS y
-         |  FROM raw r CROSS JOIN mn m CROSS JOIN basis b),
-         |pv AS (SELECT vec_id, list(y ORDER BY comp) AS v
-         |       FROM proj GROUP BY vec_id),
-         |q AS (SELECT vec_id AS qid, v AS qv FROM pv WHERE vec_id < 10)
-         |SELECT query_id, neighbor_id, rank FROM (
-         |  SELECT q.qid AS query_id, p.vec_id AS neighbor_id,
-         |    row_number() OVER (PARTITION BY q.qid ORDER BY
-         |      list_reduce(list_prepend(CAST(0 AS DOUBLE),
-         |        list_transform(range(1, 17),
-         |          c -> (q.qv[c] - p.v[c]) * (q.qv[c] - p.v[c]))),
-         |        (a, b) -> a + b),
-         |      p.vec_id) AS rank
-         |  FROM q JOIN pv p ON p.vec_id <> q.qid)
-         |WHERE rank <= 5""".stripMargin,
-    // ann_ivfpq_adaptive: the convergence loop's per-query probe
-    // DEPTHS are side-dumped (the faith); probe-cell selection, ADC,
-    // the per-query rerank·depth cut and the exact re-rank are all
-    // re-derived — the operator's output stage is a pure function of
-    // (model, depths) by contract (IvfIndex.probePqAdaptive scaladoc)
-    "ann_ivfpq_adaptive" ->
-      annPqPipelineSql(ivfpqBooksGlob,
-        ivfpqAdaptivePoolCtes(ivfpqCentsGlob, ivfpqADepthGlob),
-        "SELECT a.vec_id FROM asg a JOIN cellu u ON u.cell = a.cell",
-        candCte = adaptiveCandCte),
-    // micro-unit quantization absorbs summation order + last-ulp ln()
-    "text_lm_score" ->
-      """WITH toks AS (
-        |  SELECT doc_id,
-        |    unnest(list_filter(string_split_regex(lower(text), '[^a-z]+'),
-        |                       x -> x <> '')) AS tok
-        |  FROM documents),
-        |freqs AS (SELECT tok, count(*) AS cnt FROM toks GROUP BY tok),
-        |tot AS (SELECT count(*) AS total FROM toks)
-        |SELECT doc_id, count(*) AS n_tokens,
-        |  CAST(round(sum(ln(cnt / CAST(total AS DOUBLE))) / count(*) * 1000000)
-        |       AS BIGINT) AS score_micro
-        |FROM toks JOIN freqs USING (tok) CROSS JOIN tot
-        |GROUP BY doc_id""".stripMargin,
-    // rank over the QUANTIZED score both sides → integer-exact ordering
-    "text_tfidf" ->
-      """WITH toks AS (
-        |  SELECT doc_id,
-        |    unnest(list_filter(string_split_regex(lower(text), '[^a-z]+'),
-        |                       x -> x <> '')) AS term
-        |  FROM documents),
-        |tf AS (SELECT doc_id, term, count(*) AS tf FROM toks GROUP BY 1, 2),
-        |idf AS (SELECT term, count(DISTINCT doc_id) AS df FROM toks GROUP BY 1),
-        |n AS (SELECT count(*) AS n FROM documents),
-        |scored AS (
-        |  SELECT doc_id, term,
-        |    CAST(round(tf * ln(CAST(n AS DOUBLE) / df) * 1000000) AS BIGINT)
-        |      AS score_micro
-        |  FROM tf JOIN idf USING (term) CROSS JOIN n),
-        |r AS (
-        |  SELECT doc_id, term, score_micro,
-        |    row_number() OVER (PARTITION BY doc_id
-        |                       ORDER BY score_micro DESC, term) AS rank
-        |  FROM scored)
-        |SELECT doc_id, term, CAST(rank AS BIGINT) AS rank, score_micro
-        |FROM r WHERE rank <= 3""".stripMargin,
-    // the oracle's single-partition window cumsum IS the semantics;
-    // the engine computes it as a two-pass distributed prefix sum
-    "text_pack" ->
-      """WITH t AS (
-        |  SELECT doc_id,
-        |    len(list_filter(string_split_regex(text, '\s+'), x -> x <> '')) AS n_tokens
-        |  FROM documents),
-        |c AS (
-        |  SELECT doc_id, n_tokens,
-        |    coalesce(sum(n_tokens) OVER (ORDER BY doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS pre
-        |  FROM t)
-        |SELECT doc_id, n_tokens, CAST(pre // 1024 AS BIGINT) AS pack_id
-        |FROM c""".stripMargin,
-    "text_pack_order" ->
-      """WITH t AS (
-        |  SELECT doc_id,
-        |    len(list_filter(string_split_regex(text, '\s+'), x -> x <> '')) AS n_tokens
-        |  FROM documents),
-        |c AS (
-        |  SELECT doc_id, n_tokens,
-        |    coalesce(sum(n_tokens) OVER (ORDER BY doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS pre
-        |  FROM t),
-        |packs AS (SELECT DISTINCT CAST(pre // 1024 AS BIGINT) AS pack_id FROM c)
-        |SELECT pack_id,
-        |  CAST(row_number() OVER (
-        |    ORDER BY md5(CAST(pack_id AS VARCHAR) || ':42'), pack_id) - 1
-        |    AS BIGINT) AS train_order
-        |FROM packs""".stripMargin,
-    "text_clean" ->
-      """WITH c AS (
-        |  SELECT doc_id, CAST(strlen(text) AS BIGINT) AS bytes_in,
-        |    trim(regexp_replace(
-        |      regexp_replace(
-        |        regexp_replace(text, 'https?://[^\s]+', '<url>', 'g'),
-        |        '[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\.[a-zA-Z]{2,}', '<email>', 'g'),
-        |      '\s+', ' ', 'g')) AS clean_text
-        |  FROM documents)
-        |SELECT doc_id, clean_text, bytes_in,
-        |  CAST(strlen(clean_text) AS BIGINT) AS bytes_out
-        |FROM c""".stripMargin,
-    // token entropy: H = ln(n) − Σ c·ln(c)/n in micro-nats; the
-    // micro-round absorbs last-ulp ln()/summation differences (the
-    // lm_score discipline)
-    "text_entropy" ->
-      """WITH toks AS (
-        |  SELECT doc_id,
-        |    unnest(list_filter(string_split_regex(lower(text), '[^a-z]+'),
-        |                       x -> x <> '')) AS tok
-        |  FROM documents),
-        |c AS (SELECT doc_id, tok, count(*) AS cnt FROM toks GROUP BY doc_id, tok),
-        |h AS (SELECT doc_id, sum(cnt) AS n, sum(cnt * ln(cnt)) AS clogc
-        |      FROM c GROUP BY doc_id)
-        |SELECT d.doc_id,
-        |  CAST(coalesce(h.n, 0) AS BIGINT) AS n_tokens,
-        |  CAST(coalesce(round((ln(h.n) - h.clogc / h.n) * 1000000), 0) AS BIGINT)
-        |    AS entropy_micro
-        |FROM documents d LEFT JOIN h ON d.doc_id = h.doc_id""".stripMargin,
-    // funnel: the five component oracles' exact expressions joined on
-    // doc_id — each flag is the same bit its standalone gate checks
-    "text_filter_funnel" ->
-      s"""WITH $funnelCtes
-         |SELECT q.doc_id, q.q_ok, l.lang_ok, r.rep_ok, e.ent_ok, k.is_keeper,
-         |  CAST(q.q_ok = 1 AND l.lang_ok = 1 AND r.rep_ok = 1 AND e.ent_ok = 1
-         |       AND k.is_keeper = 1 AS INT) AS keep
-         |FROM q JOIN l ON l.doc_id = q.doc_id
-         |JOIN r ON r.doc_id = q.doc_id
-         |JOIN e ON e.doc_id = q.doc_id
-         |JOIN k ON k.doc_id = q.doc_id""".stripMargin,
-    // the semantic-extended funnel: the five text verdict CTEs plus
-    // the SemDeDup keeper bit re-derived from the funnel gate's own
-    // dumped codebook (vec_id == doc_id in the corpus)
-    "text_filter_funnel_semantic" ->
-      s"""WITH $funnelCtes,
-         |se AS (SELECT vec_id,
-         |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-         |  FROM embeddings),
-         |scn AS (SELECT cell, v FROM read_parquet('$semFunnelGlob')),
-         |sasg AS (
-         |  SELECT vec_id, cell, sim FROM (
-         |    SELECT se.vec_id, scn.cell,
-         |      list_cosine_similarity(se.v, scn.v) AS sim,
-         |      row_number() OVER (PARTITION BY se.vec_id
-         |        ORDER BY list_cosine_similarity(se.v, scn.v) DESC, scn.cell) AS rn
-         |    FROM se, scn) WHERE rn = 1),
-         |sm AS (SELECT a.vec_id, a.cell, a.sim, se.v
-         |       FROM sasg a JOIN se ON se.vec_id = a.vec_id),
-         |sdrops AS (
-         |  SELECT DISTINCT x.vec_id
-         |  FROM sm x JOIN sm y ON x.cell = y.cell AND x.vec_id <> y.vec_id
-         |  WHERE (y.sim < x.sim OR (y.sim = x.sim AND y.vec_id < x.vec_id))
-         |    AND list_cosine_similarity(x.v, y.v) >= 0.45),
-         |s AS (SELECT sm.vec_id AS doc_id,
-         |        CAST(d.vec_id IS NULL AS INT) AS sem_ok
-         |      FROM sm LEFT JOIN sdrops d ON d.vec_id = sm.vec_id)
-         |SELECT q.doc_id, q.q_ok, l.lang_ok, r.rep_ok, e.ent_ok, k.is_keeper,
-         |  s.sem_ok,
-         |  CAST(q.q_ok = 1 AND l.lang_ok = 1 AND r.rep_ok = 1 AND e.ent_ok = 1
-         |       AND k.is_keeper = 1 AND s.sem_ok = 1 AS INT) AS keep
-         |FROM q JOIN l ON l.doc_id = q.doc_id
-         |JOIN r ON r.doc_id = q.doc_id
-         |JOIN e ON e.doc_id = q.doc_id
-         |JOIN k ON k.doc_id = q.doc_id
-         |JOIN s ON s.doc_id = q.doc_id""".stripMargin,
-    "text_decontam" -> textDecontamSql,
-    // Bloom prefilter + exact verify join: false positives die in the
-    // join, so the output is exact BY CONSTRUCTION (fpp only tunes
-    // shuffle volume) — shares the exact oracle outright.
-    "text_decontam_bloom" -> textDecontamSql,
-    // text_pii: identical deterministic PII planted in SQL; counts on
-    // the planted text, then the same email → ipv4 → phone replacement
-    // order (regexes restricted to the Java/RE2-identical subset)
-    "text_pii" ->
-      """WITH p AS (
-        |  SELECT doc_id,
-        |    printf('%s Contact alice.%d@example.com or 10.0.%d.%d tel 555-867-%04d.',
-        |      text, doc_id, doc_id % 256, (doc_id * 7) % 256, doc_id % 10000) AS text
-        |  FROM documents)
-        |SELECT doc_id,
-        |  CAST(len(regexp_extract_all(text,
-        |    '[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\.[a-zA-Z]{2,}')) AS BIGINT) AS n_emails,
-        |  CAST(len(regexp_extract_all(text,
-        |    '\b\d{1,3}(\.\d{1,3}){3}\b')) AS BIGINT) AS n_ips,
-        |  CAST(len(regexp_extract_all(text,
-        |    '\b\d{3}-\d{3}-\d{4}\b')) AS BIGINT) AS n_phones,
-        |  md5(regexp_replace(
-        |    regexp_replace(
-        |      regexp_replace(text,
-        |        '[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\.[a-zA-Z]{2,}', '<email>', 'g'),
-        |      '\b\d{1,3}(\.\d{1,3}){3}\b', '<ip>', 'g'),
-        |    '\b\d{3}-\d{3}-\d{4}\b', '<phone>', 'g')) AS red_md5
-        |FROM p""".stripMargin,
-    // text_mixture: sqrt is IEEE correctly-rounded (unlike pow), so the
-    // α=0.5 temperature weight is bit-exact cross-engine; the ppm split
-    // is bigint-only arithmetic after that
-    "text_mixture" ->
-      """WITH s AS (
-        |  SELECT source, count(*) AS n_docs,
-        |    CAST(sum(len(list_filter(string_split_regex(text, '\s+'),
-        |                             x -> x <> ''))) AS BIGINT) AS n_tokens
-        |  FROM documents GROUP BY source),
-        |w AS (
-        |  SELECT source, n_docs, n_tokens,
-        |    CAST(round(sqrt(n_tokens) * 1000) AS BIGINT) AS score
-        |  FROM s),
-        |t AS (SELECT *, CAST(sum(score) OVER () AS BIGINT) AS total FROM w)
-        |SELECT source, n_docs, n_tokens, score,
-        |  (2000000 * score + total) // (2 * total) AS weight_ppm
-        |FROM t""".stripMargin,
-    // the composed corpus-prep pipeline: same stages chained as CTEs
-    "text_pipeline" ->
-      """WITH c AS (
-        |  SELECT doc_id,
-        |    trim(regexp_replace(
-        |      regexp_replace(
-        |        regexp_replace(text, 'https?://[^\s]+', '<url>', 'g'),
-        |        '[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\.[a-zA-Z]{2,}', '<email>', 'g'),
-        |      '\s+', ' ', 'g')) AS ct
-        |  FROM documents),
-        |t AS (
-        |  SELECT doc_id, ct,
-        |    len(list_filter(string_split_regex(ct, '\s+'), x -> x <> '')) AS n_tokens
-        |  FROM c),
-        |q AS (SELECT * FROM t WHERE n_tokens >= 5),
-        |d AS (SELECT min(doc_id) AS doc_id FROM q GROUP BY md5(ct)),
-        |k AS (SELECT q.doc_id, q.n_tokens FROM q JOIN d ON q.doc_id = d.doc_id),
-        |p AS (
-        |  SELECT doc_id, n_tokens,
-        |    coalesce(sum(n_tokens) OVER (ORDER BY doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS pre
-        |  FROM k)
-        |SELECT doc_id, CAST(n_tokens AS BIGINT) AS n_tokens,
-        |  CAST(pre // 512 AS BIGINT) AS pack_id
-        |FROM p""".stripMargin,
-    "text_bpe_pairs" ->
-      """WITH words AS (
-        |  SELECT unnest(list_filter(string_split_regex(lower(text), '[^a-z]+'),
-        |    x -> x <> '')) AS w
-        |  FROM documents),
-        |wc AS (SELECT w, count(*) AS cnt FROM words GROUP BY w),
-        |syms AS (
-        |  SELECT cnt, list_append(
-        |    list_transform(range(1, strlen(w) + 1), i -> substr(w, CAST(i AS INT), 1)),
-        |    '</w>') AS s
-        |  FROM wc),
-        |pairs AS (
-        |  SELECT cnt, unnest(list_transform(range(1, len(s)),
-        |    i -> s[i] || ' ' || s[i+1])) AS pair
-        |  FROM syms)
-        |SELECT pair, CAST(sum(cnt) AS BIGINT) AS cnt
-        |FROM pairs GROUP BY pair""".stripMargin,
-    // BPE gates: the TRAINED MERGE TABLE is side-dumped run-scoped
-    // (bpeMergesGlob) and is the only artifact taken on faith — the
-    // iterative argmax loop is not SQL-expressible, but the APPLY is:
-    // DuckDB re-applies the merges to the raw corpus itself (one
-    // greedy `replace` per merge round, see bpeDeriveCtes) and
-    // re-derives the vocab table, per-position ids, and per-doc
-    // counts as independent hash gates.
-    "text_bpe_vocab" ->
-      s"""WITH bmerges AS (SELECT ord, a, b FROM read_parquet('$bpeMergesGlob')),
-         |$bpeVocabCte
-         |SELECT token_id, token FROM bvocab""".stripMargin,
-    "text_bpe_encode" ->
-      s"""WITH RECURSIVE
-         |bmerges AS (SELECT ord, a, b FROM read_parquet('$bpeMergesGlob')),
-         |dw AS (
-         |  SELECT doc_id, list_filter(string_split_regex(lower(text), '[^a-z]+'),
-         |    x -> x <> '') AS ws
-         |  FROM documents),
-         |$bpeDeriveCtes,
-         |dn AS (
-         |  SELECT d2.doc_id, sum(len(t2.ts)) AS n
-         |  FROM (SELECT doc_id, unnest(ws) AS w FROM dw) d2
-         |  JOIN btoks t2 USING (w)
-         |  GROUP BY d2.doc_id)
-         |SELECT dw.doc_id, CAST(coalesce(dn.n, 0) AS BIGINT) AS n_bpe_tokens
-         |FROM dw LEFT JOIN dn USING (doc_id)""".stripMargin,
-    "text_bpe_ids" ->
-      s"""WITH RECURSIVE
-         |bmerges AS (SELECT ord, a, b FROM read_parquet('$bpeMergesGlob')),
-         |dw AS (
-         |  SELECT doc_id, list_filter(string_split_regex(lower(text), '[^a-z]+'),
-         |    x -> x <> '') AS ws
-         |  FROM documents),
-         |$bpeDeriveCtes,
-         |$bpeVocabCte,
-         |docw AS (
-         |  SELECT doc_id, u.s.w AS w, u.s.wi AS wi
-         |  FROM (SELECT doc_id,
-         |          unnest(list_transform(ws, (x, i) -> {'w': x, 'wi': i})) AS s
-         |        FROM dw) u),
-         |flat AS (
-         |  SELECT doc_id, wi, u.s.tok AS tok, u.s.ti AS ti
-         |  FROM (SELECT d2.doc_id, d2.wi,
-         |          unnest(list_transform(t2.ts, (x, i) -> {'tok': x, 'ti': i})) AS s
-         |        FROM docw d2 JOIN btoks t2 USING (w)) u)
-         |SELECT f.doc_id,
-         |  CAST(row_number() OVER (PARTITION BY f.doc_id ORDER BY f.wi, f.ti) - 1
-         |    AS INT) AS pos,
-         |  v.token_id
-         |FROM flat f JOIN bvocab v ON v.token = f.tok""".stripMargin,
-    // the id-packed pipeline: clean/quality/dedup CTEs are
-    // text_pipeline's, then the BPE re-derivation runs on the KEPT
-    // cleaned text and packing follows the id counts
-    "text_pipeline_ids" ->
-      s"""WITH RECURSIVE
-         |bmerges AS (SELECT ord, a, b FROM read_parquet('$bpeMergesGlob')),
-         |c AS (
-         |  SELECT doc_id,
-         |    trim(regexp_replace(
-         |      regexp_replace(
-         |        regexp_replace(text, 'https?://[^\\s]+', '<url>', 'g'),
-         |        '[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\\.[a-zA-Z]{2,}', '<email>', 'g'),
-         |      '\\s+', ' ', 'g')) AS ct
-         |  FROM documents),
-         |t AS (
-         |  SELECT doc_id, ct,
-         |    len(list_filter(string_split_regex(ct, '\\s+'), x -> x <> '')) AS n_tokens
-         |  FROM c),
-         |q AS (SELECT * FROM t WHERE n_tokens >= 5),
-         |d AS (SELECT min(doc_id) AS doc_id FROM q GROUP BY md5(ct)),
-         |k AS (SELECT q.doc_id, q.ct FROM q JOIN d ON q.doc_id = d.doc_id),
-         |dw AS (
-         |  SELECT doc_id, list_filter(string_split_regex(lower(ct), '[^a-z]+'),
-         |    x -> x <> '') AS ws
-         |  FROM k),
-         |$bpeDeriveCtes,
-         |dn AS (
-         |  SELECT d2.doc_id, sum(len(t2.ts)) AS n
-         |  FROM (SELECT doc_id, unnest(ws) AS w FROM dw) d2
-         |  JOIN btoks t2 USING (w)
-         |  GROUP BY d2.doc_id),
-         |nn AS (
-         |  SELECT dw.doc_id, CAST(coalesce(dn.n, 0) AS BIGINT) AS nb
-         |  FROM dw LEFT JOIN dn USING (doc_id)),
-         |p AS (
-         |  SELECT doc_id, nb,
-         |    coalesce(sum(nb) OVER (ORDER BY doc_id
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS pre
-         |  FROM nn)
-         |SELECT doc_id, nb AS n_bpe_tokens, CAST(pre // 512 AS BIGINT) AS pack_id
-         |FROM p""".stripMargin,
-    // trained-classifier gate: only the LEARNED WEIGHTS are dumped
-    // (clfWeightsGlob); feature tokenization, the dense len/stop
-    // buckets (exact integer log2 via bin()), FNV-1a hashing
-    // (re-expressed in unsigned-64 arithmetic — Int overflow ≡ mod
-    // 2^32, and 4096 | 2^32 makes the bucket equal), and the margin
-    // fold are all re-derived from raw text. The surface is the
-    // MARGIN (no transcendental): every op is an exactly-specified
-    // IEEE-754 double op applied in the same order as the Scala
-    // scorer, so the hash compare is bit-exact.
-    "text_quality_clf" ->
-      s"""WITH wrow AS (SELECT idx, w FROM read_parquet('$clfWeightsGlob')),
-         |warr AS (SELECT list(w ORDER BY idx) AS arr FROM wrow WHERE idx >= 0),
-         |brow AS (SELECT w AS bias FROM wrow WHERE idx = -1),
-         |f AS (
-         |  SELECT doc_id,
-         |    list_filter(string_split_regex(lower(text), '[^a-z]+'),
-         |      x -> x <> '') AS toks,
-         |    len(list_filter(string_split_regex(text, '\\s+'), x -> x <> '')) AS nws
-         |  FROM documents),
-         |g AS (
-         |  SELECT doc_id, toks, nws, len(toks) AS ntoks,
-         |    len(list_filter(toks,
-         |      t -> t IN ('the','a','of','and','to','is','in'))) AS nstop
-         |  FROM f),
-         |h AS (
-         |  SELECT doc_id,
-         |    list_concat(list_concat(
-         |      toks,
-         |      list_transform(range(1 + ntoks // 8), x -> '__len' ||
-         |        CAST(CASE WHEN nws = 0 THEN -1
-         |                  ELSE strlen(bin(nws)) - 1 END AS VARCHAR))),
-         |      list_transform(range(1 + ntoks // 8), x -> '__stop' ||
-         |        CAST(CASE WHEN nws = 0 THEN -1
-         |                  ELSE (nstop * 100 // nws) // 5 END AS VARCHAR))
-         |    ) AS ftoks
-         |  FROM g),
-         |bkt AS (
-         |  SELECT doc_id,
-         |    list_transform(ftoks, tk ->
-         |      CAST(list_reduce(list_prepend(CAST(2166136261 AS BIGINT),
-         |          list_transform(range(1, strlen(tk) + 1),
-         |            i -> CAST(unicode(substr(tk, CAST(i AS INT), 1)) AS BIGINT))),
-         |        (hv, cv) -> (xor(hv, cv) * 16777619) % 4294967296)
-         |        % 4096 AS INT)) AS bs
-         |  FROM h),
-         |mm AS (
-         |  SELECT doc_id,
-         |    CASE WHEN len(bs) = 0 THEN bias
-         |         ELSE bias + list_reduce(list_transform(bs, x -> arr[x + 1]),
-         |                                 (u, v) -> u + v) / len(bs)
-         |    END AS mg
-         |  FROM bkt CROSS JOIN warr CROSS JOIN brow)
-         |SELECT doc_id, CAST(trunc(mg * 1000000.0) AS BIGINT) AS margin_micro,
-         |  CAST(mg >= 0 AS INT) AS label
-         |FROM mm""".stripMargin,
-    // frame sampling over the decodable video table: real AVI rows
-    // stride off the decoded frame count AND report the real frame
-    // mean — recomputed here from MediaSynth's closed-form pixels
-    // (sum of aviGray over the w x h grid, integer-divided), the
-    // mm_resize/mm_resample strongest-oracle shape on the time axis;
-    // fake rows keep the stub count and luma formula
-    // the decoded-JPEG pixel statistics re-derived from doc_id
-    // closed forms alone: the block grid (nbx = 2 + id%6,
-    // nby = 2 + id%5), the per-block gray, and the block-position
-    // weight (1 + bx + nbx*by — a misplaced or transposed block
-    // cannot fake it); every solid block contributes 64 identical
-    // pixels, so sums scale by 64. Truncated rows (id % 5 = 3) owe
-    // the (-1,-1,-1,-1) fallback. The small constant grids are
-    // unnested standalone then cross-joined (the DuckDB
-    // unnest+join+filter bind-bug workaround).
-    "mm_jpeg_decode" ->
-      """WITH bxs AS (SELECT unnest(range(0, 8)) AS bx),
-        |bys AS (SELECT unnest(range(0, 7)) AS by),
-        |g AS (SELECT doc_id, 2 + doc_id % 6 AS nbx, 2 + doc_id % 5 AS nby
-        |      FROM documents),
-        |cells AS (
-        |  SELECT g.doc_id, g.nbx, g.nby, bx, by,
-        |    (g.doc_id * 11 + bx * 37 + by * 59) % 256 AS gray
-        |  FROM g, bxs, bys WHERE bx < g.nbx AND by < g.nby),
-        |ok AS (
-        |  SELECT doc_id, CAST(8 * nbx AS BIGINT) AS w,
-        |    CAST(8 * nby AS BIGINT) AS h,
-        |    CAST(64 * sum(gray) AS BIGINT) AS pix_sum,
-        |    CAST(64 * sum(gray * (1 + bx + nbx * by)) AS BIGINT) AS pix_wsum
-        |  FROM cells GROUP BY doc_id, nbx, nby)
-        |SELECT d.doc_id,
-        |  CASE WHEN d.doc_id % 5 = 3 THEN -1 ELSE ok.w END AS w,
-        |  CASE WHEN d.doc_id % 5 = 3 THEN -1 ELSE ok.h END AS h,
-        |  CASE WHEN d.doc_id % 5 = 3 THEN -1 ELSE ok.pix_sum END AS pix_sum,
-        |  CASE WHEN d.doc_id % 5 = 3 THEN -1 ELSE ok.pix_wsum END AS pix_wsum
-        |FROM documents d JOIN ok ON ok.doc_id = d.doc_id""".stripMargin,
-    // decoded-PNG pixel statistics re-derived from doc_id closed
-    // forms alone: dims (8 + id%11, 8 + id%6), the per-pixel gray
-    // (id*13 + x*29 + y*17) % 256, the color-type channel derivation
-    // (types 0/4 sum 3·gray; 2/6 sum gray + (gray+85)%256 +
-    // (gray+170)%256 — alpha is never summed), the SUB-BYTE classes
-    // (id%13 = 5/9/11 -> 4/2/1-bit gray: the stored sample is
-    // gray >> (8-d) and the decoded 8-bit value scales by
-    // 255/(2^d-1) = 17/85/255; id%13 = 3 -> 4-bit indexed, palette
-    // entry i carries the truecolor derivation of i*17), the 16-bit
-    // class (id%11 = 6: stored s*257, proper scaling returns gray
-    // verbatim — same arithmetic as 8-bit), and the position weight
-    // (1 + x + w·y, which a misfiltered or shifted scanline cannot
-    // fake). Truncated rows (id % 5 = 3) owe the (-1,-1,-1,-1)
-    // fallback. Grids unnested standalone then cross-joined (the
-    // DuckDB unnest+join+filter bind-bug workaround).
-    "mm_png_decode" ->
-      """WITH xs AS (SELECT unnest(range(0, 18)) AS x),
-        |ys AS (SELECT unnest(range(0, 13)) AS y),
-        |g AS (SELECT doc_id, 8 + doc_id % 11 AS w, 8 + doc_id % 6 AS h
-        |      FROM documents),
-        |cells AS (
-        |  SELECT g.doc_id, g.w, g.h, x, y,
-        |    (g.doc_id * 13 + x * 29 + y * 17) % 256 AS gray
-        |  FROM g, xs, ys WHERE x < g.w AND y < g.h),
-        |pix AS (
-        |  SELECT doc_id, w, h, x, y, CASE
-        |    WHEN doc_id % 13 = 5 THEN 3 * ((gray // 16) * 17)
-        |    WHEN doc_id % 13 = 9 THEN 3 * ((gray // 64) * 85)
-        |    WHEN doc_id % 13 = 11 THEN 3 * ((gray // 128) * 255)
-        |    WHEN doc_id % 13 = 3 THEN (gray // 16) * 17
-        |      + ((gray // 16) * 17 + 85) % 256
-        |      + ((gray // 16) * 17 + 170) % 256
-        |    WHEN doc_id % 4 IN (0, 3) THEN 3 * gray
-        |    ELSE gray + (gray + 85) % 256 + (gray + 170) % 256
-        |    END AS rgb
-        |  FROM cells),
-        |ok AS (
-        |  SELECT doc_id, CAST(w AS BIGINT) AS w, CAST(h AS BIGINT) AS h,
-        |    CAST(sum(rgb) AS BIGINT) AS pix_sum,
-        |    CAST(sum(rgb * (1 + x + w * y)) AS BIGINT) AS pix_wsum
-        |  FROM pix GROUP BY doc_id, w, h)
-        |SELECT d.doc_id,
-        |  CASE WHEN d.doc_id % 5 = 3 THEN -1 ELSE ok.w END AS w,
-        |  CASE WHEN d.doc_id % 5 = 3 THEN -1 ELSE ok.h END AS h,
-        |  CASE WHEN d.doc_id % 5 = 3 THEN -1 ELSE ok.pix_sum END AS pix_sum,
-        |  CASE WHEN d.doc_id % 5 = 3 THEN -1 ELSE ok.pix_wsum END AS pix_wsum
-        |FROM documents d JOIN ok ON ok.doc_id = d.doc_id""".stripMargin,
-    // decoded-GIF pixel statistics re-derived from doc_id closed
-    // forms alone: dims (8 + id%10, 8 + id%7), the per-pixel palette
-    // index (id*19 + x*23 + y*41) % 256, and the palette's channel
-    // derivation (g, (g+85)%256, (g+170)%256) — LZW and the
-    // doc_id % 6 == 2 row interlace are lossless, so one closed form
-    // covers every row class. Truncated rows (id % 5 = 3) owe the
-    // (-1,-1,-1,-1) fallback.
-    "mm_gif_decode" ->
-      """WITH xs AS (SELECT unnest(range(0, 18)) AS x),
-        |ys AS (SELECT unnest(range(0, 15)) AS y),
-        |g AS (SELECT doc_id, 8 + doc_id % 10 AS w, 8 + doc_id % 7 AS h
-        |      FROM documents),
-        |cells AS (
-        |  SELECT g.doc_id, g.w, g.h, x, y,
-        |    (g.doc_id * 19 + x * 23 + y * 41) % 256 AS gray
-        |  FROM g, xs, ys WHERE x < g.w AND y < g.h),
-        |ok AS (
-        |  SELECT doc_id, CAST(w AS BIGINT) AS w, CAST(h AS BIGINT) AS h,
-        |    CAST(sum(gray + (gray + 85) % 256 + (gray + 170) % 256)
-        |      AS BIGINT) AS pix_sum,
-        |    CAST(sum((gray + (gray + 85) % 256 + (gray + 170) % 256)
-        |      * (1 + x + w * y)) AS BIGINT) AS pix_wsum
-        |  FROM cells GROUP BY doc_id, w, h)
-        |SELECT d.doc_id,
-        |  CASE WHEN d.doc_id % 5 = 3 THEN -1 ELSE ok.w END AS w,
-        |  CASE WHEN d.doc_id % 5 = 3 THEN -1 ELSE ok.h END AS h,
-        |  CASE WHEN d.doc_id % 5 = 3 THEN -1 ELSE ok.pix_sum END AS pix_sum,
-        |  CASE WHEN d.doc_id % 5 = 3 THEN -1 ELSE ok.pix_wsum END AS pix_wsum
-        |FROM documents d JOIN ok ON ok.doc_id = d.doc_id""".stripMargin,
-    // decoded-WebP (VP8L) pixel statistics re-derived from doc_id
-    // closed forms alone: dims (8 + id%8, 8 + id%5), the per-pixel
-    // gray (id*23 + x*31 + y*43) % 256, the channel derivation
-    // (gray + (gray+85)%256 + (gray+170)%256 — alpha never summed),
-    // the palette variant's 32-level quantization (id%7 = 2 ->
-    // (gray//8)*8), the cache+LZ77 variant's PLATEAUED form (id%7 =
-    // 3 -> x plateaus of 4, rows repeating every 3 — the pixel
-    // repetition that makes the encoder emit real backrefs and cache
-    // hits, so the decoder's LZ77/cache branches are hash-gated),
-    // and the position weight (1 + x + w·y). Every VP8L variant is
-    // LOSSLESS, so the closed forms cover all seven feature classes.
-    // Truncated rows (id % 5 = 3) owe the (-1,-1,-1,-1) fallback.
-    "mm_webp_decode" ->
-      """WITH xs AS (SELECT unnest(range(0, 15)) AS x),
-        |ys AS (SELECT unnest(range(0, 12)) AS y),
-        |g AS (SELECT doc_id, 8 + doc_id % 8 AS w, 8 + doc_id % 5 AS h
-        |      FROM documents),
-        |cells AS (
-        |  SELECT g.doc_id, g.w, g.h, x, y,
-        |    CASE WHEN g.doc_id % 7 = 2
-        |      THEN (((g.doc_id * 23 + x * 31 + y * 43) % 256) // 8) * 8
-        |      WHEN g.doc_id % 7 = 3
-        |      THEN (g.doc_id * 23 + (x - x % 4) * 31 + (y % 3) * 43) % 256
-        |      ELSE (g.doc_id * 23 + x * 31 + y * 43) % 256
-        |    END AS gray
-        |  FROM g, xs, ys WHERE x < g.w AND y < g.h),
-        |ok AS (
-        |  SELECT doc_id, CAST(w AS BIGINT) AS w, CAST(h AS BIGINT) AS h,
-        |    CAST(sum(gray + (gray + 85) % 256 + (gray + 170) % 256)
-        |      AS BIGINT) AS pix_sum,
-        |    CAST(sum((gray + (gray + 85) % 256 + (gray + 170) % 256)
-        |      * (1 + x + w * y)) AS BIGINT) AS pix_wsum
-        |  FROM cells GROUP BY doc_id, w, h)
-        |SELECT d.doc_id,
-        |  CASE WHEN d.doc_id % 5 = 3 THEN -1 ELSE ok.w END AS w,
-        |  CASE WHEN d.doc_id % 5 = 3 THEN -1 ELSE ok.h END AS h,
-        |  CASE WHEN d.doc_id % 5 = 3 THEN -1 ELSE ok.pix_sum END AS pix_sum,
-        |  CASE WHEN d.doc_id % 5 = 3 THEN -1 ELSE ok.pix_wsum END AS pix_wsum
-        |FROM documents d JOIN ok ON ok.doc_id = d.doc_id""".stripMargin,
-    // decoded-MJPEG frame statistics re-derived from doc_id closed
-    // forms alone: the per-frame block grid (nbx = 1 + id%3,
-    // nby = 1 + id%2), frame count (3 + id%4), the per-frame
-    // per-block gray, and the frame- and block-position weight
-    // (1 + bx + nbx·by)·(1 + f) — a dropped, duplicated, reordered
-    // or misdecoded frame cannot fake it; solid blocks contribute
-    // 64 identical pixels so sums scale by 64. Fake rows (text
-    // payloads) owe the (0,0,0,-1,-1) fallback.
-    "mm_video_frames_mjpeg" ->
-      """WITH v AS (
-        |  SELECT doc_id AS media_id, (doc_id // 3) % 2 = 0 AS real,
-        |    1 + doc_id % 3 AS nbx, 1 + doc_id % 2 AS nby,
-        |    3 + doc_id % 4 AS nf
-        |  FROM documents WHERE doc_id % 3 = 2),
-        |fs AS (SELECT unnest(range(0, 7)) AS f),
-        |bxs AS (SELECT unnest(range(0, 3)) AS bx),
-        |bys AS (SELECT unnest(range(0, 2)) AS by),
-        |cells AS (
-        |  SELECT v.media_id, v.nbx, v.nby, v.nf, f, bx, by,
-        |    (v.media_id * 5 + f * 17 + by * 29 + bx * 11) % 256 AS gray
-        |  FROM v, fs, bxs, bys
-        |  WHERE v.real AND f < v.nf AND bx < v.nbx AND by < v.nby),
-        |ok AS (
-        |  SELECT media_id, CAST(8 * nbx AS BIGINT) AS width,
-        |    CAST(8 * nby AS BIGINT) AS height, CAST(nf AS BIGINT) AS n_frames,
-        |    CAST(64 * sum(gray) AS BIGINT) AS px_sum,
-        |    CAST(64 * sum(gray * (1 + bx + nbx * by) * (1 + f)) AS BIGINT)
-        |      AS px_wsum
-        |  FROM cells GROUP BY media_id, nbx, nby, nf)
-        |SELECT v.media_id,
-        |  CASE WHEN v.real THEN ok.width ELSE 0 END AS width,
-        |  CASE WHEN v.real THEN ok.height ELSE 0 END AS height,
-        |  CASE WHEN v.real THEN ok.n_frames ELSE 0 END AS n_frames,
-        |  CASE WHEN v.real THEN ok.px_sum ELSE -1 END AS px_sum,
-        |  CASE WHEN v.real THEN ok.px_wsum ELSE -1 END AS px_wsum
-        |FROM v LEFT JOIN ok ON ok.media_id = v.media_id""".stripMargin,
-    "mm_frames" ->
-      """WITH v AS (
-        |  SELECT doc_id AS media_id, (doc_id // 3) % 2 = 0 AS real,
-        |    CASE WHEN (doc_id // 3) % 2 = 0 THEN 3 + doc_id % 4
-        |         ELSE 1 + strlen(text) % 240 END AS nf,
-        |    8 + doc_id % 5 AS w, 8 + doc_id % 3 AS h
-        |  FROM documents WHERE doc_id % 3 = 2),
-        |f AS (
-        |  SELECT media_id, real, w, h,
-        |    unnest(range(0, nf, CAST((nf + 7) // 8 AS BIGINT))) AS frame_idx
-        |  FROM v)
-        |SELECT media_id, frame_idx,
-        |  CAST(CASE WHEN real THEN
-        |    list_sum(flatten(list_transform(range(0, h), y ->
-        |      list_transform(range(0, w), x ->
-        |        (media_id * 5 + frame_idx * 17 + y * 29 + x * 11) % 256))))
-        |      // (w * h)
-        |  ELSE (media_id * 31 + frame_idx * 7) % 256 END AS BIGINT) AS luma
-        |FROM f""".stripMargin,
-    "text_classify" ->
-      """WITH toks AS (
-        |  SELECT doc_id,
-        |    unnest(list_filter(string_split_regex(lower(text), '[^a-z]+'),
-        |      x -> x <> '')) AS t
-        |  FROM documents),
-        |w AS (
-        |  SELECT DISTINCT t,
-        |    list_sum(list_transform(range(1, strlen(t) + 1),
-        |      i -> ord(substr(t, CAST(i AS INT), 1)))) % 21 - 10 AS wt
-        |  FROM toks)
-        |SELECT toks.doc_id, CAST(sum(w.wt) AS BIGINT) AS score,
-        |  CAST(sum(w.wt) > 0 AS INT) AS label
-        |FROM toks JOIN w ON toks.t = w.t
-        |GROUP BY toks.doc_id""".stripMargin,
-    // gzip-ingest: the oracle recomputes the DECODED text's counts
-    // from the plain text column (whitespace tokens + character
-    // count, the text_tokens definitions); truncated members
-    // (id % 5 = 3) owe the (-1, -1) fallback
-    "text_gzip_ingest" ->
-      """SELECT doc_id,
-        |  CAST(CASE WHEN doc_id % 5 = 3 THEN -1
-        |    ELSE len(list_filter(string_split_regex(text, '\s+'), x -> x <> ''))
-        |  END AS BIGINT) AS n_tokens,
-        |  CAST(CASE WHEN doc_id % 5 = 3 THEN -1
-        |    ELSE length(text) END AS BIGINT) AS n_chars
-        |FROM documents""".stripMargin,
-    // warc-ingest: 3 records per doc (warcinfo + request + response);
-    // decoded response-payload counts from the plain text column;
-    // truncated slices (id % 5 = 3) owe the (-1, -1, -1) fallback
-    "text_warc_ingest" ->
-      """SELECT doc_id,
-        |  CAST(CASE WHEN doc_id % 5 = 3 THEN -1 ELSE 3 END AS BIGINT)
-        |    AS n_records,
-        |  CAST(CASE WHEN doc_id % 5 = 3 THEN -1
-        |    ELSE len(list_filter(string_split_regex(text, '\s+'), x -> x <> ''))
-        |  END AS BIGINT) AS n_tokens,
-        |  CAST(CASE WHEN doc_id % 5 = 3 THEN -1
-        |    ELSE length(text) END AS BIGINT) AS n_chars
-        |FROM documents""".stripMargin,
-    // warc-split: the shard's 3 members slice apart and re-parse to
-    // the same records; counts from the response payload (plain text
-    // column); truncated shards (id % 5 = 3, cut mid-member) owe -1s
-    "text_warc_split" ->
-      """SELECT doc_id,
-        |  CAST(CASE WHEN doc_id % 5 = 3 THEN -1 ELSE 3 END AS BIGINT)
-        |    AS n_slices,
-        |  CAST(CASE WHEN doc_id % 5 = 3 THEN -1
-        |    ELSE len(list_filter(string_split_regex(text, '\s+'), x -> x <> ''))
-        |  END AS BIGINT) AS n_tokens,
-        |  CAST(CASE WHEN doc_id % 5 = 3 THEN -1
-        |    ELSE length(text) END AS BIGINT) AS n_chars
-        |FROM documents""".stripMargin,
-    // html-extract: every well-formed class extracts to exactly
-    // "Doc {id}\nDoc {id}\n{text}\nend of doc" — 7 extra tokens, and
-    // 2*len("Doc {id}") + len("end of doc") + 3 newlines = +13 chars;
-    // the entity class (id % 7 = 1) appends the LEGACY-reference
-    // suffix " © & é é" (&copy &AMP &eacute &#233 — semicolonless
-    // forms) = +4 tokens / +8 chars; the malformed class
-    // (unterminated <script>, id % 5 = 3) owes -1
-    "text_html_extract" ->
-      """SELECT doc_id,
-        |  CAST(CASE WHEN doc_id % 5 = 3 THEN -1
-        |    ELSE len(list_filter(string_split_regex(text, '\s+'), x -> x <> '')) + 7
-        |      + CASE WHEN doc_id % 7 = 1 THEN 4 ELSE 0 END
-        |  END AS BIGINT) AS n_tokens,
-        |  CAST(CASE WHEN doc_id % 5 = 3 THEN -1
-        |    ELSE length(text) + 2 * length('Doc ' || CAST(doc_id AS VARCHAR)) + 13
-        |      + CASE WHEN doc_id % 7 = 1 THEN 8 ELSE 0 END
-        |  END AS BIGINT) AS n_chars
-        |FROM documents""".stripMargin,
-    // warc-html: charset class = doc_id % 4 (utf-8 header / cp1252
-    // header over a lying meta / meta-only iso-8859-1 label → cp1252
-    // per WHATWG / BOM over a lying header). The title's code-point
-    // sum pins the DECODE char-for-char (a latin-1 misread of cp1252
-    // byte 0x80 or a cp1252 misread of the BOM page changes it); the
-    // count columns add the per-class title tokens/chars to the plain
-    // column's own. Truncated rows (id % 5 = 3) owe the fallback.
-    "text_warc_html" ->
-      """SELECT doc_id,
-        |  CASE WHEN doc_id % 5 = 3 THEN ''
-        |    WHEN doc_id % 4 IN (1, 2) THEN 'windows-1252'
-        |    ELSE 'UTF-8' END AS charset,
-        |  CAST(CASE WHEN doc_id % 5 = 3 THEN -1
-        |    WHEN doc_id % 4 = 0 THEN 10907
-        |    WHEN doc_id % 4 = 1 THEN 18232
-        |    WHEN doc_id % 4 = 2 THEN 1561
-        |    ELSE 10790 END AS BIGINT) AS head_cp_sum,
-        |  CAST(CASE WHEN doc_id % 5 = 3 THEN -1
-        |    ELSE len(list_filter(string_split_regex(text, '\s+'), x -> x <> ''))
-        |      + CASE WHEN doc_id % 4 IN (1, 2) THEN 4 ELSE 3 END + 3
-        |  END AS BIGINT) AS n_tokens,
-        |  CAST(CASE WHEN doc_id % 5 = 3 THEN -1
-        |    ELSE length(text)
-        |      + CASE WHEN doc_id % 4 = 0 THEN 13 WHEN doc_id % 4 = 1 THEN 22
-        |             WHEN doc_id % 4 = 2 THEN 15 ELSE 11 END + 12
-        |  END AS BIGINT) AS n_chars
-        |FROM documents""".stripMargin,
-    // crawl-extract: the one-call operator over per-doc shards; same
-    // class constants as text_warc_html (incl. the chunked /
-    // gzip-then-chunked transfer classes, which change the wire
-    // bytes but not the text), but truncated docs AND declined media
-    // types (application/pdf, id % 7 = 6) vanish from the output (no
-    // fallback rows) — the oracle filters both; the text/plain class
-    // (id % 7 = 5) bypasses the HTML tokenizer, so its literal
-    // "<tag>" survives and its single line is the whole body; the
-    // response record is always the shard's third member (idx 2)
-    "text_crawl_extract" ->
-      """SELECT doc_id,
-        |  CAST(2 AS BIGINT) AS member,
-        |  'https://example.org/page/' || CAST(doc_id AS VARCHAR) AS uri,
-        |  CASE WHEN doc_id % 7 = 5 THEN 'UTF-8'
-        |    WHEN doc_id % 4 IN (1, 2) THEN 'windows-1252'
-        |    ELSE 'UTF-8' END AS charset,
-        |  CAST(CASE WHEN doc_id % 7 = 5 THEN
-        |      list_aggregate(list_transform(
-        |        string_split(text || ' plain <tag> kept', ''),
-        |        x -> ascii(x)), 'sum')
-        |    WHEN doc_id % 4 = 0 THEN 10907
-        |    WHEN doc_id % 4 = 1 THEN 18232
-        |    WHEN doc_id % 4 = 2 THEN 1561
-        |    ELSE 10790 END AS BIGINT) AS head_cp_sum,
-        |  CAST(len(list_filter(string_split_regex(text, '\s+'), x -> x <> ''))
-        |    + CASE WHEN doc_id % 7 = 5 THEN 3
-        |        WHEN doc_id % 4 IN (1, 2) THEN 7 ELSE 6 END
-        |    AS BIGINT) AS n_tokens,
-        |  CAST(length(text)
-        |    + CASE WHEN doc_id % 7 = 5 THEN 17
-        |        WHEN doc_id % 4 = 0 THEN 25 WHEN doc_id % 4 = 1 THEN 34
-        |        WHEN doc_id % 4 = 2 THEN 27 ELSE 23 END
-        |    AS BIGINT) AS n_chars
-        |FROM documents WHERE doc_id % 5 <> 3 AND doc_id % 7 <> 6""".stripMargin,
-    // html-main: boilerplate blocks (nav/share/footer/link farms +
-    // the link-free no-stopword crumb + the over-threshold boundary
-    // blocks) drop; every well-formed class keeps the document text
-    // PLUS the two at-threshold boundary keepers — link density
-    // exactly 0.4 (50 chars / 7 tokens) and exactly 25 canonical
-    // chars (8 tokens) — a fixed +15 tokens / +77 chars (75 + 2
-    // joining newlines); malformed (id % 5 = 3, unterminated script)
-    // owes (-1, -1)
-    "text_html_main" ->
-      """SELECT doc_id,
-        |  CAST(CASE WHEN doc_id % 5 = 3 THEN -1
-        |    ELSE len(list_filter(string_split_regex(text, '\s+'), x -> x <> '')) + 15
-        |  END AS BIGINT) AS n_tokens,
-        |  CAST(CASE WHEN doc_id % 5 = 3 THEN -1
-        |    ELSE length(text) + 77 END AS BIGINT) AS n_chars
-        |FROM documents""".stripMargin,
-    // wet-ingest: conversion-record plain text; the UTF-16LE class
-    // (id % 4 = 1) pins that the record's Content-Type charset
-    // parameter is read; truncated containers owe (-1, -1)
-    "text_wet_ingest" ->
-      """SELECT doc_id,
-        |  CAST(CASE WHEN doc_id % 5 = 3 THEN -1
-        |    ELSE len(list_filter(string_split_regex(text, '\s+'), x -> x <> ''))
-        |  END AS BIGINT) AS n_tokens,
-        |  CAST(CASE WHEN doc_id % 5 = 3 THEN -1
-        |    ELSE length(text) END AS BIGINT) AS n_chars
-        |FROM documents""".stripMargin,
-    "text_snappy_ingest" ->
-      """SELECT doc_id,
-        |  CAST(CASE WHEN doc_id % 5 = 3 THEN -1
-        |    ELSE len(list_filter(string_split_regex(text, '\s+'), x -> x <> ''))
-        |  END AS BIGINT) AS n_tokens,
-        |  CAST(CASE WHEN doc_id % 5 = 3 THEN -1
-        |    ELSE length(text) END AS BIGINT) AS n_chars
-        |FROM documents""".stripMargin,
-    "text_lz4_ingest" ->
-      """SELECT doc_id,
-        |  CAST(CASE WHEN doc_id % 5 = 3 THEN -1
-        |    ELSE len(list_filter(string_split_regex(text, '\s+'), x -> x <> ''))
-        |  END AS BIGINT) AS n_tokens,
-        |  CAST(CASE WHEN doc_id % 5 = 3 THEN -1
-        |    ELSE length(text) END AS BIGINT) AS n_chars
-        |FROM documents""".stripMargin,
-    // the streaming replay owes the identical frame — same oracle
-    "text_zstd_ingest_stream" ->
-      """SELECT doc_id,
-        |  CAST(CASE WHEN doc_id % 5 = 3 THEN -1
-        |    ELSE len(list_filter(string_split_regex(text, '\s+'), x -> x <> ''))
-        |  END AS BIGINT) AS n_tokens,
-        |  CAST(CASE WHEN doc_id % 5 = 3 THEN -1
-        |    ELSE length(text) END AS BIGINT) AS n_chars
-        |FROM documents""".stripMargin,
-    "text_zstd_ingest" ->
-      """SELECT doc_id,
-        |  CAST(CASE WHEN doc_id % 5 = 3 THEN -1
-        |    ELSE len(list_filter(string_split_regex(text, '\s+'), x -> x <> ''))
-        |  END AS BIGINT) AS n_tokens,
-        |  CAST(CASE WHEN doc_id % 5 = 3 THEN -1
-        |    ELSE length(text) END AS BIGINT) AS n_chars
-        |FROM documents""".stripMargin,
-    "text_deflate_ingest" ->
-      """SELECT doc_id,
-        |  CAST(CASE WHEN doc_id % 5 = 3 THEN -1
-        |    ELSE len(list_filter(string_split_regex(text, '\s+'), x -> x <> ''))
-        |  END AS BIGINT) AS n_tokens,
-        |  CAST(CASE WHEN doc_id % 5 = 3 THEN -1
-        |    ELSE length(text) END AS BIGINT) AS n_chars
-        |FROM documents""".stripMargin,
-    // the streaming replay owes the identical frame — same oracle
-    "text_gzip_ingest_stream" ->
-      """SELECT doc_id,
-        |  CAST(CASE WHEN doc_id % 5 = 3 THEN -1
-        |    ELSE len(list_filter(string_split_regex(text, '\s+'), x -> x <> ''))
-        |  END AS BIGINT) AS n_tokens,
-        |  CAST(CASE WHEN doc_id % 5 = 3 THEN -1
-        |    ELSE length(text) END AS BIGINT) AS n_chars
-        |FROM documents""".stripMargin,
-    "text_tokens" ->
-      """SELECT doc_id,
-        |  len(list_filter(string_split_regex(text, '\s+'), x -> x <> '')) AS n_tokens,
-        |  length(text) AS n_chars,
-        |  length(regexp_replace(lower(text), '[^a-z]', '', 'g')) // 4 AS n_subwords_est
-        |FROM documents""".stripMargin,
-    // sliding token-window chunking: pure integer arithmetic over the
-    // shared tokenizer — chunk count 1 + ceil((n-w)/s) for n > w,
-    // 1-based inclusive slices on both engines
-    "text_chunk" ->
-      """WITH toks AS (
-        |  SELECT doc_id,
-        |    list_filter(string_split_regex(lower(text), '[^a-z]+'), x -> x <> '') AS t
-        |  FROM documents),
-        |nz AS (SELECT doc_id, t, len(t) AS n FROM toks WHERE len(t) >= 1),
-        |ch AS (SELECT doc_id, t, n,
-        |    unnest(range(0, CASE WHEN n <= 64 THEN 1
-        |                        ELSE 1 + (n - 64 + 47) // 48 END)) AS chunk_id
-        |  FROM nz)
-        |SELECT doc_id, CAST(chunk_id AS BIGINT) AS chunk_id,
-        |  CAST(chunk_id * 48 AS BIGINT) AS tok_start,
-        |  CAST(least(n - chunk_id * 48, 64) AS BIGINT) AS n_tokens,
-        |  array_to_string(t[chunk_id * 48 + 1 :
-        |                    chunk_id * 48 + least(64, n - chunk_id * 48)], ' ') AS chunk
-        |FROM ch""".stripMargin,
-    // chunking over the BPE id stream: the ids CTE is text_bpe_ids'
-    // re-derivation verbatim (dumped merges faith), then the same
-    // integer chunk arithmetic — membership range per id row
-    "text_chunk_ids" ->
-      s"""WITH RECURSIVE
-         |bmerges AS (SELECT ord, a, b FROM read_parquet('$bpeMergesGlob')),
-         |dw AS (
-         |  SELECT doc_id, list_filter(string_split_regex(lower(text), '[^a-z]+'),
-         |    x -> x <> '') AS ws
-         |  FROM documents),
-         |$bpeDeriveCtes,
-         |$bpeVocabCte,
-         |docw AS (
-         |  SELECT doc_id, u.s.w AS w, u.s.wi AS wi
-         |  FROM (SELECT doc_id,
-         |          unnest(list_transform(ws, (x, i) -> {'w': x, 'wi': i})) AS s
-         |        FROM dw) u),
-         |flat AS (
-         |  SELECT doc_id, wi, u.s.tok AS tok, u.s.ti AS ti
-         |  FROM (SELECT d2.doc_id, d2.wi,
-         |          unnest(list_transform(t2.ts, (x, i) -> {'tok': x, 'ti': i})) AS s
-         |        FROM docw d2 JOIN btoks t2 USING (w)) u),
-         |ids AS (
-         |  SELECT f.doc_id,
-         |    CAST(row_number() OVER (PARTITION BY f.doc_id ORDER BY f.wi, f.ti) - 1
-         |      AS INT) AS pos,
-         |    v.token_id
-         |  FROM flat f JOIN bvocab v ON v.token = f.tok),
-         |nn AS (SELECT doc_id, count(*) AS n FROM ids GROUP BY doc_id),
-         |x AS (
-         |  SELECT i.doc_id, i.pos, i.token_id,
-         |    unnest(range(
-         |      CASE WHEN i.pos < 64 THEN 0 ELSE (i.pos - 64) // 48 + 1 END,
-         |      least(i.pos // 48,
-         |            CASE WHEN nn.n <= 64 THEN 0
-         |                 ELSE (nn.n - 64 + 47) // 48 END) + 1)) AS chunk_id
-         |  FROM ids i JOIN nn USING (doc_id))
-         |SELECT doc_id, CAST(chunk_id AS BIGINT) AS chunk_id,
-         |  CAST(pos - chunk_id * 48 AS BIGINT) AS pos_in_chunk, token_id
-         |FROM x""".stripMargin,
-    // chunk CTE chained into the pack cumsum — the two components'
-    // oracles composed, like text_pipeline's
-    "text_chunk_pack" -> textChunkPackSql,
-    // the streaming packer replayed over contiguous doc_id-range
-    // micro-batches continues the global prefix sum exactly, so the
-    // one-shot oracle applies verbatim
-    "text_chunk_pack_stream" -> textChunkPackSql,
-    "text_quality" -> textQualitySql,
-    // corpus report card: the split, langid and quality oracles
-    // composed per doc (each the SHARED fragment its standalone gate
-    // runs), then the same integer-exact rollup
-    "text_corpus_report" ->
-      s"""WITH s AS (SELECT doc_id, split FROM ($dedupSplitSafeSql)),
-         |l AS (SELECT doc_id, lang_pred FROM ($textLangIdSql)),
-         |q AS (SELECT doc_id, n_tokens, n_alpha, is_quality
-         |      FROM ($textQualitySql))
-         |SELECT s.split, l.lang_pred, count(*) AS n_docs,
-         |  CAST(sum(q.n_tokens) AS BIGINT) AS n_tokens,
-         |  CAST(sum(q.n_alpha) AS BIGINT) AS n_alpha,
-         |  CAST(sum(q.is_quality) AS BIGINT) AS n_quality
-         |FROM s JOIN l USING (doc_id) JOIN q USING (doc_id)
-         |GROUP BY 1, 2""".stripMargin,
-    // quality-weighted sample: the quality CTE is text_quality's, the
-    // predicate is the byte-identical md5-prefix threshold per flag
-    "text_sample_weighted" ->
-      """WITH q AS (
-        |  SELECT doc_id,
-        |    len(list_filter(string_split_regex(text, '\s+'), x -> x <> '')) AS n_tokens,
-        |    len(list_filter(string_split_regex(lower(text), '[^a-z]+'),
-        |        x -> x IN ('the','a','of','and','to','is','in'))) AS n_stop
-        |  FROM documents),
-        |f AS (SELECT doc_id,
-        |    CAST(n_tokens BETWEEN 5 AND 10000 AND n_stop * 20 >= n_tokens AS INT)
-        |      AS is_quality FROM q)
-        |SELECT doc_id, is_quality FROM f
-        |WHERE substr(md5(CAST(doc_id AS VARCHAR) || ':42'), 1, 15) <
-        |  CASE WHEN is_quality = 1 THEN 'ccccccccccccd00' ELSE '1999999999999a0' END""".stripMargin,
-    "text_langid" -> textLangIdSql,
-    // mixture plan: catalog lang + whitespace token counts rolled up
-    // per lang, then the closed-form budget arithmetic — weights and
-    // budget are the literals the Spark side bakes in; all divisions
-    // positive-truncating on both engines
-    "text_mix_plan" -> textMixPlanSql,
-    // the executor: the plan fragment broadcast onto documents,
-    // exploded to epochs; the residual pass is the md5-prefix sample
-    // with its threshold computed in-SQL from resid_ppm (pure bigint
-    // -> printf, identical in both engines)
-    "text_mix_epochs" -> textMixEpochsSql,
-    // the epoch-aware training order: epochs sequential, per-epoch
-    // md5 shuffle (fresh permutation every pass), doc_id tiebreak —
-    // the oracle's global OVER (ORDER BY) is oracle-side only; the
-    // engine ranks via the two-pass globalRank
-    "text_mix_order" -> textMixOrderSql,
-    // curriculum twin: same membership, quality flag joined from the
-    // shared quality fragment, is_quality DESC inside each epoch
-    "text_mix_order_curriculum" ->
-      s"""WITH me AS ($textMixEpochsSql),
-         |qf AS (SELECT doc_id, CAST(is_quality AS BIGINT) AS is_quality
-         |  FROM ($textQualitySql))
-         |SELECT me.lang, me.doc_id, me.epoch, qf.is_quality,
-         |  CAST(row_number() OVER (ORDER BY me.epoch, qf.is_quality DESC,
-         |    md5(CAST(me.doc_id AS VARCHAR) || ':' || CAST(me.epoch AS VARCHAR) || ':42'),
-         |    me.doc_id) - 1 AS BIGINT) AS train_order
-         |FROM me JOIN qf USING (doc_id)""".stripMargin,
-    // decile-graded curriculum: score = stopword ppm (truncating
-    // bigint div, 0 for token-less docs), cutoffs = the corpus score
-    // histogram's elements at ranks ceil(n·d/10) d=1..9 (the events
-    // histogram-selection definition with the corpus as one group),
-    // q_decile = #cutoffs strictly below the score, presented DESC
-    // inside each epoch over the same md5 shuffle
-    "text_mix_order_bucketed" ->
-      s"""WITH me AS ($textMixEpochsSql),
-         |sc AS (SELECT doc_id,
-         |    CASE WHEN n_tokens = 0 THEN 0
-         |         ELSE CAST(n_stop AS BIGINT) * 1000000 // n_tokens END AS score
-         |  FROM ($textQualitySql)),
-         |h AS (SELECT score, count(*) AS c FROM sc GROUP BY score),
-         |hc AS (SELECT score, c, sum(c) OVER (ORDER BY score) AS cum,
-         |         sum(c) OVER () AS n FROM h),
-         |cut AS (SELECT ds.d, hc.score AS cutoff
-         |  FROM hc, (SELECT unnest(range(1, 10)) AS d) ds
-         |  WHERE hc.cum - hc.c < CAST(ceil(hc.n * ds.d / 10.0) AS BIGINT)
-         |    AND CAST(ceil(hc.n * ds.d / 10.0) AS BIGINT) <= hc.cum),
-         |dec AS (SELECT sc.doc_id,
-         |    CAST(coalesce(sum(CASE WHEN sc.score > cut.cutoff THEN 1 ELSE 0 END),
-         |      0) AS BIGINT) AS q_decile
-         |  FROM sc LEFT JOIN cut ON TRUE GROUP BY sc.doc_id)
-         |SELECT me.lang, me.doc_id, me.epoch, dec.q_decile,
-         |  CAST(row_number() OVER (ORDER BY me.epoch, dec.q_decile DESC,
-         |    md5(CAST(me.doc_id AS VARCHAR) || ':' || CAST(me.epoch AS VARCHAR) || ':42'),
-         |    me.doc_id) - 1 AS BIGINT) AS train_order
-         |FROM me JOIN dec USING (doc_id)""".stripMargin,
-    // the shard cut over that order: token prefix-sum div budget.
-    // The oracle's global window cumsum is oracle-side only — the
-    // engine's rank AND prefix sum come from one fused
-    // globalRankPack layout (one shuffle, no single-partition window)
-    "text_mix_shards" ->
-      s"""WITH mo AS ($textMixOrderSql),
-         |tk AS (SELECT doc_id,
-         |    len(list_filter(string_split_regex(text, '\\s+'), x -> x <> '')) AS n_toks
-         |  FROM documents)
-         |SELECT mo.lang, mo.doc_id, mo.epoch, mo.train_order, tk.n_toks,
-         |  CAST((sum(tk.n_toks) OVER (ORDER BY mo.train_order)
-         |        - tk.n_toks) // 65536 AS BIGINT) AS shard_id
-         |FROM mo JOIN tk USING (doc_id)""".stripMargin,
-    // per-source token drift vs the rest of the corpus: ppm rates by
-    // truncating bigint division (exact both engines), top-3 per
-    // source by (drift DESC, token ASC); domain = tokens present in
-    // the source
-    "text_source_drift" -> textSourceDriftSql,
-    // the streaming monitor lands additive per-batch count subdirs;
-    // sum of batch counts == counts of the whole corpus, so the
-    // monitor's report equals the one-shot oracle VERBATIM
-    "text_source_drift_stream" -> textSourceDriftSql,
-    // compaction forced through the one-shot oracle (counts additive,
-    // fold-invariant by construction — the gate pins it by hash)
-    "text_source_drift_compact" -> textSourceDriftSql,
-    // semantic twin: per-source distribution over axis-sign embedding
-    // buckets (float sign test — engine-exact on the stored value)
-    "text_source_drift_semantic" -> textSourceDriftSemanticSql,
-    "text_fingerprint" ->
-      """SELECT doc_id,
-        |  md5(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'))) AS fp
-        |FROM documents""".stripMargin,
-    // integer feature-hash embedding: FNV-1a-31 over unigrams+bigrams
-    // (the text_classify FNV fold), signed parity buckets — every
-    // weight integer-exact, no float faith anywhere
-    "text_embed_buckets" ->
-      s"""WITH $embedBucketCtes
-         |SELECT doc_id, CAST(bucket AS BIGINT) AS bucket, weight
-         |FROM w""".stripMargin,
-    // the text_chunk CTE (same integer window arithmetic) chained
-    // into the bucket CTEs — chunk text re-tokenizes to its own
-    // tokens, so the fold is exact at the chunk level too
-    "text_chunk_embed" ->
-      s"""WITH toksC AS (
-         |  SELECT doc_id,
-         |    list_filter(string_split_regex(lower(text), '[^a-z]+'), x -> x <> '') AS t
-         |  FROM documents),
-         |nzC AS (SELECT doc_id, t, len(t) AS n FROM toksC WHERE len(t) >= 1),
-         |chC AS (SELECT doc_id, t, n,
-         |    unnest(range(0, CASE WHEN n <= 64 THEN 1
-         |                        ELSE 1 + (n - 64 + 47) // 48 END)) AS chunk_id
-         |  FROM nzC),
-         |chunks AS (
-         |  SELECT doc_id, CAST(chunk_id AS BIGINT) AS chunk_id,
-         |    array_to_string(t[chunk_id * 48 + 1 :
-         |                      chunk_id * 48 + least(64, n - chunk_id * 48)], ' ')
-         |      AS chunk
-         |  FROM chC),
-         |${embedBucketCtesFrom("chunks", "doc_id, chunk_id", "chunk")}
-         |SELECT doc_id, chunk_id, CAST(bucket AS BIGINT) AS bucket, weight
-         |FROM w""".stripMargin,
-    // lexical top-k over the bucket vectors: integer dot and norms;
-    // the ONE double op (dot / sqrt(n·n)) runs on identical integer
-    // operands in both engines, ties to the lower neighbor id
-    "text_embed_topk" ->
-      s"""WITH $embedBucketCtes,
-         |n2 AS (SELECT doc_id, sum(weight * weight) AS n2 FROM w GROUP BY doc_id),
-         |q AS (SELECT doc_id AS query_id, bucket, weight AS qw
-         |      FROM w WHERE doc_id < 5),
-         |dots AS (
-         |  SELECT q.query_id, w.doc_id AS neighbor_id,
-         |    sum(w.weight * q.qw) AS dot
-         |  FROM w JOIN q ON w.bucket = q.bucket AND w.doc_id <> q.query_id
-         |  GROUP BY 1, 2),
-         |scored AS (
-         |  SELECT query_id, neighbor_id,
-         |    CAST(dot AS DOUBLE) /
-         |      sqrt(CAST(dn.n2 AS DOUBLE) * CAST(qn.n2 AS DOUBLE)) AS cos
-         |  FROM dots
-         |  JOIN n2 dn ON dn.doc_id = neighbor_id
-         |  JOIN n2 qn ON qn.doc_id = query_id),
-         |r AS (
-         |  SELECT query_id, neighbor_id, cos,
-         |    row_number() OVER (PARTITION BY query_id
-         |      ORDER BY cos DESC, neighbor_id) AS rank
-         |  FROM scored)
-         |SELECT query_id, neighbor_id, CAST(rank AS BIGINT) AS rank,
-         |  CAST(trunc(cos * 1000000) AS BIGINT) AS cos_micro
-         |FROM r WHERE rank <= 10""".stripMargin,
-    "text_repetition" ->
-      """WITH b AS (
-        |  SELECT doc_id,
-        |    CASE WHEN len(t) >= 2 THEN
-        |      list_transform(range(1, len(t)), i -> t[i] || ' ' || t[i+1])
-        |    ELSE [] END AS bigrams
-        |  FROM (SELECT doc_id,
-        |          list_filter(string_split_regex(lower(text), '[^a-z]+'),
-        |                      x -> x <> '') AS t
-        |        FROM documents))
-        |SELECT doc_id,
-        |  len(bigrams) AS n_bigrams,
-        |  len(list_distinct(bigrams)) AS n_distinct,
-        |  CAST((len(bigrams) - len(list_distinct(bigrams))) * 10 >= len(bigrams)
-        |       AND len(bigrams) > 0 AS INT) AS is_repetitive
-        |FROM b""".stripMargin,
-    // half of each kind's rows carry REAL QOI/WAV/MP4 payloads with
-    // doc_id-closed-form parameters (MediaSynth); the other half carry
-    // UTF-8 text bytes — strlen (DuckDB byte length) mirrors
-    // octet_length for those rows' stub arithmetic
-    "mm_features" -> mmFeaturesSql,
-    // audio rows are doc_id % 3 == 1; REAL rows re-synthesize the PCM
-    // sample stream from MediaSynth's closed form (generate the exact
-    // samples, fold peak/crossings/energy with the decoder's
-    // zeros-break-runs rule) — the gate passes only if the JVM RIFF
-    // walk + 16-bit LE sample decode read the real WAV correctly;
-    // fake rows take the documented stub arithmetic
-    // extended-WAV features re-derived from doc_id closed forms:
-    // per-channel samples (16-bit signed / 8-bit widened x256 about
-    // 128), per-frame MEAN downmix with truncating division (// in
-    // DuckDB == Java /), then the shared peak/crossings/energy folds;
-    // rate and channels pin the fmt-chunk readout; truncated rows
-    // (id % 5 = 3) owe the all-(-1) fallback
-    "mm_audio_features_ext" ->
-      """WITH ext AS (
-        |  SELECT doc_id, 1 + doc_id % 2 AS c, doc_id % 4 AS fc,
-        |    32 + doc_id % 64 AS n,
-        |    8000 + 525 * (doc_id % 4) AS rate
-        |  FROM documents),
-        |si AS (SELECT doc_id, c, fc, unnest(range(0, n)) AS i FROM ext),
-        |cs AS (SELECT unnest(range(0, 2)) AS ch),
-        |raw AS (
-        |  SELECT si.doc_id, si.c, si.fc, si.i, cs.ch,
-        |    (si.doc_id * 13 + si.i * 29 + cs.ch * 7) % 256 AS r
-        |  FROM si, cs WHERE cs.ch < si.c),
-        |smp AS (
-        |  SELECT doc_id, c, i,
-        |    -- doc_id % 9 = 5: IEEE-float streams carrying the exact
-        |    -- 16-bit closed form (the decoder's rint projection is
-        |    -- exact on s16/32768 floats); % 9 = 7: 24-bit PCM whose
-        |    -- floor >> 8 projection reproduces the same closed form
-        |    CASE WHEN doc_id % 9 = 5 OR doc_id % 9 = 7
-        |      THEN (doc_id * 31 + i * 97 + ch * 53) % 4001 - 2000
-        |    ELSE CASE fc
-        |      WHEN 0 THEN (doc_id * 31 + i * 97 + ch * 53) % 4001 - 2000
-        |      WHEN 1 THEN (r - 128) * 256
-        |      WHEN 2 THEN -- G.711 u-law expansion (CCITT)
-        |        CASE WHEN (255 - r) >= 128
-        |          THEN 132 - ((((255 - r) & 15) * 8 + 132) << (((255 - r) // 16) & 7))
-        |          ELSE ((((255 - r) & 15) * 8 + 132) << (((255 - r) // 16) & 7)) - 132
-        |        END
-        |      ELSE -- G.711 A-law expansion (CCITT)
-        |        CASE WHEN xor(r, 85) >= 128 THEN 1 ELSE -1 END *
-        |        CASE ((xor(r, 85) // 16) & 7)
-        |          WHEN 0 THEN (xor(r, 85) & 15) * 16 + 8
-        |          WHEN 1 THEN (xor(r, 85) & 15) * 16 + 264
-        |          ELSE ((xor(r, 85) & 15) * 16 + 264)
-        |            << (((xor(r, 85) // 16) & 7) - 1)
-        |        END
-        |    END END AS s
-        |  FROM raw),
-        |mix AS (SELECT doc_id, i, CAST(sum(s) AS BIGINT) // max(c) AS m
-        |  FROM smp GROUP BY doc_id, i),
-        |lagd AS (SELECT doc_id, m,
-        |    lag(m) OVER (PARTITION BY doc_id ORDER BY i) AS prev
-        |  FROM mix),
-        |f AS (
-        |  SELECT doc_id, count(*) AS n_samples, max(abs(m)) AS peak_abs,
-        |    coalesce(sum(CASE WHEN m <> 0 AND prev <> 0
-        |                       AND sign(m) <> sign(prev) THEN 1 ELSE 0 END), 0)
-        |      AS zero_crossings,
-        |    sum(m * m) AS energy
-        |  FROM lagd GROUP BY doc_id)
-        |SELECT e.doc_id,
-        |  CAST(CASE WHEN e.doc_id % 5 = 3 THEN -1 ELSE e.rate END AS BIGINT) AS rate,
-        |  CAST(CASE WHEN e.doc_id % 5 = 3 THEN -1 ELSE e.c END AS BIGINT) AS channels,
-        |  CAST(CASE WHEN e.doc_id % 5 = 3 THEN -1 ELSE f.n_samples END AS BIGINT) AS n_samples,
-        |  CAST(CASE WHEN e.doc_id % 5 = 3 THEN -1 ELSE f.peak_abs END AS BIGINT) AS peak_abs,
-        |  CAST(CASE WHEN e.doc_id % 5 = 3 THEN -1 ELSE f.zero_crossings END AS BIGINT) AS zero_crossings,
-        |  CAST(CASE WHEN e.doc_id % 5 = 3 THEN -1 ELSE f.energy END AS BIGINT) AS energy
-        |FROM ext e JOIN f ON f.doc_id = e.doc_id""".stripMargin,
-    "mm_audio_features" ->
-      """WITH a AS (
-        |  SELECT doc_id, strlen(text) AS tl FROM documents WHERE doc_id % 3 = 1),
-        |realn AS (
-        |  SELECT doc_id, 64 + doc_id % 192 AS n FROM a WHERE (doc_id // 3) % 2 = 0),
-        |sv AS (
-        |  SELECT doc_id, unnest(range(0, n)) AS i FROM realn),
-        |ss AS (
-        |  SELECT doc_id, i, (doc_id * 31 + i * 97) % 4001 - 2000 AS s FROM sv),
-        |lagd AS (
-        |  SELECT doc_id, s,
-        |    lag(s) OVER (PARTITION BY doc_id ORDER BY i) AS prev
-        |  FROM ss),
-        |realf AS (
-        |  SELECT doc_id AS media_id,
-        |    count(*) AS n_samples,
-        |    max(abs(s)) AS peak_abs,
-        |    coalesce(sum(CASE WHEN s <> 0 AND prev <> 0
-        |                       AND sign(s) <> sign(prev) THEN 1 ELSE 0 END), 0)
-        |      AS zero_crossings,
-        |    sum(s * s) AS energy
-        |  FROM lagd GROUP BY doc_id),
-        |stubf AS (
-        |  SELECT doc_id AS media_id, tl * 2 AS n_samples, tl % 32768 AS peak_abs,
-        |    tl % 1000 AS zero_crossings, tl * 12345 AS energy
-        |  FROM a WHERE (doc_id // 3) % 2 = 1)
-        |SELECT media_id, CAST(n_samples AS BIGINT) AS n_samples,
-        |  CAST(peak_abs AS BIGINT) AS peak_abs,
-        |  CAST(zero_crossings AS BIGINT) AS zero_crossings,
-        |  CAST(energy AS BIGINT) AS energy
-        |FROM (SELECT * FROM realf UNION ALL SELECT * FROM stubf)""".stripMargin,
-    // image near-dup: the per-image hashes are the dumped faith (the
-    // decode, real or stub, happened in the JVM); banding, bucket cap
-    // and the Hamming verify are the dedup_simhash oracle verbatim
-    "mm_image_dedup" -> mediaPairsOracle("imghash_sigs",
-      graft.multimodal.ImageDedup.lastBase, imgHashGlob),
-    // JPEG-decode-fed perceptual pairs: same dumped-sig oracle — the
-    // decode is the faith, the pair machinery is re-derived
-    "mm_image_dedup_jpeg" -> mediaPairsOracle("jpeghash_sigs",
-      graft.multimodal.Jpeg.lastDedupBase, jpegHashGlob),
-    "mm_image_dedup_png" -> mediaPairsOracle("pnghash_sigs",
-      graft.multimodal.Png.lastDedupBase, pngHashGlob),
-    "mm_image_dedup_gif" -> mediaPairsOracle("gifhash_sigs",
-      graft.multimodal.Gif.lastDedupBase, gifHashGlob),
-    "mm_image_dedup_webp" -> mediaPairsOracle("webphash_sigs",
-      graft.multimodal.Webp.lastDedupBase, webpHashGlob),
-    // decoded-TIFF pixel statistics from doc_id closed forms: dims
-    // (8 + id%9, 8 + id%6), gray (id*29 + x*37 + y*53) % 256, the
-    // photometric classes' channel derivation (id%4 in (0,3) -> gray
-    // classes sum 3*gray — WhiteIsZero decodes BACK to gray; else
-    // gray + (gray+85)%256 + (gray+170)%256 — alpha never summed),
-    // the position weight. Truncated rows owe the (-1,...) fallback.
-    "mm_tiff_decode" ->
-      """WITH xs AS (SELECT unnest(range(0, 17)) AS x),
-        |ys AS (SELECT unnest(range(0, 14)) AS y),
-        |g AS (SELECT doc_id, 8 + doc_id % 9 AS w, 8 + doc_id % 6 AS h
-        |      FROM documents),
-        |cells AS (
-        |  SELECT g.doc_id, g.w, g.h, x, y,
-        |    (g.doc_id * 29 + x * 37 + y * 53) % 256 AS gray
-        |  FROM g, xs, ys WHERE x < g.w AND y < g.h),
-        |ok AS (
-        |  SELECT doc_id, CAST(w AS BIGINT) AS w, CAST(h AS BIGINT) AS h,
-        |    CAST(sum(CASE WHEN doc_id % 4 IN (0, 3) THEN 3 * gray
-        |      ELSE gray + (gray + 85) % 256 + (gray + 170) % 256 END)
-        |      AS BIGINT) AS pix_sum,
-        |    CAST(sum((CASE WHEN doc_id % 4 IN (0, 3) THEN 3 * gray
-        |      ELSE gray + (gray + 85) % 256 + (gray + 170) % 256 END)
-        |      * (1 + x + w * y)) AS BIGINT) AS pix_wsum
-        |  FROM cells GROUP BY doc_id, w, h)
-        |SELECT d.doc_id,
-        |  CASE WHEN d.doc_id % 5 = 3 THEN -1 ELSE ok.w END AS w,
-        |  CASE WHEN d.doc_id % 5 = 3 THEN -1 ELSE ok.h END AS h,
-        |  CASE WHEN d.doc_id % 5 = 3 THEN -1 ELSE ok.pix_sum END AS pix_sum,
-        |  CASE WHEN d.doc_id % 5 = 3 THEN -1 ELSE ok.pix_wsum END AS pix_wsum
-        |FROM documents d JOIN ok ON ok.doc_id = d.doc_id""".stripMargin,
-    "mm_flac_decode" -> flacDecodeSql,
-    "mm_audio_dedup_flac" -> mediaPairsOracle("flachash_sigs",
-      graft.multimodal.Flac.lastDedupBase, flacHashGlob),
-    "mm_image_dedup_stream" ->
-      mediaPairsOracle("jpegstreamhash_sigs",
-        graft.streaming.MediaStream.lastBase, jpegStreamHashGlob),
-    // the scale path owes the ALL-PAIRS Hamming <= 15 ground truth
-    // (not its own plumbing): collapse expansion + wide pigeonhole
-    // must reach FULL recall, including the identical-sig stub clique
-    "mm_image_dedup_wide" -> allPairsHamming15Sql(jpegWideHashGlob),
-    // audio near-dup: identical oracle shape over the audio
-    // fingerprint dump (energy-delta over real PCM / byte fallback)
-    "mm_audio_dedup" -> mediaPairsOracle("audhash_sigs",
-      graft.multimodal.AudioDedup.lastBase, audHashGlob),
-    // filterbank (Haitsma-Kalker) audio near-dup: same oracle shape
-    // over the spectral fingerprint dump
-    "mm_audio_dedup_fb" -> mediaPairsOracle("audfb_sigs",
-      graft.multimodal.AudioDedup.lastFbBase, audFbGlob),
-    // video near-dup: identical oracle shape over the video dump
-    // (temporal-majority frame aHashes / byte fallback)
-    "mm_video_dedup" -> mediaPairsOracle("vidhash_sigs",
-      graft.multimodal.VideoFrames.lastBase, vidHashGlob),
-    "mm_video_dedup_mjpeg" ->
-      mediaPairsOracle("vidmjpeghash_sigs",
-        graft.multimodal.VideoFrames.lastMjpegBase, vidMjpegGlob),
-    "mm_kind_summary" ->
-      s"""SELECT kind, count(*) AS n,
-         |  CAST(sum(byte_len) AS BIGINT) AS total_bytes
-         |FROM ($mmFeaturesSql) GROUP BY kind""".stripMargin,
-    // resize oracle: real QOI rows' pixels are MediaSynth's closed
-    // form gray(x,y) = (doc_id*7 + y*31 + x*13) % 256, so the 4x4
-    // box-average (truncating per-cell mean over the aHash cell
-    // bounds) and the re-encoded stream's pixel sum are re-derived
-    // from doc_id alone; 86 = 14-byte QOI header + 16 OP_RGB px + end
-    "mm_resize" ->
-      """WITH imgs AS (
-        |  SELECT doc_id, strlen(text) AS tl,
-        |    (doc_id // 3) % 2 = 0 AS is_real,
-        |    8 + doc_id % 9 AS w, 8 + doc_id % 7 AS h
-        |  FROM documents WHERE doc_id % 3 = 0),
-        |cells AS (
-        |  SELECT doc_id, w, h, cx, cy,
-        |    (cx * w) // 4 AS x0, ((cx + 1) * w) // 4 AS x1,
-        |    (cy * h) // 4 AS y0, ((cy + 1) * h) // 4 AS y1
-        |  FROM imgs CROSS JOIN (SELECT unnest(range(0, 4)) AS cx)
-        |            CROSS JOIN (SELECT unnest(range(0, 4)) AS cy)
-        |  WHERE is_real),
-        |xs AS (SELECT doc_id, cx, cy, y0, y1,
-        |    unnest(range(x0, x1)) AS x FROM cells),
-        |xy AS (SELECT doc_id, cx, cy, x,
-        |    unnest(range(y0, y1)) AS y FROM xs),
-        |cm AS (
-        |  SELECT doc_id, cx, cy,
-        |    sum((doc_id * 7 + y * 31 + x * 13) % 256) // count(*) AS mean
-        |  FROM xy GROUP BY doc_id, cx, cy),
-        |ps AS (SELECT doc_id, sum(3 * mean) AS px_sum
-        |  FROM cm GROUP BY doc_id)
-        |SELECT i.doc_id AS media_id,
-        |  CAST(CASE WHEN i.is_real THEN i.w ELSE 0 END AS BIGINT) AS src_w,
-        |  CAST(CASE WHEN i.is_real THEN i.h ELSE 0 END AS BIGINT) AS src_h,
-        |  CAST(CASE WHEN i.is_real THEN 4 ELSE 0 END AS BIGINT) AS out_w,
-        |  CAST(CASE WHEN i.is_real THEN 4 ELSE 0 END AS BIGINT) AS out_h,
-        |  CAST(CASE WHEN i.is_real THEN 86 ELSE i.tl END AS BIGINT) AS out_bytes,
-        |  CAST(CASE WHEN i.is_real THEN p.px_sum ELSE -1 END AS BIGINT) AS px_sum
-        |FROM imgs i LEFT JOIN ps p ON p.doc_id = i.doc_id""".stripMargin,
-    // resample oracle: real WAV rows' samples are MediaSynth's closed
-    // form (doc_id*31 + i*97) % 4001 - 2000; complete 4-sample window
-    // means with truncating division (DuckDB // and Java / agree on
-    // negatives) re-derive the re-encoded stream's sample sum
-    "mm_resample" ->
-      """WITH auds AS (
-        |  SELECT doc_id, strlen(text) AS tl,
-        |    (doc_id // 3) % 2 = 0 AS is_real,
-        |    64 + doc_id % 192 AS n
-        |  FROM documents WHERE doc_id % 3 = 1),
-        |idx AS (SELECT doc_id, unnest(range(0, (n // 4) * 4)) AS i
-        |  FROM auds WHERE is_real),
-        |win AS (
-        |  SELECT doc_id, i // 4 AS j,
-        |    sum((doc_id * 31 + i * 97) % 4001 - 2000) AS s
-        |  FROM idx GROUP BY doc_id, i // 4),
-        |ss AS (SELECT doc_id, sum(s // 4) AS samp_sum
-        |  FROM win GROUP BY doc_id)
-        |SELECT a.doc_id AS media_id,
-        |  CAST(CASE WHEN a.is_real THEN 1 ELSE 0 END AS BIGINT) AS decoded,
-        |  CAST(CASE WHEN a.is_real THEN 8000 ELSE 0 END AS BIGINT) AS src_rate,
-        |  CAST(CASE WHEN a.is_real THEN a.n ELSE 0 END AS BIGINT) AS src_n,
-        |  CAST(CASE WHEN a.is_real THEN 2000 ELSE 0 END AS BIGINT) AS out_rate,
-        |  CAST(CASE WHEN a.is_real THEN a.n // 4 ELSE 0 END AS BIGINT) AS out_n,
-        |  CAST(CASE WHEN a.is_real THEN 44 + 2 * (a.n // 4) ELSE a.tl END AS BIGINT)
-        |    AS out_bytes,
-        |  CAST(CASE WHEN a.is_real THEN s.samp_sum ELSE 0 END AS BIGINT) AS samp_sum
-        |FROM auds a LEFT JOIN ss s ON s.doc_id = a.doc_id""".stripMargin,
-    // video-frames oracle: real AVI rows' frame pixels are the closed
-    // form (doc_id*5 + f*17 + y*29 + x*11) % 256; the byte length is
-    // the exact RIFF layout (224 fixed + n frames of 8-byte chunk
-    // header + padded rows), so the writer, walker and frame decode
-    // are all pinned from doc_id alone
-    "mm_video_frames" ->
-      """WITH vids AS (
-        |  SELECT doc_id, strlen(text) AS tl,
-        |    (doc_id // 3) % 2 = 0 AS is_real,
-        |    8 + doc_id % 5 AS w, 8 + doc_id % 3 AS h,
-        |    3 + doc_id % 4 AS nf,
-        |    ((3 * (8 + doc_id % 5) + 3) // 4) * 4 AS rsz
-        |  FROM documents WHERE doc_id % 3 = 2),
-        |fx AS (SELECT doc_id, w, h, unnest(range(0, nf)) AS f
-        |  FROM vids WHERE is_real),
-        |fxy AS (SELECT doc_id, f, w, unnest(range(0, h)) AS y FROM fx),
-        |pxs AS (SELECT doc_id, f, y, unnest(range(0, w)) AS x FROM fxy),
-        |ps AS (SELECT doc_id,
-        |    sum((doc_id * 5 + f * 17 + y * 29 + x * 11) % 256) AS px_sum
-        |  FROM pxs GROUP BY doc_id)
-        |SELECT v.doc_id AS media_id,
-        |  CAST(CASE WHEN v.is_real THEN v.w ELSE 0 END AS BIGINT) AS width,
-        |  CAST(CASE WHEN v.is_real THEN v.h ELSE 0 END AS BIGINT) AS height,
-        |  CAST(CASE WHEN v.is_real THEN v.nf ELSE 0 END AS BIGINT) AS n_frames,
-        |  CAST(CASE WHEN v.is_real THEN 224 + v.nf * (8 + v.rsz * v.h)
-        |       ELSE v.tl END AS BIGINT) AS byte_len,
-        |  CAST(CASE WHEN v.is_real THEN p.px_sum ELSE -1 END AS BIGINT) AS px_sum
-        |FROM vids v LEFT JOIN ps p ON p.doc_id = v.doc_id""".stripMargin,
-    // thumbnail oracle: the middle frame f = nf // 2 of the closed-form
-    // AVI, 4x4 box means (truncating division over the aHash cell
-    // bounds), x3 channels; 86 = the 4x4 QOI byte length
-    "mm_video_thumbs" ->
-      """WITH vids AS (
-        |  SELECT doc_id, strlen(text) AS tl,
-        |    (doc_id // 3) % 2 = 0 AS is_real,
-        |    8 + doc_id % 5 AS w, 8 + doc_id % 3 AS h,
-        |    (3 + doc_id % 4) // 2 AS f
-        |  FROM documents WHERE doc_id % 3 = 2),
-        |cells AS (
-        |  SELECT doc_id, w, h, f, cx, cy,
-        |    (cx * w) // 4 AS x0, ((cx + 1) * w) // 4 AS x1,
-        |    (cy * h) // 4 AS y0, ((cy + 1) * h) // 4 AS y1
-        |  FROM vids CROSS JOIN (SELECT unnest(range(0, 4)) AS cx)
-        |            CROSS JOIN (SELECT unnest(range(0, 4)) AS cy)
-        |  WHERE is_real),
-        |xs AS (SELECT doc_id, f, cx, cy, y0, y1,
-        |    unnest(range(x0, x1)) AS x FROM cells),
-        |xy AS (SELECT doc_id, f, cx, cy, x,
-        |    unnest(range(y0, y1)) AS y FROM xs),
-        |cm AS (
-        |  SELECT doc_id, cx, cy,
-        |    sum((doc_id * 5 + f * 17 + y * 29 + x * 11) % 256) // count(*) AS mean
-        |  FROM xy GROUP BY doc_id, cx, cy),
-        |ps AS (SELECT doc_id, sum(3 * mean) AS px_sum
-        |  FROM cm GROUP BY doc_id)
-        |SELECT v.doc_id AS media_id,
-        |  CAST(CASE WHEN v.is_real THEN v.f ELSE -1 END AS BIGINT) AS frame_idx,
-        |  CAST(CASE WHEN v.is_real THEN 86 ELSE v.tl END AS BIGINT) AS out_bytes,
-        |  CAST(CASE WHEN v.is_real THEN p.px_sum ELSE -1 END AS BIGINT) AS px_sum
-        |FROM vids v LEFT JOIN ps p ON p.doc_id = v.doc_id""".stripMargin,
-  )
-
-  /** The mm_features oracle: REAL rows ((doc_id // 3) % 2 = 0) carry
-    * MediaSynth's closed-form container parameters — the gate passes
-    * only if the JVM decoders parse the real QOI/WAV/MP4 payloads
-    * correctly; fake rows re-derive the documented stub arithmetic
-    * from the text byte length. */
-  private def mmFeaturesSql: String =
-    s"""SELECT doc_id AS media_id,
-      |  CASE doc_id % 3 WHEN 0 THEN 'image' WHEN 1 THEN 'audio' ELSE 'video' END AS kind,
-      |  CASE WHEN (doc_id // 3) % 2 = 0 THEN
-      |    ${graft.multimodal.MediaSynth.realByteLenSql}
-      |  ELSE strlen(text) END AS byte_len,
-      |  CASE WHEN (doc_id // 3) % 2 = 0 THEN
-      |    CASE doc_id % 3 WHEN 0 THEN 8 + doc_id % 9 WHEN 1 THEN 0
-      |         ELSE 320 + (doc_id % 17) * 16 END
-      |  ELSE 64 + (strlen(text) * 7919) % 1856 END AS width,
-      |  CASE WHEN (doc_id // 3) % 2 = 0 THEN
-      |    CASE doc_id % 3 WHEN 0 THEN 8 + doc_id % 7 WHEN 1 THEN 0
-      |         ELSE 240 + (doc_id % 13) * 8 END
-      |  ELSE 64 + (strlen(text) * 104729) % 1016 END AS height,
-      |  CASE WHEN (doc_id // 3) % 2 = 0 THEN
-      |    CASE WHEN doc_id % 3 = 2 THEN 10 + doc_id % 50 ELSE 1 END
-      |  ELSE CASE WHEN doc_id % 3 = 2 THEN 1 + strlen(text) % 240 ELSE 1 END
-      |  END AS n_frames,
-      |  CASE WHEN (doc_id // 3) % 2 = 0 THEN
-      |    CASE doc_id % 3 WHEN 1 THEN (64 + doc_id % 192) // 8
-      |         WHEN 2 THEN 1000 + doc_id % 5000 ELSE 0 END
-      |  ELSE CASE doc_id % 3 WHEN 1 THEN strlen(text) * 8
-      |       WHEN 2 THEN (1 + strlen(text) % 240) * 40 ELSE 0 END
-      |  END AS duration_ms,
-      |  CASE WHEN (doc_id // 3) % 2 = 0 AND doc_id % 3 = 0 THEN 1 ELSE 0
-      |  END AS orientation
-      |FROM documents""".stripMargin
-
-  /** Shared CTE chain for the integer feature-hash embedding gates:
-    * engine tokenizer → unigrams+bigrams → FNV-1a masked to 31 bits
-    * (the text_classify fold) → signed parity buckets → nonzero
-    * integer weights. Ends defining `w($ids, bucket, weight)`.
-    * Parameterized over the source relation / id columns / text
-    * column so the doc-level and chunk-level gates share it. */
-  private def embedBucketCtesFrom(src: String, ids: String,
-      textCol: String): String =
-    s"""toksE AS (
-       |  SELECT $ids,
-       |    list_filter(string_split_regex(lower($textCol), '[^a-z]+'), x -> x <> '') AS t
-       |  FROM $src),
-       |g AS (
-       |  SELECT $ids, unnest(list_concat(t,
-       |    CASE WHEN len(t) >= 2
-       |      THEN list_transform(range(1, len(t)), i -> t[i] || ' ' || t[i+1])
-       |      ELSE [] END)) AS g
-       |  FROM toksE),
-       |hh AS (
-       |  SELECT $ids,
-       |    list_reduce(list_prepend(CAST(2166136261 AS BIGINT),
-       |      list_transform(range(1, strlen(g) + 1),
-       |        i -> CAST(unicode(substr(g, CAST(i AS INT), 1)) AS BIGINT))),
-       |      (hv, cv) -> (xor(hv, cv) * 16777619) % 4294967296) % 2147483648 AS h
-       |  FROM g),
-       |b AS (
-       |  SELECT $ids, h % 32 AS bucket,
-       |    CASE WHEN h % 2 = 0 THEN 1 ELSE -1 END AS s
-       |  FROM hh),
-       |w AS (
-       |  SELECT $ids, bucket, CAST(sum(s) AS BIGINT) AS weight
-       |  FROM b GROUP BY $ids, bucket
-       |  HAVING sum(s) <> 0)""".stripMargin
-
-  private def embedBucketCtes: String =
-    embedBucketCtesFrom("documents", "doc_id", "text")
-
-  private def ngramJaccardSql: String =
-    """WITH toks AS (
-      |  SELECT doc_id,
-      |    list_filter(string_split_regex(lower(text), '[^a-z]+'), x -> x <> '') AS t
-      |  FROM documents),
-      |sh AS (
-      |  SELECT DISTINCT doc_id,
-      |    unnest(list_transform(range(1, len(t) - 1),
-      |      i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS s
-      |  FROM toks WHERE len(t) >= 3),
-      |cnt AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-      |common AS (
-      |  SELECT a.doc_id AS i, b.doc_id AS j, count(*) AS c
-      |  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-      |  GROUP BY 1, 2)
-      |SELECT i, j FROM common
-      |JOIN cnt ca ON ca.doc_id = i
-      |JOIN cnt cb ON cb.doc_id = j
-      |WHERE CAST(c AS DOUBLE) / (ca.n + cb.n - c) >= 0.5""".stripMargin
-
-  /** Shared passage-dedup CTE: per-(doc, 8-token-window md5)
-    * occurrence counts. range(1, len-6) = window starts 1..len-7;
-    * t[i:i+7] is DuckDB's inclusive 1-based slice = 8 tokens. */
-  private def passagePdCte: String =
-    """toks AS (
-      |  SELECT doc_id,
-      |    list_filter(string_split_regex(lower(text), '[^a-z]+'), x -> x <> '') AS t
-      |  FROM documents),
-      |w AS (
-      |  SELECT doc_id,
-      |    unnest(list_transform(range(1, len(t) - 6),
-      |      i -> md5(array_to_string(t[i:i+7], ' ')))) AS h
-      |  FROM toks WHERE len(t) >= 8),
-      |pd AS (SELECT doc_id, h, count(*) AS occ FROM w GROUP BY doc_id, h)""".stripMargin
-
-  private def relMedianSql: String =
-    """WITH v AS (
-      |  SELECT event_type, event_id,
-      |    CAST(round(value * 100) AS BIGINT) AS cents
-      |  FROM events),
-      |r AS (
-      |  SELECT event_type, cents,
-      |    row_number() OVER (PARTITION BY event_type
-      |                       ORDER BY cents, event_id) AS rn,
-      |    count(*) OVER (PARTITION BY event_type) AS n
-      |  FROM v)
-      |SELECT event_type, cents AS median_cents
-      |FROM r WHERE rn = (n + 1) // 2""".stripMargin
-
-  private def relQuantilesSql: String =
-    """WITH v AS (
-      |  SELECT event_type, event_id,
-      |    CAST(round(value * 100) AS BIGINT) AS cents
-      |  FROM events),
-      |r AS (
-      |  SELECT event_type, cents,
-      |    row_number() OVER (PARTITION BY event_type
-      |                       ORDER BY cents, event_id) AS rn,
-      |    count(*) OVER (PARTITION BY event_type) AS n
-      |  FROM v)
-      |SELECT event_type, CAST(q AS BIGINT) AS q, cents
-      |FROM r CROSS JOIN (SELECT unnest([25, 50, 75]) AS q)
-      |WHERE rn = CAST(ceil(n * q / 100.0) AS BIGINT)""".stripMargin
-
-  private def splitLeakageSql: String =
-    s"""WITH pairs AS ($ngramJaccardSql)
-       |SELECT CASE WHEN i % 10 = 0 THEN j ELSE i END AS train_doc,
-       |       CASE WHEN i % 10 = 0 THEN i ELSE j END AS val_doc
-       |FROM pairs WHERE (i % 10 = 0) <> (j % 10 = 0)""".stripMargin
-
-  private def textDecontamSql: String =
-    """WITH toks AS (
-      |  SELECT doc_id,
-      |    list_filter(string_split_regex(lower(text), '[^a-z]+'), x -> x <> '') AS t
-      |  FROM documents),
-      |sh AS (
-      |  SELECT DISTINCT doc_id,
-      |    unnest(list_transform(range(1, len(t) - 6),
-      |      i -> array_to_string(t[i:i+7], ' '))) AS s
-      |  FROM toks WHERE len(t) >= 8),
-      |bench AS (SELECT DISTINCT s FROM sh WHERE doc_id % 37 = 0),
-      |hits AS (
-      |  SELECT sh.doc_id, count(*) AS n_shingles, count(b.s) AS n_hit
-      |  FROM sh LEFT JOIN bench b ON sh.s = b.s
-      |  WHERE sh.doc_id % 37 <> 0 GROUP BY sh.doc_id),
-      |base AS (SELECT doc_id FROM documents WHERE doc_id % 37 <> 0)
-      |SELECT base.doc_id,
-      |  CAST(coalesce(h.n_shingles, 0) AS BIGINT) AS n_shingles,
-      |  CAST(coalesce(h.n_hit, 0) AS BIGINT) AS n_hit,
-      |  CAST(coalesce(h.n_shingles, 0) > 0
-      |    AND coalesce(h.n_hit, 0) * 100 >= coalesce(h.n_shingles, 0) * 10
-      |    AS INT) AS contaminated
-      |FROM base LEFT JOIN hits h ON base.doc_id = h.doc_id""".stripMargin
-
-  private def annTopkCosineSql: String =
-    """WITH e AS (SELECT vec_id,
-      |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-      |  FROM embeddings),
-      |q AS (SELECT * FROM e WHERE vec_id < 10)
-      |SELECT query_id, neighbor_id, rank FROM (
-      |  SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id,
-      |    row_number() OVER (PARTITION BY q.vec_id
-      |      ORDER BY list_cosine_similarity(q.v, e.v) DESC, e.vec_id) AS rank
-      |  FROM q, e WHERE e.vec_id <> q.vec_id)
-      |WHERE rank <= 5""".stripMargin
-
-  /** The IVF probe pipeline over a `c(cell, v)` centroid CTE — the
-    * same derivation for seed and trained codebooks: argmax-cosine
-    * cell assignment (first-cell tie-break, matching the Scala
-    * first-index scan), nprobe=4 probe cells per query, exact cosine
-    * scoring within probed cells, k=5 rank by (sim DESC, neighbor).
-    * Assignment/probe margins on the gate corpus are ~1e-4 — far
-    * above any cosine-summation-order noise — and the OUTPUT carries
-    * no floats, the same robustness argument as annTopkCosineSql. */
-  private def annIvfSql(centroidCte: String): String =
-    s"""WITH e AS (SELECT vec_id,
-       |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-       |  FROM embeddings),
-       |c AS ($centroidCte),
-       |asg AS (
-       |  SELECT vec_id, cell FROM (
-       |    SELECT e.vec_id, c.cell,
-       |      row_number() OVER (PARTITION BY e.vec_id
-       |        ORDER BY list_cosine_similarity(e.v, c.v) DESC, c.cell) AS rn
-       |    FROM e, c) WHERE rn = 1),
-       |q AS (SELECT * FROM e WHERE vec_id < 10),
-       |pr AS (
-       |  SELECT qid, cell FROM (
-       |    SELECT q.vec_id AS qid, c.cell,
-       |      row_number() OVER (PARTITION BY q.vec_id
-       |        ORDER BY list_cosine_similarity(q.v, c.v) DESC, c.cell) AS rn
-       |    FROM q, c) WHERE rn <= 4)
-       |SELECT query_id, neighbor_id, rank FROM (
-       |  SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id,
-       |    row_number() OVER (PARTITION BY q.vec_id
-       |      ORDER BY list_cosine_similarity(q.v, e.v) DESC, e.vec_id) AS rank
-       |  FROM q
-       |  JOIN pr ON pr.qid = q.vec_id
-       |  JOIN asg ON asg.cell = pr.cell
-       |  JOIN e ON e.vec_id = asg.vec_id AND e.vec_id <> q.vec_id)
-       |WHERE rank <= 5""".stripMargin
-
-  /** First-nCells seed codebook: deterministically the first 16
-    * corpus vectors in vec_id order — no side dump needed. */
-  private val annIvfSeedCte: String =
-    "SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cell, v FROM e WHERE vec_id < 16"
-
-  /** The PQ pipeline re-derivation at the gate config (dim 64, m=8 →
-    * dsub=8, ksub=16, rerank=50, k=5, 10 queries): L2-normalize in
-    * ordered IEEE arithmetic, re-encode every vector against the
-    * DUMPED codebooks (argmin ordered-fold sqDist, lowest-code ties),
-    * rebuild the ADC tables, sum per-vector ADC distances in subspace
-    * order, cut to the global ADC top-50 per query ((adc, id) order —
-    * the operators' partition-independent cut), and exact-cosine
-    * re-rank the survivors. `poolCtes`/`poolSrc` restrict the scored
-    * pool (whole corpus for ann_pq; the probed cells' members for
-    * ann_ivfpq). Everything except the trainer is re-derived. */
-  /** Default global candidate cut: flat ADC top-50 per query ((dist,
-    * vec_id) order — the operators' partition-independent cut). The
-    * adaptive gate swaps in a per-query rerank·depth budget. */
-  private val defaultCandCte: String =
-    """cand AS (
-      |  SELECT qid, vec_id FROM (
-      |    SELECT qid, vec_id,
-      |      row_number() OVER (PARTITION BY qid ORDER BY dist, vec_id) AS rn
-      |    FROM adc) WHERE rn <= 50),""".stripMargin
-
-  private def annPqPipelineSql(booksGlob: String, poolCtes: String,
-      poolSrc: String,
-      spaceCtes: String = "nv AS (SELECT vec_id, v FROM nv0),",
-      candCte: String = defaultCandCte): String =
-    s"""WITH raw AS (SELECT vec_id,
-       |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v0
-       |  FROM embeddings),
-       |nrm2 AS (SELECT vec_id, v0,
-       |    sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-       |      list_transform(v0, x -> x * x)), (a, b) -> a + b)) AS nr
-       |  FROM raw),
-       |nv0 AS (SELECT vec_id,
-       |    CASE WHEN nr = 0 THEN v0 ELSE list_transform(v0, x -> x / nr) END AS v
-       |  FROM nrm2),
-       |$spaceCtes
-       |books AS (SELECT subspace, code, v AS bv
-       |          FROM read_parquet('$booksGlob')),
-       |q AS (SELECT vec_id AS qid, v AS qv FROM nv WHERE vec_id < 10),
-       |enc AS (
-       |  SELECT vec_id, subspace, code FROM (
-       |    SELECT n.vec_id, b.subspace, b.code,
-       |      row_number() OVER (PARTITION BY n.vec_id, b.subspace
-       |        ORDER BY list_reduce(list_prepend(CAST(0 AS DOUBLE),
-       |          list_transform(range(1, 9), i ->
-       |            (n.v[b.subspace * 8 + i] - b.bv[i])
-       |            * (n.v[b.subspace * 8 + i] - b.bv[i]))),
-       |          (a, c) -> a + c), b.code) AS rn
-       |    FROM nv n CROSS JOIN books b) WHERE rn = 1),
-       |adct AS (
-       |  SELECT q.qid, b.subspace, b.code,
-       |    list_reduce(list_prepend(CAST(0 AS DOUBLE),
-       |      list_transform(range(1, 9), i ->
-       |        (q.qv[b.subspace * 8 + i] - b.bv[i])
-       |        * (q.qv[b.subspace * 8 + i] - b.bv[i]))),
-       |      (a, c) -> a + c) AS d
-       |  FROM q CROSS JOIN books b),
-       |$poolCtes
-       |adc AS (
-       |  SELECT t.qid, e.vec_id,
-       |    list_reduce(list_prepend(CAST(0 AS DOUBLE),
-       |      list(t.d ORDER BY t.subspace)), (a, b) -> a + b) AS dist
-       |  FROM enc e
-       |  JOIN ($poolSrc) p ON p.vec_id = e.vec_id
-       |  JOIN adct t ON t.subspace = e.subspace AND t.code = e.code
-       |  WHERE e.vec_id <> t.qid
-       |  GROUP BY t.qid, e.vec_id),
-       |$candCte
-       |hits AS (
-       |  SELECT c.qid AS query_id, c.vec_id AS neighbor_id,
-       |    list_reduce(list_prepend(CAST(0 AS DOUBLE),
-       |      list_transform(range(1, 65), i -> q.qv[i] * n.v[i])),
-       |      (a, b) -> a + b) AS sim
-       |  FROM cand c
-       |  JOIN q ON q.qid = c.qid
-       |  JOIN nv n ON n.vec_id = c.vec_id)
-       |SELECT query_id, neighbor_id, rank FROM (
-       |  SELECT query_id, neighbor_id,
-       |    row_number() OVER (PARTITION BY query_id
-       |      ORDER BY sim DESC, neighbor_id) AS rank
-       |  FROM hits) WHERE rank <= 5""".stripMargin
-
-  /** The IVF half of ann_ivfpq's oracle: cell assignment against the
-    * dumped unit-norm centroids (argmax ordered dot, lowest-cell
-    * ties), nprobe=4 probe cells per query, and — matching the
-    * operator, whose one scan serves every query — the scored pool is
-    * the UNION of all queries' probe cells. */
-  private def ivfpqPoolCtes(centsGlob: String): String =
-    s"""cents AS (SELECT cell, v AS cv FROM read_parquet('$centsGlob')),
-       |asg AS (
-       |  SELECT vec_id, cell FROM (
-       |    SELECT n.vec_id, c.cell,
-       |      row_number() OVER (PARTITION BY n.vec_id
-       |        ORDER BY list_reduce(list_prepend(CAST(0 AS DOUBLE),
-       |          list_transform(range(1, 65), i -> n.v[i] * c.cv[i])),
-       |          (a, b) -> a + b) DESC, c.cell) AS rn
-       |    FROM nv n CROSS JOIN cents c) WHERE rn = 1),
-       |probes AS (
-       |  SELECT qid, cell FROM (
-       |    SELECT q.qid, c.cell,
-       |      row_number() OVER (PARTITION BY q.qid
-       |        ORDER BY list_reduce(list_prepend(CAST(0 AS DOUBLE),
-       |          list_transform(range(1, 65), i -> q.qv[i] * c.cv[i])),
-       |          (a, b) -> a + b) DESC, c.cell) AS rn
-       |    FROM q CROSS JOIN cents c) WHERE rn <= 4),
-       |cellu AS (SELECT DISTINCT cell FROM probes),""".stripMargin
-
-  /** ADAPTIVE-prober pool: same cell-assignment/affinity machinery as
-    * [[ivfpqPoolCtes]], but each query's probe depth comes from the
-    * run's depth side-dump (the convergence decisions — the only part
-    * taken on faith) instead of a fixed nprobe, and the scored pool is
-    * the union of all queries' probed cells, exactly the one scan the
-    * operator's output stage performs. */
-  private def ivfpqAdaptivePoolCtes(centsGlob: String,
-      adepthGlob: String): String =
-    s"""dep AS (SELECT qid, depth, rerank FROM read_parquet('$adepthGlob')),
-       |cents AS (SELECT cell, v AS cv FROM read_parquet('$centsGlob')),
-       |asg AS (
-       |  SELECT vec_id, cell FROM (
-       |    SELECT n.vec_id, c.cell,
-       |      row_number() OVER (PARTITION BY n.vec_id
-       |        ORDER BY list_reduce(list_prepend(CAST(0 AS DOUBLE),
-       |          list_transform(range(1, 65), i -> n.v[i] * c.cv[i])),
-       |          (a, b) -> a + b) DESC, c.cell) AS rn
-       |    FROM nv n CROSS JOIN cents c) WHERE rn = 1),
-       |probes AS (
-       |  SELECT r.qid, r.cell FROM (
-       |    SELECT q.qid, c.cell,
-       |      row_number() OVER (PARTITION BY q.qid
-       |        ORDER BY list_reduce(list_prepend(CAST(0 AS DOUBLE),
-       |          list_transform(range(1, 65), i -> q.qv[i] * c.cv[i])),
-       |          (a, b) -> a + b) DESC, c.cell) AS rn
-       |    FROM q CROSS JOIN cents c) r
-       |  JOIN dep d ON d.qid = r.qid WHERE r.rn <= d.depth),
-       |cellu AS (SELECT DISTINCT cell FROM probes),""".stripMargin
-
-  /** The adaptive gate's candidate cut: global ADC top-(rerank·depth)
-    * per query — the operator's rerank budget grown with probe depth,
-    * both read from the run's side-dump (never hard-coded, so a
-    * non-default rerank invocation cannot silently diverge). */
-  private def adaptiveCandCte: String =
-    """cand AS (
-      |  SELECT x.qid, x.vec_id FROM (
-      |    SELECT qid, vec_id,
-      |      row_number() OVER (PARTITION BY qid ORDER BY dist, vec_id) AS rn
-      |    FROM adc) x
-      |  JOIN dep d ON d.qid = x.qid WHERE x.rn <= d.rerank * d.depth),""".stripMargin
-
-  /** n-gram-heuristic language id — shared by the standalone gate and
-    * the corpus report's lang CTE. */
-  private def textLangIdSql: String =
-    """WITH c AS (
-      |  SELECT doc_id,
-      |    len(list_filter(string_split_regex(lower(text), '[^a-z]+'),
-      |        x -> x IN ('the','and','of','with'))) AS c_en,
-      |    len(list_filter(string_split_regex(lower(text), '[^a-z]+'),
-      |        x -> x IN ('der','die','das','und'))) AS c_de,
-      |    len(list_filter(string_split_regex(lower(text), '[^a-z]+'),
-      |        x -> x IN ('el','los','las','y'))) AS c_es,
-      |    len(list_filter(string_split_regex(lower(text), '[^a-z]+'),
-      |        x -> x IN ('le','les','et','une'))) AS c_fr
-      |  FROM documents)
-      |SELECT doc_id,
-      |  CASE
-      |    WHEN c_en >= c_de AND c_en >= c_es AND c_en >= c_fr THEN 'en'
-      |    WHEN c_de >= c_es AND c_de >= c_fr THEN 'de'
-      |    WHEN c_es >= c_fr THEN 'es'
-      |    ELSE 'fr' END AS lang_pred
-      |FROM c""".stripMargin
-
-  /** Token-budget mixture plan — shared by the standalone gate and
-    * the executor's plan CTE (`text_mix_epochs`); weights/budget are
-    * the literals `TextAnalysis.mixPlan` bakes in. */
-  private def textMixPlanSql: String =
-    """WITH g AS (SELECT lang, count(*) AS n_docs,
-      |    CAST(sum(len(list_filter(string_split_regex(text, '\s+'),
-      |      x -> x <> ''))) AS BIGINT) AS avail_tokens
-      |  FROM documents GROUP BY 1),
-      |p AS (SELECT lang, n_docs, avail_tokens,
-      |    CAST(CAST(2500000 AS BIGINT) * CAST(CASE lang WHEN 'en' THEN 550000
-      |      WHEN 'de' THEN 150000 WHEN 'es' THEN 150000 WHEN 'fr' THEN 100000
-      |      WHEN 'zh' THEN 50000 ELSE 0 END AS BIGINT) // 1000000
-      |      AS BIGINT) AS target_tokens
-      |  FROM g),
-      |e AS (SELECT *, CAST(CASE WHEN avail_tokens = 0 THEN 0
-      |    ELSE target_tokens * 1000000 // avail_tokens END AS BIGINT) AS epochs_ppm
-      |  FROM p)
-      |SELECT lang, n_docs, avail_tokens, target_tokens, epochs_ppm,
-      |  CAST(epochs_ppm // 1000000 AS BIGINT) AS full_epochs,
-      |  CAST(epochs_ppm % 1000000 AS BIGINT) AS resid_ppm
-      |FROM e""".stripMargin
-
-  /** Mixture-plan executor — shared by the standalone gate and the
-    * training-order gate's membership CTE (`text_mix_order`). DuckDB
-    * gotcha: lateral unnest + join + mixed-column filter hits an
-    * internal bind bug, so the 5-row plan is unnested FIRST, then
-    * joined onto documents. */
-  private def textMixEpochsSql: String =
-    s"""WITH plan AS ($textMixPlanSql),
-       |pc AS (SELECT lang, least(full_epochs, 1000) AS full_epochs, resid_ppm
-       |  FROM plan),
-       |pe AS (SELECT lang, full_epochs, resid_ppm,
-       |    unnest(range(0, full_epochs + 1)) AS epoch
-       |  FROM pc)
-       |SELECT d.lang, d.doc_id, CAST(pe.epoch AS BIGINT) AS epoch
-       |FROM documents d JOIN pe USING (lang)
-       |WHERE pe.epoch < pe.full_epochs
-       |   OR substr(md5(CAST(d.doc_id AS VARCHAR) || ':137'), 1, 15) <
-       |      printf('%015x', pe.resid_ppm * 1152921504606)""".stripMargin
-
-  /** The drift-report chain over ANY (source, tok, c_src) rollup —
-    * the report stage is key-agnostic (tokens, embedding buckets),
-    * mirroring `TextAnalysis.driftReport`. Sums CAST back to BIGINT:
-    * DuckDB's sum(BIGINT) returns HUGEINT, which the compare harness
-    * renders as float. */
-  private def driftChainSql(bySrcSql: String, keyOut: String): String =
-    s"""WITH by_src AS ($bySrcSql),
-       |src_tot AS (SELECT source, CAST(sum(c_src) AS BIGINT) AS n_src
-       |  FROM by_src GROUP BY 1),
-       |by_tok AS (SELECT tok, CAST(sum(c_src) AS BIGINT) AS c_all
-       |  FROM by_src GROUP BY 1),
-       |tot AS (SELECT CAST(sum(n_src) AS BIGINT) AS n_all FROM src_tot),
-       |scored AS (
-       |  SELECT b.source, b.tok,
-       |    c_src * 1000000 // n_src AS ppm_src,
-       |    CASE WHEN n_all = n_src THEN CAST(0 AS BIGINT)
-       |         ELSE (c_all - c_src) * 1000000 // (n_all - n_src) END AS ppm_rest
-       |  FROM by_src b
-       |  JOIN src_tot USING (source) JOIN by_tok USING (tok) CROSS JOIN tot)
-       |SELECT source, rk, tok AS $keyOut, ppm_src, ppm_rest, drift, direction FROM (
-       |  SELECT source, tok, ppm_src, ppm_rest,
-       |    abs(ppm_src - ppm_rest) AS drift,
-       |    CAST(sign(ppm_src - ppm_rest) AS BIGINT) AS direction,
-       |    CAST(row_number() OVER (PARTITION BY source
-       |      ORDER BY abs(ppm_src - ppm_rest) DESC, tok) AS BIGINT) AS rk
-       |  FROM scored)
-       |WHERE rk <= 3""".stripMargin
-
-  /** Per-source token-drift report — shared verbatim by the one-shot
-    * gate and the streaming monitor (additive counts make stream ≡
-    * batch exact). */
-  private def textSourceDriftSql: String = driftChainSql(
-    """SELECT source, tok, count(*) AS c_src FROM (
-      |    SELECT source,
-      |      unnest(list_filter(string_split_regex(lower(text), '[^a-z]+'),
-      |        x -> x <> '')) AS tok
-      |    FROM documents)
-      |  GROUP BY 1, 2""".stripMargin, "tok")
-
-  /** Semantic drift twin: the key is the axis-sign bucket of the
-    * first 8 embedding dims — a float sign test both engines evaluate
-    * on the identical stored value. */
-  private def textSourceDriftSemanticSql: String = driftChainSql(
-    s"""SELECT source, tok, count(*) AS c_src FROM (
-       |    SELECT d.source, CAST((${(0 until 8).map(i =>
-            s"(CASE WHEN e.embedding[${i + 1}] > 0 THEN ${1 << i} ELSE 0 END)")
-            .mkString(" + ")}) AS VARCHAR) AS tok
-       |    FROM embeddings e JOIN documents d ON e.vec_id = d.doc_id)
-       |  GROUP BY 1, 2""".stripMargin, "bucket")
-
-  /** Streaming exact chunk dedup — shared by the plain replay gate
-    * and the mid-stream-compaction gate: micro-batches in doc_id
-    * order make "first batch to see the hash, then first in batch"
-    * the GLOBAL lexicographic-min occurrence per hash, so the
-    * one-shot dedup is the oracle verbatim — chunk CTE (the
-    * text_chunk fragment), md5, min (doc_id, chunk_id) per hash. */
-  private def dedupExactStreamSql: String =
-    """WITH toks AS (
-      |  SELECT doc_id,
-      |    list_filter(string_split_regex(lower(text), '[^a-z]+'), x -> x <> '') AS t
-      |  FROM documents),
-      |nz AS (SELECT doc_id, t, len(t) AS n FROM toks WHERE len(t) >= 1),
-      |ch AS (SELECT doc_id, t, n,
-      |    unnest(range(0, CASE WHEN n <= 64 THEN 1
-      |                        ELSE 1 + (n - 64 + 47) // 48 END)) AS chunk_id
-      |  FROM nz),
-      |c AS (
-      |  SELECT doc_id, CAST(chunk_id AS BIGINT) AS chunk_id,
-      |    md5(array_to_string(t[chunk_id * 48 + 1 :
-      |      chunk_id * 48 + least(64, n - chunk_id * 48)], ' ')) AS chunk_md5
-      |  FROM ch),
-      |k AS (
-      |  SELECT chunk_md5, doc_id, chunk_id,
-      |    row_number() OVER (PARTITION BY chunk_md5
-      |      ORDER BY doc_id, chunk_id) AS rn
-      |  FROM c)
-      |SELECT chunk_md5, doc_id, chunk_id FROM k WHERE rn = 1""".stripMargin
-
-  /** Blocked-Levenshtein near-dup pairs — shared by the standalone
-    * gate, the capped gate, the edit-clusters recursive closure and
-    * the family report. The oracle is the ALL-PAIRS ground truth: NO
-    * blocking at all, every length-compatible pair through DuckDB's
-    * full-matrix levenshtein (the engine runs the banded 3-arg form;
-    * identical keep-set because the filter never accepts a distance
-    * above the band) — so the gate pins the engine's q-chunk
-    * pigeonhole blocking to structural recall 1.0, the
-    * dedup_simhash_wide treatment. Two EXACTNESS-PRESERVING pair
-    * prefilters keep the quadratic stage cheap: |Δlen| ≤ θ
-    * (each edit changes length by ≤ 1) and the character-frequency
-    * L1 bound Σ_c |count_c(a) − count_c(b)| ≤ 2θ (a substitution
-    * moves the 36-symbol count vector by ≤ 2 in L1, an indel by 1 —
-    * so ed ≥ L1/2); the MATERIALIZED barrier stops DuckDB from
-    * hoisting the levenshtein above them (measured 16 s → 2.9 s at
-    * the gate corpus). */
-  private def dedupEditPairsSql: String = dedupEditPairsSqlOver("documents")
-
-  /** The duplicated-corpus gate fixture (SQL side; the Spark twin is
-    * [[graft.dedup.EditDedup.dupFixture]]): 1 + doc_id % 3
-    * byte-identical copies of every even-id document, copy c at id
-    * doc_id·4 + c. The unnest is standalone-then-cross-joined (the
-    * DuckDB bind-bug workaround). */
-  private def dupFixtureSql: String =
-    """(SELECT d.doc_id * 4 + cs.c AS doc_id, d.text
-      |   FROM documents d, (SELECT unnest(range(0, 3)) AS c) cs
-      |   WHERE d.doc_id % 2 = 0 AND cs.c <= d.doc_id % 3)""".stripMargin
-
-  /** The all-pairs banded-Levenshtein ground truth over any
-    * (doc_id, text) source — O(n²) with two provably-implied
-    * prefilters (length gap, character-frequency L1), NO blocking:
-    * the oracle IS the recall definition. */
-  private def dedupEditPairsSqlOver(src: String): String = {
-    val chars = ('a' to 'z') ++ ('0' to '9')
-    val cv = chars.map(c => s"len - length(replace(nt, '$c', ''))")
-      .mkString("[", ", ", "]")
-    s"""WITH n AS (
-       |  SELECT doc_id,
-       |    trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')) AS nt
-       |  FROM $src),
-       |l AS (SELECT doc_id, nt, CAST(length(nt) AS BIGINT) AS len,
-       |        $cv AS cv
-       |      FROM n),
-       |cand AS MATERIALIZED (
-       |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, a.nt AS nt_a,
-       |    b.nt AS nt_b, least(64, (a.len + b.len) // 20) AS theta
-       |  FROM l a JOIN l b
-       |    ON a.doc_id < b.doc_id
-       |    AND abs(a.len - b.len) <= least(64, (a.len + b.len) // 20)
-       |    AND list_sum(list_transform(list_zip(a.cv, b.cv),
-       |          x -> abs(x[1] - x[2]))) <= 2 * least(64, (a.len + b.len) // 20))
-       |SELECT doc_a, doc_b, CAST(levenshtein(nt_a, nt_b) AS BIGINT) AS dist
-       |FROM cand WHERE levenshtein(nt_a, nt_b) <= theta""".stripMargin
-  }
-
-  /** Both-endpoint output cap over the exact pair set: a pair
-    * survives iff it ranks ≤ k by (dist, partner) among BOTH
-    * endpoints' pairs — total output ≤ n·k on any corpus. */
-  private def dedupEditPairsCappedSql(k: Int): String =
-    s"""WITH ep AS ($dedupEditPairsSql),
-       |r AS (
-       |  SELECT doc_a, doc_b, dist,
-       |    row_number() OVER (PARTITION BY doc_a ORDER BY dist, doc_b) AS ra,
-       |    row_number() OVER (PARTITION BY doc_b ORDER BY dist, doc_a) AS rb
-       |  FROM ep)
-       |SELECT doc_a, doc_b, dist FROM r WHERE ra <= $k AND rb <= $k""".stripMargin
-
-  /** Training order over the mixture membership — shared by the
-    * standalone gate and the shard gate's order CTE. The global
-    * `row_number() OVER` is DuckDB-oracle-side only; the engine ranks
-    * via the two-pass globalRank. */
-  private def textMixOrderSql: String =
-    s"""WITH me AS ($textMixEpochsSql)
-       |SELECT lang, doc_id, epoch,
-       |  CAST(row_number() OVER (ORDER BY epoch,
-       |    md5(CAST(doc_id AS VARCHAR) || ':' || CAST(epoch AS VARCHAR) || ':42'),
-       |    doc_id) - 1 AS BIGINT) AS train_order
-       |FROM me""".stripMargin
-
-  /** Quality counts + keeper flag — shared by the standalone gate and
-    * the corpus report's quality CTE. */
-  private def textQualitySql: String =
-    """WITH q AS (
-      |  SELECT doc_id,
-      |    len(list_filter(string_split_regex(text, '\s+'), x -> x <> '')) AS n_tokens,
-      |    len(list_filter(string_split_regex(lower(text), '[^a-z]+'),
-      |        x -> x IN ('the','a','of','and','to','is','in'))) AS n_stop,
-      |    length(regexp_replace(text, '[^.,;:!?]', '', 'g')) AS n_punct,
-      |    length(regexp_replace(lower(text), '[^a-z]', '', 'g')) AS n_alpha
-      |  FROM documents)
-      |SELECT doc_id, n_tokens, n_stop, n_punct, n_alpha,
-      |  CAST(n_tokens BETWEEN 5 AND 10000 AND n_stop * 20 >= n_tokens AS INT)
-      |    AS is_quality
-      |FROM q""".stripMargin
-
-  /** Cluster-keyed leakage-safe split over the recursive-closure
-    * clusters oracle — shared by the split gate and the corpus
-    * report's split CTE. */
-  private def dedupSplitSafeSql: String =
-    s"""SELECT doc_id, cluster_id,
-       |  CASE WHEN cluster_id % 10 = 0 THEN 'val'
-       |       WHEN cluster_id % 10 = 1 THEN 'test'
-       |       ELSE 'train' END AS split
-       |FROM ($dedupClustersSql)""".stripMargin
-
-  /** The streaming chunk → embed → probe oracle: text_chunk_embed's
-    * integer bucket fold densified into 32-length double vectors
-    * (bucket order; integer-exact operands), assignment re-derived
-    * from the run's dumped codebook, then dedup_semantic_incremental's
-    * drop rule UNROLLED over the four doc_id-range micro-batches —
-    * stage b's survivors (kept{b+1}) are stage b+1's index side, the
-    * probe-then-append recursion the engine executed. Generated, not
-    * hand-repeated: the four stage blocks come off one template. */
-  private def dedupSemanticStreamSql: String = {
-    val tau = graft.streaming.SemStream.Tau.toString
-    val stages = (0 until 4).map { b =>
-      s"""bb$b AS (SELECT * FROM bat WHERE b = $b),
-         |dd$b AS (
-         |  SELECT DISTINCT x.vec_id FROM bb$b x JOIN kept$b k ON x.cell = k.cell
-         |    AND list_cosine_similarity(x.v, k.v) >= $tau
-         |  UNION
-         |  SELECT DISTINCT x.vec_id FROM bb$b x JOIN bb$b y ON x.cell = y.cell
-         |    AND x.vec_id <> y.vec_id
-         |  WHERE (y.sim < x.sim OR (y.sim = x.sim AND y.vec_id < x.vec_id))
-         |    AND list_cosine_similarity(x.v, y.v) >= $tau),
-         |kept${b + 1} AS (
-         |  SELECT * FROM kept$b
-         |  UNION ALL
-         |  SELECT vec_id, cell, v FROM bb$b
-         |  WHERE vec_id NOT IN (SELECT vec_id FROM dd$b))""".stripMargin
-    }.mkString(",\n")
-    s"""WITH toksC AS (
-       |  SELECT doc_id,
-       |    list_filter(string_split_regex(lower(text), '[^a-z]+'), x -> x <> '') AS t
-       |  FROM documents),
-       |nzC AS (SELECT doc_id, t, len(t) AS n FROM toksC WHERE len(t) >= 1),
-       |chC AS (SELECT doc_id, t, n,
-       |    unnest(range(0, CASE WHEN n <= 64 THEN 1
-       |                        ELSE 1 + (n - 64 + 47) // 48 END)) AS chunk_id
-       |  FROM nzC),
-       |chunks AS (
-       |  SELECT doc_id, CAST(chunk_id AS BIGINT) AS chunk_id,
-       |    array_to_string(t[chunk_id * 48 + 1 :
-       |                      chunk_id * 48 + least(64, n - chunk_id * 48)], ' ')
-       |      AS chunk
-       |  FROM chC),
-       |${embedBucketCtesFrom("chunks", "doc_id, chunk_id", "chunk")},
-       |gridS AS (SELECT doc_id, chunk_id, unnest(range(0, 32)) AS bucket
-       |          FROM (SELECT DISTINCT doc_id, chunk_id FROM w)),
-       |e AS (
-       |  SELECT (doc_id << 32) + chunk_id AS vec_id,
-       |    list(CAST(coalesce(wx.weight, 0) AS DOUBLE) ORDER BY g2.bucket) AS v
-       |  FROM gridS g2 LEFT JOIN w wx USING (doc_id, chunk_id, bucket)
-       |  GROUP BY doc_id, chunk_id),
-       |c AS (SELECT cell, v FROM read_parquet('$semStreamCentsGlob')),
-       |asg AS (
-       |  SELECT vec_id, cell, sim FROM (
-       |    SELECT e.vec_id, c.cell, list_cosine_similarity(e.v, c.v) AS sim,
-       |      row_number() OVER (PARTITION BY e.vec_id
-       |        ORDER BY list_cosine_similarity(e.v, c.v) DESC, c.cell) AS rn
-       |    FROM e, c) WHERE rn = 1),
-       |stepv AS (SELECT max(doc_id) // 4 + 1 AS step FROM documents),
-       |kept0 AS (SELECT a.vec_id, a.cell, e.v
-       |          FROM asg a JOIN e ON e.vec_id = a.vec_id
-       |          WHERE ((a.vec_id >> 32) % 10) <> 0),
-       |bat AS (SELECT a.vec_id, a.cell, a.sim, e.v,
-       |          CAST((a.vec_id >> 32) // stepv.step AS INT) AS b
-       |        FROM asg a JOIN e ON e.vec_id = a.vec_id CROSS JOIN stepv
-       |        WHERE ((a.vec_id >> 32) % 10) = 0),
-       |$stages
-       |SELECT bat.vec_id, bat.cell,
-       |  CAST(round(bat.sim * 1000000) AS BIGINT) AS cent_sim_micro,
-       |  (dx.vec_id IS NULL) AS kept
-       |FROM bat LEFT JOIN (
-       |  SELECT vec_id FROM dd0 UNION SELECT vec_id FROM dd1
-       |  UNION SELECT vec_id FROM dd2 UNION SELECT vec_id FROM dd3) dx
-       |  ON dx.vec_id = bat.vec_id""".stripMargin
-  }
-
-  /** The chunk CTE chained into the pack cumsum — the two components'
-    * oracles composed; pack_id = exclusive-prefix-sum // budget, a
-    * pure function of global (doc_id, chunk_id) order, which is why
-    * the streaming replay gate shares it verbatim. */
-  private def textChunkPackSql: String =
-    """WITH toks AS (
-      |  SELECT doc_id,
-      |    list_filter(string_split_regex(lower(text), '[^a-z]+'), x -> x <> '') AS t
-      |  FROM documents),
-      |nz AS (SELECT doc_id, t, len(t) AS n FROM toks WHERE len(t) >= 1),
-      |ch AS (SELECT doc_id, n,
-      |    unnest(range(0, CASE WHEN n <= 64 THEN 1
-      |                        ELSE 1 + (n - 64 + 47) // 48 END)) AS chunk_id
-      |  FROM nz),
-      |cw AS (SELECT doc_id, chunk_id,
-      |    least(n - chunk_id * 48, 64) AS n_tokens
-      |  FROM ch),
-      |c AS (
-      |  SELECT doc_id, chunk_id, n_tokens,
-      |    coalesce(sum(n_tokens) OVER (ORDER BY doc_id, chunk_id
-      |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS pre
-      |  FROM cw)
-      |SELECT doc_id, CAST(chunk_id AS BIGINT) AS chunk_id,
-      |  CAST(n_tokens AS BIGINT) AS n_tokens,
-      |  CAST(pre // 256 AS BIGINT) AS pack_id
-      |FROM c""".stripMargin
-
-  /** The multi-probe banded-Hamming pair oracle over a dumped
-    * `sigs(doc_id, sig)` frame at `glob` — banding, radius-1 band
-    * perturbations, the bucket cap and the exact Hamming verify, all
-    * re-derived as 64-bit arithmetic (the dedup_simhash_multiprobe
-    * oracle); the dumped signatures are the only faith. Shared by the
-    * image and audio perceptual near-dup gates. */
-  /** The regime-aware oracle for a [[graft.multimodal.SigDump
-    * .dumpAndPair]] family: the multi-probe re-derivation when the
-    * query took the 8-bit multi-probe path, the all-pairs Hamming
-    * ground truth when the measured switch routed it to the exact
-    * collapse+wide path (Verify dumps oracle_sql.json AFTER the
-    * queries ran, so the per-kind regime record is authoritative
-    * here — ADVICE r13: previously a corpus crossing the regime
-    * boundary would hash-mismatch even with a correct engine). */
-  private def mediaPairsOracle(dumpKind: String, base: String,
-      glob: String): String =
-    if (graft.multimodal.SigDump.pickedWide(dumpKind, base))
-      allPairsHamming15Sql(glob)
-    else mediaHashPairsSql(glob)
-
-  /** The all-pairs Hamming ≤ 15 ground truth over a dumped
-    * `sigs(doc_id, sig)` frame — the oracle of the exact
-    * collapse+wide regime (`mm_image_dedup_wide` and any family the
-    * measured switch routes wide). */
-  private def allPairsHamming15Sql(glob: String): String =
-    s"""WITH sigs AS (SELECT doc_id, sig FROM read_parquet('$glob'))
-       |SELECT x.doc_id AS i, y.doc_id AS j
-       |FROM sigs x JOIN sigs y ON x.doc_id < y.doc_id
-       |WHERE bit_count(xor(x.sig, y.sig)) <= 15""".stripMargin
-
-  private def mediaHashPairsSql(glob: String): String =
-    s"""WITH sigs AS (SELECT doc_id, sig FROM read_parquet('$glob')),
-       |$simhashBandCte,
-       |exact AS (
-       |  SELECT x.doc_id AS i, y.doc_id AS j,
-       |    bit_count(xor(x.sig, y.sig)) AS dist
-       |  FROM b x
-       |  JOIN b y ON x.band = y.band AND x.h = y.h AND x.doc_id < y.doc_id
-       |  JOIN sz ON sz.band = x.band AND sz.h = x.h
-       |  WHERE sz.n BETWEEN 2 AND 1000),
-       |probes AS (
-       |  SELECT doc_id, sig, band, xor(h, (CAST(1 AS BIGINT) << p)) AS h
-       |  FROM b CROSS JOIN (SELECT unnest(range(0, 8)) AS p)),
-       |viap AS (
-       |  SELECT least(pr.doc_id, m.doc_id) AS i,
-       |    greatest(pr.doc_id, m.doc_id) AS j,
-       |    bit_count(xor(pr.sig, m.sig)) AS dist
-       |  FROM probes pr
-       |  JOIN sz ON sz.band = pr.band AND sz.h = pr.h
-       |    AND sz.n BETWEEN 1 AND 1000
-       |  JOIN b m ON m.band = pr.band AND m.h = pr.h
-       |    AND m.doc_id <> pr.doc_id)
-       |SELECT DISTINCT i, j
-       |FROM (SELECT i, j, dist FROM exact
-       |      UNION ALL SELECT i, j, dist FROM viap)
-       |WHERE dist <= 15""".stripMargin
-
-  /** The banded signature postings over a dumped `sigs(doc_id, sig)`
-    * frame — 8 × 8-bit bands; DuckDB's >>, xor and bit_count match
-    * Java's on negative longs (verified semantics). */
-  private val simhashBandCte: String =
-    """b AS (
-      |  SELECT doc_id, sig, band, (sig >> (band * 8)) & 255 AS h
-      |  FROM sigs CROSS JOIN (SELECT unnest(range(0, 8)) AS band)),
-      |sz AS (SELECT band, h, count(*) AS n FROM b GROUP BY band, h)""".stripMargin
-
-  private def annTopkL2Sql: String =
-    """WITH e AS (SELECT vec_id,
-      |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-      |  FROM embeddings),
-      |q AS (SELECT * FROM e WHERE vec_id < 10)
-      |SELECT query_id, neighbor_id, rank FROM (
-      |  SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id,
-      |    row_number() OVER (PARTITION BY q.vec_id
-      |      ORDER BY list_distance(q.v, e.v), e.vec_id) AS rank
-      |  FROM q, e WHERE e.vec_id <> q.vec_id)
-      |WHERE rank <= 5""".stripMargin
-
-  private def dedupEmbedSql: String =
-    """WITH e AS (SELECT vec_id,
-      |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-      |  FROM embeddings)
-      |SELECT a.vec_id AS i, b.vec_id AS j
-      |FROM e a JOIN e b ON a.vec_id < b.vec_id
-      |WHERE list_cosine_similarity(a.v, b.v) >= 0.45""".stripMargin
-
-  private def dedupClustersSql: String =
-    s"""WITH RECURSIVE pairs AS ($ngramJaccardSql),
-       |e AS (SELECT i AS a, j AS b FROM pairs
-       |      UNION ALL SELECT j, i FROM pairs),
-       |reach(a, b) AS (
-       |  SELECT a, b FROM e
-       |  UNION
-       |  SELECT r.a, e2.b FROM reach r JOIN e e2 ON r.b = e2.a),
-       |m AS (SELECT a, min(b) AS mn FROM reach GROUP BY a)
-       |SELECT d.doc_id,
-       |  least(d.doc_id, coalesce(m.mn, d.doc_id)) AS cluster_id
-       |FROM documents d LEFT JOIN m ON m.a = d.doc_id""".stripMargin
-
-  private def kvReplaySql: String =
-    s"""WITH $kvOpsCte,
-       |writes AS (SELECT * FROM ops WHERE op IN ('put','append')),
-       |lp AS (SELECT key, max(seq) FILTER (WHERE op = 'put') AS p
-       |       FROM writes GROUP BY key)
-       |SELECT k.key,
-       |       coalesce(string_agg(w.value, '' ORDER BY w.seq), '') AS state
-       |FROM (SELECT DISTINCT key FROM ops) k
-       |LEFT JOIN lp ON k.key = lp.key
-       |LEFT JOIN writes w ON w.key = k.key AND w.seq >= coalesce(lp.p, -1)
-       |GROUP BY k.key""".stripMargin
+  /** Query name → the DuckDB oracle SQL for the corpus dir `sfDir`,
+    * runnable on the same parquet tables. Side-dump oracles read the
+    * dumps their queries wrote for `sfDir`, and the media near-dup
+    * oracles follow the regime each query picked, so render this after
+    * the queries ran. */
+  def oracleSql(sfDir: String): Map[String, String] =
+    gates.map(g => g.name -> g.oracle(sfDir)).toMap
 }

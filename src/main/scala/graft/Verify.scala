@@ -28,25 +28,17 @@ object Verify {
           System.err.println(s"[verify]   caused by: ${c.getClass.getName}: ${c.getMessage}"))
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    val manifest = failed.map { case (k, e) =>
-      s"""${q(k)}: {"class": ${q(e.getClass.getName)}, "message": ${q(String.valueOf(e.getMessage).take(500))}}"""
-    }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/failed.json"), manifest)
+    // rendered after the queries ran: the media near-dup oracles read
+    // the regime each query recorded (graft.multimodal.SigDump)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      SelfCheck.jsonObject(SparkEntry.oracleSql(sfDir).toSeq.sortBy(_._1)))
+    val manifest = SelfCheck.mapper.createObjectNode()
+    failed.foreach { case (k, e) =>
+      manifest.putObject(k).put("class", e.getClass.getName)
+        .put("message", String.valueOf(e.getMessage).take(500))
+    }
+    Files.writeString(Paths.get(s"$outDir/failed.json"),
+      SelfCheck.mapper.writeValueAsString(manifest))
     spark.stop()
     if (failed.nonEmpty) {
       System.err.println(s"[verify] ${failed.size} queries failed: ${failed.keys.mkString(",")}")

@@ -2,11 +2,11 @@ package graft.core
 
 import org.apache.spark.sql.DataFrame
 
-/** Run-scoped oracle side dumps, generalizing the pattern proven on
-  * `graft.kv.ShardCtrler` (config-history gate): a gate whose LEARNED
-  * or FOLDED artifact is not SQL-derivable dumps that artifact to a
-  * run-scoped parquet path, and `SparkEntry.oracleSql` — a def, read
-  * by Verify AFTER the queries ran — embeds the same path, so DuckDB
+/** Run-scoped oracle side dumps: a gate whose LEARNED or FOLDED
+  * artifact is not SQL-derivable dumps that artifact to a run-scoped
+  * parquet path named by its kind and the corpus dir's basename, and
+  * the gate's oracle — given that same corpus dir — embeds the same
+  * path (through the owning object's `*DumpPath(base)`), so DuckDB
   * re-derives everything DOWNSTREAM of the artifact independently.
   * The process-scoped token guarantees the compare can only ever read
   * THIS run's dump: a stale dump from an older run, code version, or
@@ -26,9 +26,9 @@ import org.apache.spark.sql.DataFrame
   *    [[graft.sim.Opq]] — encode/ADC/candidate-cut/re-rank
   *    re-derived; OPQ also dumps its applied rotation rows);
   *  - the reduced-PCA model ([[graft.sim.Pca]] — projection and the
-  *    squared-L2 rank re-derived).
-  * ShardCtrler keeps its original inline copy (same shape) because
-  * its path name is part of an existing gate.
+  *    squared-L2 rank re-derived);
+  *  - the shard-controller config history ([[graft.kv.ShardCtrler]] —
+  *    the fold's invariants, routing and handoffs re-derived).
   */
 object SideDump {
 

@@ -275,11 +275,8 @@ object Dedup {
 
   final case class SimhashRow(doc_id: Long, sig: Long)
 
-  /** The basename of the last corpus dir [[simhashSigs]] dumped for;
-    * `SparkEntry.oracleSql` binds the simhash oracle globs to it. */
-  @volatile var lastSimhashBase: String = "sf0.01"
-
-  /** This run's signature side-dump path for a corpus dir. */
+  /** This run's signature side-dump path for a corpus dir basename;
+    * the simhash oracles name it for the corpus dir they are given. */
   def simhashDumpPath(base: String): String =
     graft.core.SideDump.path("simhash_sigs", base)
 
@@ -309,7 +306,6 @@ object Dedup {
         .localCheckpoint())
     val base = new java.io.File(sfDir).getName
     graft.core.SideDump.write(sigs, "simhash_sigs", base)
-    lastSimhashBase = base
     sigs
   }
 

@@ -42,10 +42,9 @@ import graft.sim.Similarity.Vec
   */
 object SemDedup {
 
-  /** Basename of the corpus dir of the last gate run — binds the
-    * oracle glob, same pattern as [[Kmeans.lastCellsBase]]. */
-  @volatile var lastBase: String = "sf0.01"
-
+  /** The codebook side dump for a corpus dir basename, one per dump
+    * kind below; each gate's oracle names its own for the corpus dir
+    * it is given. */
   def dumpPath(base: String): String =
     graft.core.SideDump.path("semdedup_cents", base)
 
@@ -97,9 +96,6 @@ object SemDedup {
     semanticWithCap(spark, sfDir, tau, k, iters, cap,
       dumpKind = "semdedup_cap_cents")
 
-  /** Basename binding for the capped gate's own dump kind. */
-  @volatile var lastCappedBase: String = "sf0.01"
-
   def cappedDumpPath(base: String): String =
     graft.core.SideDump.path("semdedup_cap_cents", base)
 
@@ -108,8 +104,6 @@ object SemDedup {
     * gate ran later overwrite the other's dump with a not-bit-
     * identical retrain (train()'s partial-sum merge order is
     * scheduler-dependent) and silently break the first gate's hash. */
-  @volatile var lastFunnelBase: String = "sf0.01"
-
   def funnelDumpPath(base: String): String =
     graft.core.SideDump.path("semdedup_funnel_cents", base)
 
@@ -118,6 +112,9 @@ object SemDedup {
       tau: Double = 0.45, k: Int = 16, iters: Int = 3): DataFrame =
     semanticWithCap(spark, sfDir, tau, k, iters, cap = Int.MaxValue,
       dumpKind = "semdedup_funnel_cents")
+
+  def parDumpPath(base: String): String =
+    graft.core.SideDump.path("semdedup_par_cents", base)
 
   /** Large-k variant on the SCALABLE trainer — k-means‖ seeding
     * ([[Kmeans.trainParallel]]) at k = 256, which crosses BOTH scale
@@ -130,11 +127,6 @@ object SemDedup {
     * silently diverge from the per-point formulation. At k ≫ corpus
     * cells are tiny, so the within-cell stage is trivially bounded —
     * the production shape (k ∝ N). */
-  @volatile var lastParBase: String = "sf0.01"
-
-  def parDumpPath(base: String): String =
-    graft.core.SideDump.path("semdedup_par_cents", base)
-
   def semanticPar(spark: SparkSession, sfDir: String, tau: Double = 0.45,
       k: Int = 256, iters: Int = 3): DataFrame =
     semanticWithCap(spark, sfDir, tau, k, iters, cap = Int.MaxValue,
@@ -152,13 +144,6 @@ object SemDedup {
     graft.core.SideDump.write(
       cents.toSeq.map(c => (c.cell, c.v.toSeq)).toDF("cell", "v"),
       dumpKind, base)
-    dumpKind match {
-      case "semdedup_cents"        => lastBase = base
-      case "semdedup_cap_cents"    => lastCappedBase = base
-      case "semdedup_funnel_cents" => lastFunnelBase = base
-      case "semdedup_par_cents"    => lastParBase = base
-      case other => throw new IllegalArgumentException(s"unknown dump kind $other")
-    }
     semanticOf(vecs, cents, tau, cap)
   }
 

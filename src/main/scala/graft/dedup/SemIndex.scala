@@ -39,10 +39,8 @@ import graft.sim.Similarity.Vec
   */
 object SemIndex {
 
-  /** Basename of the corpus dir of the last gate run — binds the
-    * oracle glob ([[SemDedup.lastBase]] pattern). */
-  @volatile var lastBase: String = "sf0.01"
-
+  /** The codebook side dump for a corpus dir basename; the gate's
+    * oracle names it for the corpus dir it is given. */
   def centsDumpPath(base: String): String =
     graft.core.SideDump.path("semidx_cents", base)
 
@@ -231,7 +229,6 @@ object SemIndex {
     val base = new java.io.File(sfDir).getName
     graft.core.SideDump.write(
       spark.read.parquet(s"$path/cents"), "semidx_cents", base)
-    lastBase = base
     probe(spark, sfDir, path, all.filter(v => v.vec_id % 10 == 0), tau)
   }
 

@@ -103,24 +103,12 @@ object ShardCtrler {
     }).toDF("config_num", "shard", "gid", "servers")
   }
 
-  /** Process-scoped token for the oracle side-dump path: the queries
-    * write the dump under this token and `SparkEntry.oracleSql` (built
-    * in the same JVM, after the queries ran) embeds the same token, so
-    * the DuckDB compare can only ever read THIS run's fold output —
-    * a stale dump from an older run, code version, or different SF can
-    * never be silently compared. */
-  val sideDumpToken: String = java.util.UUID.randomUUID.toString.take(8)
-
-  /** Side-dump path for a corpus dir basename (`sf0.01` in the gate). */
+  /** The config-history side dump for a corpus dir basename
+    * ([[graft.core.SideDump]] kind `config_history`); the k_ history
+    * oracles name it for the corpus dir they are given, so the gates
+    * work at ANY sf. */
   def sideDumpPath(base: String): String =
-    s"/tmp/graft_oracle_side/config_history_${base}_$sideDumpToken"
-
-  /** The basename of the LAST corpus dir a side dump was written for —
-    * `SparkEntry.oracleSql` (a def, read by Verify AFTER the queries
-    * ran) binds the oracle glob to it, so the gate works at ANY sf
-    * rather than assuming the driver's sf0.01. Defaults to the
-    * driver's sf so the SQL is well-formed even if dumped first. */
-  @volatile var lastDumpBase: String = "sf0.01"
+    graft.core.SideDump.path("config_history", base)
 
   /** The corpus's config history, MATERIALIZED to a run-scoped side
     * path so the DuckDB oracle can join it: the rebalance fold itself
@@ -128,33 +116,14 @@ object ShardCtrler {
     * everything DOWNSTREAM of it (epoch assignment, routing joins,
     * handoff windows — k_route / k_migrations) becomes a real SQL
     * differential instead of a rows-only check. The path carries the
-    * corpus dir's basename (so SFs never collide) plus
-    * [[sideDumpToken]] (so RUNS never collide or go stale); dumps from
-    * dead runs are pruned by age on the next write. */
+    * corpus dir's basename (so SFs never collide) plus the
+    * [[graft.core.SideDump]] run token (so RUNS never collide or go
+    * stale); dumps from dead runs are pruned by age on the next write. */
   def historyWithSideDump(spark: SparkSession, sfDir: String): DataFrame = {
     val df = historyDf(spark, history(cmdsFromNation(spark, sfDir)))
-    val base = new java.io.File(sfDir).getName
-    lastDumpBase = base
-    pruneStaleDumps()
-    df.coalesce(1).write.mode("overwrite").parquet(sideDumpPath(base))
+    graft.core.SideDump.write(df, "config_history",
+      new java.io.File(sfDir).getName)
     df
-  }
-
-  /** Delete side-dump dirs from other runs older than a day — the
-    * token makes them unreachable garbage, not a correctness hazard. */
-  private def pruneStaleDumps(): Unit = {
-    val root = new java.io.File("/tmp/graft_oracle_side")
-    val cutoff = System.currentTimeMillis() - 24L * 3600 * 1000
-    Option(root.listFiles()).getOrElse(Array.empty).foreach { d =>
-      if (d.getName.startsWith("config_history_") &&
-          !d.getName.endsWith(sideDumpToken) && d.lastModified() < cutoff) {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-          f.delete(); ()
-        }
-        rm(d)
-      }
-    }
   }
 
   /** The config-history oracle's invariant gate as ANSI SQL over a

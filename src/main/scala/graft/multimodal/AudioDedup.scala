@@ -39,8 +39,6 @@ import graft.multimodal.Multimodal.MediaRow
   */
 object AudioDedup {
 
-  @volatile var lastBase: String = "sf0.01"
-
   def dumpPath(base: String): String =
     graft.core.SideDump.path("audhash_sigs", base)
 
@@ -218,9 +216,7 @@ object AudioDedup {
   def audioDedup(spark: SparkSession, sfDir: String, maxHamming: Int = 15,
       maxBucket: Int = 1000): DataFrame =
     SigDump.dumpAndPair(hashFrame(Multimodal.mediaTable(spark, sfDir)),
-      "audhash_sigs", sfDir, maxHamming, maxBucket)(lastBase = _)
-
-  @volatile var lastFbBase: String = "sf0.01"
+      "audhash_sigs", sfDir, maxHamming, maxBucket)
 
   def fbDumpPath(base: String): String =
     graft.core.SideDump.path("audfb_sigs", base)
@@ -236,7 +232,6 @@ object AudioDedup {
       .filter(_.kind == "audio")
       .map(m => (m.media_id, clipHashFb(m.media)))
       .toDF("doc_id", "sig")
-    SigDump.dumpAndPair(sigs, "audfb_sigs", sfDir, maxHamming, maxBucket)(
-      lastFbBase = _)
+    SigDump.dumpAndPair(sigs, "audfb_sigs", sfDir, maxHamming, maxBucket)
   }
 }

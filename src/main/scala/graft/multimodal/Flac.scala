@@ -144,8 +144,6 @@ object Flac {
         "zero_crossings", "energy")
   }
 
-  @volatile var lastDedupBase: String = "sf0.01"
-
   def dedupDumpPath(base: String): String =
     graft.core.SideDump.path("flachash_sigs", base)
 
@@ -171,7 +169,7 @@ object Flac {
       .map(id => (id, AudioDedup.clipHash(dedupPayload(id))))
       .toDF("doc_id", "sig")
     SigDump.dumpAndPair(sigs, "flachash_sigs", sfDir, maxHamming,
-      maxBucket)(lastDedupBase = _)
+      maxBucket)
   }
 
   /** The near-dup fixture payload (shared with FlacSpec): the twin is

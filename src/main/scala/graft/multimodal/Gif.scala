@@ -57,8 +57,6 @@ object Gif {
       .toDF("doc_id", "w", "h", "pix_sum", "pix_wsum")
   }
 
-  @volatile var lastDedupBase: String = "sf0.01"
-
   def dedupDumpPath(base: String): String =
     graft.core.SideDump.path("gifhash_sigs", base)
 
@@ -82,7 +80,7 @@ object Gif {
       .map(id => (id, ImageDedup.imageHash(dedupPayload(id))))
       .toDF("doc_id", "sig")
     SigDump.dumpAndPair(sigs, "gifhash_sigs", sfDir, maxHamming,
-      maxBucket)(lastDedupBase = _)
+      maxBucket)
   }
 
   /** The near-dup fixture payload (shared with GifSpec). */

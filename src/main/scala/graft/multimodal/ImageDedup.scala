@@ -36,8 +36,6 @@ import graft.multimodal.Multimodal.MediaRow
   */
 object ImageDedup {
 
-  @volatile var lastBase: String = "sf0.01"
-
   def dumpPath(base: String): String =
     graft.core.SideDump.path("imghash_sigs", base)
 
@@ -277,5 +275,5 @@ object ImageDedup {
   def imageDedup(spark: SparkSession, sfDir: String, maxHamming: Int = 15,
       maxBucket: Int = 1000): DataFrame =
     SigDump.dumpAndPair(hashFrame(Multimodal.mediaTable(spark, sfDir)),
-      "imghash_sigs", sfDir, maxHamming, maxBucket)(lastBase = _)
+      "imghash_sigs", sfDir, maxHamming, maxBucket)
 }

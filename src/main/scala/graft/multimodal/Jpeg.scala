@@ -88,8 +88,6 @@ object Jpeg {
       .toDF("doc_id", "w", "h", "pix_sum", "pix_wsum")
   }
 
-  @volatile var lastDedupBase: String = "sf0.01"
-
   def dedupDumpPath(base: String): String =
     graft.core.SideDump.path("jpeghash_sigs", base)
 
@@ -118,10 +116,8 @@ object Jpeg {
       .map(id => (id, ImageDedup.imageHash(dedupPayload(id))))
       .toDF("doc_id", "sig")
     SigDump.dumpAndPair(sigs, "jpeghash_sigs", sfDir, maxHamming,
-      maxBucket)(lastDedupBase = _)
+      maxBucket)
   }
-
-  @volatile var lastWideBase: String = "sf0.01"
 
   def wideDumpPath(base: String): String =
     graft.core.SideDump.path("jpegwidehash_sigs", base)
@@ -149,7 +145,7 @@ object Jpeg {
       .map(id => (id, ImageDedup.imageHash(dedupPayload(id))))
       .toDF("doc_id", "sig")
     SigDump.dumpAndPairWide(sigs, "jpegwidehash_sigs", sfDir, maxHamming,
-      maxBucket)(lastWideBase = _)
+      maxBucket)
   }
 
   /** The near-dup fixture payload (shared with JpegSpec's planted-twin

@@ -78,8 +78,6 @@ object Png {
       .toDF("doc_id", "w", "h", "pix_sum", "pix_wsum")
   }
 
-  @volatile var lastDedupBase: String = "sf0.01"
-
   def dedupDumpPath(base: String): String =
     graft.core.SideDump.path("pnghash_sigs", base)
 
@@ -105,7 +103,7 @@ object Png {
       .map(id => (id, ImageDedup.imageHash(dedupPayload(id))))
       .toDF("doc_id", "sig")
     SigDump.dumpAndPair(sigs, "pnghash_sigs", sfDir, maxHamming,
-      maxBucket)(lastDedupBase = _)
+      maxBucket)
   }
 
   /** The near-dup fixture payload (shared with PngSpec's planted-twin

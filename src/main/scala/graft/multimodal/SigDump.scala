@@ -7,9 +7,9 @@ import org.apache.spark.sql.functions._
   * (image / audio / video): materialize the (doc_id, sig) fingerprint
   * frame ONCE (the decode feeds BOTH the side-dump write and the pair
   * stage — without the checkpoint it would run twice), dump it
-  * run-scoped for the DuckDB oracle, record the dump base for the
-  * oracle glob, then run the banded-Hamming pair machinery. One copy
-  * of the cache/dump discipline instead of nine.
+  * run-scoped for the DuckDB oracle (which names the dump for the
+  * corpus dir it is given), then run the banded-Hamming pair
+  * machinery. One copy of the cache/dump discipline instead of nine.
   *
   * REGIME PICK — measured, not guessed (r13 "What's wrong #1"): the
   * 8-bit multi-probe scheme is exact precisely as long as no band
@@ -55,12 +55,13 @@ private[graft] object SigDump {
     * the regime-switch spec, the lastHashMinIters convention). */
   @volatile private[graft] var lastWide: Boolean = false
 
-  /** Per-(dumpKind, dump base) regime record — the oracle selection
-    * in SparkEntry reads this AFTER the query ran (Verify dumps
-    * oracle_sql.json last), so each family's oracle matches the plan
-    * its corpus actually took. Keyed by base as well as kind so the
-    * same family run on two corpora in one session keeps both
-    * records (r14 What's-wrong #1: kind-only was last-write-wins). */
+  /** Per-(dumpKind, dump base) regime record — a measured fact of the
+    * run, not a pointer to it: the media gates' oracles read this, so
+    * Verify renders `SparkEntry.oracleSql` AFTER the queries ran and
+    * each family's oracle matches the plan its corpus actually took.
+    * Keyed by base as well as kind so the same family run on two
+    * corpora in one session keeps both records (r14 What's-wrong #1:
+    * kind-only was last-write-wins). */
   private val regime =
     new java.util.concurrent.ConcurrentHashMap[(String, String), Boolean]()
 
@@ -68,11 +69,10 @@ private[graft] object SigDump {
     Option(regime.get((dumpKind, base))).exists(identity)
 
   def dumpAndPair(sigsRaw: DataFrame, dumpKind: String, sfDir: String,
-      maxHamming: Int, maxBucket: Int)(recordBase: String => Unit): DataFrame = {
+      maxHamming: Int, maxBucket: Int): DataFrame = {
     val sigs = graft.core.Materialize.frame(sigsRaw, "sigdump")
     val base = new java.io.File(sfDir).getName
     graft.core.SideDump.write(sigs, dumpKind, base)
-    recordBase(base)
     // one cheap job over the materialized checkpoint: every row
     // posts its 8 band keys (band*256 + value — ≤ 2048 groups,
     // map-side combined), giving row count and max bucket occupancy
@@ -99,11 +99,10 @@ private[graft] object SigDump {
     * (`mm_image_dedup_wide`) that hash-pins the scale regime on a
     * corpus the measured switch would route to multi-probe. */
   def dumpAndPairWide(sigsRaw: DataFrame, dumpKind: String, sfDir: String,
-      maxHamming: Int, maxBucket: Int)(recordBase: String => Unit): DataFrame = {
+      maxHamming: Int, maxBucket: Int): DataFrame = {
     val sigs = graft.core.Materialize.frame(sigsRaw, "sigdump")
     val base = new java.io.File(sfDir).getName
     graft.core.SideDump.write(sigs, dumpKind, base)
-    recordBase(base)
     regime.put((dumpKind, base), true)
     graft.dedup.Dedup.simhashPairsWideCollapsedOf(sigs, maxHamming, maxBucket)
   }

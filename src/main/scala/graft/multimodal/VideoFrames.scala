@@ -179,8 +179,6 @@ object VideoFrames {
       }
   }
 
-  @volatile var lastBase: String = "sf0.01"
-
   def dumpPath(base: String): String =
     graft.core.SideDump.path("vidhash_sigs", base)
 
@@ -250,8 +248,7 @@ object VideoFrames {
     val sigs = aviTable(spark, sfDir)
       .map(m => (m.media_id, clipHash(m.media)))
       .toDF("doc_id", "sig")
-    SigDump.dumpAndPair(sigs, "vidhash_sigs", sfDir, maxHamming, maxBucket)(
-      lastBase = _)
+    SigDump.dumpAndPair(sigs, "vidhash_sigs", sfDir, maxHamming, maxBucket)
   }
 
   /** Video THUMBNAIL extraction — the decode → frame-sample → resize
@@ -344,8 +341,6 @@ object VideoFrames {
     }.toDF("media_id", "width", "height", "n_frames", "px_sum", "px_wsum")
   }
 
-  @volatile var lastMjpegBase: String = "sf0.01"
-
   def mjpegDumpPath(base: String): String =
     graft.core.SideDump.path("vidmjpeghash_sigs", base)
 
@@ -387,7 +382,7 @@ object VideoFrames {
       .map(id => (id, clipHash(mjpegDedupPayload(id))))
       .toDF("doc_id", "sig")
     SigDump.dumpAndPair(sigs, "vidmjpeghash_sigs", sfDir, maxHamming,
-      maxBucket)(lastMjpegBase = _)
+      maxBucket)
   }
 
   /** Gate surface (`mm_video_frames`): per video row, the decoded

@@ -519,8 +519,6 @@ object Webp {
       .toDF("doc_id", "w", "h", "pix_sum", "pix_wsum")
   }
 
-  @volatile var lastDedupBase: String = "sf0.01"
-
   def dedupDumpPath(base: String): String =
     graft.core.SideDump.path("webphash_sigs", base)
 
@@ -545,7 +543,7 @@ object Webp {
       .map(id => (id, ImageDedup.imageHash(dedupPayload(id))))
       .toDF("doc_id", "sig")
     SigDump.dumpAndPair(sigs, "webphash_sigs", sfDir, maxHamming,
-      maxBucket)(lastDedupBase = _)
+      maxBucket)
   }
 
   /** The near-dup fixture payload (shared with WebpSpec's

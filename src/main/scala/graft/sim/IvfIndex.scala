@@ -139,13 +139,9 @@ object IvfIndex {
     PqIndexModel(cents, Pq.Codebooks(m, centroids(0)(0).length, centroids))
   }
 
-  /** Basename of the last corpus dir [[buildOrLoadPq]] dumped the
-    * index model for; `SparkEntry.oracleSql` binds the ivfpq oracle
-    * globs to it. */
-  @volatile var lastModelBase: String = "sf0.01"
-
   /** Model side-dump paths (oracle inputs): IVF centroids and PQ
-    * codebooks of the session index. */
+    * codebooks of the session index, by corpus dir basename; the ivfpq
+    * oracles name them for the corpus dir they are given. */
   def centsDumpPath(base: String): String =
     graft.core.SideDump.path("ivfpq_cents", base)
   def booksDumpPath(base: String): String =
@@ -173,7 +169,6 @@ object IvfIndex {
       idx.cents.toSeq.map(c => (c.cell, c.v.toSeq)).toDF("cell", "v"),
       "ivfpq_cents", new java.io.File(sfDir).getName)
     Pq.dumpBooks(spark, idx.cb, "ivfpq_books", sfDir)
-    lastModelBase = new java.io.File(sfDir).getName
     idx
   }
 

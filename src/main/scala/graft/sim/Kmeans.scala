@@ -495,18 +495,14 @@ object Kmeans {
     math.round(s / n * 1e6)
   }
 
-  /** Basenames of the last corpus dirs the two gate surfaces dumped
-    * centroids for ([[cellSizes]] / [[topKIvfTrained]]);
-    * `SparkEntry.oracleSql` binds the oracle globs to them. Each gate
-    * dumps ITS OWN run's centroids under its own kind: `train`'s
-    * partial-sum merge order is scheduler-dependent in the last ulp,
-    * so two train() calls may not be bit-identical — the run-scoped
-    * dump captures exactly the codebook the gate output used. */
-  @volatile var lastCellsBase: String = "sf0.01"
-  @volatile var lastIvfTrainedBase: String = "sf0.01"
-  @volatile var lastIvfTrainedParBase: String = "sf0.01"
-
-  /** Centroid side-dump paths for the gate surfaces. */
+  /** Centroid side-dump paths for the gate surfaces ([[cellSizes]],
+    * [[topKIvfTrained]], [[topKIvfTrainedPar]]), by corpus dir
+    * basename; each gate's oracle names its own for the corpus dir it
+    * is given. Each gate dumps ITS OWN run's centroids under its own
+    * kind: `train`'s partial-sum merge order is scheduler-dependent in
+    * the last ulp, so two train() calls may not be bit-identical — the
+    * run-scoped dump captures exactly the codebook the gate output
+    * used. */
   def cellsDumpPath(base: String): String =
     graft.core.SideDump.path("kmeans_cells_cents", base)
   def ivfTrainedDumpPath(base: String): String =
@@ -515,12 +511,11 @@ object Kmeans {
     graft.core.SideDump.path("ivf_trained_par_cents", base)
 
   private def dumpCents(spark: SparkSession, cents: Array[Centroid],
-      kind: String, sfDir: String): String = {
+      kind: String, sfDir: String): Unit = {
     import spark.implicits._
     graft.core.SideDump.write(
       cents.toSeq.map(c => (c.cell, c.v.toSeq)).toDF("cell", "v"),
       kind, new java.io.File(sfDir).getName)
-    new java.io.File(sfDir).getName
   }
 
   /** IVF search over a TRAINED codebook: Lloyd centroids replace the
@@ -536,7 +531,7 @@ object Kmeans {
       numQueries: Int = 10, nCells: Int = 16, nprobe: Int = 4,
       iters: Int = 3): DataFrame = {
     val trained = train(Similarity.loadVectors(spark, sfDir), nCells, iters)
-    lastIvfTrainedBase = dumpCents(spark, trained, "ivf_trained_cents", sfDir)
+    dumpCents(spark, trained, "ivf_trained_cents", sfDir)
     val cents = trained
       .map(c => Vec(-1L - c.cell, c.v, 1.0)) // unit-norm; id unused in probing
     Similarity.topKIvf(spark, sfDir, k, numQueries, nCells, nprobe, Some(cents))
@@ -550,7 +545,7 @@ object Kmeans {
       numQueries: Int = 10, nCells: Int = 16, nprobe: Int = 4,
       iters: Int = 3): DataFrame = {
     val trained = trainParallel(Similarity.loadVectors(spark, sfDir), nCells, iters)
-    lastIvfTrainedParBase = dumpCents(spark, trained, "ivf_trained_par_cents", sfDir)
+    dumpCents(spark, trained, "ivf_trained_par_cents", sfDir)
     val cents = trained
       .map(c => Vec(-1L - c.cell, c.v, 1.0))
     Similarity.topKIvf(spark, sfDir, k, numQueries, nCells, nprobe, Some(cents))
@@ -565,7 +560,7 @@ object Kmeans {
     import spark.implicits._
     val corpus = Similarity.loadVectors(spark, sfDir)
     val cents = train(corpus, k, iters)
-    lastCellsBase = dumpCents(spark, cents, "kmeans_cells_cents", sfDir)
+    dumpCents(spark, cents, "kmeans_cells_cents", sfDir)
     val bc = spark.sparkContext.broadcast(CentroidIndex.build(cents))
     corpus.map(r => bc.value.nearest(r))
       .toDF("cell")

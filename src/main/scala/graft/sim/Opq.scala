@@ -88,11 +88,9 @@ object Opq {
     }
   }
 
-  /** Basename of the last corpus dir [[topKPqOpq]] dumped rotation +
-    * books for; `SparkEntry.oracleSql` binds the oracle globs to it. */
-  @volatile var lastOpqBase: String = "sf0.01"
-
-  /** Rotation/codebook side-dump paths for the gate surface. */
+  /** Rotation/codebook side-dump paths for the gate surface, by corpus
+    * dir basename; the `ann_pq_opq` oracle names them for the corpus dir
+    * it is given. */
   def rotDumpPath(base: String): String =
     graft.core.SideDump.path("opq_rot", base)
   def booksDumpPath(base: String): String =
@@ -123,9 +121,7 @@ object Opq {
     val queries = corpus.filter(col("vec_id") < numQueries).collect()
       .sortBy(_.vec_id)
       .map(q => Vec(q.vec_id, rotateOne(model, perm, q.v), 1.0))
-    Pq.topKPqCore(rotated, queries, k, m, ksub, rerank, cb => {
-      Pq.dumpBooks(spark, cb, "opq_books", sfDir)
-      lastOpqBase = new java.io.File(sfDir).getName
-    })
+    Pq.topKPqCore(rotated, queries, k, m, ksub, rerank,
+      cb => Pq.dumpBooks(spark, cb, "opq_books", sfDir))
   }
 }

@@ -303,11 +303,8 @@ object Pca {
     topKEuclid(projected, queries, k)
   }
 
-  /** Basename of the last corpus dir [[topKL2PcaReduced]] dumped its
-    * model for; `SparkEntry.oracleSql` binds the oracle glob to it. */
-  @volatile var lastPcaBase: String = "sf0.01"
-
-  /** This run's PCA-model side-dump path for a corpus dir. */
+  /** This run's PCA-model side-dump path for a corpus dir basename; the
+    * `ann_pca_reduced` oracle names it for the corpus dir it is given. */
   def modelDumpPath(base: String): String =
     graft.core.SideDump.path("pca_model", base)
 
@@ -329,7 +326,6 @@ object Pca {
       ((-1, m.mean.toSeq) +:
         (0 until kdim).map(c => (c, m.basis(c).toSeq))).toDF("comp", "v"),
       "pca_model", new java.io.File(sfDir).getName)
-    lastPcaBase = new java.io.File(sfDir).getName
     val projected = project(corpus, m, kdim)
     val queries = corpus.filter(col("vec_id") < numQueries).collect().sortBy(_.vec_id)
       .map(q => Vec(q.vec_id, projectOne(m, kdim, whiten = false, q.v), 0.0))

@@ -183,11 +183,8 @@ object Pq {
   private[sim] def adcTable(cb: Codebooks, q: Array[Double]): Array[Array[Double]] =
     Array.tabulate(cb.m)(j => cb.centroids(j).map(c => sqDist(sub(q, j, cb.dsub), c)))
 
-  /** Basename of the last corpus dir [[topKPq]] dumped codebooks for;
-    * `SparkEntry.oracleSql` binds the `ann_pq` oracle glob to it. */
-  @volatile var lastPqBase: String = "sf0.01"
-
-  /** This run's codebook side-dump path for a corpus dir. */
+  /** This run's codebook side-dump path for a corpus dir basename; the
+    * `ann_pq` oracle names it for the corpus dir it is given. */
   def booksDumpPath(base: String): String =
     graft.core.SideDump.path("pq_books", base)
 
@@ -197,10 +194,8 @@ object Pq {
     val corpus = Similarity.loadVectors(spark, sfDir)
       .map(v => Vec(v.vec_id, l2normalize(v.v), 1.0))
     val queries = corpus.filter(col("vec_id") < numQueries).collect().sortBy(_.vec_id)
-    topKPqCore(corpus, queries, k, m, ksub, rerank, cb => {
-      dumpBooks(spark, cb, "pq_books", sfDir)
-      lastPqBase = new java.io.File(sfDir).getName
-    })
+    topKPqCore(corpus, queries, k, m, ksub, rerank,
+      cb => dumpBooks(spark, cb, "pq_books", sfDir))
   }
 
   /** Dump a codebook as (subspace, code, v) rows — the only artifact

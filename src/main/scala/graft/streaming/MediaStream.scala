@@ -93,10 +93,8 @@ object MediaStream {
     val index = spark.read.parquet(
       DeltaIndex.listBatches(spark, idx): _*)
     graft.multimodal.SigDump.dumpAndPair(index, "jpegstreamhash_sigs",
-      sfDir, maxHamming, maxBucket)(lastBase = _)
+      sfDir, maxHamming, maxBucket)
   }
-
-  @volatile var lastBase: String = "sf0.01"
 
   def dumpPath(base: String): String =
     graft.core.SideDump.path("jpegstreamhash_sigs", base)

@@ -46,10 +46,8 @@ object SemStream {
     * parse the same decimal literal to the same double. */
   val Tau: Double = 0.9260254037844386
 
-  /** Basename of the corpus dir of the last gate run — binds the
-    * oracle glob ([[SemIndex.lastBase]] pattern). */
-  @volatile var lastBase: String = "sf0.01"
-
+  /** The codebook side dump for a corpus dir basename; the gate's
+    * oracle names it for the corpus dir it is given. */
   def centsDumpPath(base: String): String =
     graft.core.SideDump.path("semstream_cents", base)
 
@@ -157,7 +155,6 @@ object SemStream {
     // parquet the build wrote) — no re-read job in the query path
     graft.core.SideDump.write(
       SemIndex.centsFrame(spark, cents), "semstream_cents", base)
-    lastBase = base
     // amortized across the sequential batches (r17 verdict #2): cents
     // carried from the build (fixed after it), member frame carried
     // forward, survivor assignment reused — the per-batch index

@@ -70,12 +70,8 @@ object Bpe {
     out.result()
   }
 
-  /** The basename of the last corpus dir [[trainMergesWithDump]] ran
-    * for — `SparkEntry.oracleSql` (read after the queries) binds the
-    * oracle glob to it (the `ShardCtrler.lastDumpBase` pattern). */
-  @volatile var lastDumpBase: String = "sf0.01"
-
-  /** This run's merge-table side dump path for a corpus dir. */
+  /** This run's merge-table side dump path for a corpus dir basename;
+    * each BPE gate's oracle names it for the corpus dir it is given. */
   def sideDumpPath(base: String): String =
     graft.core.SideDump.path("bpe_merges", base)
 
@@ -96,7 +92,6 @@ object Bpe {
       ms.zipWithIndex.map { case ((a, b, _), i) => (i + 1, a, b) }
         .toDF("ord", "a", "b"),
       "bpe_merges", base)
-    lastDumpBase = base
     ms
   }
 

@@ -254,11 +254,8 @@ object QualityClassifier {
       .toDF("doc_id", "margin_micro", "label")
   }
 
-  /** The basename of the last corpus dir [[classifyTrained]] ran for;
-    * `SparkEntry.oracleSql` binds the oracle glob to it. */
-  @volatile var lastDumpBase: String = "sf0.01"
-
-  /** This run's weight side dump path for a corpus dir. */
+  /** This run's weight side dump path for a corpus dir basename; the
+    * `text_quality_clf` oracle names it for the corpus dir it is given. */
   def sideDumpPath(base: String): String =
     graft.core.SideDump.path("clf_weights", base)
 
@@ -288,7 +285,6 @@ object QualityClassifier {
       ((-1, model.bias) +: model.w.toSeq.zipWithIndex.map(_.swap))
         .toDF("idx", "w"),
       "clf_weights", base)
-    lastDumpBase = base
     scoreMargin(docs.select(col("doc_id"), col("text")), model)
       .orderBy(col("doc_id"))
   }

@@ -17,6 +17,14 @@ class SelfCheckSpec extends AnyFunSuite {
     assert(a.errors === Map("q2" -> "boom: bad column"))
   }
 
+  test("artifact JSON round-trips quotes, backslashes and control chars") {
+    val tricky = "say \"hi\" \\ tab\there\rcr\u0001end"
+    assert(Seq('"', '\\', '\t', '\r', '\u0001').forall(c => tricky.contains(c)))
+    val errs = SelfCheck.jsonObject(Seq("q2" -> tricky))
+    val a = SelfCheck.parse(s"""{"queries":{"q2":-1.0},"errors":$errs}""")
+    assert(a.errors === Map("q2" -> tricky))
+  }
+
   test("findings flags missing rows, negative values, and stray errors") {
     val full = SparkEntry.queries.keys.map(_ -> 0.1).toMap
     assert(SelfCheck.findings(SelfCheck.BenchArtifact(full, Map.empty)).isEmpty)

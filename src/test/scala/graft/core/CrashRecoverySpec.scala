@@ -32,7 +32,6 @@ import scala.jdk.CollectionConverters._
 class CrashRecoverySpec extends SparkSpec {
 
   private lazy val corpusDir: String = TestCorpus.write(bodyTokens = 20000)
-  private def corpusGlob: String = TestCorpus.glob(corpusDir)
 
   private def readSorted(outDir: String): Seq[String] =
     Files.list(Paths.get(outDir)).iterator().asScala
@@ -45,7 +44,7 @@ class CrashRecoverySpec extends SparkSpec {
       reducef: (String, Iterator[String]) => String): Seq[String] = {
     import spark.implicits._
     val out = Files.createTempDirectory("graft-crash").toString + "/out"
-    val input = MapReduce.wholeTextFiles(spark, corpusGlob)
+    val input = MapReduce.wholeTextFiles(spark, TestCorpus.glob(corpusDir))
       .map { case (uri, c) => (uri.substring(uri.lastIndexOf('/') + 1), c) }
     MapReduce.writeTextSinkFnvParity(
       MapReduce.run(spark, input, mapf, reducef, numPartitions = 5), out, 5)

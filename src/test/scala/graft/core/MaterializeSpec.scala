@@ -36,7 +36,7 @@ class MaterializeSpec extends SparkSpec {
       .toDF("doc_id", "sig")
     def run(): Seq[(Long, Long)] =
       graft.multimodal.SigDump.dumpAndPair(sigs, "mat_probe_sigs", sf(),
-        15, 1000)(_ => ())
+        15, 1000)
         .select(col("i").cast("long"), col("j").cast("long"))
         .as[(Long, Long)].collect().sorted.toSeq
     val local = run()

@@ -1,6 +1,7 @@
 package graft.dedup
 
 import graft.SparkSpec
+import java.io.File
 
 class SemDedupSpec extends SparkSpec {
 
@@ -106,7 +107,7 @@ class SemDedupSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getBoolean(3)))
       .sortBy(_._1)
     val cents = spark.read
-      .parquet(SemDedup.cappedDumpPath(SemDedup.lastCappedBase))
+      .parquet(SemDedup.cappedDumpPath(new File(sf()).getName))
       .collect().map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
       .sortBy(_._1).map(_._2)
     val vecs = graft.sim.Similarity.loadVectors(spark, sf()).collect().sortBy(_.vec_id)
@@ -161,7 +162,7 @@ class SemDedupSpec extends SparkSpec {
     // read the centroids the run dumped — the same faith the DuckDB
     // oracle takes — and re-derive assignment, priority, drops
     val cents = spark.read
-      .parquet(SemDedup.dumpPath(SemDedup.lastBase))
+      .parquet(SemDedup.dumpPath(new File(sf()).getName))
       .collect().map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
       .sortBy(_._1).map(_._2)
     val vecs = graft.sim.Similarity.loadVectors(spark, sf()).collect().sortBy(_.vec_id)

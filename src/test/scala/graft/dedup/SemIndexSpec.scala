@@ -3,6 +3,7 @@ package graft.dedup
 import graft.SparkSpec
 import graft.sim.Similarity
 import graft.sim.Similarity.Vec
+import java.io.File
 
 class SemIndexSpec extends SparkSpec {
 
@@ -164,7 +165,7 @@ class SemIndexSpec extends SparkSpec {
     assert(out.nonEmpty)
     assert(out.forall(_._1 % 10 == 0), "gate output is batch rows only")
     val cents = spark.read
-      .parquet(SemIndex.centsDumpPath(SemIndex.lastBase))
+      .parquet(SemIndex.centsDumpPath(new File(sf()).getName))
       .collect().map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
       .sortBy(_._1).map(_._2)
     val vecs = Similarity.loadVectors(spark, sf()).collect().sortBy(_.vec_id)

@@ -1,6 +1,7 @@
 package graft.dedup
 
 import graft.SparkSpec
+import java.io.File
 
 /** In-JVM mirror of the simhash side-dump DuckDB oracles
   * (`SparkEntry.oracleSql`): the dumped per-doc signatures are the
@@ -12,7 +13,7 @@ import graft.SparkSpec
 class SimhashOracleSpec extends SparkSpec {
 
   private def dumpedSigs(): Map[Long, Long] =
-    spark.read.parquet(Dedup.simhashDumpPath(Dedup.lastSimhashBase))
+    spark.read.parquet(Dedup.simhashDumpPath(new File(sf()).getName))
       .collect().map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("sig")).toMap
 
   /** (band, byte) postings of a signature set — plain loops, no Spark. */
@@ -134,7 +135,9 @@ class SimhashOracleSpec extends SparkSpec {
       Dedup.simhashPairsWideCollapsedOf(sigs, 16, 1000)
     }
     // and on the gate corpus the collapsed form equals the plain wide
-    // form (no identical sigs there -> pure pass-through)
+    // form (no identical sigs there -> pure pass-through); the dump is
+    // written here so the test does not lean on an earlier one's
+    Dedup.simhashSigs(spark, sf())
     val gate = dumpedSigs().toSeq.toDF("doc_id", "sig")
     val collapsed = Dedup.simhashPairsWideCollapsedOf(gate, 15, 1000)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet

@@ -2,6 +2,7 @@ package graft.multimodal
 
 import graft.SparkSpec
 import graft.multimodal.Multimodal.MediaRow
+import java.io.File
 
 class AudioDedupSpec extends SparkSpec {
 
@@ -123,7 +124,7 @@ class AudioDedupSpec extends SparkSpec {
   test("filterbank gate corpus: dump covers every audio row, both paths, pairs subset-verified") {
     val pairs = AudioDedup.audioDedupFb(spark, sf()).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val dumped = spark.read.parquet(AudioDedup.fbDumpPath(AudioDedup.lastFbBase))
+    val dumped = spark.read.parquet(AudioDedup.fbDumpPath(new File(sf()).getName))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val clips = Multimodal.mediaTable(spark, sf()).filter(_.kind == "audio").collect()
     assert(dumped.size === clips.length)
@@ -147,7 +148,7 @@ class AudioDedupSpec extends SparkSpec {
   test("gate corpus: every audio row fingerprinted and dumped; real rows cross PCM decode") {
     val out = AudioDedup.audioDedup(spark, sf())
     out.collect() // force + dump
-    val dumped = spark.read.parquet(AudioDedup.dumpPath(AudioDedup.lastBase))
+    val dumped = spark.read.parquet(AudioDedup.dumpPath(new File(sf()).getName))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val clips = Multimodal.mediaTable(spark, sf()).filter(_.kind == "audio").collect()
     assert(dumped.size === clips.length)

@@ -2,6 +2,7 @@ package graft.multimodal
 
 import graft.SparkSpec
 import graft.multimodal.Multimodal.MediaRow
+import java.io.File
 
 class ImageDedupSpec extends SparkSpec {
 
@@ -153,7 +154,7 @@ class ImageDedupSpec extends SparkSpec {
   test("gate corpus: every image row hashed and dumped; real rows cross the pixel decode") {
     val out = ImageDedup.imageDedup(spark, sf())
     out.collect() // force + dump
-    val dumped = spark.read.parquet(ImageDedup.dumpPath(ImageDedup.lastBase))
+    val dumped = spark.read.parquet(ImageDedup.dumpPath(new File(sf()).getName))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val images = Multimodal.mediaTable(spark, sf()).filter(_.kind == "image").collect()
     assert(dumped.size === images.length)
@@ -184,7 +185,7 @@ class ImageDedupSpec extends SparkSpec {
     // oracles) — the sf0.01 gate corpora all measure maxOcc <= 215
     val small = (0L until 100L).map(i => (i, i * 0x9E3779B97F4A7C15L))
       .toDF("doc_id", "sig")
-    SigDump.dumpAndPair(small, "regime_probe_sigs", sf(), 15, 1000)(_ => ())
+    SigDump.dumpAndPair(small, "regime_probe_sigs", sf(), 15, 1000)
       .count()
     assert(!SigDump.lastWide)
     assert(!SigDump.pickedWide("regime_probe_sigs",
@@ -209,7 +210,7 @@ class ImageDedupSpec extends SparkSpec {
           else base)
     }.toDF("doc_id", "sig")
     val pairs = SigDump.dumpAndPair(lowEntropy, "regime_probe_low_sigs",
-      sf(), 15, 1000)(_ => ()).localCheckpoint()
+      sf(), 15, 1000).localCheckpoint()
     assert(SigDump.lastWide,
       "measured over-cap occupancy must route a sub-100k frame wide")
     assert(SigDump.pickedWide("regime_probe_low_sigs",
@@ -231,10 +232,10 @@ class ImageDedupSpec extends SparkSpec {
     val kind = "regime_two_corpora_sigs"
     val narrow = (0L until 100L).map(i => (i, i * 0x9E3779B97F4A7C15L))
       .toDF("doc_id", "sig")
-    SigDump.dumpAndPair(narrow, kind, sf(), 15, 1000)(_ => ()).count()
+    SigDump.dumpAndPair(narrow, kind, sf(), 15, 1000).count()
     val wide = (0L until 5000L).map(i => (i, (i % 4) * Long.MaxValue / 3))
       .toDF("doc_id", "sig")
-    SigDump.dumpAndPair(wide, kind, sf("sf0.01"), 15, 1000)(_ => ()).count()
+    SigDump.dumpAndPair(wide, kind, sf("sf0.01"), 15, 1000).count()
     assert(!SigDump.pickedWide(kind, "sf0.001"),
       "the narrow corpus's record must survive the wide corpus's run")
     assert(SigDump.pickedWide(kind, "sf0.01"))
@@ -249,7 +250,7 @@ class ImageDedupSpec extends SparkSpec {
     val big = spark.range(SigDump.MediaWideAbove)
       .select(col("id").as("doc_id"),
         (col("id") % 97 * lit(0x0101010101010101L)).as("sig"))
-    SigDump.dumpAndPair(big, "regime_probe_sigs", sf(), 15, 1000)(_ => ())
+    SigDump.dumpAndPair(big, "regime_probe_sigs", sf(), 15, 1000)
     assert(SigDump.lastWide,
       "at MediaWideAbove the tail must pick the collapse+wide path")
   }

@@ -1,6 +1,7 @@
 package graft.multimodal
 
 import graft.SparkSpec
+import java.io.File
 
 class VideoFramesSpec extends SparkSpec {
 
@@ -210,7 +211,7 @@ class VideoFramesSpec extends SparkSpec {
 
   test("gate dump: every video row fingerprinted, both hash paths crossed") {
     VideoFrames.videoDedup(spark, sf()).collect() // force + dump
-    val dumped = spark.read.parquet(VideoFrames.dumpPath(VideoFrames.lastBase))
+    val dumped = spark.read.parquet(VideoFrames.dumpPath(new File(sf()).getName))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val vids = VideoFrames.aviTable(spark, sf()).collect()
     assert(dumped.size === vids.length)

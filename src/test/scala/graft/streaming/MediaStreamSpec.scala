@@ -2,6 +2,7 @@ package graft.streaming
 
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
+import java.io.File
 
 /** Streaming media ingest: the per-batch decode+hash landing replayed
   * through the delta-log (with its mid-stream staged compaction) must
@@ -20,7 +21,7 @@ class MediaStreamSpec extends SparkSpec {
     // the streamed dump IS the one-shot signature frame, row for row
     val streamed = spark.read.parquet(
         graft.streaming.MediaStream.dumpPath(
-          graft.streaming.MediaStream.lastBase))
+          new File(sf()).getName))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val oneShot = spark.read.parquet(s"${sf()}/documents.parquet")
       .select("doc_id").as[Long]

@@ -2,6 +2,7 @@ package graft.text
 
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
+import java.io.File
 
 /** In-JVM mirrors of the side-dump DuckDB oracles for the BPE and
   * trained-classifier gates (`SparkEntry.oracleSql`): the real gate
@@ -31,7 +32,7 @@ class OracleSideDumpSpec extends SparkSpec {
     text.toLowerCase.split("[^a-z]+").filter(_.nonEmpty).toSeq
 
   private def dumpedMerges(): Seq[(String, String)] =
-    spark.read.parquet(Bpe.sideDumpPath(Bpe.lastDumpBase))
+    spark.read.parquet(Bpe.sideDumpPath(new File(sf()).getName))
       .orderBy(col("ord"))
       .collect().map(r => (r.getAs[String]("a"), r.getAs[String]("b"))).toSeq
 
@@ -117,7 +118,7 @@ class OracleSideDumpSpec extends SparkSpec {
     val got = QualityClassifier.classifyTrained(spark, sf())
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getInt(2))).toMap
     val dump = spark.read.parquet(
-        QualityClassifier.sideDumpPath(QualityClassifier.lastDumpBase))
+        QualityClassifier.sideDumpPath(new File(sf()).getName))
       .collect().map(r => r.getAs[Int]("idx") -> r.getAs[Double]("w")).toMap
     val bias = dump(-1)
     val w = Array.tabulate(4096)(i => dump(i))
@@ -136,7 +137,7 @@ class OracleSideDumpSpec extends SparkSpec {
   test("classifier oracle can fail: a perturbed weight is detected") {
     QualityClassifier.classifyTrained(spark, sf()) // ensure dump exists
     val dump = spark.read.parquet(
-        QualityClassifier.sideDumpPath(QualityClassifier.lastDumpBase))
+        QualityClassifier.sideDumpPath(new File(sf()).getName))
       .collect().map(r => r.getAs[Int]("idx") -> r.getAs[Double]("w")).toMap
     val bias = dump(-1)
     val w = Array.tabulate(4096)(i => dump(i))
