@@ -2,11 +2,61 @@ package graft
 
 import scala.util.control.NonFatal
 
+import com.fasterxml.jackson.databind.node.ObjectNode
+
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query seconds.
   * Results are forced through the noop sink (full computation, no
   * collect-to-driver, no parquet-metadata count shortcuts). */
 object Bench {
+
+  /** One timed run of a query: wall seconds (-1 = failed) and the
+    * task/GC millisecond deltas the listener observed across it. */
+  private[graft] final case class Run(wall: Double, taskMs: Long, gcMs: Long)
+
+  /** `x` as the artifact prints seconds: `%.3f`, as a JSON number. */
+  private def secs(x: Double): java.math.BigDecimal = new java.math.BigDecimal(f"$x%.3f")
+
+  /** The full artifact line, every field through [[SelfCheck]]'s
+    * mapper (query names, plan hashes, error text and `sfDir` are all
+    * escaped). `results` holds each query's (reported, worst) runs, in
+    * output order:
+    *  - `queries` / `queries_max`: the min and the worst run's wall —
+    *    a large max/min spread inside ONE artifact flags load
+    *    interference (the r7 adjudication needed a quiet-box re-run to
+    *    prove it);
+    *  - `task_ms` / `gc_ms` (+ `_max`): executor-task and GC
+    *    milliseconds of those runs — a wall spike with flat task_ms is
+    *    ambient; one with gc_ms ~ wall is collector pressure. */
+  private[graft] def artifactLine(total: Double, results: Seq[(String, (Run, Run))],
+      plans: Iterable[(String, String)], errors: Iterable[(String, String)],
+      sfDir: String): String = {
+    val o = SelfCheck.mapper.createObjectNode()
+    o.put("metric", "total").put("value", secs(total)).put("unit", "sec")
+    def perQuery(name: String)(put: (ObjectNode, String, (Run, Run)) => Unit): Unit = {
+      val q = o.putObject(name)
+      results.foreach { case (k, runs) => put(q, k, runs) }
+    }
+    perQuery("queries")((q, k, r) => q.put(k, secs(r._1.wall)))
+    perQuery("queries_max")((q, k, r) => q.put(k, secs(r._2.wall)))
+    perQuery("task_ms")((q, k, r) => q.put(k, r._1.taskMs))
+    perQuery("gc_ms")((q, k, r) => q.put(k, r._1.gcMs))
+    perQuery("task_ms_max")((q, k, r) => q.put(k, r._2.taskMs))
+    perQuery("gc_ms_max")((q, k, r) => q.put(k, r._2.gcMs))
+    val p = o.putObject("plans"); plans.foreach { case (k, v) => p.put(k, v) }
+    val e = o.putObject("errors"); errors.foreach { case (k, v) => e.put(k, v) }
+    o.put("sf", sfDir)
+    SelfCheck.mapper.writeValueAsString(o)
+  }
+
+  /** The short headline printed last (see `main`). */
+  private[graft] def headlineLine(total: Double, nQueries: Int, nErrors: Int,
+      artifact: String, sfDir: String): String =
+    SelfCheck.mapper.writeValueAsString(SelfCheck.mapper.createObjectNode()
+      .put("metric", "total").put("value", secs(total)).put("unit", "sec")
+      .put("n_queries", nQueries).put("n_errors", nErrors)
+      .put("queries_file", artifact).put("sf", sfDir))
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // per-query attribution (r15 verdict "What's wrong #1"): the
@@ -85,9 +135,6 @@ object Bench {
     // final plan) — plan drift becomes diffable round-over-round via
     // SelfCheck the way timings already are
     val plans = scala.collection.mutable.LinkedHashMap[String, String]()
-    // one attribution row per run: wall seconds + the task/GC millisecond
-    // deltas the listener observed across it
-    final case class Run(wall: Double, taskMs: Long, gcMs: Long)
     val results = selected.map { case (name, fn) =>
       var lastDf: org.apache.spark.sql.DataFrame = null
       val runsSeen = (0 until runs).map { _ =>
@@ -120,29 +167,8 @@ object Bench {
       val failed = runsSeen.exists(_.wall < 0)
       (name, (if (failed) Run(-1.0, best.taskMs, best.gcMs) else best, worst))
     }
-    val qs = results.map { case (k, (best, _)) => "\"" + k + f"""\":${best.wall}%.3f""" }
-      .mkString("{", ",", "}")
-    // per-query worst run alongside the reported min: a large max/min
-    // spread inside ONE artifact flags load interference (the r7
-    // adjudication needed a quiet-box re-run to prove it)
-    val worsts = results.map { case (k, (_, worst)) => "\"" + k + f"""\":${worst.wall}%.3f""" }
-      .mkString("{", ",", "}")
-    // attribution maps: executor-task and GC milliseconds for the
-    // reported (min) run and the worst run — a wall spike with flat
-    // task_ms is ambient; one with gc_ms ~ wall is collector pressure
-    def attrib(f: ((String, (Run, Run))) => Long): String =
-      results.map { case row @ (k, _) => "\"" + k + "\":" + f(row) }
-        .mkString("{", ",", "}")
-    val taskJson = attrib { case (_, (best, _)) => best.taskMs }
-    val gcJson = attrib { case (_, (best, _)) => best.gcMs }
-    val taskMaxJson = attrib { case (_, (_, worst)) => worst.taskMs }
-    val gcMaxJson = attrib { case (_, (_, worst)) => worst.gcMs }
-    // exception text is arbitrary: Jackson escapes it
-    val errs = SelfCheck.jsonObject(errors)
     val total = results.map(_._2._1.wall).filter(_ >= 0).sum
-    val plansJson = SelfCheck.jsonObject(plans)
-    val line =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"queries_max":$worsts,"task_ms":$taskJson,"gc_ms":$gcJson,"task_ms_max":$taskMaxJson,"gc_ms_max":$gcMaxJson,"plans":$plansJson,"errors":$errs,"sf":"$sfDir"}"""
+    val line = artifactLine(total, results, plans, errors, sfDir)
     println(line)
     // also persist the line: the driver's log-tail capture clipped the
     // round-4 artifact mid-JSON, losing the ann_* block — a file copy
@@ -173,7 +199,7 @@ object Bench {
     // the final printed line is a SHORT headline that always survives
     // the tail window intact, carrying the suite total plus a pointer
     // to the full per-query file above
-    println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","n_queries":${results.size},"n_errors":${errors.size},"queries_file":"$artifact","sf":"$sfDir"}""")
+    println(headlineLine(total, results.size, errors.size, artifact, sfDir))
     spark.stop()
   }
 }

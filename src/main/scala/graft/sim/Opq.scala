@@ -1,7 +1,8 @@
 package graft.sim
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.storage.StorageLevel
 import Similarity.Vec
 
 /** OPQ-style rotation for product quantization — the eigenvalue-
@@ -28,8 +29,10 @@ import Similarity.Vec
   * centered covariance (that is where the variance structure lives);
   * only its application skips the mean shift.
   *
-  * Scale: rotation is map-only with a broadcast d×d basis (32 KB at
-  * d = 64); everything else is [[Pq]]'s existing machinery.
+  * Scale: the normalized corpus is persisted once; the PCA fit and
+  * the rotation are plain jobs over it, and the rotated corpus (a
+  * map-only pass with a broadcast d×d basis, 32 KB at d = 64) is
+  * persisted in its place for [[Pq]]'s train/encode/ADC/re-rank core.
   */
 object Opq {
 
@@ -77,14 +80,12 @@ object Opq {
   }
 
   /** Map-only corpus rotation (broadcast basis + permutation). */
-  private[sim] def rotate(corpus: Dataset[Vec], model: Pca.Model,
-      perm: Array[Int]): Dataset[Vec] = {
-    import corpus.sparkSession.implicits._
-    val bcM = corpus.sparkSession.sparkContext.broadcast(model)
-    val bcP = corpus.sparkSession.sparkContext.broadcast(perm)
+  private[sim] def rotate(corpus: RDD[Vec], model: Pca.Model,
+      perm: Array[Int]): RDD[Vec] = {
+    val bc = corpus.sparkContext.broadcast((model, perm))
     corpus.map { r =>
-      val y = rotateOne(bcM.value, bcP.value, r.v)
-      Vec(r.vec_id, y, r.nrm)
+      val (m, p) = bc.value
+      Vec(r.vec_id, rotateOne(m, p, r.v), r.nrm)
     }
   }
 
@@ -110,18 +111,20 @@ object Opq {
       numQueries: Int = 10, m: Int = 8, ksub: Int = 16,
       rerank: Int = 50): DataFrame = {
     import spark.implicits._
-    val corpus = Similarity.loadVectors(spark, sfDir)
-      .map(v => Vec(v.vec_id, Pq.l2normalize(v.v), 1.0))
-    val model = Pca.fit(corpus)
-    val perm = balancedAllocation(model.eigvals, m)
-    graft.core.SideDump.write(
-      perm.indices.map(p => (p, model.basis(perm(p)).toSeq)).toDF("p", "b"),
-      "opq_rot", new java.io.File(sfDir).getName)
-    val rotated = rotate(corpus, model, perm)
-    val queries = corpus.filter(col("vec_id") < numQueries).collect()
-      .sortBy(_.vec_id)
-      .map(q => Vec(q.vec_id, rotateOne(model, perm, q.v), 1.0))
-    Pq.topKPqCore(rotated, queries, k, m, ksub, rerank,
+    val (rotated, queries) = Rounds.persisted(Similarity.loadVectors(spark, sfDir).rdd
+        .map(v => Vec(v.vec_id, Pq.l2normalize(v.v), 1.0))) { corpus =>
+      val model = Pca.fitRows(corpus) // the first job: fills the cache
+      val perm = balancedAllocation(model.eigvals, m)
+      graft.core.SideDump.write(
+        perm.indices.map(p => (p, model.basis(perm(p)).toSeq)).toDF("p", "b"),
+        "opq_rot", new java.io.File(sfDir).getName)
+      val rot = rotate(corpus, model, perm).persist(StorageLevel.MEMORY_AND_DISK)
+      // the query collect scans every partition, so it fills the rotated
+      // cache before the normalized one is released
+      (rot, rot.filter(_.vec_id < numQueries).collect().sortBy(_.vec_id))
+    }
+    try Pq.topKPqCore(spark, rotated, queries, k, m, ksub, rerank,
       cb => Pq.dumpBooks(spark, cb, "opq_books", sfDir))
+    finally { rotated.unpersist(blocking = false); () }
   }
 }

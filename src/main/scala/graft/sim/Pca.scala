@@ -1,5 +1,6 @@
 package graft.sim
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sim.Similarity.Vec
@@ -14,8 +15,8 @@ import graft.sim.Similarity.Vec
   *  - The corpus is read ONCE in a single narrow pass; each partition
   *    emits (count, sum[d], packed upper-triangular Σ x·xᵀ) — for
   *    d = 64 that is 2 144 doubles per partition, independent of N.
-  *    Partials are folded ON THE DRIVER IN PARTITION ORDER, so the fit
-  *    is bit-reproducible for a fixed input layout.
+  *    Partials are folded IN PARTITION ORDER ([[Rounds.foldInOrder]]),
+  *    so the fit is bit-reproducible for a fixed input layout.
   *  - The eigendecomposition runs on the d×d covariance on the driver
   *    (cyclic Jacobi; d³ work for d = 64 is microseconds). Driver
   *    state is O(d²) — never corpus-sized.
@@ -46,22 +47,21 @@ object Pca {
 
   /** One-pass covariance fit: partition partials folded in PARTITION
     * ORDER (fixed float summation order → bit-reproducible), Jacobi
-    * eigen. The fold is HIERARCHICAL past `fanIn` partitions: with P
-    * partitions the driver would otherwise collect P·d(d+3)/2 doubles
-    * (≈13 GB at 800k partitions × d = 64) — extra deterministic
-    * reduce levels (group = pid / fanIn, fold sorted by pid) cap the
-    * collect at fanIn partials. At gate scale (P ≤ 32 < fanIn) zero
-    * extra stages run, so the tree costs nothing where it isn't
-    * needed. */
-  def fit(corpus: Dataset[Vec], fanIn: Int = 64): Model = {
-    import corpus.sparkSession.implicits._
-    require(fanIn >= 2, "fit: fanIn must be >= 2")
-    val raw = corpus.mapPartitions { rows =>
+    * eigen. The fold is [[Rounds.foldInOrder]]: HIERARCHICAL past
+    * `fanIn` partitions, so the driver never collects more than fanIn
+    * partials of d(d+3)/2 doubles; at gate scale (P ≤ 32 < fanIn) zero
+    * extra stages run. */
+  def fit(corpus: Dataset[Vec], fanIn: Int = 64): Model = fitRows(corpus.rdd, fanIn)
+
+  /** [[fit]] over the corpus as an RDD — the callers that persist
+    * their corpus ([[Opq.topKPqOpq]]) fit over the cached rows. */
+  private[sim] def fitRows(rows: RDD[Vec], fanIn: Int = 64): Model = {
+    val raw = rows.mapPartitions { it =>
       var n = 0L
       var d = -1
       var sum: Array[Double] = null
       var tri: Array[Double] = null // packed upper triangle of Σ x xᵀ
-      rows.foreach { r =>
+      it.foreach { r =>
         if (d < 0) {
           d = r.v.length
           sum = new Array[Double](d)
@@ -79,38 +79,15 @@ object Pca {
         }
         n += 1
       }
-      if (n == 0) Iterator.empty
-      else Iterator.single(
-        (org.apache.spark.TaskContext.getPartitionId(), n, sum, tri))
+      if (n == 0) Iterator.empty else Iterator.single((n, sum, tri))
     }
-    def foldSorted(partials: Array[(Int, Long, Array[Double], Array[Double])])
-        : (Long, Array[Double], Array[Double]) = {
-      val sorted = partials.sortBy(_._1)
-      val d = sorted.head._3.length
-      var n = 0L
-      val sum = new Array[Double](d)
-      val tri = new Array[Double](d * (d + 1) / 2)
-      sorted.foreach { case (_, pn, ps, pt) =>
-        n += pn
-        var i = 0
-        while (i < d) { sum(i) += ps(i); i += 1 }
-        i = 0
-        while (i < tri.length) { tri(i) += pt(i); i += 1 }
-      }
-      (n, sum, tri)
-    }
-    var cur = raw
-    var bound = corpus.rdd.getNumPartitions
-    while (bound > fanIn) {
-      cur = cur.groupByKey(_._1 / fanIn).mapGroups { (g, it) =>
-        val (n, sum, tri) = foldSorted(it.toArray)
-        (g, n, sum, tri)
-      }
-      bound = (bound + fanIn - 1) / fanIn
-    }
-    val partials = cur.collect()
-    require(partials.nonEmpty, "fit: empty corpus")
-    val (n, sum, tri) = foldSorted(partials)
+    val (n, sum, tri) = Rounds.foldInOrder(raw, fanIn) { (a, b) =>
+      var i = 0
+      while (i < a._2.length) { a._2(i) += b._2(i); i += 1 }
+      i = 0
+      while (i < a._3.length) { a._3(i) += b._3(i); i += 1 }
+      (a._1 + b._1, a._2, a._3)
+    }.getOrElse(throw new IllegalArgumentException("fit: empty corpus"))
     val d = sum.length
     val mean = sum.map(_ / n)
     // cov = E[xxᵀ] − μμᵀ (population covariance; the ML convention)

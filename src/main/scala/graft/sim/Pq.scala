@@ -1,29 +1,31 @@
 package graft.sim
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import Similarity.{Vec, Hit, cosine}
+import Similarity.{Vec, cosine}
 
 /** Product-quantization ANN — the memory-compressed scale path: the
   * corpus is stored as M=8 one-byte codes per vector (64× smaller than
   * float64), queries scan codes with an asymmetric-distance lookup
   * table, and only a small re-rank set is scored exactly.
   *
-  * Pipeline: L2-normalize (cosine ≡ monotone in L2² on normalized
-  * vectors) → train per-subspace codebooks (deterministic Lloyd's
-  * k-means: first-K init, fixed iterations, lowest-index tie-break) on
-  * the full corpus DISTRIBUTED (no driver sample; see
-  * [[trainDistributed]]) → encode corpus in one narrow pass → per
-  * partition, ADC-score codes against the query tables into bounded
-  * heaps → cut the heap union to the GLOBAL ADC top-`rerank` per query
+  * Pipeline, over ONE persisted corpus per call ([[Rounds]]):
+  * L2-normalize (cosine ≡ monotone in L2² on normalized vectors) →
+  * train per-subspace codebooks (deterministic Lloyd's k-means:
+  * first-K init, fixed iterations, lowest-index tie-break) on the full
+  * corpus DISTRIBUTED (no driver sample; see [[trainDistributed]]) →
+  * one pass that encodes each vector, ADC-scores it against the query
+  * tables into per-partition bounded heaps ordered by (adc, id), and
+  * scores each heap entrant's exact cosine → a `treeAggregate` merges
+  * the heaps to the GLOBAL ADC top-`rerank` per query
   * (partition-count-independent semantics, which is what lets the
   * `ann_pq` DuckDB oracle re-derive the whole pipeline from the dumped
-  * codebooks) → re-rank the survivors with exact cosine.
+  * codebooks) → the driver ranks those survivors by exact cosine.
   *
   * At 100 TB: codebooks are KB-sized broadcast state; encoding is
   * map-only; a query touches 8 bytes + 8 table lookups per corpus
-  * vector instead of 64 float multiplies, and only `rerank` full
-  * vectors are ever fetched. */
+  * vector instead of 64 float multiplies, and the driver holds
+  * O(|Q|·rerank) candidates. */
 object Pq {
 
   final case class Codebooks(m: Int, dsub: Int, centroids: Array[Array[Array[Double]]])
@@ -82,44 +84,38 @@ object Pq {
   /** DISTRIBUTED per-subspace codebook training — no corpus sample
     * ever reaches the driver. All `m` subspaces train simultaneously:
     * each Lloyd round broadcasts the current codebooks (m·ksub·dsub
-    * doubles — KB), one narrow pass accumulates per-partition
-    * (subspace, centroid) sum/count partials locally (m·ksub rows per
-    * PARTITION cross the wire, never per-vector contributions), a
-    * 128-group reduce merges them, and the driver rebuilds centroids
-    * from m·ksub·dsub doubles of state. Same deterministic rules as
-    * the driver-side [[kmeans]]: first-ksub-by-id init, fixed
-    * iterations, empty clusters keep their centroid, nearest ties to
-    * the lowest index — so on a corpus small enough that the driver
-    * path's sample IS the corpus, the two trainers agree up to
-    * float-summation order (PqTrainSpec). `corpus` must already be
-    * L2-normalized, as in [[topKPq]]. */
+    * doubles — KB), one narrow job over the persisted corpus
+    * accumulates per-partition (subspace, centroid) sum/count partials
+    * locally (m·ksub entries per PARTITION reach the fold, never
+    * per-vector contributions), [[Rounds.foldInOrder]] merges them in
+    * partition-id order, and the driver rebuilds centroids from
+    * m·ksub·dsub doubles of state. Same deterministic rules as the
+    * driver-side [[kmeans]]: first-ksub-by-id init, fixed iterations,
+    * empty clusters keep their centroid, nearest ties to the lowest
+    * index — so on a corpus small enough that the driver path's sample
+    * IS the corpus, the two trainers agree up to float-summation order
+    * (PqTrainSpec). `corpus` must already be L2-normalized, as in
+    * [[topKPq]]. */
   private[sim] def trainDistributed(corpus: org.apache.spark.sql.Dataset[Vec],
-      m: Int, ksub: Int, iters: Int = 10): Codebooks = {
-    val spark = corpus.sparkSession
-    // the loop runs on the PERSISTED RDD, not the Dataset (the
-    // QualityClassifier.train pattern, r18): each iteration is then a
-    // plain scheduler job over cached partitions instead of a fresh
-    // Catalyst/AQE plan + codegen compile PLUS a groupByKey exchange —
-    // the r19 stage audit showed iters×2 sequential micro-stages whose
-    // wall was all planning/shuffle floor (partials are m·ksub rows
-    // per PARTITION; the driver folds them sorted by partition id, a
-    // FIXED summation order where the former reduceGroups merged in
-    // shuffle-arrival order). MEMORY_AND_DISK: spills rather than
-    // OOMs at corpus scale.
-    val cached = corpus.rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val seed = cached.filter(_.vec_id < ksub).collect().sortBy(_.vec_id).map(_.v)
+      m: Int, ksub: Int, iters: Int = 10): Codebooks =
+    Rounds.persisted(corpus.rdd)(trainRows(_, m, ksub, iters))
+
+  /** [[trainDistributed]] over an already-persisted corpus. */
+  private def trainRows(rows: RDD[Vec], m: Int, ksub: Int,
+      iters: Int = 10): Codebooks = {
+    val seed = rows.filter(_.vec_id < ksub).collect().sortBy(_.vec_id).map(_.v)
     val dim = seed.head.length
     val dsub = dim / m
     var books: Array[Array[Array[Double]]] =
       Array.tabulate(m)(j => seed.map(sub(_, j, dsub)))
     for (_ <- 0 until iters) {
-      val bc = spark.sparkContext.broadcast(Codebooks(m, dsub, books))
-      val partials = cached.mapPartitions { rows =>
+      val bc = rows.sparkContext.broadcast(Codebooks(m, dsub, books))
+      val partials = rows.mapPartitions { it =>
         val cb = bc.value
         val k = cb.centroids(0).length
         val sums = Array.ofDim[Double](cb.m, k, cb.dsub)
         val counts = Array.ofDim[Long](cb.m, k)
-        rows.foreach { r =>
+        it.foreach { r =>
           var j = 0
           while (j < cb.m) {
             val s = sub(r.v, j, cb.dsub)
@@ -137,34 +133,23 @@ object Pq {
             j += 1
           }
         }
-        Iterator.single(
-          (org.apache.spark.TaskContext.getPartitionId(), sums, counts))
-      }.collect()
-      val next = books.map(_.map(_.clone))
-      // fixed summation order: partition id ascending per (j, c)
-      val sorted = partials.sortBy(_._1)
-      val totS = Array.ofDim[Double](m, ksub, dsub)
-      val totN = Array.ofDim[Long](m, ksub)
-      sorted.foreach { case (_, sums, counts) =>
-        var j = 0
-        while (j < m) {
-          var c = 0
-          while (c < ksub) {
-            totN(j)(c) += counts(j)(c)
-            val acc = totS(j)(c); val s = sums(j)(c)
-            var i = 0
-            while (i < dsub) { acc(i) += s(i); i += 1 }
-            c += 1
-          }
-          j += 1
-        }
+        Iterator.single((sums, counts))
       }
+      val (totS, totN) = Rounds.foldInOrder(partials) { (a, b) =>
+        for (j <- 0 until m; c <- 0 until ksub) {
+          a._2(j)(c) += b._2(j)(c)
+          val acc = a._1(j)(c); val s = b._1(j)(c)
+          var i = 0
+          while (i < dsub) { acc(i) += s(i); i += 1 }
+        }
+        a
+      }.get
+      val next = books.map(_.map(_.clone))
       for (j <- 0 until m; c <- 0 until ksub if totN(j)(c) > 0)
         next(j)(c) = totS(j)(c).map(_ / totN(j)(c))
       books = next
       bc.destroy()
     }
-    cached.unpersist(blocking = false)
     Codebooks(m, dsub, books)
   }
 
@@ -189,14 +174,14 @@ object Pq {
     graft.core.SideDump.path("pq_books", base)
 
   def topKPq(spark: SparkSession, sfDir: String, k: Int = 5, numQueries: Int = 10,
-      m: Int = 8, ksub: Int = 16, rerank: Int = 50): DataFrame = {
-    import spark.implicits._
-    val corpus = Similarity.loadVectors(spark, sfDir)
-      .map(v => Vec(v.vec_id, l2normalize(v.v), 1.0))
-    val queries = corpus.filter(col("vec_id") < numQueries).collect().sortBy(_.vec_id)
-    topKPqCore(corpus, queries, k, m, ksub, rerank,
-      cb => dumpBooks(spark, cb, "pq_books", sfDir))
-  }
+      m: Int = 8, ksub: Int = 16, rerank: Int = 50): DataFrame =
+    Rounds.persisted(Similarity.loadVectors(spark, sfDir).rdd
+        .map(v => Vec(v.vec_id, l2normalize(v.v), 1.0))) { corpus =>
+      // the query collect is the first job: it also fills the cache
+      val queries = corpus.filter(_.vec_id < numQueries).collect().sortBy(_.vec_id)
+      topKPqCore(spark, corpus, queries, k, m, ksub, rerank,
+        cb => dumpBooks(spark, cb, "pq_books", sfDir))
+    }
 
   /** Dump a codebook as (subspace, code, v) rows — the only artifact
     * a PQ oracle takes on faith (the trainer); encode, the ADC table,
@@ -213,25 +198,53 @@ object Pq {
       kind, new java.io.File(sfDir).getName)
   }
 
+  /** A re-rank candidate: ADC distance, neighbor id, exact cosine. */
+  private type Cand = (Double, Long, Double)
+
+  /** (adc, id) ascending — the candidate order, a total order since
+    * ids are unique per query. */
+  private val byAdc: Ordering[Cand] = new Ordering[Cand] {
+    def compare(a: Cand, b: Cand): Int = {
+      val c = java.lang.Double.compare(a._1, b._1)
+      if (c != 0) c else java.lang.Long.compare(a._2, b._2)
+    }
+  }
+
+  /** Exact cosine descending, then id ascending — the final rank
+    * order. Cosines compare as SQL does (-0.0 = 0.0, NaN largest). */
+  private val bySim: Ordering[Cand] = new Ordering[Cand] {
+    def compare(a: Cand, b: Cand): Int = {
+      val c = if (a._3 == b._3) 0 else java.lang.Double.compare(b._3, a._3)
+      if (c != 0) c else java.lang.Long.compare(a._2, b._2)
+    }
+  }
+
   /** Train + encode + ADC-scan + exact-rerank over an arbitrary
-    * (already L2-normalized) corpus and query set — shared by the
-    * plain gate path above and the OPQ-rotated path ([[Opq]]), which
-    * differ only in the space the codes live in. */
-  private[sim] def topKPqCore(corpus: org.apache.spark.sql.Dataset[Vec],
+    * (already L2-normalized, `nrm` = 1, persisted) corpus and query set — shared
+    * by the plain gate path above and the OPQ-rotated path ([[Opq]]),
+    * which differ only in the space the codes live in.
+    *
+    * The tail is ONE job: per partition, one bounded heap per query
+    * keeps the `rerank` best (adc, id) candidates, each carrying its
+    * exact cosine (scored when it enters the heap); a `treeAggregate`
+    * merges the heaps to the GLOBAL (adc, id) top-`rerank` per query —
+    * a pure function of the corpus, independent of physical
+    * partitioning — and the driver ranks those by exact cosine. The
+    * result is a local relation of (query_id, neighbor_id, rank). */
+  private[sim] def topKPqCore(spark: SparkSession, corpus: RDD[Vec],
       queries: Array[Vec], k: Int, m: Int, ksub: Int,
       rerank: Int, onTrained: Codebooks => Unit = _ => ()): DataFrame = {
-    val spark = corpus.sparkSession
     import spark.implicits._
-    val cb = trainDistributed(corpus, m, ksub)
+    val cb = trainRows(corpus, m, ksub)
     onTrained(cb)
-    val bcCb = spark.sparkContext.broadcast(cb)
-    val bcQ = spark.sparkContext.broadcast(queries)
-    val bcTables = spark.sparkContext.broadcast(queries.map(q => adcTable(cb, q.v)))
-    // one pass: encode + ADC-score into per-query bounded heaps
-    val candidates = corpus.mapPartitions { rows =>
-      val cbv = bcCb.value; val qs = bcQ.value; val tables = bcTables.value
+    val bc = corpus.sparkContext.broadcast(
+      (cb, queries, queries.map(q => adcTable(cb, q.v))))
+    val none = Array.fill(queries.length)(Array.empty[Cand])
+    val cands = corpus.mapPartitions { rows =>
+      val (cbv, qs, tables) = bc.value
+      // max-heaps: the worst kept (adc, id) on top
       val heaps = Array.fill(qs.length)(
-        scala.collection.mutable.PriorityQueue.empty[(Double, Long)]) // max-heap: worst (largest dist) on top
+        scala.collection.mutable.PriorityQueue.empty[Cand](byAdc))
       rows.foreach { r =>
         val code = encode(cbv, r.v)
         var qi = 0
@@ -242,45 +255,27 @@ object Pq {
             var j = 0
             while (j < cbv.m) { d += t(j)(code(j) & 0xff); j += 1 }
             val h = heaps(qi)
-            if (h.size < rerank) h.enqueue((d, r.vec_id))
+            if (h.size < rerank) h.enqueue((d, r.vec_id, cosine(qs(qi), r)))
             else if (d < h.head._1 || (d == h.head._1 && r.vec_id < h.head._2)) {
-              h.dequeue(); h.enqueue((d, r.vec_id))
+              h.dequeue(); h.enqueue((d, r.vec_id, cosine(qs(qi), r)))
             }
           }
           qi += 1
         }
       }
-      heaps.iterator.zipWithIndex.flatMap { case (h, qi) =>
-        h.iterator.map { case (d, id) => (qs(qi).vec_id, id, d) }
+      Iterator.single(heaps.map(_.toArray.sorted(byAdc)))
+    }.treeAggregate(none)(mergeCands(rerank), mergeCands(rerank))
+    bc.destroy()
+    queries.indices.flatMap { qi =>
+      cands(qi).sorted(bySim).take(k).zipWithIndex.map { case (c, r) =>
+        (queries(qi).vec_id, c._2, r + 1L)
       }
-    }.toDF("query_id", "neighbor_id", "adc")
-      // GLOBAL candidate cut: per-partition heaps bound the emission
-      // (≤ |Q|·rerank rows each), then one tiny rank over their union
-      // fixes the candidate set at the global ADC top-`rerank` per
-      // query, (adc, id)-ordered — so the OUTPUT is a pure function of
-      // the corpus, independent of physical partitioning (the
-      // per-partition-union semantics this replaces changed with the
-      // partition count, which no SQL oracle could mirror honestly).
-      .withColumn("_r", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("query_id"))
-          .orderBy(col("adc"), col("neighbor_id"))))
-      .filter(col("_r") <= rerank)
-      .drop("_r")
-    // exact re-rank of the candidate union (≤ |Q|·rerank rows)
-    val byId = corpus.alias("c")
-    val rescored = candidates
-      .join(byId, col("neighbor_id") === col("c.vec_id"))
-      .as[(Long, Long, Double, Long, Array[Double], Double)]
-      .map { case (q, n, _, _, v, _) =>
-        val qv = bcQ.value(bcQ.value.indexWhere(_.vec_id == q))
-        Hit(q, n, cosine(qv, Vec(n, v, 1.0)))
-      }
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("neighbor_id"))
-    rescored.toDF()
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank").cast("long").as("rank"))
+    }.toDF("query_id", "neighbor_id", "rank")
   }
+
+  /** Per query, the `rerank` best (adc, id) of two sorted candidate
+    * lists. */
+  private def mergeCands(rerank: Int)(a: Array[Array[Cand]],
+      b: Array[Array[Cand]]): Array[Array[Cand]] =
+    a.indices.map(qi => (a(qi) ++ b(qi)).sorted(byAdc).take(rerank)).toArray
 }

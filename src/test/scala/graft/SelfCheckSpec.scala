@@ -25,6 +25,35 @@ class SelfCheckSpec extends AnyFunSuite {
     assert(a.errors === Map("q2" -> tricky))
   }
 
+  test("bench artifact line escapes the sf dir and query names; numbers stay %.3f") {
+    val sf = "/data/sf \"quoted\" \\ back"
+    assert(sf.contains('"') && sf.contains('\\'))
+    val q = "q\"odd\\name"
+    val results = Seq(
+      "q_wc" -> (Bench.Run(1.0, 12L, 3L), Bench.Run(1.25, 15L, 4L)),
+      q -> (Bench.Run(-1.0, 0L, 0L), Bench.Run(0.0004, 1L, 0L)))
+    val line = Bench.artifactLine(0.5, results, Seq("q_wc" -> "ab12"),
+      Seq(q -> "boom: \"bad\""), sf)
+    val a = SelfCheck.parse(line)
+    assert(a.queries === Map("q_wc" -> 1.0, q -> -1.0))
+    assert(a.errors === Map(q -> "boom: \"bad\""))
+    assert(a.plans === Map("q_wc" -> "ab12"))
+    assert(a.taskMs === Map("q_wc" -> 12L, q -> 0L))
+    val root = SelfCheck.mapper.readTree(line)
+    assert(root.get("sf").asText() === sf)
+    // key order and the %.3f seconds of the spliced line it replaces
+    assert(line.startsWith("{\"metric\":\"total\",\"value\":0.500,\"unit\":\"sec\",\"queries\":{\"q_wc\":1.000,"))
+    assert(line.contains("\"queries_max\":{\"q_wc\":1.250,"))
+    assert(line.contains("0.000}"))
+    import scala.jdk.CollectionConverters._
+    assert(root.fieldNames().asScala.toSeq === Seq("metric", "value", "unit", "queries", "queries_max", "task_ms",
+      "gc_ms", "task_ms_max", "gc_ms_max", "plans", "errors", "sf"))
+    val head = SelfCheck.mapper.readTree(
+      Bench.headlineLine(0.5, 2, 1, "target/bench_last.json", sf))
+    assert(head.get("sf").asText() === sf)
+    assert(head.get("n_errors").asInt() === 1)
+  }
+
   test("findings flags missing rows, negative values, and stray errors") {
     val full = SparkEntry.queries.keys.map(_ -> 0.1).toMap
     assert(SelfCheck.findings(SelfCheck.BenchArtifact(full, Map.empty)).isEmpty)

@@ -78,6 +78,20 @@ class KmeansSpec extends SparkSpec {
     assert(covPar >= 12, s"parallel seeding covered only $covPar/16 clusters")
   }
 
+  test("trainParallel is bit-reproducible: two calls, one corpus, equal centroids") {
+    // every round folds its per-partition partials in partition-id
+    // order, so repeating the call cannot reorder a float sum
+    val corpus = Similarity.loadVectors(spark, sf())
+    val a = Kmeans.trainParallel(corpus, 16, 2, rounds = 2)
+    val b = Kmeans.trainParallel(corpus, 16, 2, rounds = 2)
+    assert(a.map(_.cell).toSeq === b.map(_.cell).toSeq)
+    a.zip(b).foreach { case (x, y) =>
+      assert(x.v.map(java.lang.Double.doubleToRawLongBits).toSeq ===
+        y.v.map(java.lang.Double.doubleToRawLongBits).toSeq,
+        s"centroid ${x.cell} differs between two identical calls")
+    }
+  }
+
   test("seedParallel: rescan and incremental formulations are bit-identical") {
     // the r11 adjudication switch: gate-sized k takes the stateless
     // two-rescan rounds (per-round checkpoint overhead dominated the

@@ -84,13 +84,13 @@ class OpqSpec extends SparkSpec {
     // per-partition-union semantics amplified it by the partition
     // count, which is why the absolute floor below was once 0.95;
     // measured now: plain 0.24 vs rotated 0.88)
-    val plain = recallOf(sets(Pq.topKPqCore(ds, queries, k = 5, m = 8,
+    val plain = recallOf(sets(Pq.topKPqCore(spark, ds.rdd, queries, k = 5, m = 8,
       ksub = 8, rerank = 6)))
     val model = Pca.fit(ds)
     val perm = Opq.balancedAllocation(model.eigvals, 8)
-    val rot = Opq.rotate(ds, model, perm)
+    val rot = Opq.rotate(ds.rdd, model, perm)
     val rotQ = queries.map(q => Vec(q.vec_id, Opq.rotateOne(model, perm, q.v), 1.0))
-    val opq = recallOf(sets(Pq.topKPqCore(rot, rotQ, k = 5, m = 8,
+    val opq = recallOf(sets(Pq.topKPqCore(spark, rot, rotQ, k = 5, m = 8,
       ksub = 8, rerank = 6)))
     info(s"recall@5: plain PQ = $plain, OPQ-rotated = $opq")
     assert(opq >= plain, s"rotation should not hurt: $opq < $plain")

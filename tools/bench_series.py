@@ -8,15 +8,16 @@ median exceeds the threshold (seconds), plus the totals line and a
 task/GC attribution column from the LAST run's artifact (the
 attribution fields land per-artifact; the last run is the one kept
 as target/bench_last.json)."""
-import json, statistics, sys
+import argparse, json, statistics
 
-paths = [a for a in sys.argv[1:] if not a.startswith("--")]
-thr = 2.0
-for i, a in enumerate(sys.argv[1:]):
-    if a == "--threshold":
-        thr = float(sys.argv[1:][i + 1])
+ap = argparse.ArgumentParser(description="Median table of a bench series.")
+ap.add_argument("runs", nargs="+", help="bench artifact JSON files, oldest first")
+ap.add_argument("--threshold", type=float, default=2.0,
+                help="print only keys whose median exceeds this many seconds")
+args = ap.parse_args()
+thr = args.threshold
 
-runs = [json.load(open(p)) for p in paths]
+runs = [json.load(open(p)) for p in args.runs]
 totals = [r["value"] for r in runs]
 keys = sorted(runs[0]["queries"].keys())
 last = runs[-1]
