@@ -1,11 +1,12 @@
 package graft.sim
 
-import scala.reflect.ClassTag
-
+import org.apache.spark.SparkContext
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+import graft.core.Rounds
 import graft.sim.Similarity.Vec
 
 /** Distributed Lloyd's k-means over the embedding corpus — the
@@ -15,14 +16,16 @@ import graft.sim.Similarity.Vec
   * IVF probe metric agree.
   *
   * Scale design (100 TB posture): each call persists its corpus ONCE
-  * as an `RDD[Vec]` ([[Rounds.persisted]]) and every round — the
-  * k-means‖ φ, pick and weight passes and each narrow Lloyd round — is
-  * a plain scheduler job over those cached partitions, not a fresh
-  * Catalyst plan, codegen compile and parquet rescan. Centroids are
-  * broadcast; each partition returns k·dim partial sums (never the
-  * vectors), and the driver folds them in PARTITION-ID order
-  * ([[Rounds.foldInOrder]]), so a round is bit-reproducible for a
-  * fixed layout and the driver holds O(k·dim) state.
+  * as an `RDD[Vec]` ([[graft.core.Rounds.persisted]]) and every
+  * round — the first-k seed read, the k-means‖ φ, pick and weight
+  * passes (one carried-state formulation at every k), each narrow
+  * Lloyd round and each blocked one — is a plain scheduler job over
+  * cached partitions, not a fresh Catalyst plan, codegen compile and
+  * parquet rescan. Centroids are broadcast; each partition returns
+  * per-cell partial sums (never the vectors), and the driver folds
+  * them in PARTITION-ID order ([[graft.core.Rounds.foldInOrder]]), so
+  * every trainer is bit-reproducible for a fixed layout and the driver
+  * holds O(k·dim) state.
   *
   * Per-point assignment cost: every assignment pass goes through
   * [[CentroidIndex]] — an exact triangle-inequality-pruned nearest-
@@ -66,23 +69,28 @@ object Kmeans {
     * so oracles are seeding-agnostic), but if the first k vectors are
     * clustered it can strand Lloyd in a poor local optimum. The
     * 100 TB path is [[trainParallel]] (k-means‖ oversampling). */
-  def train(corpus: Dataset[Vec], k: Int, iters: Int): Array[Centroid] = {
-    val seeds = corpus.filter(col("vec_id") < k).collect().sortBy(_.vec_id)
-      .zipWithIndex.map { case (v, i) => Centroid(i, normalize(v.v)) }
-    trainFrom(corpus, seeds, iters)
-  }
+  def train(corpus: Dataset[Vec], k: Int, iters: Int): Array[Centroid] =
+    trainFirst(corpus, iters)(_.filter(_.vec_id < k).collect())
 
   /** [[train]] seeded from the first `k` vectors in vec_id ORDER
     * rather than by vec_id VALUE — for corpora whose id space is not
     * 0-dense (e.g. chunk vectors keyed doc_id << 32 | chunk_id, where
     * no id falls below k once the low docs land in another slice).
-    * Same determinism, same Lloyd rounds; a distributed sort-limit
+    * Same determinism, same Lloyd rounds; a `takeOrdered` by vec_id
     * replaces the id filter as the seed scan. */
-  def trainOrdered(corpus: Dataset[Vec], k: Int, iters: Int): Array[Centroid] = {
-    val seeds = corpus.orderBy(col("vec_id")).limit(k).collect().sortBy(_.vec_id)
-      .zipWithIndex.map { case (v, i) => Centroid(i, normalize(v.v)) }
-    trainFrom(corpus, seeds, iters)
-  }
+  def trainOrdered(corpus: Dataset[Vec], k: Int, iters: Int): Array[Centroid] =
+    trainFirst(corpus, iters)(_.takeOrdered(k)(Ordering.by((v: Vec) => v.vec_id)))
+
+  /** Lloyd from the seeds `firstK` reads off the persisted corpus —
+    * that read is the call's first job, so it fills the cache every
+    * Lloyd round then reads. */
+  private def trainFirst(corpus: Dataset[Vec], iters: Int)(
+      firstK: RDD[Vec] => Array[Vec]): Array[Centroid] =
+    Rounds.persisted(corpus.rdd) { rows =>
+      val seeds = firstK(rows).sortBy(_.vec_id)
+        .zipWithIndex.map { case (v, i) => Centroid(i, normalize(v.v)) }
+      trainRows(corpus, rows, seeds, iters, CentroidIndex.LinearBelow)
+    }
 
   /** Whether the last [[trainFrom]] run took the blocked-corpus
     * assignment path — observable for the spec, mirroring
@@ -104,8 +112,7 @@ object Kmeans {
     *    block's points instead of being paid per point. Assignment
     *    stays EXACT (same argmax, same lowest-index tie-break); only
     *    the work and the partial-sum merge order change — both merges
-    *    run in a fixed order ((cell, partition) for the blocked one,
-    *    partition id for [[lloyd]]). */
+    *    fold in partition-id order (per cell for the blocked one). */
   private[sim] def trainFrom(corpus: Dataset[Vec], seeds: Array[Centroid],
       iters: Int,
       blockedAbove: Int = CentroidIndex.LinearBelow): Array[Centroid] =
@@ -179,6 +186,23 @@ object Kmeans {
     while (i < acc.length) { acc(i) += v(i); i += 1 }
   }
 
+  /** Merge `b`'s per-cell (Σv, weight) partials into `a` (updated in
+    * place and returned) — the [[Rounds.foldInOrder]] merge of the
+    * sparse per-partition cell sums, so each cell's sums add up in
+    * partition-id order. */
+  private[sim] def mergeCells[W](plus: (W, W) => W)(
+      a: scala.collection.mutable.Map[Int, (Array[Double], W)],
+      b: scala.collection.mutable.Map[Int, (Array[Double], W)])
+      : scala.collection.mutable.Map[Int, (Array[Double], W)] = {
+    b.foreach { case (ci, (sv, sw)) =>
+      a.get(ci) match {
+        case None => a(ci) = (sv, sw)
+        case Some((av, aw)) => addInto(av, sv); a(ci) = (av, plus(aw, sw))
+      }
+    }
+    a
+  }
+
   /** splitmix64 → uniform double in [0,1) ([[graft.core.Mix]]) — the
     * deterministic "coin" k-means‖ selection flips per (vec_id,
     * round), so seeding is reproducible without any RNG state. */
@@ -190,10 +214,22 @@ object Kmeans {
     * 1 − max cosine to the current seed set, φ = total cost), so
     * seeds land proportional to how badly the current set covers the
     * data. Selection is DETERMINISTIC — the coin is a splitmix64 hash
-    * of (vec_id, round) — and each round is two narrow jobs over the
-    * persisted corpus (cost-sum, filter-collect); the driver holds
-    * only the ~ℓ·k·rounds oversampled seeds (O(|seeds|·d) memory —
-    * inherent to any broadcast-based k-means‖, MLlib included).
+    * of (vec_id, round) — and the driver holds only the ~ℓ·k·rounds
+    * oversampled seeds (O(|seeds|·d) memory — inherent to any
+    * broadcast-based k-means‖, MLlib included).
+    *
+    * One formulation at every k: each point CARRIES (best seed index,
+    * best score dot / ‖r‖) against the seeds so far, and a round scans
+    * only the seeds its predecessor picked ([[carry]]). Jobs over the
+    * persisted corpus: the lowest-id first seed (fills the cache);
+    * per round a φ job, which also computes and persists that round's
+    * carried state, and a pick job over it; then one weight job, which
+    * scans in the last round's picks and counts the carried argmax —
+    * 1 + 2·rounds + 1 in all, and no nearest-centroid sweep. The
+    * score's max is fl(max dot / ‖r‖) (correctly rounded division is
+    * monotone), so every cost is bit-equal to a full rescan's, and
+    * strict > over seeds in index order gives [[CentroidIndex]]'s
+    * first-best argmax.
     *
     * REDUCTION to k — two paths, switched on |seeds| (the r8 VERDICT
     * scale finding: the quality path's driver cost is quadratic):
@@ -204,219 +240,153 @@ object Kmeans {
     *    the gates train (k ≤ a few hundred).
     *  - |seeds| > `reduceDistributedAbove` (the k ≳ 10⁴ regime a
     *    100 TB IVF needs, where |seeds| ≈ ℓ·rounds·k): the reduction
-    *    itself becomes a Spark job — [[reduceSeedsDistributed]] —
+    *    itself becomes Spark jobs — [[reduceSeedsDistributed]] —
     *    with driver work O(|seeds|·log k) for the deterministic
     *    weighted sample plus O(k·d) per polish round. No quadratic
     *    driver stage anywhere; KmeansSpec pins the k = 4096 path.
     */
   def seedParallel(corpus: Dataset[Vec], k: Int, rounds: Int = 3,
       oversample: Double = 2.0,
-      reduceDistributedAbove: Int = ReduceDistributedAbove,
-      incrementalAbove: Int = IncrementalAbove): Array[Centroid] =
-    Rounds.persisted(corpus.rdd)(seedRows(corpus, _, k, rounds, oversample,
-      reduceDistributedAbove, incrementalAbove))
+      reduceDistributedAbove: Int = ReduceDistributedAbove): Array[Centroid] =
+    Rounds.persisted(corpus.rdd)(seedRows(_, k, rounds, oversample,
+      reduceDistributedAbove))
 
-  private val ReduceDistributedAbove = 1024
-  private val IncrementalAbove = 1024
+  private[sim] val ReduceDistributedAbove = 1024
 
-  /** [[seedParallel]] over `corpus` already persisted as `rows` (the
-    * incremental path reads `corpus` and releases `rows`). */
-  private def seedRows(corpus: Dataset[Vec], rows: RDD[Vec], k: Int,
-      rounds: Int, oversample: Double, reduceDistributedAbove: Int,
-      incrementalAbove: Int): Array[Centroid] = {
-    val spark = corpus.sparkSession
+  /** Rows per tile of the [[carry]] scan. */
+  private val Tile = 512
+
+  /** One partition's carried seeding state, in row order: each row's
+    * best seed index and best score dot / ‖r‖ (‖r‖ = 0 scores as 1). */
+  private final case class Carried(best: Array[Int], score: Array[Double]) {
+    /** The partition's share of φ: Σ (1 − score), in row order. */
+    def cost: Double = {
+      var s = 0.0; var p = 0
+      while (p < score.length) { s += 1.0 - score(p); p += 1 }
+      s
+    }
+  }
+
+  /** `prev` (null: no seeds yet) with the `fresh` seeds, numbered from
+    * `base`, scanned in. TILED: seeds are the outer loop over
+    * [[Tile]]-row tiles, so the new-seed matrix streams once per tile
+    * rather than once per row (k-means‖ seeds are spread by
+    * construction, which defeats cluster-bound pruning — BENCH_NOTES
+    * r10). Per row the seeds are still scanned in index order with a
+    * strict >, so the state is bit-identical to the naive loop. */
+  private def carry(rows: Iterator[Vec], prev: Carried,
+      fresh: Array[Array[Double]], base: Int): Carried = {
+    val best = new scala.collection.mutable.ArrayBuilder.ofInt
+    val score = new scala.collection.mutable.ArrayBuilder.ofDouble
+    var p = 0
+    rows.grouped(Tile).foreach { group =>
+      val tile = group.toArray
+      val n = tile.length
+      val ti = new Array[Int](n)
+      val ts = new Array[Double](n)
+      var q = 0
+      while (q < n) {
+        if (prev == null) { ti(q) = -1; ts(q) = Double.NegativeInfinity }
+        else { ti(q) = prev.best(p + q); ts(q) = prev.score(p + q) }
+        q += 1
+      }
+      var i = 0
+      while (i < fresh.length) {
+        val sv = fresh(i)
+        q = 0
+        while (q < n) {
+          val r = tile(q); val rv = r.v
+          var dot = 0.0; var j = 0
+          while (j < rv.length) { dot += rv(j) * sv(j); j += 1 }
+          val s = dot / (if (r.nrm == 0.0) 1.0 else r.nrm)
+          if (s > ts(q)) { ts(q) = s; ti(q) = base + i }
+          q += 1
+        }
+        i += 1
+      }
+      best ++= ti; score ++= ts
+      p += n
+    }
+    Carried(best.result(), score.result())
+  }
+
+  /** [[seedParallel]] over `corpus` already persisted as `rows`. */
+  private def seedRows(rows: RDD[Vec], k: Int, rounds: Int,
+      oversample: Double, reduceDistributedAbove: Int): Array[Centroid] = {
     val sc = rows.sparkContext
-    // SEEDING path switch (r11 adjudication of the r10 rebuild): the
-    // carried-state machinery below saves O(n·|seeds|·d) rescans per
-    // round but pays ~3 extra Spark jobs + a localCheckpoint
-    // materialization PER ROUND — fixed costs that dominate at gate
-    // k (k = 256: isolated singles showed the in-suite 2.1 → 4.9 s
-    // move was exactly this overhead) and vanish into the 19-minute
-    // train they 3.2× at k = 16 384. Below the threshold take the
-    // two-rescan formulation; the outputs are BIT-IDENTICAL (max is
-    // order-insensitive, both scan seeds in index order with
-    // strict->; KmeansSpec pins path equality), so gate hashes do
-    // not move with the switch.
-    lastSeedIncremental = k > incrementalAbove
-    // the incremental rounds read `corpus`, so past the switch nothing
-    // re-reads `rows`: drop its persist before a job can fill it
-    if (lastSeedIncremental) rows.unpersist(blocking = false)
     // the lowest-id vector; as the first job over `rows` it also fills
     // the persisted corpus every later round reads
     val first = Rounds.foldInOrder(rows)((a, b) => if (b.vec_id < a.vec_id) b else a)
       .getOrElse(throw new NoSuchElementException("seedParallel: empty corpus"))
     var seeds: Array[Array[Double]] = Array(normalize(first.v))
-    def seedCost(r: Vec, ss: Array[Array[Double]]): Double = {
-      var best = Double.NegativeInfinity
-      var i = 0
-      while (i < ss.length) {
-        var dot = 0.0; var j = 0
-        val sv = ss(i); val rv = r.v
-        while (j < rv.length) { dot += rv(j) * sv(j); j += 1 }
-        if (dot > best) best = dot
-        i += 1
-      }
-      1.0 - best / (if (r.nrm == 0.0) 1.0 else r.nrm)
+    var fresh = seeds // picked, but not yet scanned into `state`
+    var state: RDD[Carried] = null
+    // a persisted state block that is lost recomputes through these,
+    // so they live until the weights are in
+    val broadcasts = scala.collection.mutable.ArrayBuffer.empty[Broadcast[_]]
+    // per partition: `out` of the carried state with `fresh` scanned in
+    def scanFresh[U: scala.reflect.ClassTag](out: Carried => U): RDD[U] = {
+      val bc = sc.broadcast(fresh)
+      broadcasts += bc
+      val base = seeds.length - fresh.length
+      if (state == null) rows.mapPartitions(it => Iterator.single(out(carry(it, null, bc.value, base))))
+      else rows.zipPartitions(state)((it, st) => Iterator.single(out(carry(it, st.next(), bc.value, base))))
     }
-    val weights: Map[Int, Long] = if (!lastSeedIncremental) {
-      // ── small-k: stateless two-rescan rounds ──────────────────────
+    val counts = try {
       for (r <- 1 to rounds) {
-        val bc = sc.broadcast(seeds)
+        val prev = state
+        if (fresh.nonEmpty) {
+          state = scanFresh(identity).persist(StorageLevel.MEMORY_AND_DISK)
+          fresh = Array.empty
+        }
         // φ from per-partition partials in partition-id order: a
         // task-completion-order sum can differ in the last ulp and
-        // flip borderline hash-coin selections
-        val phi = Rounds.foldInOrder(rows.mapPartitions { it =>
-          Iterator.single(it.foldLeft(0.0)((a, x) => a + seedCost(x, bc.value)))
-        })(_ + _).getOrElse(0.0)
+        // flip borderline hash-coin selections. This job fills `state`.
+        val phi = Rounds.foldInOrder(state.map(_.cost))(_ + _).getOrElse(0.0)
+        if (prev != null && (prev ne state)) prev.unpersist(blocking = false)
         if (phi > 0) {
           val threshold = oversample * k / phi
-          val picked = rows.filter(x => hashUniform(x.vec_id * 1000003L + r) <
-              threshold * seedCost(x, bc.value))
-            .collect().sortBy(_.vec_id) // stable order for reproducibility
-          seeds = seeds ++ picked.map(v => normalize(v.v))
+          val picked = rows.zipPartitions(state) { (it, st) =>
+            val score = st.next().score
+            it.zipWithIndex.filter { case (x, p) =>
+              hashUniform(x.vec_id * 1000003L + r) < threshold * (1.0 - score(p))
+            }.map(_._1)
+          }.collect().sortBy(_.vec_id) // stable order for reproducibility
+          fresh = picked.map(v => normalize(v.v))
+          seeds = seeds ++ fresh
         }
-        bc.destroy()
       }
-      // weights: one pruned-exact nearest pass (identical first-best
-      // contract to the carried argmax the incremental path reads)
+      // weights: points served by each oversampled seed, counted off the
+      // carried argmax once the last round's picks are scanned in
       val n = seeds.length
-      val asSeedCents = seeds.zipWithIndex.map { case (v, i) => Centroid(i, v) }
-      val bcS = sc.broadcast(CentroidIndex.build(asSeedCents))
-      val counts = Rounds.foldInOrder(rows.mapPartitions { it =>
-        val idx = bcS.value
-        val c = new Array[Long](n)
-        it.foreach(x => c(idx.nearest(x)) += 1)
-        Iterator.single(c)
+      Rounds.foldInOrder(scanFresh { c =>
+        val a = new Array[Long](n)
+        c.best.foreach(i => a(i) += 1)
+        a
       }) { (a, b) =>
         var i = 0
         while (i < n) { a(i) += b(i); i += 1 }
         a
       }.getOrElse(new Array[Long](n))
-      bcS.destroy()
-      counts.indices.collect { case i if counts(i) > 0 => i -> counts(i) }.toMap
-    } else seedParallelIncremental(corpus, k, rounds, oversample,
-      s => seeds = s, seeds)
-    val w = seeds.indices.map(i => weights.getOrElse(i, 0L).toDouble.max(1e-9)).toArray
+    } finally {
+      if (state != null) state.unpersist(blocking = false)
+      broadcasts.foreach(_.destroy())
+    }
+    reduceSeeds(sc, seeds, counts.map(_.toDouble.max(1e-9)), k,
+      reduceDistributedAbove)
+  }
+
+  /** The oversampled `seeds`, weighted by the points each serves,
+    * reduced to `k` centroids (see [[seedParallel]]). */
+  private[sim] def reduceSeeds(sc: SparkContext, seeds: Array[Array[Double]],
+      w: Array[Double], k: Int, reduceDistributedAbove: Int): Array[Centroid] = {
     lastReductionDistributed = seeds.length > reduceDistributedAbove
     val cents: Array[Array[Double]] =
-      if (lastReductionDistributed) reduceSeedsDistributed(spark, seeds, w, k)
+      if (lastReductionDistributed) reduceSeedsDistributed(sc, seeds, w, k)
       else reduceSeedsDriver(seeds, w, k)
     // pad (degenerate corpora smaller than k) by reusing seeds
     val padded = (0 until k).map(i => cents(i % cents.length)).toArray
     padded.zipWithIndex.map { case (v, i) => Centroid(i, v) }
-  }
-
-  /** Which seeding formulation the last [[seedParallel]] call took —
-    * observable for the path-equality spec. */
-  @volatile private[sim] var lastSeedIncremental: Boolean = false
-
-  /** The carried-state (incremental) k-means‖ rounds + weight count —
-    * [[seedParallel]]'s large-k body. Mutates the caller's seed set
-    * via `setSeeds`; returns the per-seed served-point weights. */
-  private def seedParallelIncremental(corpus: Dataset[Vec], k: Int,
-      rounds: Int, oversample: Double,
-      setSeeds: Array[Array[Double]] => Unit,
-      seeds0: Array[Array[Double]]): Map[Int, Long] = {
-    import corpus.sparkSession.implicits._
-    val spark = corpus.sparkSession
-    var seeds: Array[Array[Double]] = seeds0
-    // INCREMENTAL cost state — the classic k-means‖ formulation: each
-    // point carries (bestSeedIdx, bestDot) against the seed set so
-    // far, updated by scanning ONLY each round's new seeds. The
-    // values are bit-identical to a full rescan (max is
-    // order-insensitive; strict-> with in-index-order scanning keeps
-    // the linear scan's first-best tie-break), but the work per round
-    // drops from O(n·|seeds|·d) TWICE (φ pass + pick pass) to one
-    // O(n·|new|·d) update — and the final weight pass becomes a FREE
-    // count over the carried argmax instead of an O(n·|seeds|·d)
-    // nearest sweep. (r10: at n = 10⁶, k = 16 384 the two-rescan
-    // formulation held ~70% of the 19-minute train; BENCH_NOTES.)
-    // State rows stay in corpus partition order (narrow map +
-    // localCheckpoint), so the φ partial-sum fold order — and with it
-    // every borderline hash-coin selection — is unchanged.
-    def updateState(prev: Dataset[(Vec, Int, Double)],
-        newSeeds: Array[Array[Double]], base: Int): Dataset[(Vec, Int, Double)] = {
-      // TILED scan (seeds outer over 512-point blocks): k-means‖ seeds
-      // are spread BY CONSTRUCTION, which defeats cluster-bound pruning
-      // (a floor-bounded CentroidIndex variant was measured at ≤ 25%
-      // — BENCH_NOTES r10) — but the unpruned per-point loop is
-      // memory-bound re-streaming the ~17 MB new-seed matrix per
-      // point. Tiling streams it once per 512-point block (256× less
-      // traffic); dots, scan order (seed index ascending per point)
-      // and the strict-> comparison are unchanged, so the carried
-      // state is bit-identical to the naive loop.
-      val bc = spark.sparkContext.broadcast(newSeeds)
-      val next = prev.mapPartitions { it =>
-        val ns = bc.value
-        it.grouped(512).flatMap { blockSeq =>
-          val block = blockSeq.toArray
-          val bi = new Array[Int](block.length)
-          val bd = new Array[Double](block.length)
-          var p = 0
-          while (p < block.length) {
-            bi(p) = block(p)._2; bd(p) = block(p)._3; p += 1
-          }
-          var i = 0
-          while (i < ns.length) {
-            val sv = ns(i)
-            var q = 0
-            while (q < block.length) {
-              val rv = block(q)._1.v
-              var dot = 0.0; var j = 0
-              while (j < rv.length) { dot += rv(j) * sv(j); j += 1 }
-              if (dot > bd(q)) { bd(q) = dot; bi(q) = base + i }
-              q += 1
-            }
-            i += 1
-          }
-          block.iterator.zipWithIndex.map { case ((x, _, _), p2) =>
-            (x, bi(p2), bd(p2))
-          }
-        }
-      }.localCheckpoint()
-      next.count() // materialize before releasing the previous state
-      prev.unpersist()
-      bc.destroy()
-      next
-    }
-    def costOf(x: Vec, bestDot: Double): Double =
-      1.0 - bestDot / (if (x.nrm == 0.0) 1.0 else x.nrm)
-    var state: Dataset[(Vec, Int, Double)] =
-      updateState(
-        corpus.map(x => (x, -1, Double.NegativeInfinity)), seeds, 0)
-    for (r <- 1 to rounds) {
-      // φ summed from per-partition partials in FIXED partition-index
-      // order: Dataset.reduce folds in task-completion order, which
-      // can differ across runs in the last ulp and flip borderline
-      // hash-coin selections — breaking the "deterministic without RNG
-      // state" contract. Partition-ordered summation is reproducible
-      // for a fixed partitioning of the corpus.
-      val phi = state.mapPartitions { it =>
-        val s = it.foldLeft(0.0)((a, x) => a + costOf(x._1, x._3))
-        Iterator((org.apache.spark.TaskContext.getPartitionId(), s))
-      }.collect().sortBy(_._1).map(_._2).sum
-      if (phi > 0) {
-        val threshold = oversample * k / phi
-        val picked = state
-          .filter { case (x, _, bd) =>
-            hashUniform(x.vec_id * 1000003L + r) < threshold * costOf(x, bd)
-          }
-          .map(_._1)
-          .collect().sortBy(_.vec_id) // stable order for reproducibility
-        val newSeeds = picked.map(v => normalize(v.v))
-        if (newSeeds.nonEmpty) {
-          state = updateState(state, newSeeds, seeds.length)
-          seeds = seeds ++ newSeeds
-        }
-      }
-    }
-    // weights: points served by each oversampled seed — read straight
-    // off the carried argmax (identical first-best contract to the
-    // pruned/linear nearest sweep this replaces)
-    val weights = state.map(_._2).groupByKey(identity).count().collect().toMap
-    state.unpersist()
-    setSeeds(seeds)
-    weights
   }
 
   /** Which reduction path the last [[seedParallel]] call took —
@@ -464,7 +434,7 @@ object Kmeans {
   }
 
   /** SCALE reduction (large seed sets — the k ≳ 10⁴ IVF regime): the
-    * seed summaries become a small Dataset and the reduction runs as
+    * seed summaries become a small RDD and the reduction runs as
     * Spark jobs, so no driver stage is super-linear in |seeds|.
     *
     *  1. Init: deterministic weighted sample of k seeds (A-Res keys,
@@ -474,28 +444,30 @@ object Kmeans {
     *     O(|seeds| log k) partial sort.
     *  2. Polish: `polishRounds` distributed WEIGHTED Lloyd rounds
     *     over the seed summaries — centroids broadcast (k·d), per-
-    *     partition partial sums, merged on the driver in FIXED
-    *     (cell, partition) order so the result is bit-reproducible
-    *     for a fixed partitioning (same discipline as φ). Driver
-    *     work per round: O(k·d) merge; the O(|seeds|·k·d) assignment
-    *     runs on executors.
+    *     partition per-cell partial sums, each cell's merged in
+    *     partition-id order ([[Rounds.foldInOrder]]) so the result is
+    *     bit-reproducible (same discipline as φ). Driver work per
+    *     round: O(k·d) merge; the O(|seeds|·k·d) assignment runs on
+    *     executors.
     *
     * Empty cells keep their previous centroid; output unit-norm. */
-  private def reduceSeedsDistributed(spark: SparkSession,
+  private def reduceSeedsDistributed(sc: SparkContext,
       seeds: Array[Array[Double]], w: Array[Double], k: Int,
       polishRounds: Int = 5): Array[Array[Double]] = {
-    import spark.implicits._
     val kEff = math.min(k, seeds.length)
     val init: Array[Array[Double]] = seeds.indices
       .map(i => (math.log(hashUniform(0x5eed5a1dL * 1000003L + i)) / w(i), i))
       .sortBy { case (key, i) => (-key, i) } // largest key wins (u^(1/w) order)
       .take(kEff).map(_._2).sorted.map(seeds(_)).toArray
     var cents = init
-    val ds = seeds.indices.map(i => (seeds(i), w(i))).toDS()
+    // at most one slice per core: the polish sums fold per slice, so
+    // the slicing fixes the bits
+    val summaries = sc.parallelize(seeds.indices.map(i => (seeds(i), w(i))),
+      math.min(math.max(seeds.length, 1), sc.defaultParallelism))
     for (_ <- 0 until polishRounds) {
-      val bc = spark.sparkContext.broadcast(CentroidIndex.build(
+      val bc = sc.broadcast(CentroidIndex.build(
         cents.zipWithIndex.map { case (v, i) => Centroid(i, v) }))
-      val partials = ds.mapPartitions { it =>
+      val merged = Rounds.foldInOrder(summaries.mapPartitions { it =>
         val cs = bc.value
         val sums = scala.collection.mutable.Map.empty[Int, (Array[Double], Double)]
         it.foreach { case (v, wt) =>
@@ -506,19 +478,12 @@ object Kmeans {
           while (j < v.length) { sv(j) += wt * v(j); j += 1 }
           sums(ci) = (sv, sw + wt)
         }
-        val pid = org.apache.spark.TaskContext.getPartitionId()
-        sums.iterator.map { case (ci, (sv, sw)) => (ci, pid, sv, sw) }
-      }.collect().sortBy { case (ci, pid, _, _) => (ci, pid) }
-      val merged = new Array[Array[Double]](cents.length)
-      val mw = new Array[Double](cents.length)
-      partials.foreach { case (ci, _, sv, sw) =>
-        if (merged(ci) == null) merged(ci) = new Array[Double](sv.length)
-        var j = 0
-        while (j < sv.length) { merged(ci)(j) += sv(j); j += 1 }
-        mw(ci) += sw
-      }
-      cents = cents.indices.map(c =>
-        if (mw(c) > 0) normalize(merged(c)) else cents(c)).toArray
+        Iterator.single(sums)
+      })(mergeCells[Double](_ + _)).getOrElse(scala.collection.mutable.Map.empty)
+      cents = cents.indices.map(c => merged.get(c) match {
+        case Some((sv, sw)) if sw > 0 => normalize(sv)
+        case _ => cents(c)
+      }).toArray
       bc.destroy()
     }
     cents
@@ -538,22 +503,27 @@ object Kmeans {
       rounds: Int = 3, oversample: Double = 2.0): Array[Centroid] =
     // one persisted corpus for the seeding rounds and Lloyd together
     Rounds.persisted(corpus.rdd) { rows =>
-      val seeds = seedRows(corpus, rows, k, rounds, oversample,
-        ReduceDistributedAbove, IncrementalAbove)
+      val seeds = seedRows(rows, k, rounds, oversample, ReduceDistributedAbove)
       trainRows(corpus, rows, seeds, iters, CentroidIndex.LinearBelow)
     }
 
   /** Mean within-cluster cosine (×1e6, integer) — the spherical
-    * k-means objective; must be non-decreasing over training. */
+    * k-means objective; must be non-decreasing over training. Summed
+    * in partition-id order, so it is deterministic for a fixed layout. */
   def cohesionMicro(corpus: Dataset[Vec], cents: Array[Centroid]): Long = {
-    import corpus.sparkSession.implicits._
     val bc = corpus.sparkSession.sparkContext.broadcast(CentroidIndex.build(cents))
-    val (s, n) = corpus.map { r =>
-      val c = bc.value.cents(bc.value.nearest(r))
-      var dot = 0.0; var j = 0
-      while (j < r.v.length) { dot += r.v(j) * c.v(j); j += 1 }
-      (dot / r.nrm, 1L)
-    }.reduce((a, b) => (a._1 + b._1, a._2 + b._2))
+    val (s, n) = Rounds.foldInOrder(corpus.rdd.mapPartitions { it =>
+      val idx = bc.value
+      var s = 0.0; var n = 0L
+      it.foreach { r =>
+        val c = idx.cents(idx.nearest(r))
+        var dot = 0.0; var j = 0
+        while (j < r.v.length) { dot += r.v(j) * c.v(j); j += 1 }
+        s += dot / r.nrm; n += 1
+      }
+      Iterator.single((s, n))
+    })((a, b) => (a._1 + b._1, a._2 + b._2)).getOrElse((0.0, 0L))
+    bc.destroy()
     math.round(s / n * 1e6)
   }
 
@@ -561,10 +531,10 @@ object Kmeans {
     * [[topKIvfTrained]], [[topKIvfTrainedPar]]), by corpus dir
     * basename; each gate's oracle names its own for the corpus dir it
     * is given. Each gate dumps ITS OWN run's centroids under its own
-    * kind: `train`'s partial-sum merge order is scheduler-dependent in
-    * the last ulp, so two train() calls may not be bit-identical — the
-    * run-scoped dump captures exactly the codebook the gate output
-    * used. */
+    * kind, so the oracle reads exactly the codebook the gate output
+    * used — whichever trainer built it. (Every trainer folds its
+    * partials in partition-id order, so two calls over one corpus
+    * layout give the same bits; KmeansSpec pins that.) */
   def cellsDumpPath(base: String): String =
     graft.core.SideDump.path("kmeans_cells_cents", base)
   def ivfTrainedDumpPath(base: String): String =
@@ -627,48 +597,5 @@ object Kmeans {
     corpus.map(r => bc.value.nearest(r))
       .toDF("cell")
       .groupBy(col("cell")).agg(count(lit(1)).as("n"))
-  }
-}
-
-/** The round discipline every trainer in this package shares: persist
-  * a call's corpus once, run each round as a plain scheduler job over
-  * it, and fold the per-partition partials in partition-id order. */
-private[sim] object Rounds {
-
-  /** `body` over `rows` persisted (MEMORY_AND_DISK: spills rather than
-    * OOMs at corpus scale); released when `body` returns. The first
-    * job `body` runs over `rows` fills the cache. */
-  def persisted[A](rows: RDD[Vec])(body: RDD[Vec] => A): A = {
-    rows.persist(StorageLevel.MEMORY_AND_DISK)
-    try body(rows) finally { rows.unpersist(blocking = false); () }
-  }
-
-  /** Fold `partials` in PARTITION-ID order: each partition's elements
-    * are reduced in row order, then the partitions' results left to
-    * right by id — a fixed float summation order, so a fold is
-    * bit-reproducible for a fixed input layout (where a
-    * task-completion-order reduce is not). The fold is HIERARCHICAL
-    * past `fanIn` partitions: each extra reduce level groups
-    * pid / fanIn and folds each group sorted by pid, so the driver
-    * never collects more than `fanIn` partials (P·d² doubles would be
-    * ≈13 GB for a PCA at 800k partitions × d = 64). At P ≤ fanIn no
-    * extra stage runs. `merge` may update and return its left
-    * argument when `partials` are built per task (not cached rows).
-    * None when `partials` is empty. */
-  def foldInOrder[T: ClassTag](partials: RDD[T], fanIn: Int = 64)(
-      merge: (T, T) => T): Option[T] = {
-    require(fanIn >= 2, "foldInOrder: fanIn must be >= 2")
-    def fold(ps: Iterable[(Int, T)]): T = ps.toArray.sortBy(_._1).map(_._2).reduceLeft(merge)
-    var cur: RDD[(Int, T)] = partials.mapPartitionsWithIndex { (pid, it) =>
-      if (it.hasNext) Iterator.single(pid -> it.reduceLeft(merge)) else Iterator.empty
-    }
-    var bound = partials.getNumPartitions
-    while (bound > fanIn) {
-      bound = (bound + fanIn - 1) / fanIn
-      cur = cur.map { case (pid, t) => (pid / fanIn, (pid, t)) }
-        .groupByKey(bound).map { case (g, ps) => (g, fold(ps)) }
-    }
-    val top = cur.collect()
-    if (top.isEmpty) None else Some(fold(top))
   }
 }

@@ -3,6 +3,7 @@ package graft.sim
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
+import graft.core.Rounds
 import Similarity.Vec
 
 /** OPQ-style rotation for product quantization — the eigenvalue-

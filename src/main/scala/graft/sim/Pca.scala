@@ -3,6 +3,7 @@ package graft.sim
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.Rounds
 import graft.sim.Similarity.Vec
 
 /** Distributed PCA / whitening over the embedding column — the

@@ -1,6 +1,7 @@
 package graft.sim
 
 import org.apache.spark.sql.Dataset
+import graft.core.Rounds
 import graft.sim.Kmeans.Centroid
 import graft.sim.Similarity.Vec
 
@@ -240,23 +241,22 @@ object PointBlocks {
     * EXACT, so the switch changes work, never results. */
   private[sim] val ScanBelow = 8192
 
-  /** One blocked Lloyd assignment-and-sum pass: per partition, the
-    * per-block pruning structure refreshes only on block change
-    * (blocks are contiguous after [[prepare]]'s sort) and each point
-    * warm-starts from the previous same-block winner. Kernel by k:
-    * the ψ-sorted [[BlockScan]] below [[ScanBelow]] centroids, the
-    * [[CentroidIndex]] coarse bound above (see [[ScanBelow]]) — both
-    * exact. Per-cell (Σv, n) partials come back tagged with the
-    * partition id so the driver merges them in FIXED (cell,
-    * partition) order — bit-reproducible for a fixed partitioning,
-    * the same discipline as the k-means‖ φ and polish merges. */
+  /** One blocked Lloyd assignment-and-sum pass, one job over the
+    * blocked corpus's rows: per partition, the per-block pruning
+    * structure refreshes only on block change (blocks are contiguous
+    * after [[prepare]]'s sort) and each point warm-starts from the
+    * previous same-block winner. Kernel by k: the ψ-sorted
+    * [[BlockScan]] below [[ScanBelow]] centroids, the [[CentroidIndex]]
+    * coarse bound above (see [[ScanBelow]]) — both exact. Each cell's
+    * (Σv, n) partials merge in partition-id order
+    * ([[graft.core.Rounds.foldInOrder]]) — bit-reproducible for a fixed
+    * partitioning, the same discipline as the k-means‖ φ and polish
+    * merges. Returns the non-empty cells in ascending order. */
   def assignSum(blocked: Dataset[Blocked], model: Model,
       cents: Array[Centroid]): Array[(Int, Array[Double], Long)] = {
-    val spark = blocked.sparkSession
-    import spark.implicits._
     val idx = if (cents.length < ScanBelow) null else CentroidIndex.build(cents)
-    val bc = spark.sparkContext.broadcast((model, cents, idx))
-    val partials = blocked.mapPartitions { it =>
+    val bc = blocked.sparkSession.sparkContext.broadcast((model, cents, idx))
+    val merged = Rounds.foldInOrder(blocked.rdd.mapPartitions { it =>
       val (m, cs, ix) = bc.value
       var cur = -1
       var scan: BlockScan = null
@@ -279,20 +279,9 @@ object PointBlocks {
         while (j < b.v.length) { sv(j) += b.v(j); j += 1 }
         sums(ci) = (sv, sn + 1L)
       }
-      val pid = org.apache.spark.TaskContext.getPartitionId()
-      sums.iterator.map { case (ci, (sv, sn)) => (ci, pid, sv, sn) }
-    }.collect().sortBy { case (ci, pid, _, _) => (ci, pid) }
+      Iterator.single(sums)
+    })(Kmeans.mergeCells[Long](_ + _)).getOrElse(scala.collection.mutable.Map.empty)
     bc.destroy() // per-round broadcast, same discipline as the narrow path
-    val merged = scala.collection.mutable.LinkedHashMap.empty[Int, (Array[Double], Long)]
-    partials.foreach { case (ci, _, sv, sn) =>
-      merged.get(ci) match {
-        case None => merged(ci) = (sv, sn)
-        case Some((av, an)) =>
-          var j = 0
-          while (j < sv.length) { av(j) += sv(j); j += 1 }
-          merged(ci) = (av, an + sn)
-      }
-    }
-    merged.iterator.map { case (ci, (sv, sn)) => (ci, sv, sn) }.toArray
+    merged.toArray.sortBy(_._1).map { case (ci, (sv, sn)) => (ci, sv, sn) }
   }
 }

@@ -2,6 +2,7 @@ package graft.sim
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.core.Rounds
 import Similarity.{Vec, cosine}
 
 /** Product-quantization ANN — the memory-compressed scale path: the

@@ -2,6 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.Rounds
 
 /** TRAINED document-quality classifier: feature-hashed bag-of-words
   * + full-batch logistic regression — the fastText/CCNet-style
@@ -115,25 +116,20 @@ object QualityClassifier {
     * the trained model and the per-iteration mean log-loss trace
     * (computed in the SAME pass as the gradient — no extra job).
     *
-    * Driver load is bounded like [[graft.sim.Pca.fit]]: past `fanIn`
-    * partitions the per-partition (dim+3)-double partials fold through
-    * deterministic tree levels (group = pid / fanIn, fold sorted by
-    * pid) before the collect — at dim 4096 and 800k partitions the
-    * flat collect would be ~26 GB per iteration; the tree caps it at
-    * fanIn partials. Zero extra stages at gate scale (P < fanIn). */
+    * The examples are persisted once ([[graft.core.Rounds.persisted]])
+    * and each iteration is one plain scheduler job over the cached
+    * partitions, not a fresh Catalyst plan and codegen compile (the
+    * r18 stage audit showed ~40 sequential ~10 ms-task micro-stages
+    * whose wall was all planning floor). The first iteration fills the
+    * cache and its example count is the n every iteration divides by.
+    * The per-partition (dim+3)-double partials fold in partition-id
+    * order ([[graft.core.Rounds.foldInOrder]]), HIERARCHICAL past
+    * `fanIn` partitions — at dim 4096 and 800k partitions a flat
+    * collect would be ~26 GB per iteration; the tree caps it at fanIn
+    * partials, and at gate scale (P < fanIn) no extra stage runs. */
   def train(ex: Dataset[Example], dim: Int, iters: Int = 30,
       lr: Double = 8.0, l2: Double = 1e-6,
-      momentum: Double = 0.95, fanIn: Int = 64): (Model, Array[Double]) = {
-    val spark = ex.sparkSession
-    require(fanIn >= 2, "train: fanIn must be >= 2")
-    // the loop runs on the PERSISTED RDD, not the Dataset: each
-    // iteration is then a plain scheduler job over cached partitions
-    // instead of a fresh Catalyst/AQE plan + codegen compile — the
-    // r18 stage audit showed ~40 sequential ~10 ms-task micro-stages
-    // whose wall was all planning floor. Same partitions, same
-    // per-partition row order, same sorted driver fold ⇒ the weight
-    // trajectory is bit-identical.
-    //
+      momentum: Double = 0.95, fanIn: Int = 64): (Model, Array[Double]) =
     // Storage-level tradeoff (r19, measured): object caching holds
     // boxed Example rows (one Array[Int] per row) — several× the
     // columnar footprint, more GC pressure at production corpus
@@ -143,75 +139,56 @@ object QualityClassifier {
     // runs. At a corpus where the example set pressures the heap,
     // flip this to MEMORY_AND_DISK_SER — the deser cost is per-pass
     // linear while GC/spill of object caching is superlinear.
-    val cached = ex.rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val n = cached.count().toDouble
-    require(n > 0, "train: empty example set")
-    val numParts = cached.getNumPartitions
-    var m = Model(dim, new Array[Double](dim), 0.0)
-    val losses = new Array[Double](iters)
-    // heavy-ball momentum: full-batch GD on a convex loss converges
-    // an order of magnitude faster with it, and it stays deterministic
-    val vel = new Array[Double](dim)
-    var velB = 0.0
-    def foldSorted(partials: Array[(Int, Array[Double], Double, Double, Long)])
-        : (Array[Double], Double, Double, Long) = {
-      val sorted = partials.sortBy(_._1)
-      val g = new Array[Double](dim)
-      var gb = 0.0; var loss = 0.0; var cnt = 0L
-      sorted.foreach { case (_, pg, pgb, pl, pc) =>
-        var i = 0
-        while (i < dim) { g(i) += pg(i); i += 1 }
-        gb += pgb; loss += pl; cnt += pc
-      }
-      (g, gb, loss, cnt)
-    }
-    for (it <- 0 until iters) {
-      val bc = spark.sparkContext.broadcast(m)
-      // one narrow pass: per-partition (partitionId, gradient, biasGrad,
-      // loss, count) — dim+3 doubles per partition
-      var cur = cached.mapPartitions { rows =>
-        val mod = bc.value
-        val g = new Array[Double](mod.dim)
-        var gb = 0.0; var loss = 0.0; var cnt = 0L
-        rows.foreach { e =>
-          val p = sigmoid(margin(mod, e.feats))
-          val err = p - e.label // d(logloss)/d(margin)
-          if (e.feats.nonEmpty) {
-            val scale = err / e.feats.length
-            var i = 0
-            while (i < e.feats.length) { g(e.feats(i)) += scale; i += 1 }
+    Rounds.persisted(ex.rdd) { cached =>
+      var m = Model(dim, new Array[Double](dim), 0.0)
+      val losses = new Array[Double](iters)
+      // heavy-ball momentum: full-batch GD on a convex loss converges
+      // an order of magnitude faster with it, and it stays deterministic
+      val vel = new Array[Double](dim)
+      var velB = 0.0
+      for (it <- 0 until iters) {
+        val bc = cached.sparkContext.broadcast(m)
+        // one narrow pass: per-partition (gradient, biasGrad, loss,
+        // count) — dim+3 doubles per partition
+        val partials = cached.mapPartitions { rows =>
+          val mod = bc.value
+          val g = new Array[Double](mod.dim)
+          var gb = 0.0; var loss = 0.0; var cnt = 0L
+          rows.foreach { e =>
+            val p = sigmoid(margin(mod, e.feats))
+            val err = p - e.label // d(logloss)/d(margin)
+            if (e.feats.nonEmpty) {
+              val scale = err / e.feats.length
+              var i = 0
+              while (i < e.feats.length) { g(e.feats(i)) += scale; i += 1 }
+            }
+            gb += err
+            val pc = math.min(math.max(p, 1e-12), 1.0 - 1e-12)
+            loss += -(e.label * math.log(pc) + (1.0 - e.label) * math.log(1.0 - pc))
+            cnt += 1
           }
-          gb += err
-          val pc = math.min(math.max(p, 1e-12), 1.0 - 1e-12)
-          loss += -(e.label * math.log(pc) + (1.0 - e.label) * math.log(1.0 - pc))
-          cnt += 1
+          Iterator.single((g, gb, loss, cnt))
         }
-        Iterator.single((org.apache.spark.TaskContext.getPartitionId(), g, gb, loss, cnt))
-      }
-      var bound = numParts
-      while (bound > fanIn) {
-        cur = cur.groupBy(_._1 / fanIn).map { case (grp, itr) =>
-          val (g, gb, l, c) = foldSorted(itr.toArray)
-          (grp, g, gb, l, c)
+        val (grad, gradB, lossSum, cnt) = Rounds.foldInOrder(partials, fanIn) { (a, b) =>
+          var i = 0
+          while (i < dim) { a._1(i) += b._1(i); i += 1 }
+          (a._1, a._2 + b._2, a._3 + b._3, a._4 + b._4)
+        }.getOrElse((new Array[Double](dim), 0.0, 0.0, 0L))
+        require(cnt > 0, "train: empty example set")
+        val n = cnt.toDouble
+        losses(it) = lossSum / n
+        var i = 0
+        while (i < dim) {
+          vel(i) = momentum * vel(i) + grad(i) / n + l2 * m.w(i)
+          i += 1
         }
-        bound = (bound + fanIn - 1) / fanIn
+        velB = momentum * velB + gradB / n
+        val w2 = Array.tabulate(dim)(j => m.w(j) - lr * vel(j))
+        m = Model(dim, w2, m.bias - lr * velB)
+        bc.destroy()
       }
-      // fixed summation order end to end: sorted fold per level + here
-      val (grad, gradB, lossSum, _) = foldSorted(cur.collect())
-      losses(it) = lossSum / n
-      var i = 0
-      while (i < dim) {
-        vel(i) = momentum * vel(i) + grad(i) / n + l2 * m.w(i)
-        i += 1
-      }
-      velB = momentum * velB + gradB / n
-      val w2 = Array.tabulate(dim)(j => m.w(j) - lr * vel(j))
-      m = Model(dim, w2, m.bias - lr * velB)
-      bc.destroy()
+      (m, losses)
     }
-    cached.unpersist()
-    (m, losses)
-  }
 
   /** Map-only scoring pass: (doc_id, score_micro, label). The score
     * is the sigmoid probability ×1e6 truncated to a long — an

@@ -80,37 +80,102 @@ class KmeansSpec extends SparkSpec {
 
   test("trainParallel is bit-reproducible: two calls, one corpus, equal centroids") {
     // every round folds its per-partition partials in partition-id
-    // order, so repeating the call cannot reorder a float sum
+    // order, so repeating the call cannot reorder a float sum; the
+    // first-k trainers run the same Lloyd rounds
     val corpus = Similarity.loadVectors(spark, sf())
-    val a = Kmeans.trainParallel(corpus, 16, 2, rounds = 2)
-    val b = Kmeans.trainParallel(corpus, 16, 2, rounds = 2)
-    assert(a.map(_.cell).toSeq === b.map(_.cell).toSeq)
-    a.zip(b).foreach { case (x, y) =>
-      assert(x.v.map(java.lang.Double.doubleToRawLongBits).toSeq ===
-        y.v.map(java.lang.Double.doubleToRawLongBits).toSeq,
-        s"centroid ${x.cell} differs between two identical calls")
+    val trainers: Seq[(String, () => Array[Kmeans.Centroid])] = Seq(
+      "trainParallel" -> (() => Kmeans.trainParallel(corpus, 16, 2, rounds = 2)),
+      "train" -> (() => Kmeans.train(corpus, 16, 2)),
+      "trainOrdered" -> (() => Kmeans.trainOrdered(corpus, 16, 2)))
+    for ((name, run) <- trainers) {
+      val (a, b) = (run(), run())
+      assert(a.map(_.cell).toSeq === b.map(_.cell).toSeq, name)
+      a.zip(b).foreach { case (x, y) =>
+        assert(bits(x) === bits(y),
+          s"$name: centroid ${x.cell} differs between two identical calls")
+      }
     }
   }
 
-  test("seedParallel: rescan and incremental formulations are bit-identical") {
-    // the r11 adjudication switch: gate-sized k takes the stateless
-    // two-rescan rounds (per-round checkpoint overhead dominated the
-    // gate clock), large k the carried-state machinery — same math,
-    // so forcing each path on one corpus must yield the same codebook
-    val corpus = Similarity.loadVectors(spark, sf())
-    val rescan = Kmeans.seedParallel(corpus, 8,
-      incrementalAbove = Int.MaxValue)
-    assert(!Kmeans.lastSeedIncremental, "k=8 must have taken the rescan path")
-    val incremental = Kmeans.seedParallel(corpus, 8, incrementalAbove = 0)
-    assert(Kmeans.lastSeedIncremental)
-    assert(rescan.length === incremental.length)
-    rescan.zip(incremental).foreach { case (a, b) =>
-      assert(a.cell === b.cell)
-      assert(a.v.toSeq === b.v.toSeq, s"centroid ${a.cell} differs between paths")
+  private def bits(c: Kmeans.Centroid): Seq[Long] =
+    c.v.map(java.lang.Double.doubleToRawLongBits).toSeq
+
+  /** The oversampled seeds and their served-point weights by the
+    * two-rescan formulation: every round rescans the corpus against
+    * the whole seed set for φ and again for the picks, and the weights
+    * come from a nearest-centroid sweep. Kept here as the reference
+    * the carried-state rounds must reproduce bit for bit. */
+  private def rescanSeeds(corpus: org.apache.spark.sql.Dataset[Similarity.Vec],
+      k: Int, rounds: Int, oversample: Double): (Array[Array[Double]], Array[Long]) = {
+    val rows = corpus.rdd
+    val sc = rows.sparkContext
+    def normalize(v: Array[Double]): Array[Double] = {
+      val n = math.sqrt(v.map(x => x * x).sum)
+      if (n == 0.0) v else v.map(_ / n)
     }
-    // and the default dispatch: gate k stays rescan, scale k incremental
-    Kmeans.seedParallel(corpus, 8)
-    assert(!Kmeans.lastSeedIncremental)
+    def seedCost(r: Similarity.Vec, ss: Array[Array[Double]]): Double = {
+      var best = Double.NegativeInfinity
+      var i = 0
+      while (i < ss.length) {
+        var dot = 0.0; var j = 0
+        val sv = ss(i); val rv = r.v
+        while (j < rv.length) { dot += rv(j) * sv(j); j += 1 }
+        if (dot > best) best = dot
+        i += 1
+      }
+      1.0 - best / (if (r.nrm == 0.0) 1.0 else r.nrm)
+    }
+    val first = graft.core.Rounds.foldInOrder(rows)((a, b) => if (b.vec_id < a.vec_id) b else a).get
+    var seeds = Array(normalize(first.v))
+    for (r <- 1 to rounds) {
+      val ss = seeds
+      val phi = graft.core.Rounds.foldInOrder(rows.mapPartitions { it =>
+        Iterator.single(it.foldLeft(0.0)((a, x) => a + seedCost(x, ss)))
+      })(_ + _).getOrElse(0.0)
+      if (phi > 0) {
+        val threshold = oversample * k / phi
+        val picked = rows.filter(x => graft.core.Mix.unitDouble(x.vec_id * 1000003L + r) <
+            threshold * seedCost(x, ss)).collect().sortBy(_.vec_id)
+        seeds = seeds ++ picked.map(v => normalize(v.v))
+      }
+    }
+    val idx = sc.broadcast(CentroidIndex.build(
+      seeds.zipWithIndex.map { case (v, i) => Kmeans.Centroid(i, v) }))
+    val n = seeds.length
+    val counts = rows.map(x => idx.value.nearest(x)).countByValue()
+    idx.destroy()
+    (seeds, Array.tabulate(n)(i => counts.getOrElse(i, 0L)))
+  }
+
+  test("seedParallel: carried-state rounds equal the two-rescan formulation") {
+    // the seeds and weights are what the reduction reads, so equal
+    // seeds and weights plus the deterministic reduction give equal
+    // centroids; compare the centroids too, at a gate k and at a k
+    // past where the distributed reduction takes over
+    import spark.implicits._
+    val gate = Similarity.loadVectors(spark, sf())
+    val dim = 16
+    val large = (0 until 4096).map { id =>
+      val v = Array.tabulate(dim)(d =>
+        (((id.toLong * 2654435761L + d * 40503L) % 1000003L).toDouble / 1000003.0) - 0.5)
+      val nrm = math.sqrt(v.map(x => x * x).sum)
+      Similarity.Vec(id.toLong, v.map(_ / nrm), 1.0)
+    }.toDS()
+    for ((corpus, k) <- Seq((gate, 8), (large, 2048))) {
+      val (seeds, weights) = rescanSeeds(corpus, k, rounds = 2, oversample = 2.0)
+      val carried = Kmeans.seedParallel(corpus, k, rounds = 2, oversample = 2.0)
+      info(s"k=$k: ${seeds.length} oversampled seeds, " +
+        s"${weights.count(_ > 0)} serve points")
+      // the rescan weights, fed to the same reduction, give the
+      // carried path's centroids only if its weights were equal
+      val viaRescan = Kmeans.reduceSeeds(spark.sparkContext, seeds,
+        weights.map(_.toDouble.max(1e-9)), k, Kmeans.ReduceDistributedAbove)
+      assert(carried.length === k)
+      carried.zip(viaRescan).foreach { case (a, b) =>
+        assert(bits(a) === bits(b),
+          s"k=$k: centroid ${a.cell} differs between the formulations")
+      }
+    }
   }
 
   test("large-k seeding takes the distributed reduction and stays deterministic") {

@@ -45,6 +45,53 @@ class RoundBudgetSpec extends SparkSpec {
     assert(jobs === 1 + 2 * 2 + 1 + 2)
   }
 
+  test("train: one SQL execution; the first-k seed read fills the cache") {
+    val corpus = Similarity.loadVectors(spark, sf())
+    val (sql, jobs) = counted { Kmeans.train(corpus, 16, 2) }
+    info(s"train: $sql SQL executions, $jobs jobs")
+    assert(sql === 1)
+    // the first-k seed filter, then one job per Lloyd round
+    assert(jobs === 1 + 2)
+  }
+
+  test("seedParallel past the distributed reduction: one SQL execution") {
+    import spark.implicits._
+    val dim = 16
+    val corpus = (0 until 4096).map { id =>
+      val v = Array.tabulate(dim)(d =>
+        (((id.toLong * 2654435761L + d * 40503L) % 1000003L).toDouble / 1000003.0) - 0.5)
+      val nrm = math.sqrt(v.map(x => x * x).sum)
+      Similarity.Vec(id.toLong, v.map(_ / nrm), 1.0)
+    }.toDF().write.mode("overwrite").parquet(s"$scratch/seed_corpus")
+    val rows = spark.read.parquet(s"$scratch/seed_corpus").as[Similarity.Vec]
+    val (sql, jobs) = counted { Kmeans.seedParallel(rows, 2048, rounds = 2) }
+    info(s"seedParallel k=2048: $sql SQL executions, $jobs jobs")
+    assert(Kmeans.lastReductionDistributed)
+    // the corpus scan behind the persisted RDD
+    assert(sql === 1)
+    // first seed (fills the cache) + (φ, picks) per round + the weight
+    // pass + five polish rounds of the distributed reduction
+    assert(jobs === 1 + 2 * 2 + 1 + 5)
+  }
+
+  test("QualityClassifier.train: one SQL execution, then one job per iteration") {
+    import spark.implicits._
+    val docs = (0 until 200).map { i =>
+      (i.toLong, Seq.tabulate(5 + i % 7)(j => s"w${(i * 31 + j) % 23}").mkString(" "),
+        (i % 2).toDouble)
+    }.toDF("doc_id", "text", "label")
+    docs.write.mode("overwrite").parquet(s"$scratch/clf_docs")
+    val ex = graft.text.QualityClassifier.examples(
+      spark.read.parquet(s"$scratch/clf_docs"), 64)
+    val (sql, jobs) = counted { graft.text.QualityClassifier.train(ex, 64, iters = 5) }
+    info(s"QualityClassifier.train: $sql SQL executions, $jobs jobs")
+    assert(sql === 1)
+    assert(jobs === 5)
+  }
+
+  private lazy val scratch =
+    java.nio.file.Files.createTempDirectory("graft-round-budget").toString
+
   test("topKPqOpq: SQL executions are the corpus scan and the side-dump writes") {
     val (sql, jobs) = counted { Opq.topKPqOpq(spark, sf()).collect() }
     info(s"topKPqOpq: $sql SQL executions, $jobs jobs")
