@@ -47,9 +47,7 @@ object SparkEntry {
 
   /** Query name → the DuckDB oracle SQL for the corpus dir `sfDir`,
     * runnable on the same parquet tables. Side-dump oracles read the
-    * dumps their queries wrote for `sfDir`, and the media near-dup
-    * oracles follow the regime each query picked, so render this after
-    * the queries ran. */
+    * dumps their queries wrote for `sfDir`. */
   def oracleSql(sfDir: String): Map[String, String] =
     gates.map(g => g.name -> g.oracle(sfDir)).toMap
 }

@@ -28,8 +28,6 @@ object Verify {
           System.err.println(s"[verify]   caused by: ${c.getClass.getName}: ${c.getMessage}"))
       }
     }
-    // rendered after the queries ran: the media near-dup oracles read
-    // the regime each query recorded (graft.multimodal.SigDump)
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
       SelfCheck.jsonObject(SparkEntry.oracleSql(sfDir).toSeq.sortBy(_._1)))
     val manifest = SelfCheck.mapper.createObjectNode()

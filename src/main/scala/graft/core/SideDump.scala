@@ -2,29 +2,52 @@ package graft.core
 
 import org.apache.spark.sql.DataFrame
 
+/** Where an engine call hands a learned artifact that a gate's oracle
+  * takes on faith (a merge table, a codebook, signatures). The artifact
+  * is passed by name: [[DumpSink.discard]], the default of every engine
+  * parameter, never builds it, so a library call starts no job and no
+  * SQL execution for it and writes nothing. A gate's run passes a sink
+  * that writes the [[SideDump]] its oracle reads (`graft.gates.Dump`). */
+trait DumpSink {
+  def apply(artifact: => DataFrame): Unit
+}
+
+object DumpSink {
+  val discard: DumpSink = new DumpSink {
+    def apply(artifact: => DataFrame): Unit = ()
+  }
+}
+
 /** Run-scoped oracle side dumps: a gate whose LEARNED or FOLDED
-  * artifact is not SQL-derivable dumps that artifact to a run-scoped
-  * parquet path named by its kind and the corpus dir's basename, and
-  * the gate's oracle — given that same corpus dir — embeds the same
-  * path (through the owning object's `*DumpPath(base)`), so DuckDB
-  * re-derives everything DOWNSTREAM of the artifact independently.
+  * artifact is not SQL-derivable hands its run a [[DumpSink]] that
+  * writes that artifact to a run-scoped parquet path named by its kind
+  * and the corpus dir's basename, and the gate's oracle — given that
+  * same corpus dir — reads the same path (both through the family's
+  * `graft.gates.Dump` value for the kind), so DuckDB re-derives
+  * everything DOWNSTREAM of the artifact independently. Only
+  * `graft.gates` writes or names a dump.
   * The process-scoped token guarantees the compare can only ever read
   * THIS run's dump: a stale dump from an older run, code version, or
   * different SF can never be silently compared.
   *
-  * Users — in each case the LEARNED/FOLDED artifact is the only
+  * Artifacts — in each case the LEARNED/FOLDED artifact is the only
   * thing taken on faith, and everything downstream is re-derived:
   *  - BPE merge tables ([[graft.text.Bpe]] — the oracle re-applies
   *    the merges to the raw corpus);
   *  - trained classifier weights ([[graft.text.QualityClassifier]] —
   *    re-hashed features, re-folded margins);
-  *  - SimHash signatures ([[graft.dedup.Dedup]] — banding, caps,
-  *    probes and pair generation re-derived as 64-bit arithmetic);
-  *  - Lloyd centroids ([[graft.sim.Kmeans]] — assignment, probe
-  *    selection and ranks re-derived from embeddings + codebook);
+  *  - SimHash signatures ([[graft.dedup.Dedup]]) and the media
+  *    perceptual hashes ([[graft.multimodal.SigDump]]) — banding, caps,
+  *    probes, pair generation and the media regime pick re-derived as
+  *    64-bit arithmetic;
+  *  - Lloyd centroids ([[graft.sim.Kmeans]], [[graft.dedup.SemDedup]],
+  *    [[graft.dedup.SemIndex]], [[graft.streaming.SemStream]] —
+  *    assignment, probe selection and ranks re-derived from
+  *    embeddings + codebook);
   *  - PQ codebooks ([[graft.sim.Pq]], [[graft.sim.IvfIndex]],
   *    [[graft.sim.Opq]] — encode/ADC/candidate-cut/re-rank
-  *    re-derived; OPQ also dumps its applied rotation rows);
+  *    re-derived; OPQ also hands over its applied rotation rows, the
+  *    adaptive IVF-PQ prober its per-query probe depths);
   *  - the reduced-PCA model ([[graft.sim.Pca]] — projection and the
   *    squared-L2 rank re-derived);
   *  - the shard-controller config history ([[graft.kv.ShardCtrler]] —

@@ -1,5 +1,6 @@
 package graft.dedup
 
+import graft.core.DumpSink
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -275,28 +276,23 @@ object Dedup {
 
   final case class SimhashRow(doc_id: Long, sig: Long)
 
-  /** This run's signature side-dump path for a corpus dir basename;
-    * the simhash oracles name it for the corpus dir they are given. */
-  def simhashDumpPath(base: String): String =
-    graft.core.SideDump.path("simhash_sigs", base)
-
   /** Corpus SimHash signatures (docs with no shingles dropped — they
-    * would all share signature 0 and pair with each other). The
-    * signature frame is SIDE-DUMPED run-scoped: the per-doc map-only
-    * signature pass is the only thing the simhash oracles take on
-    * faith — banding, bucket caps, radius-1 probe fan-out, the
-    * Hamming filter, and pair generation are all re-derived in DuckDB
-    * from the dumped sigs (pure 64-bit arithmetic; DuckDB's >>/xor/
-    * bit_count match Java's on negatives). Deterministic map, so the
-    * two simhash gates sharing one dump kind always overwrite it with
-    * identical content. */
-  private[graft] def simhashSigs(spark: SparkSession, sfDir: String): DataFrame = {
+    * would all share signature 0 and pair with each other), handed to
+    * `sigsDump`: the per-doc map-only signature pass is the only thing
+    * the simhash oracles take on faith — banding, bucket caps, radius-1
+    * probe fan-out, the Hamming filter, and pair generation are all
+    * re-derived in DuckDB from the dumped sigs (pure 64-bit arithmetic;
+    * DuckDB's >>/xor/bit_count match Java's on negatives). Deterministic
+    * map, so the simhash gates sharing one dump kind always overwrite it
+    * with identical content. */
+  private[graft] def simhashSigs(spark: SparkSession, sfDir: String,
+      sigsDump: DumpSink = DumpSink.discard): DataFrame = {
     import spark.implicits._
-    // checkpoint (widened when narrow) BEFORE the side dump: the
-    // dump's coalesce(1) otherwise RECOMPUTES the shingle+simhash
-    // pass serially (measured 3.8 s, r17 stage audit), and every
-    // downstream consumer pays the pass again — one wide computation,
-    // one cheap dump read, one shared frame
+    // checkpoint (widened when narrow): every downstream reader — the
+    // pair core's own checkpoint and, on a gate run, the dump's
+    // coalesce(1) write, which would otherwise RECOMPUTE the
+    // shingle+simhash pass serially (measured 3.8 s, r17 stage audit)
+    // — reads the one wide computation
     val sigs = graft.core.Widen.ifNarrow(
       docShingles(spark, sfDir)
         .as[(Long, Seq[String])]
@@ -304,8 +300,7 @@ object Dedup {
         .map { case (id, feats) => SimhashRow(id, simhash64(feats)) }
         .toDF()
         .localCheckpoint())
-    val base = new java.io.File(sfDir).getName
-    graft.core.SideDump.write(sigs, "simhash_sigs", base)
+    sigsDump(sigs)
     sigs
   }
 
@@ -347,9 +342,9 @@ object Dedup {
     * 8-bit bands bucket coarsely, so the same degenerate-bucket cap as
     * MinHash LSH guards the candidate join at scale. */
   def simhashPairs(spark: SparkSession, sfDir: String, maxHamming: Int = 7,
-      maxBucket: Int = 1000): DataFrame =
+      maxBucket: Int = 1000, sigsDump: DumpSink = DumpSink.discard): DataFrame =
     // 8 bands × 8 bits: Hamming ≤ 7 guarantees ≥1 identical band
-    simhashBandPairs(simhashSigs(spark, sfDir), maxBucket)
+    simhashBandPairs(simhashSigs(spark, sfDir, sigsDump), maxBucket)
       .filter(col("dist") <= maxHamming).select(col("i"), col("j"))
 
   /** MULTI-PROBE SimHash (Lv et al., "Multi-Probe LSH", VLDB 2007,
@@ -363,8 +358,10 @@ object Dedup {
     * a little query fan-out for a lot of table memory.
     * Candidate pairs still pay an exact bit_count verification. */
   def simhashPairsMultiProbe(spark: SparkSession, sfDir: String,
-      maxHamming: Int = 15, maxBucket: Int = 1000): DataFrame =
-    simhashPairsMultiProbeOf(simhashSigs(spark, sfDir), maxHamming, maxBucket)
+      maxHamming: Int = 15, maxBucket: Int = 1000,
+      sigsDump: DumpSink = DumpSink.discard): DataFrame =
+    simhashPairsMultiProbeOf(simhashSigs(spark, sfDir, sigsDump), maxHamming,
+      maxBucket)
 
   private[graft] def simhashPairsMultiProbeOf(sigs0: DataFrame,
       maxHamming: Int, maxBucket: Int): DataFrame = {
@@ -429,13 +426,14 @@ object Dedup {
     * distinct). */
   def simhashPairsWide(spark: SparkSession, sfDir: String,
       maxHamming: Int = 15, maxBucket: Int = 1000,
-      sizeHint: Option[Long] = None): DataFrame = {
+      sizeHint: Option[Long] = None,
+      sigsDump: DumpSink = DumpSink.discard): DataFrame = {
     requireWideBand(maxHamming)
     // widened when narrow: the 4·697 probe-mask explode below is the
     // heavy map stage, and a 1-partition checkpoint would run it
     // serial — measured 9.4 s of the 11.4 s gate wall (r17 audit)
     val sigs = graft.core.Widen.ifNarrow(
-      simhashSigs(spark, sfDir).localCheckpoint())
+      simhashSigs(spark, sfDir, sigsDump).localCheckpoint())
     // regime pick: a caller-supplied size hint skips the count()
     // pre-scan — composed pipelines at corpus scale should not pay a
     // full pass over the signature frame just to choose a plan
@@ -453,10 +451,12 @@ object Dedup {
     * truth as dedup_simhash_wide) hash-pins it rather than leaving it
     * spec-only — the dedup_clusters_dist treatment. */
   def simhashPairsWideBalanced(spark: SparkSession, sfDir: String,
-      maxHamming: Int = 15, maxBucket: Int = 1000): DataFrame = {
+      maxHamming: Int = 15, maxBucket: Int = 1000,
+      sigsDump: DumpSink = DumpSink.discard): DataFrame = {
     requireWideBand(maxHamming)
     wideBalancedCore(graft.core.Widen.ifNarrow(
-      simhashSigs(spark, sfDir).localCheckpoint()), maxHamming, maxBucket)
+      simhashSigs(spark, sfDir, sigsDump).localCheckpoint()), maxHamming,
+      maxBucket)
   }
 
   /** The 4 × 16-bit wide-band schemes are pigeonhole-complete ONLY

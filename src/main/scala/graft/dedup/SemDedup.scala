@@ -1,5 +1,6 @@
 package graft.dedup
 
+import graft.core.DumpSink
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.sim.{CentroidIndex, Kmeans, Similarity}
 import graft.sim.Similarity.Vec
@@ -33,20 +34,14 @@ import graft.sim.Similarity.Vec
   * ([[graft.sim.PointBlocks]] / [[CentroidIndex]]). No all-pairs
   * stage anywhere; the shuffle key is the cell id.
   *
-  * Oracle story: the trained centroids are side-dumped
-  * ([[graft.core.SideDump]]) — the Lloyd iterations are the only
-  * faith; assignment (argmax cosine, lowest-cell tie), centroid
+  * Oracle story: the trained centroids go to the caller's
+  * `centsDump` (a gate dumps them for its oracle) — the Lloyd
+  * iterations are the only faith; assignment (argmax cosine, lowest-cell tie), centroid
   * similarity, the within-cluster pairwise τ-test and the
   * keep-priority rule are all re-derived by DuckDB from the raw
   * embeddings plus the dumped codebook.
   */
 object SemDedup {
-
-  /** The codebook side dump for a corpus dir basename, one per dump
-    * kind below; each gate's oracle names its own for the corpus dir
-    * it is given. */
-  def dumpPath(base: String): String =
-    graft.core.SideDump.path("semdedup_cents", base)
 
   /** THE cell-assignment kernel for every semantic-dedup surface:
     * (nearest cell by the pruned-exact index, cosine to that cell's
@@ -74,9 +69,10 @@ object SemDedup {
     * doubles; the output column exists so the gate pins the priority
     * the rule used without hashing raw floats). */
   def semantic(spark: SparkSession, sfDir: String, tau: Double = 0.45,
-      k: Int = 16, iters: Int = 3): DataFrame =
+      k: Int = 16, iters: Int = 3,
+      centsDump: DumpSink = DumpSink.discard): DataFrame =
     semanticWithCap(spark, sfDir, tau, k, iters, cap = Int.MaxValue,
-      dumpKind = "semdedup_cents")
+      centsDump)
 
   /** Skew-capped variant — the scale hedge for a DEGENERATE cluster
     * (one cell holding a large fraction of the corpus makes the
@@ -89,32 +85,11 @@ object SemDedup {
     * keeper; beyond-cap duplicates are kept rather than dropped —
     * and exactly the one-shot rule whenever every cell is ≤ cap
     * (SemDedupSpec pins both properties). Same dumped-codebook
-    * oracle story under its own dump kind. */
+    * oracle story. */
   def semanticCapped(spark: SparkSession, sfDir: String,
       tau: Double = 0.45, k: Int = 16, iters: Int = 3,
-      cap: Int = 64): DataFrame =
-    semanticWithCap(spark, sfDir, tau, k, iters, cap,
-      dumpKind = "semdedup_cap_cents")
-
-  def cappedDumpPath(base: String): String =
-    graft.core.SideDump.path("semdedup_cap_cents", base)
-
-  /** The semantic-funnel gate trains ITS OWN run's codebook under its
-    * own dump kind — sharing `semdedup_cents` would let whichever
-    * gate ran later overwrite the other's dump with a not-bit-
-    * identical retrain (train()'s partial-sum merge order is
-    * scheduler-dependent) and silently break the first gate's hash. */
-  def funnelDumpPath(base: String): String =
-    graft.core.SideDump.path("semdedup_funnel_cents", base)
-
-  /** [[semantic]] under the funnel gate's dump kind. */
-  def semanticForFunnel(spark: SparkSession, sfDir: String,
-      tau: Double = 0.45, k: Int = 16, iters: Int = 3): DataFrame =
-    semanticWithCap(spark, sfDir, tau, k, iters, cap = Int.MaxValue,
-      dumpKind = "semdedup_funnel_cents")
-
-  def parDumpPath(base: String): String =
-    graft.core.SideDump.path("semdedup_par_cents", base)
+      cap: Int = 64, centsDump: DumpSink = DumpSink.discard): DataFrame =
+    semanticWithCap(spark, sfDir, tau, k, iters, cap, centsDump)
 
   /** Large-k variant on the SCALABLE trainer — k-means‖ seeding
     * ([[Kmeans.trainParallel]]) at k = 256, which crosses BOTH scale
@@ -128,22 +103,18 @@ object SemDedup {
     * cells are tiny, so the within-cell stage is trivially bounded —
     * the production shape (k ∝ N). */
   def semanticPar(spark: SparkSession, sfDir: String, tau: Double = 0.45,
-      k: Int = 256, iters: Int = 3): DataFrame =
+      k: Int = 256, iters: Int = 3,
+      centsDump: DumpSink = DumpSink.discard): DataFrame =
     semanticWithCap(spark, sfDir, tau, k, iters, cap = Int.MaxValue,
-      dumpKind = "semdedup_par_cents",
-      trainer = Kmeans.trainParallel(_, _, _))
+      centsDump, trainer = Kmeans.trainParallel(_, _, _))
 
   private def semanticWithCap(spark: SparkSession, sfDir: String,
-      tau: Double, k: Int, iters: Int, cap: Int, dumpKind: String,
+      tau: Double, k: Int, iters: Int, cap: Int, centsDump: DumpSink,
       trainer: (org.apache.spark.sql.Dataset[Vec], Int, Int) => Array[Kmeans.Centroid]
         = Kmeans.train(_, _, _)): DataFrame = {
-    import spark.implicits._
     val vecs = Similarity.loadVectors(spark, sfDir)
     val cents = trainer(vecs, k, iters)
-    val base = new java.io.File(sfDir).getName
-    graft.core.SideDump.write(
-      cents.toSeq.map(c => (c.cell, c.v.toSeq)).toDF("cell", "v"),
-      dumpKind, base)
+    centsDump(Kmeans.centsFrame(spark, cents))
     semanticOf(vecs, cents, tau, cap)
   }
 

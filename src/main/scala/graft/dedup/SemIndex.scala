@@ -1,5 +1,6 @@
 package graft.dedup
 
+import graft.core.DumpSink
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sim.{CentroidIndex, Kmeans, Similarity}
@@ -39,23 +40,9 @@ import graft.sim.Similarity.Vec
   */
 object SemIndex {
 
-  /** The codebook side dump for a corpus dir basename; the gate's
-    * oracle names it for the corpus dir it is given. */
-  def centsDumpPath(base: String): String =
-    graft.core.SideDump.path("semidx_cents", base)
-
-  /** (cell, v) frame of a centroid array — driver-local rows, shared
-    * by the index write and the oracle side-dumps (dumping from the
-    * array skips a re-read of the cents parquet the same session just
-    * wrote). */
-  def centsFrame(spark: SparkSession, cents: Array[Centroid]): DataFrame = {
-    import spark.implicits._
-    cents.toSeq.map(c => (c.cell, c.v.toSeq)).toDF("cell", "v")
-  }
-
   private def writeCents(spark: SparkSession, cents: Array[Centroid],
       path: String): Unit =
-    centsFrame(spark, cents)
+    Kmeans.centsFrame(spark, cents)
       .coalesce(1).write.mode("overwrite").parquet(s"$path/cents")
 
   private def loadCents(spark: SparkSession, path: String): Array[Centroid] =
@@ -215,20 +202,19 @@ object SemIndex {
 
   /** Gate surface: index = corpus slice `vec_id % 10 != 0` (built
     * once per session), batch = `vec_id % 10 == 0` probed against it
-    * — the [[LshIndex.dedupIncremental]] split. Centroids are
-    * side-dumped every call (run-scoped, cheap) so the oracle always
-    * reads THIS run's codebook even when the build was skipped. */
+    * — the [[LshIndex.dedupIncremental]] split. The index's centroids
+    * go to `centsDump` every call, so a gate's oracle always reads
+    * THIS run's codebook even when the build was skipped. */
   def dedupSemanticIncremental(spark: SparkSession, sfDir: String,
-      tau: Double = 0.45): DataFrame = {
+      tau: Double = 0.45,
+      centsDump: DumpSink = DumpSink.discard): DataFrame = {
     val path = graft.core.SessionScratch.path(spark, sfDir, "graft_semidx")
     val all = Similarity.loadVectors(spark, sfDir)
     graft.core.SessionScratch.buildOnce(spark, path,
       marker = "members/_SUCCESS") {
       build(all.filter(v => v.vec_id % 10 != 0), path)
     }
-    val base = new java.io.File(sfDir).getName
-    graft.core.SideDump.write(
-      spark.read.parquet(s"$path/cents"), "semidx_cents", base)
+    centsDump(spark.read.parquet(s"$path/cents"))
     probe(spark, sfDir, path, all.filter(v => v.vec_id % 10 == 0), tau)
   }
 

@@ -6,6 +6,19 @@ import graft.sim.{IvfIndex, Kmeans, Opq, Pca, Pq, Similarity, Sq}
   * OPQ, PCA). */
 object AnnGates {
 
+  val PqBooks = Dump("pq_books")
+  // each trained-IVF gate dumps its own run's centroids under its own kind
+  val IvfTrainedCents = Dump("ivf_trained_cents")
+  val IvfTrainedParCents = Dump("ivf_trained_par_cents")
+  val KmeansCellsCents = Dump("kmeans_cells_cents")
+  // the IVF-PQ session index's model, shared by the ivfpq gates
+  val IvfpqCents = Dump("ivfpq_cents")
+  val IvfpqBooks = Dump("ivfpq_books")
+  val IvfpqDepth = Dump("ivfpq_adepth")
+  val OpqRot = Dump("opq_rot")
+  val OpqBooks = Dump("opq_books")
+  val PcaModel = Dump("pca_model")
+
   val gates: Seq[Gate] = Seq(
     // ---- similarity search ----
     Gate("ann_topk", (s, dir) => Similarity.topKExact(s, dir),
@@ -22,33 +35,38 @@ object AnnGates {
     // SQL. ann_ivfpq_graph shares ann_ivfpq's oracle: at the gate's
     // 16 cells the beam is exhaustive and CentroidGraphSpec pins the
     // outputs equal (the ann_sq8 shares-the-exact-oracle pattern).
-    Gate("ann_pq", (s, dir) => Pq.topKPq(s, dir),
-      dir => annPqPipelineSql(Gate.glob(Pq.booksDumpPath, dir), "", "SELECT vec_id FROM nv")),
-    Gate("ann_ivf_trained", (s, dir) => Kmeans.topKIvfTrained(s, dir),
+    Gate("ann_pq", (s, dir) => Pq.topKPq(s, dir, booksDump = PqBooks.sink(dir)),
+      dir => annPqPipelineSql(PqBooks.glob(dir), "", "SELECT vec_id FROM nv")),
+    Gate("ann_ivf_trained", (s, dir) =>
+      Kmeans.topKIvfTrained(s, dir, centsDump = IvfTrainedCents.sink(dir)),
       dir => annIvfSql(
-        s"SELECT cell, v FROM read_parquet('${Gate.glob(Kmeans.ivfTrainedDumpPath, dir)}')")),
+        s"SELECT cell, v FROM read_parquet('${IvfTrainedCents.glob(dir)}')")),
     // same probe machinery over a k-means|| (oversampled-seed) codebook
-    Gate("ann_ivf_trained_par", (s, dir) => Kmeans.topKIvfTrainedPar(s, dir),
+    Gate("ann_ivf_trained_par", (s, dir) =>
+      Kmeans.topKIvfTrainedPar(s, dir, centsDump = IvfTrainedParCents.sink(dir)),
       dir => annIvfSql(
-        s"SELECT cell, v FROM read_parquet('${Gate.glob(Kmeans.ivfTrainedParDumpPath, dir)}')")),
-    Gate("ann_ivfpq", (s, dir) => IvfIndex.topKIvfPq(s, dir),
-      dir => annPqPipelineSql(Gate.glob(IvfIndex.booksDumpPath, dir),
-        ivfpqPoolCtes(Gate.glob(IvfIndex.centsDumpPath, dir)),
+        s"SELECT cell, v FROM read_parquet('${IvfTrainedParCents.glob(dir)}')")),
+    Gate("ann_ivfpq", (s, dir) => IvfIndex.topKIvfPq(s, dir,
+        centsDump = IvfpqCents.sink(dir), booksDump = IvfpqBooks.sink(dir)),
+      dir => annPqPipelineSql(IvfpqBooks.glob(dir),
+        ivfpqPoolCtes(IvfpqCents.glob(dir)),
         "SELECT a.vec_id FROM asg a JOIN cellu u ON u.cell = a.cell")),
     // ann_ivfpq_adaptive: the convergence loop's per-query probe
     // DEPTHS are side-dumped (the faith); probe-cell selection, ADC,
     // the per-query rerank·depth cut and the exact re-rank are all
     // re-derived — the operator's output stage is a pure function of
     // (model, depths) by contract (IvfIndex.probePqAdaptive scaladoc)
-    Gate("ann_ivfpq_adaptive", (s, dir) => IvfIndex.topKIvfPqAdaptive(s, dir),
-      dir => annPqPipelineSql(Gate.glob(IvfIndex.booksDumpPath, dir),
-        ivfpqAdaptivePoolCtes(Gate.glob(IvfIndex.centsDumpPath, dir),
-          Gate.glob(IvfIndex.adepthDumpPath, dir)),
+    Gate("ann_ivfpq_adaptive", (s, dir) => IvfIndex.topKIvfPqAdaptive(s, dir,
+        centsDump = IvfpqCents.sink(dir), booksDump = IvfpqBooks.sink(dir),
+        depthDump = IvfpqDepth.sink(dir)),
+      dir => annPqPipelineSql(IvfpqBooks.glob(dir),
+        ivfpqAdaptivePoolCtes(IvfpqCents.glob(dir), IvfpqDepth.glob(dir)),
         "SELECT a.vec_id FROM asg a JOIN cellu u ON u.cell = a.cell",
         candCte = adaptiveCandCte)),
-    Gate("ann_ivfpq_graph", (s, dir) => IvfIndex.topKIvfPqGraph(s, dir),
-      dir => annPqPipelineSql(Gate.glob(IvfIndex.booksDumpPath, dir),
-        ivfpqPoolCtes(Gate.glob(IvfIndex.centsDumpPath, dir)),
+    Gate("ann_ivfpq_graph", (s, dir) => IvfIndex.topKIvfPqGraph(s, dir,
+        centsDump = IvfpqCents.sink(dir), booksDump = IvfpqBooks.sink(dir)),
+      dir => annPqPipelineSql(IvfpqBooks.glob(dir),
+        ivfpqPoolCtes(IvfpqCents.glob(dir)),
         "SELECT a.vec_id FROM asg a JOIN cellu u ON u.cell = a.cell")),
     // full-probe twins: every cell read + (for PQ) unbounded rerank →
     // candidate set = corpus, exact re-scoring → equals brute force, so
@@ -58,11 +76,12 @@ object AnnGates {
       _ => annTopkCosineSql),
     Gate("ann_ivfpq_rerank_all", (s, dir) => IvfIndex.topKIvfPqRerankAll(s, dir),
       _ => annTopkCosineSql),
-    Gate("ann_kmeans_cells", (s, dir) => Kmeans.cellSizes(s, dir),
+    Gate("ann_kmeans_cells", (s, dir) =>
+      Kmeans.cellSizes(s, dir, centsDump = KmeansCellsCents.sink(dir)),
       dir => s"""WITH e AS (SELECT vec_id,
          |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
          |  FROM embeddings),
-         |c AS (SELECT cell, v FROM read_parquet('${Gate.glob(Kmeans.cellsDumpPath, dir)}')),
+         |c AS (SELECT cell, v FROM read_parquet('${KmeansCellsCents.glob(dir)}')),
          |asg AS (
          |  SELECT vec_id, cell FROM (
          |    SELECT e.vec_id, c.cell,
@@ -79,10 +98,11 @@ object AnnGates {
     // OPQ: same PQ pipeline in the dumped-rotation space — the
     // rotation application (ordered dot per permuted basis row) is
     // re-derived; eigensolve/allocation/trainer are the dumped faith
-    Gate("ann_pq_opq", (s, dir) => Opq.topKPqOpq(s, dir),
-      dir => annPqPipelineSql(Gate.glob(Opq.booksDumpPath, dir), "", "SELECT vec_id FROM nv",
+    Gate("ann_pq_opq", (s, dir) => Opq.topKPqOpq(s, dir,
+        rotDump = OpqRot.sink(dir), booksDump = OpqBooks.sink(dir)),
+      dir => annPqPipelineSql(OpqBooks.glob(dir), "", "SELECT vec_id FROM nv",
         spaceCtes =
-          s"""rot AS (SELECT p, b FROM read_parquet('${Gate.glob(Opq.rotDumpPath, dir)}')),
+          s"""rot AS (SELECT p, b FROM read_parquet('${OpqRot.glob(dir)}')),
              |rproj AS (
              |  SELECT n.vec_id, r.p,
              |    list_reduce(list_prepend(CAST(0 AS DOUBLE),
@@ -102,11 +122,12 @@ object AnnGates {
     // reduced-rank PCA search: the dumped mean + top-16 basis rows are
     // the faith; projection (ordered centered dots) and the squared-L2
     // rank are re-derived from raw embeddings
-    Gate("ann_pca_reduced", (s, dir) => Pca.topKL2PcaReduced(s, dir),
+    Gate("ann_pca_reduced", (s, dir) =>
+      Pca.topKL2PcaReduced(s, dir, modelDump = PcaModel.sink(dir)),
       dir => s"""WITH raw AS (SELECT vec_id,
          |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v0
          |  FROM embeddings),
-         |md AS (SELECT comp, v FROM read_parquet('${Gate.glob(Pca.modelDumpPath, dir)}')),
+         |md AS (SELECT comp, v FROM read_parquet('${PcaModel.glob(dir)}')),
          |mn AS (SELECT v AS mv FROM md WHERE comp = -1),
          |basis AS (SELECT comp, v AS bv FROM md WHERE comp >= 0),
          |proj AS (

@@ -7,6 +7,14 @@ import graft.streaming.{ExactStream, SemStream}
 /** The `dedup_` gates: exact, near-duplicate, span and semantic dedup. */
 object DedupGates {
 
+  val SimhashSigs = Dump("simhash_sigs")
+  val SemdedupCents = Dump("semdedup_cents")
+  // each semantic gate trains its own run's codebook under its own kind
+  val SemdedupCapCents = Dump("semdedup_cap_cents")
+  val SemdedupParCents = Dump("semdedup_par_cents")
+  val SemidxCents = Dump("semidx_cents")
+  val SemstreamCents = Dump("semstream_cents")
+
   val gates: Seq[Gate] = Seq(
     // ---- dedup family (training-data pipeline extensions) ----
     Gate("dedup_exact", (s, dir) => Dedup.exact(s, dir),
@@ -20,11 +28,12 @@ object DedupGates {
     Gate("dedup_minhash", (s, dir) => Dedup.minhashLsh(s, dir),
       _ => ngramJaccardSql),
     // simhash gates: the per-doc SIGNATURES are side-dumped run-scoped
-    // (Dedup.simhashDumpPath) and are the only artifact taken on faith — the
+    // (SimhashSigs) and are the only artifact taken on faith — the
     // banding, bucket caps, radius-1 probe fan-out, Hamming filter and
     // pair generation are re-derived in DuckDB as 64-bit arithmetic
-    Gate("dedup_simhash", (s, dir) => Dedup.simhashPairs(s, dir),
-      dir => s"""WITH sigs AS (SELECT doc_id, sig FROM read_parquet('${Gate.glob(Dedup.simhashDumpPath, dir)}')),
+    Gate("dedup_simhash", (s, dir) =>
+      Dedup.simhashPairs(s, dir, sigsDump = SimhashSigs.sink(dir)),
+      dir => s"""WITH sigs AS (SELECT doc_id, sig FROM read_parquet('${SimhashSigs.glob(dir)}')),
          |$simhashBandCte
          |SELECT DISTINCT x.doc_id AS i, y.doc_id AS j
          |FROM b x
@@ -34,8 +43,8 @@ object DedupGates {
          |  AND bit_count(xor(x.sig, y.sig)) <= 7""".stripMargin),
     // radius-1 multi-probe: Hamming radius 15 from the same 8 bands
     Gate("dedup_simhash_multiprobe", (s, dir) =>
-      Dedup.simhashPairsMultiProbe(s, dir),
-      dir => s"""WITH sigs AS (SELECT doc_id, sig FROM read_parquet('${Gate.glob(Dedup.simhashDumpPath, dir)}')),
+      Dedup.simhashPairsMultiProbe(s, dir, sigsDump = SimhashSigs.sink(dir)),
+      dir => s"""WITH sigs AS (SELECT doc_id, sig FROM read_parquet('${SimhashSigs.glob(dir)}')),
          |$simhashBandCte,
          |exact AS (
          |  SELECT x.doc_id AS i, y.doc_id AS j,
@@ -72,8 +81,8 @@ object DedupGates {
     // FULL recall (the pigeonhole guarantee), not merely reproduce
     // their own plumbing
     Gate("dedup_simhash_wide", (s, dir) =>
-      Dedup.simhashPairsWide(s, dir),
-      dir => s"""WITH sigs AS (SELECT doc_id, sig FROM read_parquet('${Gate.glob(Dedup.simhashDumpPath, dir)}'))
+      Dedup.simhashPairsWide(s, dir, sigsDump = SimhashSigs.sink(dir)),
+      dir => s"""WITH sigs AS (SELECT doc_id, sig FROM read_parquet('${SimhashSigs.glob(dir)}'))
          |SELECT x.doc_id AS i, y.doc_id AS j
          |FROM sigs x JOIN sigs y ON x.doc_id < y.doc_id
          |WHERE bit_count(xor(x.sig, y.sig)) <= 15""".stripMargin),
@@ -86,8 +95,8 @@ object DedupGates {
     // the build<=1 x probe<=2 mask split with the canonical-witness
     // filter is recall- and emission-equivalent to radius-3 probing
     Gate("dedup_simhash_wide_balanced", (s, dir) =>
-      Dedup.simhashPairsWideBalanced(s, dir),
-      dir => s"""WITH sigs AS (SELECT doc_id, sig FROM read_parquet('${Gate.glob(Dedup.simhashDumpPath, dir)}'))
+      Dedup.simhashPairsWideBalanced(s, dir, sigsDump = SimhashSigs.sink(dir)),
+      dir => s"""WITH sigs AS (SELECT doc_id, sig FROM read_parquet('${SimhashSigs.glob(dir)}'))
          |SELECT x.doc_id AS i, y.doc_id AS j
          |FROM sigs x JOIN sigs y ON x.doc_id < y.doc_id
          |WHERE bit_count(xor(x.sig, y.sig)) <= 15""".stripMargin),
@@ -213,8 +222,9 @@ object DedupGates {
     // the within-cluster pairwise τ-test and the drop verdicts.
     // Priority comparisons use raw doubles on both sides (the proven
     // ann ordering pattern); only the OUTPUT value is micro-quantized.
-    Gate("dedup_semantic", (s, dir) => SemDedup.semantic(s, dir),
-      dir => semDedupSql(Gate.glob(SemDedup.dumpPath, dir))),
+    Gate("dedup_semantic", (s, dir) =>
+      SemDedup.semantic(s, dir, centsDump = SemdedupCents.sink(dir)),
+      dir => semDedupSql(SemdedupCents.glob(dir))),
     // skew-capped semantic dedup: each member compared only against
     // its cell's `cap` highest-priority members (degenerate-cluster
     // work bound; equals the one-shot rule when every cell <= cap)
@@ -223,11 +233,11 @@ object DedupGates {
     // join additionally bounded to the cell's `cap` = 64 highest-
     // priority members via a per-cell rank
     Gate("dedup_semantic_capped", (s, dir) =>
-      SemDedup.semanticCapped(s, dir),
+      SemDedup.semanticCapped(s, dir, centsDump = SemdedupCapCents.sink(dir)),
       dir => s"""WITH e AS (SELECT vec_id,
          |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
          |  FROM embeddings),
-         |c AS (SELECT cell, v FROM read_parquet('${Gate.glob(SemDedup.cappedDumpPath, dir)}')),
+         |c AS (SELECT cell, v FROM read_parquet('${SemdedupCapCents.glob(dir)}')),
          |asg AS (
          |  SELECT vec_id, cell, sim FROM (
          |    SELECT e.vec_id, c.cell, list_cosine_similarity(e.v, c.v) AS sim,
@@ -254,8 +264,8 @@ object DedupGates {
     // same re-derivation against the k-means|| gate's own codebook:
     // the trainer differs, the oracle machinery does not
     Gate("dedup_semantic_par", (s, dir) =>
-      SemDedup.semanticPar(s, dir),
-      dir => semDedupSql(Gate.glob(SemDedup.parDumpPath, dir))),
+      SemDedup.semanticPar(s, dir, centsDump = SemdedupParCents.sink(dir)),
+      dir => semDedupSql(SemdedupParCents.glob(dir))),
     // persisted semantic index: build-once on the %10!=0 slice, probe
     // the %10==0 batch — index members always outrank batch vectors
     // incremental semantic dedup: the stored codebook is the dumped
@@ -263,11 +273,11 @@ object DedupGates {
     // then the batch drop rule — index members always outrank batch,
     // batch-internal priority is the SemDeDup (cent_sim, id) order
     Gate("dedup_semantic_incremental", (s, dir) =>
-      SemIndex.dedupSemanticIncremental(s, dir),
+      SemIndex.dedupSemanticIncremental(s, dir, centsDump = SemidxCents.sink(dir)),
       dir => s"""WITH e AS (SELECT vec_id,
          |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
          |  FROM embeddings),
-         |c AS (SELECT cell, v FROM read_parquet('${Gate.glob(SemIndex.centsDumpPath, dir)}')),
+         |c AS (SELECT cell, v FROM read_parquet('${SemidxCents.glob(dir)}')),
          |asg AS (
          |  SELECT vec_id, cell, sim FROM (
          |    SELECT e.vec_id, c.cell, list_cosine_similarity(e.v, c.v) AS sim,
@@ -304,7 +314,7 @@ object DedupGates {
     // batches — each stage's keep set feeds the next stage's index
     // side, exactly the probe-then-append loop the engine ran
     Gate("dedup_semantic_stream", (s, dir) =>
-      SemStream.chunkProbeStream(s, dir),
+      SemStream.chunkProbeStream(s, dir, centsDump = SemstreamCents.sink(dir)),
       dir => dedupSemanticStreamSql(dir)),
     // STREAMING exact dedup at the chunk level — the dedup step a
     // crawl ingest runs before paying to embed/index a chunk it has
@@ -796,7 +806,7 @@ object DedupGates {
        |    list(CAST(coalesce(wx.weight, 0) AS DOUBLE) ORDER BY g2.bucket) AS v
        |  FROM gridS g2 LEFT JOIN w wx USING (doc_id, chunk_id, bucket)
        |  GROUP BY doc_id, chunk_id),
-       |c AS (SELECT cell, v FROM read_parquet('${Gate.glob(SemStream.centsDumpPath, dir)}')),
+       |c AS (SELECT cell, v FROM read_parquet('${SemstreamCents.glob(dir)}')),
        |asg AS (
        |  SELECT vec_id, cell, sim FROM (
        |    SELECT e.vec_id, c.cell, list_cosine_similarity(e.v, c.v) AS sim,

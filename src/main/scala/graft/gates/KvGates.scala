@@ -2,10 +2,25 @@ package graft.gates
 
 import graft.kv.{Kv, ShardCtrler}
 import graft.streaming.{KvStream, ShardMigration, ShardServe}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The `k_` gates: KV replay and shard-controller semantics as data
   * processing over `events`. */
 object KvGates {
+
+  val ConfigHistory = Dump("config_history")
+
+  /** The corpus's config history, written to the [[ConfigHistory]] dump
+    * so the DuckDB oracle can join it: the rebalance fold itself is not
+    * SQL-expressible, but once its output is parquet, everything
+    * DOWNSTREAM of it (epoch assignment, routing joins, handoff windows
+    * — k_route / k_migrations) becomes a real SQL differential instead
+    * of a rows-only check. */
+  private def history(s: SparkSession, dir: String): DataFrame = {
+    val df = ShardCtrler.historyDf(s, ShardCtrler.history(ShardCtrler.cmdsFromNation(s, dir)))
+    ConfigHistory.sink(dir)(df)
+    df
+  }
 
   val gates: Seq[Gate] = Seq(
     // ---- §2.3 KV / sharding semantics as data processing (K1-K9) ----
@@ -44,13 +59,10 @@ object KvGates {
     },
       _ => """SELECT DISTINCT p_name AS key, ascii(substr(p_name, 1, 1)) % 10 AS shard
         |FROM part""".stripMargin),
-    // the three history consumers materialize the fold to the oracle
-    // side path (ShardCtrler.historyWithSideDump) so DuckDB can join it
-    // The rebalance fold itself is not SQL-expressible, but the query
-    // closures materialize it to a RUN-SCOPED side path (the token in
-    // ShardCtrler.sideDumpPath ties this SQL — emitted by the same JVM
-    // that ran the queries — to this run's dump, so a stale dump can
-    // never be compared). k_route / k_migrations RE-DERIVE routing and
+    // the history consumers write the fold to the run-scoped
+    // ConfigHistory dump (its token ties this SQL — emitted by the same
+    // JVM that ran the queries — to this run's dump, so a stale dump
+    // can never be compared). k_route / k_migrations RE-DERIVE routing and
     // handoffs in SQL (epoch assignment, shard function, lag windows)
     // against the dump; k_config_history itself verifies the FOLD'S
     // INVARIANTS independently in SQL — balance, liveness, config-0,
@@ -61,15 +73,15 @@ object KvGates {
     // The SQL text lives in ShardCtrler.invariantGateSql; the spec
     // runs the same text in Spark over injected violations to prove
     // each invariant can fail.
-    Gate("k_config_history", (s, dir) => ShardCtrler.historyWithSideDump(s, dir),
+    Gate("k_config_history", (s, dir) => history(s, dir),
       dir => ShardCtrler.invariantGateSql("SELECT config_num, shard, gid, servers " +
-        s"FROM read_parquet('${Gate.glob(ShardCtrler.sideDumpPath, dir)}')")),
+        s"FROM read_parquet('${ConfigHistory.glob(dir)}')")),
     Gate("k_route", (s, dir) =>
       Kv.routeOps(Kv.opsFromEvents(s, dir),
-        ShardCtrler.historyWithSideDump(s, dir), epochLen = 100L),
+        history(s, dir), epochLen = 100L),
       dir => s"""WITH $kvOpsCte,
        |hist AS (SELECT config_num, shard, gid
-       |  FROM read_parquet('${Gate.glob(ShardCtrler.sideDumpPath, dir)}')),
+       |  FROM read_parquet('${ConfigHistory.glob(dir)}')),
        |mx AS (SELECT max(config_num) AS m FROM hist),
        |r AS (SELECT seq, key, ascii(substr(key, 1, 1)) % 10 AS shard,
        |        least(seq // 100, (SELECT m FROM mx)) AS config_num
@@ -84,10 +96,10 @@ object KvGates {
       ShardMigration.migrationsBatchSegmented(
         ShardMigration.shardOps(
           Kv.routeOps(Kv.opsFromEvents(s, dir),
-            ShardCtrler.historyWithSideDump(s, dir), epochLen = 100L))).toDF(),
+            history(s, dir), epochLen = 100L))).toDF(),
       dir => s"""WITH $kvOpsCte,
        |hist AS (SELECT config_num, shard, gid
-       |  FROM read_parquet('${Gate.glob(ShardCtrler.sideDumpPath, dir)}')),
+       |  FROM read_parquet('${ConfigHistory.glob(dir)}')),
        |mx AS (SELECT max(config_num) AS m FROM hist),
        |routed AS (
        |  SELECT o.seq, o.key, o.shard2 AS shard, h.gid
@@ -114,10 +126,10 @@ object KvGates {
       ShardMigration.migrationsEvictingBatchSegmented(
         ShardMigration.shardOps(
           Kv.routeOps(Kv.opsFromEvents(s, dir),
-            ShardCtrler.historyWithSideDump(s, dir), epochLen = 100L))).toDF(),
+            history(s, dir), epochLen = 100L))).toDF(),
       dir => s"""WITH $kvOpsCte,
        |hist AS (SELECT config_num, shard, gid
-       |  FROM read_parquet('${Gate.glob(ShardCtrler.sideDumpPath, dir)}')),
+       |  FROM read_parquet('${ConfigHistory.glob(dir)}')),
        |mx AS (SELECT max(config_num) AS m FROM hist),
        |routed AS (
        |  SELECT o.seq, o.key, o.shard2 AS shard, h.gid
@@ -146,10 +158,10 @@ object KvGates {
       ShardServe.serveBatchSegmented(
         ShardMigration.shardOps(
           Kv.routeOps(Kv.opsFromEvents(s, dir),
-            ShardCtrler.historyWithSideDump(s, dir), epochLen = 100L))).toDF(),
+            history(s, dir), epochLen = 100L))).toDF(),
       dir => s"""WITH $kvOpsCte,
        |hist AS (SELECT config_num, shard, gid
-       |  FROM read_parquet('${Gate.glob(ShardCtrler.sideDumpPath, dir)}')),
+       |  FROM read_parquet('${ConfigHistory.glob(dir)}')),
        |mx AS (SELECT max(config_num) AS m FROM hist),
        |routed AS (
        |  SELECT o.seq, o.shard2 AS shard, h.gid

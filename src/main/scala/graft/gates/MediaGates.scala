@@ -9,6 +9,19 @@ import graft.streaming.MediaStream
   * near-dup. */
 object MediaGates {
 
+  val ImgSigs = Dump("imghash_sigs")
+  val JpegSigs = Dump("jpeghash_sigs")
+  val JpegWideSigs = Dump("jpegwidehash_sigs")
+  val JpegStreamSigs = Dump("jpegstreamhash_sigs")
+  val AudSigs = Dump("audhash_sigs")
+  val AudFbSigs = Dump("audfb_sigs")
+  val FlacSigs = Dump("flachash_sigs")
+  val GifSigs = Dump("gifhash_sigs")
+  val PngSigs = Dump("pnghash_sigs")
+  val WebpSigs = Dump("webphash_sigs")
+  val VidMjpegSigs = Dump("vidmjpeghash_sigs")
+  val VidSigs = Dump("vidhash_sigs")
+
   val gates: Seq[Gate] = Seq(
     // ---- multimodal (stubbed decode; real plumbing) ----
     // half of each kind's rows carry REAL QOI/WAV/MP4 payloads with
@@ -23,8 +36,8 @@ object MediaGates {
     // decode, real or stub, happened in the JVM); banding, bucket cap
     // and the Hamming verify are the dedup_simhash oracle verbatim
     Gate("mm_image_dedup", (s, dir) =>
-      ImageDedup.imageDedup(s, dir),
-      dir => mediaPairsOracle("imghash_sigs", ImageDedup.dumpPath, dir)),
+      ImageDedup.imageDedup(s, dir, sigsDump = ImgSigs.sink(dir)),
+      dir => mediaPairsOracle(ImgSigs, dir)),
     // the JPEG path through the same decode -> aHash -> multi-probe
     // pipeline: odd docs carry their even neighbor's image with one
     // block perturbed (real near-dups, not byte copies); id%7==5 rows
@@ -32,8 +45,8 @@ object MediaGates {
     // JPEG-decode-fed perceptual pairs: same dumped-sig oracle — the
     // decode is the faith, the pair machinery is re-derived
     Gate("mm_image_dedup_jpeg", (s, dir) =>
-      Jpeg.imageDedupJpeg(s, dir),
-      dir => mediaPairsOracle("jpeghash_sigs", Jpeg.dedupDumpPath, dir)),
+      Jpeg.imageDedupJpeg(s, dir, sigsDump = JpegSigs.sink(dir)),
+      dir => mediaPairsOracle(JpegSigs, dir)),
     // the media near-dup SCALE path: exact-signature collapse +
     // 4x16-bit wide bands + radius-3 probes over the same JPEG
     // fixture, pinned by the all-pairs Hamming <= 15 truth (the r13
@@ -43,14 +56,14 @@ object MediaGates {
     // (not its own plumbing): collapse expansion + wide pigeonhole
     // must reach FULL recall, including the identical-sig stub clique
     Gate("mm_image_dedup_wide", (s, dir) =>
-      Jpeg.imageDedupWide(s, dir),
-      dir => allPairsHamming15Sql(Gate.glob(Jpeg.wideDumpPath, dir))),
+      Jpeg.imageDedupWide(s, dir, sigsDump = JpegWideSigs.sink(dir)),
+      dir => allPairsHamming15Sql(JpegWideSigs.glob(dir))),
     // the streaming crawl twin: per-batch decode+hash landed as
     // DeltaIndex subdirs with a mid-stream staged compaction, then
     // the same banded pair machinery over the reassembled index
     Gate("mm_image_dedup_stream", (s, dir) =>
-      MediaStream.imageDedupStream(s, dir),
-      dir => mediaPairsOracle("jpegstreamhash_sigs", MediaStream.dumpPath, dir)),
+      MediaStream.imageDedupStream(s, dir, sigsDump = JpegStreamSigs.sink(dir)),
+      dir => mediaPairsOracle(JpegStreamSigs, dir)),
     // audio features: real PCM WAV sample decode on the gate corpus'
     // real rows, byte-length stub on the fakes
     // extended WAV profile: stereo mean-downmix (truncating) +
@@ -164,16 +177,16 @@ object MediaGates {
     // audio near-dup: identical oracle shape over the audio
     // fingerprint dump (energy-delta over real PCM / byte fallback)
     Gate("mm_audio_dedup", (s, dir) =>
-      AudioDedup.audioDedup(s, dir),
-      dir => mediaPairsOracle("audhash_sigs", AudioDedup.dumpPath, dir)),
+      AudioDedup.audioDedup(s, dir, sigsDump = AudSigs.sink(dir)),
+      dir => mediaPairsOracle(AudSigs, dir)),
     // the Haitsma-Kalker filterbank form: lag-difference comb
     // filterbank band energies, the HK time x band gradient bit rule
     // (integer arithmetic end to end); same banded pair machinery
     // filterbank (Haitsma-Kalker) audio near-dup: same oracle shape
     // over the spectral fingerprint dump
     Gate("mm_audio_dedup_fb", (s, dir) =>
-      AudioDedup.audioDedupFb(s, dir),
-      dir => mediaPairsOracle("audfb_sigs", AudioDedup.fbDumpPath, dir)),
+      AudioDedup.audioDedupFb(s, dir, sigsDump = AudFbSigs.sink(dir)),
+      dir => mediaPairsOracle(AudFbSigs, dir)),
     // REAL baseline-TIFF decode (TIFF 6.0: both byte orders, IFD
     // walk, gray/RGB/RGBA/palette/WhiteIsZero photometrics,
     // multi-strip, PackBits): lossless, so the oracle recomputes
@@ -223,8 +236,8 @@ object MediaGates {
     // different subframe/assignment/residual choices -> identical
     // fingerprints at completely different bytes); id%9==5 truncated
     Gate("mm_audio_dedup_flac", (s, dir) =>
-      Flac.audioDedupFlac(s, dir),
-      dir => mediaPairsOracle("flachash_sigs", Flac.dedupDumpPath, dir)),
+      Flac.audioDedupFlac(s, dir, sigsDump = FlacSigs.sink(dir)),
+      dir => mediaPairsOracle(FlacSigs, dir)),
     Gate("mm_kind_summary", (s, dir) => Multimodal.kindSummary(s, dir),
       _ => s"""SELECT kind, count(*) AS n,
          |  CAST(sum(byte_len) AS BIGINT) AS total_bytes
@@ -380,16 +393,16 @@ object MediaGates {
     // the GIF path through the decode -> aHash -> multi-probe
     // near-dup pipeline (the JPEG/PNG twins' shape)
     Gate("mm_image_dedup_gif", (s, dir) =>
-      Gif.imageDedupGif(s, dir),
-      dir => mediaPairsOracle("gifhash_sigs", Gif.dedupDumpPath, dir)),
+      Gif.imageDedupGif(s, dir, sigsDump = GifSigs.sink(dir)),
+      dir => mediaPairsOracle(GifSigs, dir)),
     // the PNG path through the same decode -> aHash -> multi-probe
     // near-dup pipeline (the mm_image_dedup_jpeg twin): odd docs
     // carry their even neighbor's frame with the top-left 8x8
     // region brightened (re-filtered and re-deflated, so the byte
     // streams differ completely); id%7==5 rows are truncated
     Gate("mm_image_dedup_png", (s, dir) =>
-      Png.imageDedupPng(s, dir),
-      dir => mediaPairsOracle("pnghash_sigs", Png.dedupDumpPath, dir)),
+      Png.imageDedupPng(s, dir, sigsDump = PngSigs.sink(dir)),
+      dir => mediaPairsOracle(PngSigs, dir)),
     // REAL VP8L WebP decode (RFC 9649: RIFF walk, LSB-first bit
     // reading, simple/normal prefix codes, color cache, LZ77 with 2D
     // distance codes, meta prefix codes, all four transforms): VP8L
@@ -441,8 +454,8 @@ object MediaGates {
     // re-encode their even neighbor (same VP8L variant) with the
     // top-left 8x8 region brightened; id%9==5 rows are truncated
     Gate("mm_image_dedup_webp", (s, dir) =>
-      Webp.imageDedupWebp(s, dir),
-      dir => mediaPairsOracle("webphash_sigs", Webp.dedupDumpPath, dir)),
+      Webp.imageDedupWebp(s, dir, sigsDump = WebpSigs.sink(dir)),
+      dir => mediaPairsOracle(WebpSigs, dir)),
     // MJPEG-in-AVI: the first COMPRESSED-video pixel path — the RIFF
     // walker composes with the T.81 decoder, one full JPEG per frame
     // chunk; both sums recomputed from doc_id closed forms (the
@@ -488,8 +501,8 @@ object MediaGates {
     // temporal-majority fold -> banded Hamming; odd docs re-encode
     // their even neighbor with one block of frame 0 perturbed
     Gate("mm_video_dedup_mjpeg", (s, dir) =>
-      VideoFrames.videoDedupMjpeg(s, dir),
-      dir => mediaPairsOracle("vidmjpeghash_sigs", VideoFrames.mjpegDumpPath, dir)),
+      VideoFrames.videoDedupMjpeg(s, dir, sigsDump = VidMjpegSigs.sink(dir)),
+      dir => mediaPairsOracle(VidMjpegSigs, dir)),
     // image resize: decode -> box-average -> QOI re-encode -> decode,
     // integer-exact; the oracle recomputes the PIXEL arithmetic from
     // the gate corpus' closed-form images (no dump taken on faith)
@@ -635,8 +648,8 @@ object MediaGates {
     // video near-dup: identical oracle shape over the video dump
     // (temporal-majority frame aHashes / byte fallback)
     Gate("mm_video_dedup", (s, dir) =>
-      VideoFrames.videoDedup(s, dir),
-      dir => mediaPairsOracle("vidhash_sigs", VideoFrames.dumpPath, dir)),
+      VideoFrames.videoDedup(s, dir, sigsDump = VidSigs.sink(dir)),
+      dir => mediaPairsOracle(VidSigs, dir)),
   )
 
   /** The `mm_flac_decode` oracle: FLAC is lossless, so the features
@@ -721,21 +734,26 @@ object MediaGates {
       |FROM documents""".stripMargin
 
   /** The regime-aware oracle for a [[SigDump.dumpAndPair]] family
-    * whose dump `dumpPath` names for the corpus dir `sfDir`: the
-    * multi-probe re-derivation when the query took the 8-bit
-    * multi-probe path, the all-pairs Hamming ground truth when the
-    * measured switch routed it to the exact collapse+wide path
-    * (Verify renders the oracles AFTER the queries ran, so the
-    * per-(kind, base) regime record is authoritative here — ADVICE
-    * r13: previously a corpus crossing the regime boundary would
-    * hash-mismatch even with a correct engine). */
-  private def mediaPairsOracle(dumpKind: String, dumpPath: String => String,
-      sfDir: String): String = {
-    val glob = Gate.glob(dumpPath, sfDir)
-    if (SigDump.pickedWide(dumpKind, new java.io.File(sfDir).getName))
-      allPairsHamming15Sql(glob)
-    else mediaHashPairsSql(glob)
-  }
+    * over its `dump` for the corpus dir `sfDir`: one SQL that re-derives
+    * the engine's regime pick ([[SigDump.pickWide]]) from the dumped
+    * signatures — wide when the largest 8-bit band bucket (`max(n)` over
+    * `sz`) exceeds the 1000 cap or the dump holds
+    * [[SigDump.MediaWideAbove]] rows or more; an empty dump is not wide
+    * — and returns the multi-probe re-derivation when the pick is
+    * multi-probe, the all-pairs Hamming ground truth when it routes to
+    * the exact collapse+wide path (ADVICE r13: a corpus crossing the
+    * regime boundary must not hash-mismatch a correct engine). */
+  private def mediaPairsOracle(dump: Dump, sfDir: String): String =
+    s"""WITH ${mediaHashPairsCtes(dump.glob(sfDir))},
+       |wide AS (
+       |  SELECT coalesce(max(n), 0) > 1000
+       |    OR (SELECT count(*) FROM sigs) >= ${SigDump.MediaWideAbove} AS w
+       |  FROM sz)
+       |SELECT i, j FROM mp WHERE NOT (SELECT w FROM wide)
+       |UNION ALL
+       |SELECT x.doc_id AS i, y.doc_id AS j
+       |FROM sigs x JOIN sigs y ON x.doc_id < y.doc_id
+       |WHERE (SELECT w FROM wide) AND bit_count(xor(x.sig, y.sig)) <= 15""".stripMargin
 
   /** The all-pairs Hamming ≤ 15 ground truth over a dumped
     * `sigs(doc_id, sig)` frame — the oracle of the exact
@@ -747,14 +765,14 @@ object MediaGates {
        |FROM sigs x JOIN sigs y ON x.doc_id < y.doc_id
        |WHERE bit_count(xor(x.sig, y.sig)) <= 15""".stripMargin
 
-  /** The multi-probe banded-Hamming pair oracle over a dumped
-    * `sigs(doc_id, sig)` frame at `glob` — banding, radius-1 band
-    * perturbations, the bucket cap and the exact Hamming verify, all
-    * re-derived as 64-bit arithmetic (the dedup_simhash_multiprobe
+  /** The multi-probe banded-Hamming pairs `mp(i, j)` over a dumped
+    * `sigs(doc_id, sig)` frame at `glob`, as CTEs — banding, radius-1
+    * band perturbations, the bucket cap and the exact Hamming verify,
+    * all re-derived as 64-bit arithmetic (the dedup_simhash_multiprobe
     * oracle); the dumped signatures are the only faith. Shared by the
-    * image and audio perceptual near-dup gates. */
-  private def mediaHashPairsSql(glob: String): String =
-    s"""WITH sigs AS (SELECT doc_id, sig FROM read_parquet('$glob')),
+    * image, audio and video perceptual near-dup gates. */
+  private def mediaHashPairsCtes(glob: String): String =
+    s"""sigs AS (SELECT doc_id, sig FROM read_parquet('$glob')),
        |${DedupGates.simhashBandCte},
        |exact AS (
        |  SELECT x.doc_id AS i, y.doc_id AS j,
@@ -774,9 +792,10 @@ object MediaGates {
        |  JOIN sz ON sz.band = pr.band AND sz.h = pr.h
        |    AND sz.n BETWEEN 1 AND 1000
        |  JOIN b m ON m.band = pr.band AND m.h = pr.h
-       |    AND m.doc_id <> pr.doc_id)
-       |SELECT DISTINCT i, j
-       |FROM (SELECT i, j, dist FROM exact
-       |      UNION ALL SELECT i, j, dist FROM viap)
-       |WHERE dist <= 15""".stripMargin
+       |    AND m.doc_id <> pr.doc_id),
+       |mp AS (
+       |  SELECT DISTINCT i, j
+       |  FROM (SELECT i, j, dist FROM exact
+       |        UNION ALL SELECT i, j, dist FROM viap)
+       |  WHERE dist <= 15)""".stripMargin
 }

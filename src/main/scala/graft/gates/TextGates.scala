@@ -1,6 +1,6 @@
 package graft.gates
 
-import graft.dedup.{SemDedup, SuffixDedup}
+import graft.dedup.SuffixDedup
 import graft.streaming.{ChunkIngest, DriftStream, GzipStream, ZstdStream}
 import graft.text.{Boilerplate, Bpe, Chunking, Cleaning, CompressedIngest,
   CorpusPipeline, CrawlExtract, Embed, HtmlIngest, QualityClassifier, Sampling,
@@ -9,6 +9,14 @@ import graft.text.{Boilerplate, Bpe, Chunking, Cleaning, CompressedIngest,
 /** The `text_` gates: the training-data text pipeline (ingest, cleaning,
   * quality, tokenization, mixing, packing). */
 object TextGates {
+
+  val BpeMerges = Dump("bpe_merges")
+  val ClfWeights = Dump("clf_weights")
+  // the semantic funnel trains ITS OWN run's codebook under its own kind:
+  // sharing `semdedup_cents` would let whichever gate ran later
+  // overwrite the other's dump with a retrain and break the first
+  // gate's hash whenever the two codebooks are not bit-identical
+  val SemdedupFunnelCents = Dump("semdedup_funnel_cents")
 
   val gates: Seq[Gate] = Seq(
     // text_sample: md5-prefix threshold — byte-identical across engines
@@ -661,9 +669,10 @@ object TextGates {
     // chunking over the BPE id stream: the ids CTE is text_bpe_ids'
     // re-derivation verbatim (dumped merges faith), then the same
     // integer chunk arithmetic — membership range per id row
-    Gate("text_chunk_ids", (s, dir) => Chunking.chunkIds(s, dir),
+    Gate("text_chunk_ids", (s, dir) =>
+      Chunking.chunkIds(s, dir, mergesDump = BpeMerges.sink(dir)),
       dir => s"""WITH RECURSIVE
-         |bmerges AS (SELECT ord, a, b FROM read_parquet('${Gate.glob(Bpe.sideDumpPath, dir)}')),
+         |bmerges AS (SELECT ord, a, b FROM read_parquet('${BpeMerges.glob(dir)}')),
          |dw AS (
          |  SELECT doc_id, list_filter(string_split_regex(lower(text), '[^a-z]+'),
          |    x -> x <> '') AS ws
@@ -969,12 +978,13 @@ object TextGates {
     // the SemDeDup keeper bit re-derived from the funnel gate's own
     // dumped codebook (vec_id == doc_id in the corpus)
     Gate("text_filter_funnel_semantic", (s, dir) =>
-      TextAnalysis.filterFunnelSemantic(s, dir),
+      TextAnalysis.filterFunnelSemantic(s, dir,
+        centsDump = SemdedupFunnelCents.sink(dir)),
       dir => s"""WITH $funnelCtes,
          |se AS (SELECT vec_id,
          |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
          |  FROM embeddings),
-         |scn AS (SELECT cell, v FROM read_parquet('${Gate.glob(SemDedup.funnelDumpPath, dir)}')),
+         |scn AS (SELECT cell, v FROM read_parquet('${SemdedupFunnelCents.glob(dir)}')),
          |sasg AS (
          |  SELECT vec_id, cell, sim FROM (
          |    SELECT se.vec_id, scn.cell,
@@ -1028,7 +1038,7 @@ object TextGates {
     // re-hashes features and recomputes the margin from raw text
     // (accuracy/agreement still asserted in QualityClassifierSpec)
     // trained-classifier gate: only the LEARNED WEIGHTS are dumped
-    // (QualityClassifier.sideDumpPath); feature tokenization, the dense len/stop
+    // (ClfWeights); feature tokenization, the dense len/stop
     // buckets (exact integer log2 via bin()), FNV-1a hashing
     // (re-expressed in unsigned-64 arithmetic — Int overflow ≡ mod
     // 2^32, and 4096 | 2^32 makes the bucket equal), and the margin
@@ -1036,8 +1046,9 @@ object TextGates {
     // MARGIN (no transcendental): every op is an exactly-specified
     // IEEE-754 double op applied in the same order as the Scala
     // scorer, so the hash compare is bit-exact.
-    Gate("text_quality_clf", (s, dir) => QualityClassifier.classifyTrained(s, dir),
-      dir => s"""WITH wrow AS (SELECT idx, w FROM read_parquet('${Gate.glob(QualityClassifier.sideDumpPath, dir)}')),
+    Gate("text_quality_clf", (s, dir) =>
+      QualityClassifier.classifyTrained(s, dir, weightsDump = ClfWeights.sink(dir)),
+      dir => s"""WITH wrow AS (SELECT idx, w FROM read_parquet('${ClfWeights.glob(dir)}')),
          |warr AS (SELECT list(w ORDER BY idx) AS arr FROM wrow WHERE idx >= 0),
          |brow AS (SELECT w AS bias FROM wrow WHERE idx = -1),
          |f AS (
@@ -1131,9 +1142,10 @@ object TextGates {
         |  FROM syms)
         |SELECT pair, CAST(sum(cnt) AS BIGINT) AS cnt
         |FROM pairs GROUP BY pair""".stripMargin),
-    Gate("text_bpe_encode", (s, dir) => Bpe.encode(s, dir),
+    Gate("text_bpe_encode", (s, dir) =>
+      Bpe.encode(s, dir, mergesDump = BpeMerges.sink(dir)),
       dir => s"""WITH RECURSIVE
-         |bmerges AS (SELECT ord, a, b FROM read_parquet('${Gate.glob(Bpe.sideDumpPath, dir)}')),
+         |bmerges AS (SELECT ord, a, b FROM read_parquet('${BpeMerges.glob(dir)}')),
          |dw AS (
          |  SELECT doc_id, list_filter(string_split_regex(lower(text), '[^a-z]+'),
          |    x -> x <> '') AS ws
@@ -1149,9 +1161,10 @@ object TextGates {
     // token-id product surface: per-position ids + the vocab table;
     // the merge table is side-dumped and the oracle re-applies it
     // (BpeSpec still carries the sequential-oracle differential)
-    Gate("text_bpe_ids", (s, dir) => Bpe.encodeIds(s, dir),
+    Gate("text_bpe_ids", (s, dir) =>
+      Bpe.encodeIds(s, dir, mergesDump = BpeMerges.sink(dir)),
       dir => s"""WITH RECURSIVE
-         |bmerges AS (SELECT ord, a, b FROM read_parquet('${Gate.glob(Bpe.sideDumpPath, dir)}')),
+         |bmerges AS (SELECT ord, a, b FROM read_parquet('${BpeMerges.glob(dir)}')),
          |dw AS (
          |  SELECT doc_id, list_filter(string_split_regex(lower(text), '[^a-z]+'),
          |    x -> x <> '') AS ws
@@ -1174,14 +1187,15 @@ object TextGates {
          |  v.token_id
          |FROM flat f JOIN bvocab v ON v.token = f.tok""".stripMargin),
     // BPE gates: the TRAINED MERGE TABLE is side-dumped run-scoped
-    // (Bpe.sideDumpPath) and is the only artifact taken on faith — the
+    // (BpeMerges) and is the only artifact taken on faith — the
     // iterative argmax loop is not SQL-expressible, but the APPLY is:
     // DuckDB re-applies the merges to the raw corpus itself (one
     // greedy `replace` per merge round, see bpeDeriveCtes) and
     // re-derives the vocab table, per-position ids, and per-doc
     // counts as independent hash gates.
-    Gate("text_bpe_vocab", (s, dir) => Bpe.vocabDf(s, dir),
-      dir => s"""WITH bmerges AS (SELECT ord, a, b FROM read_parquet('${Gate.glob(Bpe.sideDumpPath, dir)}')),
+    Gate("text_bpe_vocab", (s, dir) =>
+      Bpe.vocabDf(s, dir, mergesDump = BpeMerges.sink(dir)),
+      dir => s"""WITH bmerges AS (SELECT ord, a, b FROM read_parquet('${BpeMerges.glob(dir)}')),
          |$bpeVocabCte
          |SELECT token_id, token FROM bvocab""".stripMargin),
     // the composed corpus-prep pipeline: same stages chained as CTEs
@@ -1214,9 +1228,10 @@ object TextGates {
     // the id-packed pipeline: clean/quality/dedup CTEs are
     // text_pipeline's, then the BPE re-derivation runs on the KEPT
     // cleaned text and packing follows the id counts
-    Gate("text_pipeline_ids", (s, dir) => CorpusPipeline.prepareIds(s, dir),
+    Gate("text_pipeline_ids", (s, dir) =>
+      CorpusPipeline.prepareIds(s, dir, mergesDump = BpeMerges.sink(dir)),
       dir => s"""WITH RECURSIVE
-         |bmerges AS (SELECT ord, a, b FROM read_parquet('${Gate.glob(Bpe.sideDumpPath, dir)}')),
+         |bmerges AS (SELECT ord, a, b FROM read_parquet('${BpeMerges.glob(dir)}')),
          |c AS (
          |  SELECT doc_id,
          |    trim(regexp_replace(

@@ -103,29 +103,6 @@ object ShardCtrler {
     }).toDF("config_num", "shard", "gid", "servers")
   }
 
-  /** The config-history side dump for a corpus dir basename
-    * ([[graft.core.SideDump]] kind `config_history`); the k_ history
-    * oracles name it for the corpus dir they are given, so the gates
-    * work at ANY sf. */
-  def sideDumpPath(base: String): String =
-    graft.core.SideDump.path("config_history", base)
-
-  /** The corpus's config history, MATERIALIZED to a run-scoped side
-    * path so the DuckDB oracle can join it: the rebalance fold itself
-    * is not SQL-expressible, but once its output is parquet,
-    * everything DOWNSTREAM of it (epoch assignment, routing joins,
-    * handoff windows — k_route / k_migrations) becomes a real SQL
-    * differential instead of a rows-only check. The path carries the
-    * corpus dir's basename (so SFs never collide) plus the
-    * [[graft.core.SideDump]] run token (so RUNS never collide or go
-    * stale); dumps from dead runs are pruned by age on the next write. */
-  def historyWithSideDump(spark: SparkSession, sfDir: String): DataFrame = {
-    val df = historyDf(spark, history(cmdsFromNation(spark, sfDir)))
-    graft.core.SideDump.write(df, "config_history",
-      new java.io.File(sfDir).getName)
-    df
-  }
-
   /** The config-history oracle's invariant gate as ANSI SQL over a
     * history relation `(config_num, shard, gid, servers)` given by
     * `hSource` — runnable by BOTH the DuckDB oracle (hSource =

@@ -1,5 +1,6 @@
 package graft.multimodal
 
+import graft.core.DumpSink
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import graft.multimodal.Multimodal.MediaRow
 
@@ -38,9 +39,6 @@ import graft.multimodal.Multimodal.MediaRow
   * oracle verbatim over the audio dump.
   */
 object AudioDedup {
-
-  def dumpPath(base: String): String =
-    graft.core.SideDump.path("audhash_sigs", base)
 
   /** 64-bit energy-delta fingerprint over PCM samples: 65 equal time
     * regions, bit r set iff mean energy (Σs²/len) of region r+1
@@ -206,32 +204,27 @@ object AudioDedup {
       .toDF("doc_id", "sig")
   }
 
-  /** Gate surface: fingerprints side-dumped (the decode is the
-    * faith); multi-probe banding, cap and Hamming verify re-derived
+  /** Gate surface: fingerprints go to `sigsDump` (the decode is
+    * the faith); multi-probe banding, cap and Hamming verify re-derived
     * by DuckDB (the dedup_simhash_multiprobe oracle over the audio
-    * dump). localCheckpoint, not cache(): both the dump write and the
-    * pair stage read the fingerprints (decode must run once), and the
-    * checkpoint's blocks are reclaimed once the plan is
-    * unreferenced. */
+    * dump). The pair tail checkpoints the fingerprints
+    * (see [[SigDump]]). */
   def audioDedup(spark: SparkSession, sfDir: String, maxHamming: Int = 15,
-      maxBucket: Int = 1000): DataFrame =
+      maxBucket: Int = 1000, sigsDump: DumpSink = DumpSink.discard): DataFrame =
     SigDump.dumpAndPair(hashFrame(Multimodal.mediaTable(spark, sfDir)),
-      "audhash_sigs", sfDir, maxHamming, maxBucket)
-
-  def fbDumpPath(base: String): String =
-    graft.core.SideDump.path("audfb_sigs", base)
+      maxHamming, maxBucket, sigsDump)
 
   /** Gate surface for the FILTERBANK fingerprint (`mm_audio_dedup_fb`)
     * — same media table, same banded machinery, same
     * dumped-signature oracle; only the per-clip hash differs, so the
     * two gates pin time-domain and spectral forms independently. */
   def audioDedupFb(spark: SparkSession, sfDir: String, maxHamming: Int = 15,
-      maxBucket: Int = 1000): DataFrame = {
+      maxBucket: Int = 1000, sigsDump: DumpSink = DumpSink.discard): DataFrame = {
     import spark.implicits._
     val sigs = Multimodal.mediaTable(spark, sfDir)
       .filter(_.kind == "audio")
       .map(m => (m.media_id, clipHashFb(m.media)))
       .toDF("doc_id", "sig")
-    SigDump.dumpAndPair(sigs, "audfb_sigs", sfDir, maxHamming, maxBucket)
+    SigDump.dumpAndPair(sigs, maxHamming, maxBucket, sigsDump)
   }
 }

@@ -1,5 +1,7 @@
 package graft.multimodal
 
+import graft.core.DumpSink
+
 /** FLAC sample decode — pure JVM, public spec (RFC 9639 / the FLAC
   * format specification): compressed audio onto the REAL sample path
   * (r13 "What's missing #2" — every non-WAV audio payload fell to the
@@ -144,9 +146,6 @@ object Flac {
         "zero_crossings", "energy")
   }
 
-  def dedupDumpPath(base: String): String =
-    graft.core.SideDump.path("flachash_sigs", base)
-
   /** Gate surface (`mm_audio_dedup_flac`) — compressed audio in the
     * fingerprint near-dup family: odd docs carry a LOSSLESS RE-ENCODE
     * of their even neighbor (same samples, a shifted encode seed —
@@ -155,10 +154,11 @@ object Flac {
     * land at Hamming 0); id % 9 == 5 docs carry a truncated stream
     * (stub fallback in-gate). Everything through decode →
     * energy-delta fingerprint → multi-probe banded Hamming; hashes
-    * side-dumped, DuckDB re-derives banding/caps/probes/verify. */
+    * go to `sigsDump`, DuckDB re-derives banding/caps/probes/verify. */
   def audioDedupFlac(spark: org.apache.spark.sql.SparkSession,
       sfDir: String, maxHamming: Int = 15,
-      maxBucket: Int = 1000): org.apache.spark.sql.DataFrame = {
+      maxBucket: Int = 1000,
+      sigsDump: DumpSink = DumpSink.discard): org.apache.spark.sql.DataFrame = {
     import spark.implicits._
     // widened when narrow (graft.core.Widen): the per-row synth +
     // full pixel/sample decode below is the gate's entire cost, and
@@ -168,8 +168,7 @@ object Flac {
       .as[Long]
       .map(id => (id, AudioDedup.clipHash(dedupPayload(id))))
       .toDF("doc_id", "sig")
-    SigDump.dumpAndPair(sigs, "flachash_sigs", sfDir, maxHamming,
-      maxBucket)
+    SigDump.dumpAndPair(sigs, maxHamming, maxBucket, sigsDump)
   }
 
   /** The near-dup fixture payload (shared with FlacSpec): the twin is

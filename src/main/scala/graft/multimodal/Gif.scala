@@ -1,5 +1,7 @@
 package graft.multimodal
 
+import graft.core.DumpSink
+
 /** GIF pixel decode — pure JVM, public spec (GIF87a/89a, the W3C
   * GIF89a specification): the third web image format onto the REAL
   * pixel path. Scope: the logical-screen/image-descriptor walk,
@@ -57,19 +59,17 @@ object Gif {
       .toDF("doc_id", "w", "h", "pix_sum", "pix_wsum")
   }
 
-  def dedupDumpPath(base: String): String =
-    graft.core.SideDump.path("gifhash_sigs", base)
-
   /** Gate surface (`mm_image_dedup_gif`) — GIF in the perceptual
     * near-dup family (the JPEG/PNG twins' shape): odd docs carry
     * their even neighbor's frame with the top-left 8×8 region
     * brightened by +8, re-LZW-coded (byte streams differ completely,
     * the aHash moves a few bits); id % 7 == 5 docs carry a truncated
-    * stream (stub fallback in-gate). Hashes side-dumped; DuckDB
+    * stream (stub fallback in-gate). Hashes go to `sigsDump`; DuckDB
     * re-derives banding/caps/probes/verify. */
   def imageDedupGif(spark: org.apache.spark.sql.SparkSession,
       sfDir: String, maxHamming: Int = 15,
-      maxBucket: Int = 1000): org.apache.spark.sql.DataFrame = {
+      maxBucket: Int = 1000,
+      sigsDump: DumpSink = DumpSink.discard): org.apache.spark.sql.DataFrame = {
     import spark.implicits._
     // widened when narrow (graft.core.Widen): the per-row synth +
     // full pixel/sample decode below is the gate's entire cost, and
@@ -79,8 +79,7 @@ object Gif {
       .as[Long]
       .map(id => (id, ImageDedup.imageHash(dedupPayload(id))))
       .toDF("doc_id", "sig")
-    SigDump.dumpAndPair(sigs, "gifhash_sigs", sfDir, maxHamming,
-      maxBucket)
+    SigDump.dumpAndPair(sigs, maxHamming, maxBucket, sigsDump)
   }
 
   /** The near-dup fixture payload (shared with GifSpec). */

@@ -1,5 +1,6 @@
 package graft.multimodal
 
+import graft.core.DumpSink
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.multimodal.Multimodal.MediaRow
@@ -36,8 +37,6 @@ import graft.multimodal.Multimodal.MediaRow
   */
 object ImageDedup {
 
-  def dumpPath(base: String): String =
-    graft.core.SideDump.path("imghash_sigs", base)
 
   // ── QOI full pixel decode (public spec, qoiformat.org) ────────────
 
@@ -268,12 +267,12 @@ object ImageDedup {
       .toDF("doc_id", "sig")
   }
 
-  /** Gate surface: hashes side-dumped (the decode is the faith);
+  /** Gate surface: hashes go to `sigsDump` (the decode is the faith);
     * multi-probe banding, cap and Hamming verify re-derived by
     * DuckDB (the dedup_simhash_multiprobe oracle over the image
     * dump). */
   def imageDedup(spark: SparkSession, sfDir: String, maxHamming: Int = 15,
-      maxBucket: Int = 1000): DataFrame =
+      maxBucket: Int = 1000, sigsDump: DumpSink = DumpSink.discard): DataFrame =
     SigDump.dumpAndPair(hashFrame(Multimodal.mediaTable(spark, sfDir)),
-      "imghash_sigs", sfDir, maxHamming, maxBucket)
+      maxHamming, maxBucket, sigsDump)
 }

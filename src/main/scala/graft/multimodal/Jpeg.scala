@@ -1,5 +1,7 @@
 package graft.multimodal
 
+import graft.core.DumpSink
+
 /** JPEG pixel decode — pure JVM, public spec (ITU-T T.81 /
   * ISO 10918-1): the format the first real image corpus a user brings
   * actually arrives in, closing the r11 "compressed formats stay
@@ -88,9 +90,6 @@ object Jpeg {
       .toDF("doc_id", "w", "h", "pix_sum", "pix_wsum")
   }
 
-  def dedupDumpPath(base: String): String =
-    graft.core.SideDump.path("jpeghash_sigs", base)
-
   /** Gate surface (`mm_image_dedup_jpeg`) — the JPEG path as a
     * first-class member of the perceptual near-dup family: every odd
     * doc carries its even neighbor's image with ONE block's gray
@@ -100,12 +99,13 @@ object Jpeg {
     * fallback inside the same gate), and everything goes through the
     * REAL decode → aHash → multi-probe banded-Hamming machinery
     * ([[ImageDedup.imageHash]], the `mm_image_dedup` pipeline). The
-    * per-image hashes are side-dumped (the decode is the faith);
+    * per-image hashes go to `sigsDump` (the decode is the faith);
     * DuckDB re-derives banding, caps, probes and the Hamming verify —
     * the shared mediaHashPairs oracle. */
   def imageDedupJpeg(spark: org.apache.spark.sql.SparkSession,
       sfDir: String, maxHamming: Int = 15,
-      maxBucket: Int = 1000): org.apache.spark.sql.DataFrame = {
+      maxBucket: Int = 1000,
+      sigsDump: DumpSink = DumpSink.discard): org.apache.spark.sql.DataFrame = {
     import spark.implicits._
     // widened when narrow (graft.core.Widen): the per-row synth +
     // full pixel/sample decode below is the gate's entire cost, and
@@ -115,12 +115,8 @@ object Jpeg {
       .as[Long]
       .map(id => (id, ImageDedup.imageHash(dedupPayload(id))))
       .toDF("doc_id", "sig")
-    SigDump.dumpAndPair(sigs, "jpeghash_sigs", sfDir, maxHamming,
-      maxBucket)
+    SigDump.dumpAndPair(sigs, maxHamming, maxBucket, sigsDump)
   }
-
-  def wideDumpPath(base: String): String =
-    graft.core.SideDump.path("jpegwidehash_sigs", base)
 
   /** Gate surface (`mm_image_dedup_wide`) — the SCALE PATH of the
     * media near-dup family over the same JPEG fixture: exact-sig
@@ -134,7 +130,8 @@ object Jpeg {
     * exists: truncated stub rows share one signature). */
   def imageDedupWide(spark: org.apache.spark.sql.SparkSession,
       sfDir: String, maxHamming: Int = 15,
-      maxBucket: Int = 1000): org.apache.spark.sql.DataFrame = {
+      maxBucket: Int = 1000,
+      sigsDump: DumpSink = DumpSink.discard): org.apache.spark.sql.DataFrame = {
     import spark.implicits._
     // widened when narrow (graft.core.Widen): the per-row synth +
     // full pixel/sample decode below is the gate's entire cost, and
@@ -144,8 +141,7 @@ object Jpeg {
       .as[Long]
       .map(id => (id, ImageDedup.imageHash(dedupPayload(id))))
       .toDF("doc_id", "sig")
-    SigDump.dumpAndPairWide(sigs, "jpegwidehash_sigs", sfDir, maxHamming,
-      maxBucket)
+    SigDump.dumpAndPairWide(sigs, maxHamming, maxBucket, sigsDump)
   }
 
   /** The near-dup fixture payload (shared with JpegSpec's planted-twin

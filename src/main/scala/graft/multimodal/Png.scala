@@ -1,5 +1,7 @@
 package graft.multimodal
 
+import graft.core.DumpSink
+
 /** PNG pixel decode — pure JVM, public spec (RFC 2083 / ISO 15948):
   * the web's second image format onto the REAL pixel path (r12
   * "What's missing #2" — header-only before this; every PNG fell to
@@ -78,21 +80,19 @@ object Png {
       .toDF("doc_id", "w", "h", "pix_sum", "pix_wsum")
   }
 
-  def dedupDumpPath(base: String): String =
-    graft.core.SideDump.path("pnghash_sigs", base)
-
   /** Gate surface (`mm_image_dedup_png`) — the PNG path in the
     * perceptual near-dup family, the [[Jpeg.imageDedupJpeg]] twin:
     * odd docs carry their even neighbor's image with one pixel-block
     * region brightened by +8 (aHash moves a few bits, the byte stream
     * completely), id % 7 == 5 docs carry a truncated stream (stub
     * fallback in-gate), everything through decode → aHash →
-    * multi-probe banded Hamming. Hashes side-dumped; DuckDB
+    * multi-probe banded Hamming. Hashes go to `sigsDump`; DuckDB
     * re-derives banding/caps/probes/verify (the shared mediaHashPairs
     * oracle). */
   def imageDedupPng(spark: org.apache.spark.sql.SparkSession,
       sfDir: String, maxHamming: Int = 15,
-      maxBucket: Int = 1000): org.apache.spark.sql.DataFrame = {
+      maxBucket: Int = 1000,
+      sigsDump: DumpSink = DumpSink.discard): org.apache.spark.sql.DataFrame = {
     import spark.implicits._
     // widened when narrow (graft.core.Widen): the per-row synth +
     // full pixel/sample decode below is the gate's entire cost, and
@@ -102,8 +102,7 @@ object Png {
       .as[Long]
       .map(id => (id, ImageDedup.imageHash(dedupPayload(id))))
       .toDF("doc_id", "sig")
-    SigDump.dumpAndPair(sigs, "pnghash_sigs", sfDir, maxHamming,
-      maxBucket)
+    SigDump.dumpAndPair(sigs, maxHamming, maxBucket, sigsDump)
   }
 
   /** The near-dup fixture payload (shared with PngSpec's planted-twin

@@ -1,15 +1,16 @@
 package graft.multimodal
 
+import graft.core.DumpSink
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Shared gate-surface tail for the perceptual near-dup families
-  * (image / audio / video): materialize the (doc_id, sig) fingerprint
-  * frame ONCE (the decode feeds BOTH the side-dump write and the pair
-  * stage — without the checkpoint it would run twice), dump it
-  * run-scoped for the DuckDB oracle (which names the dump for the
-  * corpus dir it is given), then run the banded-Hamming pair
-  * machinery. One copy of the cache/dump discipline instead of nine.
+/** Shared pair tail for the perceptual near-dup families (image /
+  * audio / video): materialize the (doc_id, sig) fingerprint frame
+  * ONCE (the decode feeds the regime pick, the pair stage and, on a
+  * gate run, the side dump its DuckDB oracle reads — without the
+  * checkpoint it would run once per reader), hand it to the dump sink,
+  * then run the banded-Hamming pair machinery. One copy of the
+  * materialize/dump discipline instead of nine.
   *
   * REGIME PICK — measured, not guessed (r13 "What's wrong #1"): the
   * 8-bit multi-probe scheme is exact precisely as long as no band
@@ -38,11 +39,11 @@ import org.apache.spark.sql.functions._
   * 100–256 k high-entropy window.
   *
   * Every sf0.01/sf0.001 gate corpus measures maxOcc ≤ 215 ≪ 1000, so
-  * the correctness-gate plans and multi-probe oracles are untouched.
-  * The oracle side consults [[pickedWide]] per dump kind (ADVICE
-  * r13): a family that switched regimes gets the all-pairs
-  * ground-truth SQL — the `mm_image_dedup_wide` shape — instead of a
-  * multi-probe re-derivation that would hash-mismatch a correct
+  * the correctness-gate plans are the multi-probe ones. The media
+  * oracles re-derive the same pick from the dumped signatures (ADVICE
+  * r13): a corpus the switch routes wide is checked against the
+  * all-pairs ground truth — the `mm_image_dedup_wide` shape — instead
+  * of a multi-probe re-derivation that would hash-mismatch a correct
   * engine. */
 private[graft] object SigDump {
 
@@ -51,31 +52,13 @@ private[graft] object SigDump {
     * bucket-list OOM regime (see object doc). */
   private[graft] val MediaWideAbove: Long = 100000L
 
-  /** Which regime the last [[dumpAndPair]] picked (observability for
-    * the regime-switch spec, the lastHashMinIters convention). */
-  @volatile private[graft] var lastWide: Boolean = false
-
-  /** Per-(dumpKind, dump base) regime record — a measured fact of the
-    * run, not a pointer to it: the media gates' oracles read this, so
-    * Verify renders `SparkEntry.oracleSql` AFTER the queries ran and
-    * each family's oracle matches the plan its corpus actually took.
-    * Keyed by base as well as kind so the same family run on two
-    * corpora in one session keeps both records (r14 What's-wrong #1:
-    * kind-only was last-write-wins). */
-  private val regime =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), Boolean]()
-
-  private[graft] def pickedWide(dumpKind: String, base: String): Boolean =
-    Option(regime.get((dumpKind, base))).exists(identity)
-
-  def dumpAndPair(sigsRaw: DataFrame, dumpKind: String, sfDir: String,
-      maxHamming: Int, maxBucket: Int): DataFrame = {
-    val sigs = graft.core.Materialize.frame(sigsRaw, "sigdump")
-    val base = new java.io.File(sfDir).getName
-    graft.core.SideDump.write(sigs, dumpKind, base)
-    // one cheap job over the materialized checkpoint: every row
-    // posts its 8 band keys (band*256 + value — ≤ 2048 groups,
-    // map-side combined), giving row count and max bucket occupancy
+  /** The regime pick over a materialized (doc_id, sig) frame: true
+    * (collapse + wide bands) when some 8-bit band bucket holds more
+    * than `maxBucket` rows or the frame has [[MediaWideAbove]] rows or
+    * more. One cheap job: every row posts its 8 band keys (band*256 +
+    * value — ≤ 2048 groups, map-side combined), giving row count and
+    * max bucket occupancy; an empty frame is not wide. */
+  def pickWide(sigs: DataFrame, maxBucket: Int): Boolean = {
     val st = sigs.select(explode(expr(
         "transform(sequence(0, 7), b -> ((sig >> (b * 8)) & 255) + b * 256)"
       )).as("bh"))
@@ -84,10 +67,14 @@ private[graft] object SigDump {
       .head()
     val (n, maxOcc) =
       if (st.isNullAt(0)) (0L, 0L) else (st.getLong(0) / 8, st.getLong(1))
-    val wide = maxOcc > maxBucket || n >= MediaWideAbove
-    lastWide = wide
-    regime.put((dumpKind, base), wide)
-    if (wide)
+    maxOcc > maxBucket || n >= MediaWideAbove
+  }
+
+  def dumpAndPair(sigsRaw: DataFrame, maxHamming: Int, maxBucket: Int,
+      sigsDump: DumpSink = DumpSink.discard): DataFrame = {
+    val sigs = graft.core.Materialize.frame(sigsRaw, "sigdump")
+    sigsDump(sigs)
+    if (pickWide(sigs, maxBucket))
       graft.dedup.Dedup.simhashPairsWideCollapsedOf(sigs, maxHamming,
         maxBucket)
     else
@@ -98,12 +85,10 @@ private[graft] object SigDump {
     * via the collapse + wide-band machinery — the explicit gate entry
     * (`mm_image_dedup_wide`) that hash-pins the scale regime on a
     * corpus the measured switch would route to multi-probe. */
-  def dumpAndPairWide(sigsRaw: DataFrame, dumpKind: String, sfDir: String,
-      maxHamming: Int, maxBucket: Int): DataFrame = {
+  def dumpAndPairWide(sigsRaw: DataFrame, maxHamming: Int, maxBucket: Int,
+      sigsDump: DumpSink = DumpSink.discard): DataFrame = {
     val sigs = graft.core.Materialize.frame(sigsRaw, "sigdump")
-    val base = new java.io.File(sfDir).getName
-    graft.core.SideDump.write(sigs, dumpKind, base)
-    regime.put((dumpKind, base), true)
+    sigsDump(sigs)
     graft.dedup.Dedup.simhashPairsWideCollapsedOf(sigs, maxHamming, maxBucket)
   }
 }

@@ -1,5 +1,6 @@
 package graft.multimodal
 
+import graft.core.DumpSink
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import graft.multimodal.Multimodal.MediaRow
 
@@ -179,9 +180,6 @@ object VideoFrames {
       }
   }
 
-  def dumpPath(base: String): String =
-    graft.core.SideDump.path("vidhash_sigs", base)
-
   /** 64-bit TEMPORAL MAJORITY fingerprint: each decodable frame's 8×8
     * aHash, folded bitwise — bit b is set iff at least half the frames
     * set it. Robust to a minority of edited/inserted frames and to
@@ -239,16 +237,17 @@ object VideoFrames {
     graft.dedup.Dedup.simhashPairsMultiProbeOf(sigs, maxHamming, maxBucket)
   }
 
-  /** Gate surface (`mm_video_dedup`): fingerprints side-dumped (the
+  /** Gate surface (`mm_video_dedup`): fingerprints go to `sigsDump` (the
     * frame decode is the faith), banding/cap/Hamming re-derived by
     * DuckDB — the mm_image_dedup oracle over the video dump. */
   def videoDedup(spark: SparkSession, sfDir: String, maxHamming: Int = 15,
-      maxBucket: Int = 1000): org.apache.spark.sql.DataFrame = {
+      maxBucket: Int = 1000,
+      sigsDump: DumpSink = DumpSink.discard): org.apache.spark.sql.DataFrame = {
     import spark.implicits._
     val sigs = aviTable(spark, sfDir)
       .map(m => (m.media_id, clipHash(m.media)))
       .toDF("doc_id", "sig")
-    SigDump.dumpAndPair(sigs, "vidhash_sigs", sfDir, maxHamming, maxBucket)
+    SigDump.dumpAndPair(sigs, maxHamming, maxBucket, sigsDump)
   }
 
   /** Video THUMBNAIL extraction — the decode → frame-sample → resize
@@ -341,9 +340,6 @@ object VideoFrames {
     }.toDF("media_id", "width", "height", "n_frames", "px_sum", "px_wsum")
   }
 
-  def mjpegDumpPath(base: String): String =
-    graft.core.SideDump.path("vidmjpeghash_sigs", base)
-
   /** The MJPEG near-dup fixture payload (PngSpec-twin convention):
     * odd docs re-encode their even neighbor's frames with ONE block
     * of frame 0 brightened by +8 (the temporal-majority fold absorbs
@@ -367,11 +363,12 @@ object VideoFrames {
   /** Gate surface (`mm_video_dedup_mjpeg`) — compressed video in the
     * perceptual near-dup family: everything through the REAL
     * per-frame JPEG decode → aHash → temporal-majority fold →
-    * multi-probe banded Hamming. Fingerprints side-dumped; DuckDB
+    * multi-probe banded Hamming. Fingerprints go to `sigsDump`; DuckDB
     * re-derives banding/caps/probes/verify (the shared mediaHashPairs
     * oracle). */
   def videoDedupMjpeg(spark: SparkSession, sfDir: String,
-      maxHamming: Int = 15, maxBucket: Int = 1000): DataFrame = {
+      maxHamming: Int = 15, maxBucket: Int = 1000,
+      sigsDump: DumpSink = DumpSink.discard): DataFrame = {
     import spark.implicits._
     // widened when narrow (graft.core.Widen): per-row MJPEG synth +
     // frame decode is the gate's entire cost (r17 stage audit)
@@ -381,8 +378,7 @@ object VideoFrames {
       .as[Long]
       .map(id => (id, clipHash(mjpegDedupPayload(id))))
       .toDF("doc_id", "sig")
-    SigDump.dumpAndPair(sigs, "vidmjpeghash_sigs", sfDir, maxHamming,
-      maxBucket)
+    SigDump.dumpAndPair(sigs, maxHamming, maxBucket, sigsDump)
   }
 
   /** Gate surface (`mm_video_frames`): per video row, the decoded

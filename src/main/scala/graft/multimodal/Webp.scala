@@ -1,5 +1,7 @@
 package graft.multimodal
 
+import graft.core.DumpSink
+
 /** WebP (VP8L lossless) pixel decode — pure JVM, public spec
   * (RFC 9649 / the WebP lossless bitstream specification): the web's
   * next-biggest image format onto the REAL pixel path (r13 "What's
@@ -519,20 +521,18 @@ object Webp {
       .toDF("doc_id", "w", "h", "pix_sum", "pix_wsum")
   }
 
-  def dedupDumpPath(base: String): String =
-    graft.core.SideDump.path("webphash_sigs", base)
-
   /** Gate surface (`mm_image_dedup_webp`) — the WebP path in the
     * perceptual near-dup family, the [[Png.imageDedupPng]] twin: odd
     * docs carry their even neighbor's image re-encoded (same VP8L
     * variant) with the top-left 8×8 region brightened by +8,
     * id % 9 == 5 docs carry a truncated stream (stub fallback
     * in-gate), everything through decode → aHash → multi-probe
-    * banded Hamming. Hashes side-dumped; DuckDB re-derives banding/
+    * banded Hamming. Hashes go to `sigsDump`; DuckDB re-derives banding/
     * caps/probes/verify (the shared mediaHashPairs oracle). */
   def imageDedupWebp(spark: org.apache.spark.sql.SparkSession,
       sfDir: String, maxHamming: Int = 15,
-      maxBucket: Int = 1000): org.apache.spark.sql.DataFrame = {
+      maxBucket: Int = 1000,
+      sigsDump: DumpSink = DumpSink.discard): org.apache.spark.sql.DataFrame = {
     import spark.implicits._
     // widened when narrow (graft.core.Widen): the per-row synth +
     // full pixel/sample decode below is the gate's entire cost, and
@@ -542,8 +542,7 @@ object Webp {
       .as[Long]
       .map(id => (id, ImageDedup.imageHash(dedupPayload(id))))
       .toDF("doc_id", "sig")
-    SigDump.dumpAndPair(sigs, "webphash_sigs", sfDir, maxHamming,
-      maxBucket)
+    SigDump.dumpAndPair(sigs, maxHamming, maxBucket, sigsDump)
   }
 
   /** The near-dup fixture payload (shared with WebpSpec's

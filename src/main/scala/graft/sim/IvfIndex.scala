@@ -2,6 +2,7 @@ package graft.sim
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.DumpSink
 import graft.sim.Similarity.{Vec, cosine}
 
 /** PERSISTED IVF index: embeddings written partitioned by trained
@@ -112,15 +113,9 @@ object IvfIndex {
     * survives the session but its probes don't: centroid affinity and
     * ADC tables need the model. KB-sized. */
   def saveModel(spark: SparkSession, indexPath: String, idx: PqIndexModel): Unit = {
-    import spark.implicits._
-    idx.cents.toSeq.map(c => (c.cell, c.v.toSeq))
-      .toDF("cell", "v")
+    Kmeans.centsFrame(spark, idx.cents)
       .coalesce(1).write.mode("overwrite").parquet(s"$indexPath/_model/cents")
-    (for {
-      j <- idx.cb.centroids.indices
-      c <- idx.cb.centroids(j).indices
-    } yield (j, c, idx.cb.centroids(j)(c).toSeq))
-      .toDF("subspace", "code", "v")
+    Pq.booksFrame(spark, idx.cb)
       .coalesce(1).write.mode("overwrite").parquet(s"$indexPath/_model/books")
   }
 
@@ -139,22 +134,16 @@ object IvfIndex {
     PqIndexModel(cents, Pq.Codebooks(m, centroids(0)(0).length, centroids))
   }
 
-  /** Model side-dump paths (oracle inputs): IVF centroids and PQ
-    * codebooks of the session index, by corpus dir basename; the ivfpq
-    * oracles name them for the corpus dir they are given. */
-  def centsDumpPath(base: String): String =
-    graft.core.SideDump.path("ivfpq_cents", base)
-  def booksDumpPath(base: String): String =
-    graft.core.SideDump.path("ivfpq_books", base)
-
   /** Load the model if this path already holds one (same-session
     * reuse: build once, probe many), else build + persist. Either way
-    * the model is also SIDE-DUMPED run-scoped for the DuckDB oracles —
-    * all ivfpq gates share one session index, so every call overwrites
-    * the dump with identical content (the persisted `_model`). */
+    * the model's IVF centroids and PQ codebooks go to `centsDump` and
+    * `booksDump` (the DuckDB oracles' inputs) — all ivfpq gates share
+    * one session index, so every dumping call writes identical content
+    * (the persisted `_model`). */
   def buildOrLoadPq(spark: SparkSession, sfDir: String, indexPath: String,
-      nCells: Int = 16, iters: Int = 2, m: Int = 8, ksub: Int = 16): PqIndexModel = {
-    import spark.implicits._
+      nCells: Int = 16, iters: Int = 2, m: Int = 8, ksub: Int = 16,
+      centsDump: DumpSink = DumpSink.discard,
+      booksDump: DumpSink = DumpSink.discard): PqIndexModel = {
     val fs = new org.apache.hadoop.fs.Path(indexPath)
       .getFileSystem(spark.sessionState.newHadoopConf())
     val idx =
@@ -165,10 +154,8 @@ object IvfIndex {
         saveModel(spark, indexPath, built)
         built
       }
-    graft.core.SideDump.write(
-      idx.cents.toSeq.map(c => (c.cell, c.v.toSeq)).toDF("cell", "v"),
-      "ivfpq_cents", new java.io.File(sfDir).getName)
-    Pq.dumpBooks(spark, idx.cb, "ivfpq_books", sfDir)
+    centsDump(Kmeans.centsFrame(spark, idx.cents))
+    booksDump(Pq.booksFrame(spark, idx.cb))
     idx
   }
 
@@ -228,10 +215,12 @@ object IvfIndex {
   }
 
   def topKIvfPq(spark: SparkSession, sfDir: String, k: Int = 5,
-      numQueries: Int = 10): DataFrame = {
+      numQueries: Int = 10, centsDump: DumpSink = DumpSink.discard,
+      booksDump: DumpSink = DumpSink.discard): DataFrame = {
     val path = sessionPath(spark, sfDir)
     probePq(spark, path, gateQueries(spark, sfDir, numQueries),
-      buildOrLoadPq(spark, sfDir, path), k)
+      buildOrLoadPq(spark, sfDir, path, centsDump = centsDump,
+        booksDump = booksDump), k)
   }
 
   /** Build-or-load and probe with the GRAPH prober (gate surface).
@@ -240,33 +229,34 @@ object IvfIndex {
     * selection) is measured on the 1024-cell fixture in
     * CentroidGraphSpec. */
   def topKIvfPqGraph(spark: SparkSession, sfDir: String, k: Int = 5,
-      numQueries: Int = 10): DataFrame = {
+      numQueries: Int = 10, centsDump: DumpSink = DumpSink.discard,
+      booksDump: DumpSink = DumpSink.discard): DataFrame = {
     val path = sessionPath(spark, sfDir)
-    val idx = buildOrLoadPq(spark, sfDir, path)
+    val idx = buildOrLoadPq(spark, sfDir, path, centsDump = centsDump,
+      booksDump = booksDump)
     val g = CentroidGraph.build(idx.cents)
     CentroidGraph.probePqGraph(spark, path,
       gateQueries(spark, sfDir, numQueries), idx, g, k)
   }
 
-  /** Per-query adaptive probe-depth dump path (oracle input): the one
+  /** Build-or-load and probe with the ADAPTIVE prober (gate surface).
+    * Each query's converged probe depth goes to `depthDump`: the one
     * artifact of the adaptive prober taken on faith — its convergence
     * DECISIONS. Everything downstream (probe-cell selection from the
     * depths, ADC scoring, the per-query candidate cut, the exact
-    * re-rank) is re-derived by the DuckDB oracle. */
-  def adepthDumpPath(base: String): String =
-    graft.core.SideDump.path("ivfpq_adepth", base)
-
-  /** Build-or-load and probe with the ADAPTIVE prober (gate surface).
-    * Side-dumps each query's converged probe depth so the oracle can
-    * re-derive the probed cells and the full scoring stack. The
-    * adaptive loop runs EAGERLY inside [[probePqAdaptive]] (one Spark
-    * job per round), so the depths are final before the returned
-    * DataFrame is ever executed. */
+    * re-rank) is re-derived by the DuckDB oracle. The adaptive loop
+    * runs EAGERLY inside [[probePqAdaptive]] (one Spark job per round),
+    * so the depths are final before the returned DataFrame is ever
+    * executed. */
   def topKIvfPqAdaptive(spark: SparkSession, sfDir: String, k: Int = 5,
-      numQueries: Int = 10, rerank: Int = 50): DataFrame = {
+      numQueries: Int = 10, rerank: Int = 50,
+      centsDump: DumpSink = DumpSink.discard,
+      booksDump: DumpSink = DumpSink.discard,
+      depthDump: DumpSink = DumpSink.discard): DataFrame = {
     import spark.implicits._
     val path = sessionPath(spark, sfDir)
-    val idx = buildOrLoadPq(spark, sfDir, path)
+    val idx = buildOrLoadPq(spark, sfDir, path, centsDump = centsDump,
+      booksDump = booksDump)
     val qs = gateQueries(spark, sfDir, numQueries)
     val probed = new Array[Int](qs.length)
     val out = probePqAdaptive(spark, path, qs, idx, k, rerank = rerank,
@@ -276,10 +266,8 @@ object IvfIndex {
     // of hard-coding the default — a non-default invocation stays
     // oracle-consistent instead of silently diverging. depth is
     // clamped to ≥1 exactly as the output stage's caps are.
-    graft.core.SideDump.write(
-      qs.indices.map(i => (qs(i).vec_id, math.max(1, probed(i)), rerank))
-        .toDF("qid", "depth", "rerank"),
-      "ivfpq_adepth", new java.io.File(sfDir).getName)
+    depthDump(qs.indices.map(i => (qs(i).vec_id, math.max(1, probed(i)), rerank))
+      .toDF("qid", "depth", "rerank"))
     out
   }
 

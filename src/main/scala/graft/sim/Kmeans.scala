@@ -6,7 +6,7 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
-import graft.core.Rounds
+import graft.core.{DumpSink, Rounds}
 import graft.sim.Similarity.Vec
 
 /** Distributed Lloyd's k-means over the embedding corpus — the
@@ -527,32 +527,21 @@ object Kmeans {
     math.round(s / n * 1e6)
   }
 
-  /** Centroid side-dump paths for the gate surfaces ([[cellSizes]],
-    * [[topKIvfTrained]], [[topKIvfTrainedPar]]), by corpus dir
-    * basename; each gate's oracle names its own for the corpus dir it
-    * is given. Each gate dumps ITS OWN run's centroids under its own
-    * kind, so the oracle reads exactly the codebook the gate output
-    * used — whichever trainer built it. (Every trainer folds its
-    * partials in partition-id order, so two calls over one corpus
-    * layout give the same bits; KmeansSpec pins that.) */
-  def cellsDumpPath(base: String): String =
-    graft.core.SideDump.path("kmeans_cells_cents", base)
-  def ivfTrainedDumpPath(base: String): String =
-    graft.core.SideDump.path("ivf_trained_cents", base)
-  def ivfTrainedParDumpPath(base: String): String =
-    graft.core.SideDump.path("ivf_trained_par_cents", base)
-
-  private def dumpCents(spark: SparkSession, cents: Array[Centroid],
-      kind: String, sfDir: String): Unit = {
+  /** (cell, v) frame of a centroid array — driver-local rows: the
+    * codebook as a semantic index persists it and as a gate's oracle
+    * reads it from the dump. Each gate dumps ITS OWN run's centroids
+    * under its own kind, so the oracle reads exactly the codebook the
+    * gate output used — whichever trainer built it. (Every trainer
+    * folds its partials in partition-id order, so two calls over one
+    * corpus layout give the same bits; KmeansSpec pins that.) */
+  def centsFrame(spark: SparkSession, cents: Array[Centroid]): DataFrame = {
     import spark.implicits._
-    graft.core.SideDump.write(
-      cents.toSeq.map(c => (c.cell, c.v.toSeq)).toDF("cell", "v"),
-      kind, new java.io.File(sfDir).getName)
+    cents.toSeq.map(c => (c.cell, c.v.toSeq)).toDF("cell", "v")
   }
 
   /** IVF search over a TRAINED codebook: Lloyd centroids replace the
     * first-N seed, same probe machinery (Similarity.topKIvf). The
-    * trained centroids are side-dumped: the Lloyd iterations are the
+    * trained centroids go to `centsDump`: the Lloyd iterations are the
     * only thing the DuckDB gate takes on faith — cell assignment,
     * probe selection, cosine scoring, and the top-k rank are all
     * re-derived from the dumped codebook and the raw embeddings
@@ -561,9 +550,9 @@ object Kmeans {
     * floats — (query_id, neighbor_id, rank) only). */
   def topKIvfTrained(spark: SparkSession, sfDir: String, k: Int = 5,
       numQueries: Int = 10, nCells: Int = 16, nprobe: Int = 4,
-      iters: Int = 3): DataFrame = {
+      iters: Int = 3, centsDump: DumpSink = DumpSink.discard): DataFrame = {
     val trained = train(Similarity.loadVectors(spark, sfDir), nCells, iters)
-    dumpCents(spark, trained, "ivf_trained_cents", sfDir)
+    centsDump(centsFrame(spark, trained))
     val cents = trained
       .map(c => Vec(-1L - c.cell, c.v, 1.0)) // unit-norm; id unused in probing
     Similarity.topKIvf(spark, sfDir, k, numQueries, nCells, nprobe, Some(cents))
@@ -575,9 +564,9 @@ object Kmeans {
     * identical and only the seeds differ. */
   def topKIvfTrainedPar(spark: SparkSession, sfDir: String, k: Int = 5,
       numQueries: Int = 10, nCells: Int = 16, nprobe: Int = 4,
-      iters: Int = 3): DataFrame = {
+      iters: Int = 3, centsDump: DumpSink = DumpSink.discard): DataFrame = {
     val trained = trainParallel(Similarity.loadVectors(spark, sfDir), nCells, iters)
-    dumpCents(spark, trained, "ivf_trained_par_cents", sfDir)
+    centsDump(centsFrame(spark, trained))
     val cents = trained
       .map(c => Vec(-1L - c.cell, c.v, 1.0))
     Similarity.topKIvf(spark, sfDir, k, numQueries, nCells, nprobe, Some(cents))
@@ -588,11 +577,11 @@ object Kmeans {
     * re-derives the argmax-cosine assignment (dot / ‖r‖ against unit
     * centroids, first-index tie-break) and the per-cell counts. */
   def cellSizes(spark: SparkSession, sfDir: String, k: Int = 16,
-      iters: Int = 3): DataFrame = {
+      iters: Int = 3, centsDump: DumpSink = DumpSink.discard): DataFrame = {
     import spark.implicits._
     val corpus = Similarity.loadVectors(spark, sfDir)
     val cents = train(corpus, k, iters)
-    dumpCents(spark, cents, "kmeans_cells_cents", sfDir)
+    centsDump(centsFrame(spark, cents))
     val bc = spark.sparkContext.broadcast(CentroidIndex.build(cents))
     corpus.map(r => bc.value.nearest(r))
       .toDF("cell")

@@ -3,7 +3,7 @@ package graft.sim
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
-import graft.core.Rounds
+import graft.core.{DumpSink, Rounds}
 import Similarity.Vec
 
 /** OPQ-style rotation for product quantization — the eigenvalue-
@@ -90,42 +90,32 @@ object Opq {
     }
   }
 
-  /** Rotation/codebook side-dump paths for the gate surface, by corpus
-    * dir basename; the `ann_pq_opq` oracle names them for the corpus dir
-    * it is given. */
-  def rotDumpPath(base: String): String =
-    graft.core.SideDump.path("opq_rot", base)
-  def booksDumpPath(base: String): String =
-    graft.core.SideDump.path("opq_books", base)
-
   /** PQ top-k in the balanced-rotated space: normalize → fit PCA →
     * balanced allocation → rotate corpus + queries → [[Pq]]'s
     * train/encode/ADC/exact-rerank core. The APPLIED rotation rows
-    * (perm-ordered basis) and the rotated-space codebooks are
-    * side-dumped: the eigensolve, the allocation and the Lloyd
-    * trainer are taken on faith, and the DuckDB oracle re-derives
+    * (perm-ordered basis) and the rotated-space codebooks go to
+    * `rotDump` and `booksDump`: the eigensolve, the allocation and the
+    * Lloyd trainer are taken on faith, and the DuckDB oracle re-derives
     * the rotation application, encode, ADC, the global candidate cut
     * and the exact re-rank from raw embeddings + the dumps. The
     * recall improvement over plain PQ is measured on the planted
     * anisotropic fixture in OpqSpec. */
   def topKPqOpq(spark: SparkSession, sfDir: String, k: Int = 5,
       numQueries: Int = 10, m: Int = 8, ksub: Int = 16,
-      rerank: Int = 50): DataFrame = {
+      rerank: Int = 50, rotDump: DumpSink = DumpSink.discard,
+      booksDump: DumpSink = DumpSink.discard): DataFrame = {
     import spark.implicits._
     val (rotated, queries) = Rounds.persisted(Similarity.loadVectors(spark, sfDir).rdd
         .map(v => Vec(v.vec_id, Pq.l2normalize(v.v), 1.0))) { corpus =>
       val model = Pca.fitRows(corpus) // the first job: fills the cache
       val perm = balancedAllocation(model.eigvals, m)
-      graft.core.SideDump.write(
-        perm.indices.map(p => (p, model.basis(perm(p)).toSeq)).toDF("p", "b"),
-        "opq_rot", new java.io.File(sfDir).getName)
+      rotDump(perm.indices.map(p => (p, model.basis(perm(p)).toSeq)).toDF("p", "b"))
       val rot = rotate(corpus, model, perm).persist(StorageLevel.MEMORY_AND_DISK)
       // the query collect scans every partition, so it fills the rotated
       // cache before the normalized one is released
       (rot, rot.filter(_.vec_id < numQueries).collect().sortBy(_.vec_id))
     }
-    try Pq.topKPqCore(spark, rotated, queries, k, m, ksub, rerank,
-      cb => Pq.dumpBooks(spark, cb, "opq_books", sfDir))
+    try Pq.topKPqCore(spark, rotated, queries, k, m, ksub, rerank, booksDump)
     finally { rotated.unpersist(blocking = false); () }
   }
 }

@@ -3,7 +3,7 @@ package graft.sim
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.Rounds
+import graft.core.{DumpSink, Rounds}
 import graft.sim.Similarity.Vec
 
 /** Distributed PCA / whitening over the embedding column — the
@@ -281,29 +281,23 @@ object Pca {
     topKEuclid(projected, queries, k)
   }
 
-  /** This run's PCA-model side-dump path for a corpus dir basename; the
-    * `ann_pca_reduced` oracle names it for the corpus dir it is given. */
-  def modelDumpPath(base: String): String =
-    graft.core.SideDump.path("pca_model", base)
-
   /** Gate: the SCALE path — reduced-rank projection, then Euclidean
     * top-k in `kdim` dims. At 100 TB this is the point of PCA: a 4×
     * narrower scan (and 4× smaller index) for a measured recall cost
-    * (PcaSpec: recall vs the exact L2 baseline). Hash-gated via a
-    * model side dump: the eigensolve is the only thing the DuckDB
-    * oracle takes on faith — it re-projects raw embeddings through
-    * the dumped mean + top-kdim basis (ordered IEEE folds, the
+    * (PcaSpec: recall vs the exact L2 baseline). Hash-gated via the
+    * model rows handed to `modelDump`: the eigensolve is the only
+    * thing the DuckDB oracle takes on faith — it re-projects raw
+    * embeddings through the dumped mean + top-kdim basis (ordered IEEE folds, the
     * projectOne order) and re-ranks by squared L2, so the projection
     * and search machinery are independently re-derived. */
   def topKL2PcaReduced(spark: SparkSession, sfDir: String, kdim: Int = 16,
-      k: Int = 5, numQueries: Int = 10): DataFrame = {
+      k: Int = 5, numQueries: Int = 10,
+      modelDump: DumpSink = DumpSink.discard): DataFrame = {
     import spark.implicits._
     val corpus = Similarity.loadVectors(spark, sfDir)
     val m = fit(corpus)
-    graft.core.SideDump.write(
-      ((-1, m.mean.toSeq) +:
-        (0 until kdim).map(c => (c, m.basis(c).toSeq))).toDF("comp", "v"),
-      "pca_model", new java.io.File(sfDir).getName)
+    modelDump(((-1, m.mean.toSeq) +:
+      (0 until kdim).map(c => (c, m.basis(c).toSeq))).toDF("comp", "v"))
     val projected = project(corpus, m, kdim)
     val queries = corpus.filter(col("vec_id") < numQueries).collect().sortBy(_.vec_id)
       .map(q => Vec(q.vec_id, projectOne(m, kdim, whiten = false, q.v), 0.0))

@@ -2,7 +2,7 @@ package graft.sim
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.core.Rounds
+import graft.core.{DumpSink, Rounds}
 import Similarity.{Vec, cosine}
 
 /** Product-quantization ANN — the memory-compressed scale path: the
@@ -169,34 +169,26 @@ object Pq {
   private[sim] def adcTable(cb: Codebooks, q: Array[Double]): Array[Array[Double]] =
     Array.tabulate(cb.m)(j => cb.centroids(j).map(c => sqDist(sub(q, j, cb.dsub), c)))
 
-  /** This run's codebook side-dump path for a corpus dir basename; the
-    * `ann_pq` oracle names it for the corpus dir it is given. */
-  def booksDumpPath(base: String): String =
-    graft.core.SideDump.path("pq_books", base)
-
   def topKPq(spark: SparkSession, sfDir: String, k: Int = 5, numQueries: Int = 10,
-      m: Int = 8, ksub: Int = 16, rerank: Int = 50): DataFrame =
+      m: Int = 8, ksub: Int = 16, rerank: Int = 50,
+      booksDump: DumpSink = DumpSink.discard): DataFrame =
     Rounds.persisted(Similarity.loadVectors(spark, sfDir).rdd
         .map(v => Vec(v.vec_id, l2normalize(v.v), 1.0))) { corpus =>
       // the query collect is the first job: it also fills the cache
       val queries = corpus.filter(_.vec_id < numQueries).collect().sortBy(_.vec_id)
-      topKPqCore(spark, corpus, queries, k, m, ksub, rerank,
-        cb => dumpBooks(spark, cb, "pq_books", sfDir))
+      topKPqCore(spark, corpus, queries, k, m, ksub, rerank, booksDump)
     }
 
-  /** Dump a codebook as (subspace, code, v) rows — the only artifact
-    * a PQ oracle takes on faith (the trainer); encode, the ADC table,
-    * the global candidate cut and the exact re-rank are re-derived in
-    * SQL from raw embeddings + this dump. */
-  private[sim] def dumpBooks(spark: SparkSession, cb: Codebooks,
-      kind: String, sfDir: String): Unit = {
+  /** A codebook as (subspace, code, v) rows — the only artifact a PQ
+    * oracle takes on faith (the trainer); encode, the ADC table, the
+    * global candidate cut and the exact re-rank are re-derived in SQL
+    * from raw embeddings + this frame's dump. */
+  private[sim] def booksFrame(spark: SparkSession, cb: Codebooks): DataFrame = {
     import spark.implicits._
-    graft.core.SideDump.write(
-      (for {
-        j <- cb.centroids.indices
-        c <- cb.centroids(j).indices
-      } yield (j, c, cb.centroids(j)(c).toSeq)).toDF("subspace", "code", "v"),
-      kind, new java.io.File(sfDir).getName)
+    (for {
+      j <- cb.centroids.indices
+      c <- cb.centroids(j).indices
+    } yield (j, c, cb.centroids(j)(c).toSeq)).toDF("subspace", "code", "v")
   }
 
   /** A re-rank candidate: ADC distance, neighbor id, exact cosine. */
@@ -234,10 +226,10 @@ object Pq {
     * result is a local relation of (query_id, neighbor_id, rank). */
   private[sim] def topKPqCore(spark: SparkSession, corpus: RDD[Vec],
       queries: Array[Vec], k: Int, m: Int, ksub: Int,
-      rerank: Int, onTrained: Codebooks => Unit = _ => ()): DataFrame = {
+      rerank: Int, booksDump: DumpSink = DumpSink.discard): DataFrame = {
     import spark.implicits._
     val cb = trainRows(corpus, m, ksub)
-    onTrained(cb)
+    booksDump(booksFrame(spark, cb))
     val bc = corpus.sparkContext.broadcast(
       (cb, queries, queries.map(q => adcTable(cb, q.v))))
     val none = Array.fill(queries.length)(Array.empty[Cand])

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.core.DumpSink
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -67,7 +68,8 @@ object MediaStream {
     * [[ExactStream.dedupBatch]]. */
   def imageDedupStream(spark: SparkSession, sfDir: String, nBatches: Int = 4,
       maxHamming: Int = 15, maxBucket: Int = 1000,
-      idxPath: String = null): DataFrame = {
+      idxPath: String = null,
+      sigsDump: DumpSink = DumpSink.discard): DataFrame = {
     val idx = Option(idxPath).getOrElse(
       graft.core.SessionScratch.path(spark, sfDir, "graft_media_stream"))
     // fresh replay per invocation: a prior run's compacted fold would
@@ -92,10 +94,7 @@ object MediaStream {
     }
     val index = spark.read.parquet(
       DeltaIndex.listBatches(spark, idx): _*)
-    graft.multimodal.SigDump.dumpAndPair(index, "jpegstreamhash_sigs",
-      sfDir, maxHamming, maxBucket)
+    graft.multimodal.SigDump.dumpAndPair(index, maxHamming, maxBucket,
+      sigsDump)
   }
-
-  def dumpPath(base: String): String =
-    graft.core.SideDump.path("jpegstreamhash_sigs", base)
 }

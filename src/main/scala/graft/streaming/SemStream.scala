@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.DumpSink
 import graft.dedup.SemIndex
 import graft.sim.Similarity.Vec
 import graft.text.Embed
@@ -45,11 +46,6 @@ object SemStream {
     * upward), giving both verdicts real populations. Both engines
     * parse the same decimal literal to the same double. */
   val Tau: Double = 0.9260254037844386
-
-  /** The codebook side dump for a corpus dir basename; the gate's
-    * oracle names it for the corpus dir it is given. */
-  def centsDumpPath(base: String): String =
-    graft.core.SideDump.path("semstream_cents", base)
 
   /** Fresh index path per invocation: the gate APPENDS to its index
     * mid-run, so a session-cached index (the [[graft.core
@@ -127,7 +123,8 @@ object SemStream {
     * stream order, each probed then appended. Output: every batch
     * chunk's (vec_id, cell, cent_sim_micro, kept) verdict. */
   def chunkProbeStream(spark: SparkSession, sfDir: String,
-      tau: Double = Tau, nBatches: Int = 4): DataFrame = {
+      tau: Double = Tau, nBatches: Int = 4,
+      centsDump: DumpSink = DumpSink.discard): DataFrame = {
     import spark.implicits._
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     // coalesce: an empty corpus must yield an empty frame (the
@@ -150,11 +147,9 @@ object SemStream {
     val cents = SemIndex.build(
       vecs.filter(v => (v.vec_id >> 32) % 10 != 0), idxPath,
       trainer = graft.sim.Kmeans.trainOrdered)
-    val base = new java.io.File(sfDir).getName
     // dump from the just-trained array (identical rows to the cents
     // parquet the build wrote) — no re-read job in the query path
-    graft.core.SideDump.write(
-      SemIndex.centsFrame(spark, cents), "semstream_cents", base)
+    centsDump(graft.sim.Kmeans.centsFrame(spark, cents))
     // amortized across the sequential batches (r17 verdict #2): cents
     // carried from the build (fixed after it), member frame carried
     // forward, survivor assignment reused — the per-batch index

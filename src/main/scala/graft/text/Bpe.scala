@@ -1,5 +1,6 @@
 package graft.text
 
+import graft.core.DumpSink
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -70,39 +71,15 @@ object Bpe {
     out.result()
   }
 
-  /** This run's merge-table side dump path for a corpus dir basename;
-    * each BPE gate's oracle names it for the corpus dir it is given. */
-  def sideDumpPath(base: String): String =
-    graft.core.SideDump.path("bpe_merges", base)
-
-  /** [[trainMerges]] + a run-scoped side dump of the merge table as
-    * `(ord, a, b)` (ord 1-based, training order) — the oracle
-    * interface: the learned artifact is the ONLY thing the DuckDB
-    * gate takes on faith; it re-applies the merges to the raw corpus
-    * itself (one `replace` per merge round over a delimiter-wrapped
-    * symbol string — exactly [[mergePair]]'s greedy left-to-right
-    * non-overlapping semantics) and re-derives ids, counts, and the
-    * vocab table. All BPE gate surfaces train through this. */
-  def trainMergesWithDump(spark: SparkSession, sfDir: String,
-      k: Int): Seq[(String, String, Long)] = {
-    import spark.implicits._
-    val ms = trainMerges(spark, sfDir, k)
-    val base = new java.io.File(sfDir).getName
-    graft.core.SideDump.write(
-      ms.zipWithIndex.map { case ((a, b, _), i) => (i + 1, a, b) }
-        .toDF("ord", "a", "b"),
-      "bpe_merges", base)
-    ms
-  }
-
   /** Tokenize the corpus with a trained merge list: per word, start
     * from chars+'</w>' and apply the merges in training order (the
     * standard BPE apply). Merges broadcast; one narrow pass over the
     * corpus — training cost is amortized over the vocabulary, apply
     * cost over the corpus, exactly the production split. */
-  def encode(spark: SparkSession, sfDir: String, k: Int = 8): DataFrame =
+  def encode(spark: SparkSession, sfDir: String, k: Int = 8,
+      mergesDump: DumpSink = DumpSink.discard): DataFrame =
     encodeDocs(spark.read.parquet(s"$sfDir/documents.parquet"),
-      trainMergesWithDump(spark, sfDir, k).map(m => (m._1, m._2)))
+      trainMerges(spark, sfDir, k, mergesDump = mergesDump).map(m => (m._1, m._2)))
 
   /** The apply as a stateless transform over any (doc_id, text) frame —
     * BATCH OR STREAMING: merges are broadcast and the pass is map-only,
@@ -141,9 +118,10 @@ object Bpe {
 
   /** Vocab as a DataFrame (token_id, token) — the lookup table a
     * downstream trainer ships with the token-id corpus. */
-  def vocabDf(spark: SparkSession, sfDir: String, k: Int = 8): DataFrame = {
+  def vocabDf(spark: SparkSession, sfDir: String, k: Int = 8,
+      mergesDump: DumpSink = DumpSink.discard): DataFrame = {
     import spark.implicits._
-    vocabOf(trainMergesWithDump(spark, sfDir, k).map(m => (m._1, m._2)))
+    vocabOf(trainMerges(spark, sfDir, k, mergesDump = mergesDump).map(m => (m._1, m._2)))
       .toDF("token_id", "token")
   }
 
@@ -178,9 +156,10 @@ object Bpe {
   /** Gate surface: token ids flattened to one row per position —
     * (doc_id, pos, token_id), a deterministic serialization of the
     * per-doc id arrays. */
-  def encodeIds(spark: SparkSession, sfDir: String, k: Int = 8): DataFrame =
+  def encodeIds(spark: SparkSession, sfDir: String, k: Int = 8,
+      mergesDump: DumpSink = DumpSink.discard): DataFrame =
     encodeIdsDocs(spark.read.parquet(s"$sfDir/documents.parquet"),
-        trainMergesWithDump(spark, sfDir, k).map(m => (m._1, m._2)))
+        trainMerges(spark, sfDir, k, mergesDump = mergesDump).map(m => (m._1, m._2)))
       .select(col("doc_id"),
         posexplode(col("token_ids")).as(Seq("pos", "token_id")))
 
@@ -198,17 +177,29 @@ object Bpe {
     *    ([[trainMergesDistributed]]).
     *
     * Both use the same deterministic tiebreak (count desc, pair asc),
-    * so they produce IDENTICAL merge lists — differentially tested. */
+    * so they produce IDENTICAL merge lists — differentially tested.
+    *
+    * The merge table goes to `mergesDump` as `(ord, a, b)` (ord
+    * 1-based, training order) — the oracle interface: the learned
+    * artifact is the ONLY thing the DuckDB gates take on faith; they
+    * re-apply the merges to the raw corpus themselves (one `replace`
+    * per merge round over a delimiter-wrapped symbol string — exactly
+    * [[mergePair]]'s greedy left-to-right non-overlapping semantics)
+    * and re-derive ids, counts, and the vocab table. */
   def trainMerges(spark: SparkSession, sfDir: String, k: Int,
-      driverMaxVocab: Long = 1L << 22): Seq[(String, String, Long)] = {
+      driverMaxVocab: Long = 1L << 22,
+      mergesDump: DumpSink = DumpSink.discard): Seq[(String, String, Long)] = {
     import spark.implicits._
     // the ONE corpus-sized aggregation, materialized so the regime-
     // selection count and the chosen trainer reuse it (re-deriving it
     // would scan the corpus twice)
     val wc = wordCounts(spark, sfDir).localCheckpoint()
-    if (wc.count() <= driverMaxVocab)
-      trainMergesDriver(wc.as[(String, Long)].collect(), k)
-    else trainMergesOnVocab(wc, k)
+    val ms =
+      if (wc.count() <= driverMaxVocab) trainMergesDriver(wc.as[(String, Long)].collect(), k)
+      else trainMergesOnVocab(wc, k)
+    mergesDump(ms.zipWithIndex.map { case ((a, b, _), i) => (i + 1, a, b) }
+      .toDF("ord", "a", "b"))
+    ms
   }
 
   /** Incremental in-memory trainer over a collected word histogram. */

@@ -43,13 +43,14 @@ object Chunking {
     * count window); the BPE encode itself is the narrow broadcast-
     * merges pass. */
   def chunkIds(spark: SparkSession, sfDir: String, window: Int = 64,
-      stride: Int = 48): DataFrame = {
+      stride: Int = 48,
+      mergesDump: graft.core.DumpSink = graft.core.DumpSink.discard): DataFrame = {
     require(window >= 1 && stride >= 1 && stride <= window,
       s"need 1 <= stride <= window, got window=$window stride=$stride")
     // per-doc id count via a PARTITIONED window, not a groupBy +
     // self-join: the join shape would execute the whole BPE encode
     // plan twice (once per join side)
-    val ids = graft.text.Bpe.encodeIds(spark, sfDir)
+    val ids = graft.text.Bpe.encodeIds(spark, sfDir, mergesDump = mergesDump)
       .withColumn("n", count(lit(1)).over(
         org.apache.spark.sql.expressions.Window.partitionBy("doc_id")))
     ids

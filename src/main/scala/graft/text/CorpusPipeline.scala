@@ -1,5 +1,6 @@
 package graft.text
 
+import graft.core.DumpSink
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -33,12 +34,13 @@ object CorpusPipeline {
     * corpus-sized pass the count-based pipeline already pays) and
     * packed by ID COUNT, the budget a trainer actually fills. Output
     * (doc_id, n_bpe_tokens, pack_id) is hash-gated: the merge table
-    * is side-dumped (Bpe.trainMergesWithDump) and the DuckDB oracle
+    * goes to `mergesDump` (Bpe.trainMerges) and the DuckDB oracle
     * re-applies it to the kept cleaned text; CorpusPipelineSpec also
     * pins the manual stage composition and the standalone BPE-id
     * operator. */
   def prepareIds(spark: SparkSession, sfDir: String, budget: Long = 512L,
-      minTokens: Long = 5L, merges: Int = 8, partitions: Int = 32): DataFrame = {
+      minTokens: Long = 5L, merges: Int = 8, partitions: Int = 32,
+      mergesDump: DumpSink = DumpSink.discard): DataFrame = {
     import spark.implicits._
     // widen the 1-file scan before the regex scrub: the checkpoint
     // below pins the width, so dedup keys, the semi-join probe AND the
@@ -47,7 +49,8 @@ object CorpusPipeline {
     // production scale the scan is already wide — structural no-op.
     val docs = graft.core.Widen.ifNarrow(
       spark.read.parquet(s"$sfDir/documents.parquet"))
-    val ms = Bpe.trainMergesWithDump(spark, sfDir, merges).map(m => (m._1, m._2))
+    val ms = Bpe.trainMerges(spark, sfDir, merges, mergesDump = mergesDump)
+      .map(m => (m._1, m._2))
     val toks = Cleaning.cleanText(docs)
       .select(col("doc_id"), col("clean_text"),
         expr("size(filter(split(clean_text, '\\\\s+'), x -> x != ''))")

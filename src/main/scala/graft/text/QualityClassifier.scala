@@ -2,7 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.Rounds
+import graft.core.{DumpSink, Rounds}
 
 /** TRAINED document-quality classifier: feature-hashed bag-of-words
   * + full-batch logistic regression — the fastText/CCNet-style
@@ -231,11 +231,6 @@ object QualityClassifier {
       .toDF("doc_id", "margin_micro", "label")
   }
 
-  /** This run's weight side dump path for a corpus dir basename; the
-    * `text_quality_clf` oracle names it for the corpus dir it is given. */
-  def sideDumpPath(base: String): String =
-    graft.core.SideDump.path("clf_weights", base)
-
   /** Gate surface: BOOTSTRAP from the [[TextAnalysis.quality]]
     * heuristic as weak supervision — train on the heuristic's binary
     * labels, emit the classifier's per-doc MARGIN verdicts
@@ -244,24 +239,21 @@ object QualityClassifier {
     * weak-label → classifier distillation step). Deterministic for a
     * fixed corpus layout (see [[train]]).
     *
-    * The trained weights are side-dumped as `(idx, w)` rows (idx −1 =
-    * bias) — the ONLY thing the DuckDB oracle takes on faith: it
+    * The trained weights go to `weightsDump` as `(idx, w)` rows (idx −1
+    * = bias) — the ONLY thing the DuckDB oracle takes on faith: it
     * re-tokenizes, re-hashes (FNV-1a re-expressed in unsigned-64
     * arithmetic), and re-folds the margin from raw text itself, so
     * the whole scoring path is independently re-derived. */
   def classifyTrained(spark: SparkSession, sfDir: String, dim: Int = 4096,
-      iters: Int = 40): DataFrame = {
+      iters: Int = 40, weightsDump: DumpSink = DumpSink.discard): DataFrame = {
     import spark.implicits._
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val labeled = TextAnalysis.quality(spark, sfDir)
       .select(col("doc_id"), col("is_quality").cast("double").as("label"))
       .join(docs.select(col("doc_id"), col("text")), "doc_id")
     val (model, _) = train(examples(labeled, dim), dim, iters)
-    val base = new java.io.File(sfDir).getName
-    graft.core.SideDump.write(
-      ((-1, model.bias) +: model.w.toSeq.zipWithIndex.map(_.swap))
-        .toDF("idx", "w"),
-      "clf_weights", base)
+    weightsDump(((-1, model.bias) +: model.w.toSeq.zipWithIndex.map(_.swap))
+      .toDF("idx", "w"))
     scoreMargin(docs.select(col("doc_id"), col("text")), model)
       .orderBy(col("doc_id"))
   }

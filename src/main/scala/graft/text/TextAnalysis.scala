@@ -1,5 +1,6 @@
 package graft.text
 
+import graft.core.DumpSink
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -635,9 +636,10 @@ object TextAnalysis {
     * Same composition discipline as the base funnel: every column is
     * the bit its standalone gate hash-checks. */
   def filterFunnelSemantic(spark: SparkSession, sfDir: String,
-      entropyFloorMicro: Long = 2000000L): DataFrame = {
+      entropyFloorMicro: Long = 2000000L,
+      centsDump: DumpSink = DumpSink.discard): DataFrame = {
     val base = filterFunnel(spark, sfDir, entropyFloorMicro).drop("keep")
-    val sem = graft.dedup.SemDedup.semanticForFunnel(spark, sfDir)
+    val sem = graft.dedup.SemDedup.semantic(spark, sfDir, centsDump = centsDump)
       .select(col("vec_id").as("doc_id"), col("kept").cast("int").as("sem_ok"))
     base.join(sem, "doc_id")
       .withColumn("keep",

@@ -35,8 +35,7 @@ class MaterializeSpec extends SparkSpec {
         else i * 0x9E3779B97F4A7C15L))
       .toDF("doc_id", "sig")
     def run(): Seq[(Long, Long)] =
-      graft.multimodal.SigDump.dumpAndPair(sigs, "mat_probe_sigs", sf(),
-        15, 1000)
+      graft.multimodal.SigDump.dumpAndPair(sigs, 15, 1000)
         .select(col("i").cast("long"), col("j").cast("long"))
         .as[(Long, Long)].collect().sorted.toSeq
     val local = run()

@@ -1,7 +1,7 @@
 package graft.dedup
 
 import graft.SparkSpec
-import java.io.File
+import graft.gates.DedupGates
 
 class SemDedupSpec extends SparkSpec {
 
@@ -103,11 +103,12 @@ class SemDedupSpec extends SparkSpec {
   test("capped run on the corpus matches a driver re-derivation of the capped rule") {
     import spark.implicits._
     val cap = 2
-    val out = SemDedup.semanticCapped(spark, sf(), tau = 0.45, cap = cap)
+    val out = SemDedup.semanticCapped(spark, sf(), tau = 0.45, cap = cap,
+        centsDump = DedupGates.SemdedupCapCents.sink(sf()))
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getBoolean(3)))
       .sortBy(_._1)
     val cents = spark.read
-      .parquet(SemDedup.cappedDumpPath(new File(sf()).getName))
+      .parquet(DedupGates.SemdedupCapCents.glob(sf()))
       .collect().map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
       .sortBy(_._1).map(_._2)
     val vecs = graft.sim.Similarity.loadVectors(spark, sf()).collect().sortBy(_.vec_id)
@@ -156,13 +157,14 @@ class SemDedupSpec extends SparkSpec {
 
   test("corpus run matches a driver re-derivation from the side-dumped centroids") {
     import spark.implicits._
-    val out = SemDedup.semantic(spark, sf(), tau = 0.45).collect()
+    val out = SemDedup.semantic(spark, sf(), tau = 0.45,
+        centsDump = DedupGates.SemdedupCents.sink(sf())).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getBoolean(3)))
       .sortBy(_._1)
     // read the centroids the run dumped — the same faith the DuckDB
     // oracle takes — and re-derive assignment, priority, drops
     val cents = spark.read
-      .parquet(SemDedup.dumpPath(new File(sf()).getName))
+      .parquet(DedupGates.SemdedupCents.glob(sf()))
       .collect().map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
       .sortBy(_._1).map(_._2)
     val vecs = graft.sim.Similarity.loadVectors(spark, sf()).collect().sortBy(_.vec_id)

@@ -1,9 +1,9 @@
 package graft.dedup
 
 import graft.SparkSpec
+import graft.gates.DedupGates
 import graft.sim.Similarity
 import graft.sim.Similarity.Vec
-import java.io.File
 
 class SemIndexSpec extends SparkSpec {
 
@@ -159,13 +159,14 @@ class SemIndexSpec extends SparkSpec {
   }
 
   test("gate surface matches a driver re-derivation from the side-dumped centroids") {
-    val out = SemIndex.dedupSemanticIncremental(spark, sf()).collect()
+    val out = SemIndex.dedupSemanticIncremental(spark, sf(),
+        centsDump = DedupGates.SemidxCents.sink(sf())).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getBoolean(3)))
       .sortBy(_._1)
     assert(out.nonEmpty)
     assert(out.forall(_._1 % 10 == 0), "gate output is batch rows only")
     val cents = spark.read
-      .parquet(SemIndex.centsDumpPath(new File(sf()).getName))
+      .parquet(DedupGates.SemidxCents.glob(sf()))
       .collect().map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
       .sortBy(_._1).map(_._2)
     val vecs = Similarity.loadVectors(spark, sf()).collect().sortBy(_.vec_id)

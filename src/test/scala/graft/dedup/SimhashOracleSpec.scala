@@ -1,7 +1,7 @@
 package graft.dedup
 
 import graft.SparkSpec
-import java.io.File
+import graft.gates.DedupGates
 
 /** In-JVM mirror of the simhash side-dump DuckDB oracles
   * (`SparkEntry.oracleSql`): the dumped per-doc signatures are the
@@ -12,8 +12,11 @@ import java.io.File
   * tampered dump is detected. */
 class SimhashOracleSpec extends SparkSpec {
 
+  /** The simhash gates' dump sink for the test corpus. */
+  private def dump = DedupGates.SimhashSigs.sink(sf())
+
   private def dumpedSigs(): Map[Long, Long] =
-    spark.read.parquet(Dedup.simhashDumpPath(new File(sf()).getName))
+    spark.read.parquet(DedupGates.SimhashSigs.glob(sf()))
       .collect().map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("sig")).toMap
 
   /** (band, byte) postings of a signature set — plain loops, no Spark. */
@@ -51,7 +54,7 @@ class SimhashOracleSpec extends SparkSpec {
   }
 
   test("simhash gate: dumped sigs + independent banding reproduce simhashPairs") {
-    val got = Dedup.simhashPairs(spark, sf()).collect()
+    val got = Dedup.simhashPairs(spark, sf(), sigsDump = dump).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val sigs = dumpedSigs()
     assert(sigs.nonEmpty, "signature dump must be readable")
@@ -60,7 +63,7 @@ class SimhashOracleSpec extends SparkSpec {
   }
 
   test("multiprobe gate: dumped sigs + probe fan-out reproduce the operator") {
-    val got = Dedup.simhashPairsMultiProbe(spark, sf()).collect()
+    val got = Dedup.simhashPairsMultiProbe(spark, sf(), sigsDump = dump).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val sigs = dumpedSigs()
     assert(multiProbePairs(sigs, 15) === got)
@@ -73,7 +76,7 @@ class SimhashOracleSpec extends SparkSpec {
     // the dedup_simhash_wide oracle is all-pairs, so the spec pins
     // exactly that: the 4x16-bit banding + radius-3 probes recover
     // EVERY qualifying pair (the pigeonhole guarantee), uncapped
-    val got = Dedup.simhashPairsWide(spark, sf()).collect()
+    val got = Dedup.simhashPairsWide(spark, sf(), sigsDump = dump).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val sigs = dumpedSigs().toSeq
     val all = (for {
@@ -84,7 +87,7 @@ class SimhashOracleSpec extends SparkSpec {
     assert(got.nonEmpty)
     // and it agrees with the 8-band multiprobe where THAT has full
     // recall (gate scale: caps non-binding for both)
-    val mp = Dedup.simhashPairsMultiProbe(spark, sf()).collect()
+    val mp = Dedup.simhashPairsMultiProbe(spark, sf(), sigsDump = dump).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got === mp)
   }
@@ -137,7 +140,7 @@ class SimhashOracleSpec extends SparkSpec {
     // and on the gate corpus the collapsed form equals the plain wide
     // form (no identical sigs there -> pure pass-through); the dump is
     // written here so the test does not lean on an earlier one's
-    Dedup.simhashSigs(spark, sf())
+    Dedup.simhashSigs(spark, sf(), dump)
     val gate = dumpedSigs().toSeq.toDF("doc_id", "sig")
     val collapsed = Dedup.simhashPairsWideCollapsedOf(gate, 15, 1000)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -225,7 +228,7 @@ class SimhashOracleSpec extends SparkSpec {
   }
 
   test("simhash oracle can fail: dropping a paired doc's signature is detected") {
-    val got = Dedup.simhashPairs(spark, sf()).collect()
+    val got = Dedup.simhashPairs(spark, sf(), sigsDump = dump).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got.nonEmpty)
     val victim = got.head._1

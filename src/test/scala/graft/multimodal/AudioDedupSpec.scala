@@ -2,7 +2,6 @@ package graft.multimodal
 
 import graft.SparkSpec
 import graft.multimodal.Multimodal.MediaRow
-import java.io.File
 
 class AudioDedupSpec extends SparkSpec {
 
@@ -122,9 +121,10 @@ class AudioDedupSpec extends SparkSpec {
   }
 
   test("filterbank gate corpus: dump covers every audio row, both paths, pairs subset-verified") {
-    val pairs = AudioDedup.audioDedupFb(spark, sf()).collect()
+    val pairs = AudioDedup.audioDedupFb(spark, sf(),
+        sigsDump = graft.gates.MediaGates.AudFbSigs.sink(sf())).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val dumped = spark.read.parquet(AudioDedup.fbDumpPath(new File(sf()).getName))
+    val dumped = spark.read.parquet(graft.gates.MediaGates.AudFbSigs.glob(sf()))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val clips = Multimodal.mediaTable(spark, sf()).filter(_.kind == "audio").collect()
     assert(dumped.size === clips.length)
@@ -146,9 +146,10 @@ class AudioDedupSpec extends SparkSpec {
   }
 
   test("gate corpus: every audio row fingerprinted and dumped; real rows cross PCM decode") {
-    val out = AudioDedup.audioDedup(spark, sf())
+    val out = AudioDedup.audioDedup(spark, sf(),
+      sigsDump = graft.gates.MediaGates.AudSigs.sink(sf()))
     out.collect() // force + dump
-    val dumped = spark.read.parquet(AudioDedup.dumpPath(new File(sf()).getName))
+    val dumped = spark.read.parquet(graft.gates.MediaGates.AudSigs.glob(sf()))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val clips = Multimodal.mediaTable(spark, sf()).filter(_.kind == "audio").collect()
     assert(dumped.size === clips.length)

@@ -2,7 +2,6 @@ package graft.multimodal
 
 import graft.SparkSpec
 import graft.multimodal.Multimodal.MediaRow
-import java.io.File
 
 class ImageDedupSpec extends SparkSpec {
 
@@ -152,9 +151,10 @@ class ImageDedupSpec extends SparkSpec {
   }
 
   test("gate corpus: every image row hashed and dumped; real rows cross the pixel decode") {
-    val out = ImageDedup.imageDedup(spark, sf())
+    val out = ImageDedup.imageDedup(spark, sf(),
+      sigsDump = graft.gates.MediaGates.ImgSigs.sink(sf()))
     out.collect() // force + dump
-    val dumped = spark.read.parquet(ImageDedup.dumpPath(new File(sf()).getName))
+    val dumped = spark.read.parquet(graft.gates.MediaGates.ImgSigs.glob(sf()))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val images = Multimodal.mediaTable(spark, sf()).filter(_.kind == "image").collect()
     assert(dumped.size === images.length)
@@ -185,11 +185,8 @@ class ImageDedupSpec extends SparkSpec {
     // oracles) — the sf0.01 gate corpora all measure maxOcc <= 215
     val small = (0L until 100L).map(i => (i, i * 0x9E3779B97F4A7C15L))
       .toDF("doc_id", "sig")
-    SigDump.dumpAndPair(small, "regime_probe_sigs", sf(), 15, 1000)
-      .count()
-    assert(!SigDump.lastWide)
-    assert(!SigDump.pickedWide("regime_probe_sigs",
-      new java.io.File(sf()).getName))
+    assert(!SigDump.pickWide(small, 1000))
+    SigDump.dumpAndPair(small, 15, 1000).count()
   }
 
   test("low-entropy SUB-100k frame takes the wide path with full twin recall (r13 What's wrong #1)") {
@@ -209,36 +206,15 @@ class ImageDedupSpec extends SparkSpec {
       (i, if (i % 2 == 1) bases(((i - 1) % 4).toInt) ^ (1L << (i % 63).toInt)
           else base)
     }.toDF("doc_id", "sig")
-    val pairs = SigDump.dumpAndPair(lowEntropy, "regime_probe_low_sigs",
-      sf(), 15, 1000).localCheckpoint()
-    assert(SigDump.lastWide,
+    assert(SigDump.pickWide(lowEntropy, 1000),
       "measured over-cap occupancy must route a sub-100k frame wide")
-    assert(SigDump.pickedWide("regime_probe_low_sigs",
-      new java.io.File(sf()).getName))
+    val pairs = SigDump.dumpAndPair(lowEntropy, 15, 1000).localCheckpoint()
     // full twin recall through the AUTO-ROUTED path (not the explicit
     // wide entry): every (even, even+1) twin is Hamming 1 <= 15
     val twins = pairs.filter(col("j") === col("i") + 1 &&
       col("i") % 2 === 0).count()
     assert(twins === 2500L,
       s"auto-routed wide path must find every planted twin: $twins / 2500")
-  }
-
-  test("regime record keyed by (dumpKind, base): two corpora in one session keep both picks (r14 What's wrong #1)") {
-    import spark.implicits._
-    // SAME dump kind run on two corpora (distinct sfDir basenames):
-    // first a narrow (high-entropy) corpus, then a wide (low-entropy)
-    // one — kind-only keying was last-write-wins and would report the
-    // second corpus's regime for the first's oracle re-derivation
-    val kind = "regime_two_corpora_sigs"
-    val narrow = (0L until 100L).map(i => (i, i * 0x9E3779B97F4A7C15L))
-      .toDF("doc_id", "sig")
-    SigDump.dumpAndPair(narrow, kind, sf(), 15, 1000).count()
-    val wide = (0L until 5000L).map(i => (i, (i % 4) * Long.MaxValue / 3))
-      .toDF("doc_id", "sig")
-    SigDump.dumpAndPair(wide, kind, sf("sf0.01"), 15, 1000).count()
-    assert(!SigDump.pickedWide(kind, "sf0.001"),
-      "the narrow corpus's record must survive the wide corpus's run")
-    assert(SigDump.pickedWide(kind, "sf0.01"))
   }
 
   test("media pair tail also switches wide above the MediaWideAbove cost stop") {
@@ -250,8 +226,7 @@ class ImageDedupSpec extends SparkSpec {
     val big = spark.range(SigDump.MediaWideAbove)
       .select(col("id").as("doc_id"),
         (col("id") % 97 * lit(0x0101010101010101L)).as("sig"))
-    SigDump.dumpAndPair(big, "regime_probe_sigs", sf(), 15, 1000)
-    assert(SigDump.lastWide,
+    assert(SigDump.pickWide(big, 1000),
       "at MediaWideAbove the tail must pick the collapse+wide path")
   }
 }

@@ -1,7 +1,6 @@
 package graft.multimodal
 
 import graft.SparkSpec
-import java.io.File
 
 class VideoFramesSpec extends SparkSpec {
 
@@ -210,8 +209,9 @@ class VideoFramesSpec extends SparkSpec {
   }
 
   test("gate dump: every video row fingerprinted, both hash paths crossed") {
-    VideoFrames.videoDedup(spark, sf()).collect() // force + dump
-    val dumped = spark.read.parquet(VideoFrames.dumpPath(new File(sf()).getName))
+    VideoFrames.videoDedup(spark, sf(),
+      sigsDump = graft.gates.MediaGates.VidSigs.sink(sf())).collect() // force + dump
+    val dumped = spark.read.parquet(graft.gates.MediaGates.VidSigs.glob(sf()))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val vids = VideoFrames.aviTable(spark, sf()).collect()
     assert(dumped.size === vids.length)

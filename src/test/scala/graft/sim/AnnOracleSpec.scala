@@ -1,7 +1,7 @@
 package graft.sim
 
 import graft.SparkSpec
-import java.io.File
+import graft.gates.AnnGates
 
 /** In-JVM mirrors of the IVF/k-means DuckDB oracles
   * (`SparkEntry.oracleSql`): the trained centroids are the only
@@ -65,9 +65,10 @@ class AnnOracleSpec extends SparkSpec {
   }
 
   test("ann_ivf_trained: dumped centroids + the same derivation reproduce the gate") {
-    val got = gateRows(Kmeans.topKIvfTrained(spark, sf())) // trains AND dumps
+    val got = gateRows(Kmeans.topKIvfTrained(spark, sf(),
+      centsDump = AnnGates.IvfTrainedCents.sink(sf()))) // trains AND dumps
     val cents = spark.read.parquet(
-        Kmeans.ivfTrainedDumpPath(new File(sf()).getName))
+        AnnGates.IvfTrainedCents.glob(sf()))
       .collect().map(r => r.getAs[Int]("cell") -> r.getSeq[Double](1).toArray)
       .sortBy(_._1).map(c => (c._2, 1.0)) // unit-norm by contract
     assert(cents.length === 16)
@@ -75,9 +76,10 @@ class AnnOracleSpec extends SparkSpec {
   }
 
   test("ann_kmeans_cells: dumped centroids + independent assignment reproduce cellSizes") {
-    val got = Kmeans.cellSizes(spark, sf()).collect()
+    val got = Kmeans.cellSizes(spark, sf(),
+      centsDump = AnnGates.KmeansCellsCents.sink(sf())).collect()
       .map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val cents = spark.read.parquet(Kmeans.cellsDumpPath(new File(sf()).getName))
+    val cents = spark.read.parquet(AnnGates.KmeansCellsCents.glob(sf()))
       .collect().map(r => r.getAs[Int]("cell") -> r.getSeq[Double](1).toArray)
       .sortBy(_._1)
     // Kmeans.nearest scores dot/|r| against unit centroids — argmax
@@ -148,17 +150,18 @@ class AnnOracleSpec extends SparkSpec {
   }
 
   test("ann_pq: dumped codebooks + independent encode/ADC/cut/rerank reproduce topKPq") {
-    val got = gateRows(Pq.topKPq(spark, sf())) // trains AND dumps
-    val books = loadBooks(Pq.booksDumpPath(new File(sf()).getName))
+    val got = gateRows(Pq.topKPq(spark, sf(), booksDump = AnnGates.PqBooks.sink(sf()))) // trains AND dumps
+    val books = loadBooks(AnnGates.PqBooks.glob(sf()))
     assert(books.length === 8 && books(0).length === 16)
     assert(mirrorPq(vectors(), books, None, rerank = 50, k = 5) === got)
     assert(got.size === 50)
   }
 
   test("ann_ivfpq: dumped index model + probed-cell pool reproduce topKIvfPq") {
-    val got = gateRows(IvfIndex.topKIvfPq(spark, sf())) // builds/loads AND dumps
-    val books = loadBooks(IvfIndex.booksDumpPath(new File(sf()).getName))
-    val cents = spark.read.parquet(IvfIndex.centsDumpPath(new File(sf()).getName))
+    val got = gateRows(IvfIndex.topKIvfPq(spark, sf(),
+      centsDump = AnnGates.IvfpqCents.sink(sf()), booksDump = AnnGates.IvfpqBooks.sink(sf()))) // builds/loads AND dumps
+    val books = loadBooks(AnnGates.IvfpqBooks.glob(sf()))
+    val cents = spark.read.parquet(AnnGates.IvfpqCents.glob(sf()))
       .collect().map(r => r.getAs[Int]("cell") -> r.getSeq[Double](1).toArray)
       .sortBy(_._1)
     val norm = vectors().map(r => V(r.id, l2(r.v), 1.0))
@@ -176,11 +179,12 @@ class AnnOracleSpec extends SparkSpec {
   }
 
   test("ann_pq_opq: dumped rotation + books reproduce topKPqOpq in the rotated space") {
-    val got = gateRows(Opq.topKPqOpq(spark, sf())) // fits/rotates AND dumps
-    val rot = spark.read.parquet(Opq.rotDumpPath(new File(sf()).getName))
+    val got = gateRows(Opq.topKPqOpq(spark, sf(),
+      rotDump = AnnGates.OpqRot.sink(sf()), booksDump = AnnGates.OpqBooks.sink(sf()))) // fits/rotates AND dumps
+    val rot = spark.read.parquet(AnnGates.OpqRot.glob(sf()))
       .collect().map(r => r.getAs[Int]("p") -> r.getSeq[Double](1).toArray)
       .sortBy(_._1).map(_._2)
-    val books = loadBooks(Opq.booksDumpPath(new File(sf()).getName))
+    val books = loadBooks(AnnGates.OpqBooks.glob(sf()))
     def rotate(v: Array[Double]): Array[Double] =
       rot.map { b =>
         var s = 0.0; var i = 0
@@ -219,8 +223,9 @@ class AnnOracleSpec extends SparkSpec {
   }
 
   test("ann_pca_reduced: dumped mean+basis reproduce the reduced-space search") {
-    val got = gateRows(Pca.topKL2PcaReduced(spark, sf())) // fits AND dumps
-    val md = spark.read.parquet(Pca.modelDumpPath(new File(sf()).getName))
+    val got = gateRows(Pca.topKL2PcaReduced(spark, sf(),
+      modelDump = AnnGates.PcaModel.sink(sf()))) // fits AND dumps
+    val md = spark.read.parquet(AnnGates.PcaModel.glob(sf()))
       .collect().map(r => r.getAs[Int]("comp") -> r.getSeq[Double](1).toArray).toMap
     val mean = md(-1)
     val basis = (0 until 16).map(md).toArray
@@ -242,8 +247,8 @@ class AnnOracleSpec extends SparkSpec {
   }
 
   test("pq oracle can fail: a destroyed codebook is detected") {
-    val got = gateRows(Pq.topKPq(spark, sf()))
-    val books = loadBooks(Pq.booksDumpPath(new File(sf()).getName))
+    val got = gateRows(Pq.topKPq(spark, sf(), booksDump = AnnGates.PqBooks.sink(sf())))
+    val books = loadBooks(AnnGates.PqBooks.glob(sf()))
     // the exact re-rank absorbs small codebook damage by design (the
     // ADC only nominates candidates), so the decisive tamper breaks
     // the NOMINATION: an all-zero book ties every ADC distance and the
@@ -255,9 +260,10 @@ class AnnOracleSpec extends SparkSpec {
   }
 
   test("ann oracle can fail: dropping a populated centroid is detected") {
-    val got = Kmeans.cellSizes(spark, sf()).collect()
+    val got = Kmeans.cellSizes(spark, sf(),
+      centsDump = AnnGates.KmeansCellsCents.sink(sf())).collect()
       .map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val cents = spark.read.parquet(Kmeans.cellsDumpPath(new File(sf()).getName))
+    val cents = spark.read.parquet(AnnGates.KmeansCellsCents.glob(sf()))
       .collect().map(r => r.getAs[Int]("cell") -> r.getSeq[Double](1).toArray)
       .sortBy(_._1)
     val victim = got.filter(_._2 > 0).keys.head

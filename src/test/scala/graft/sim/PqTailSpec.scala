@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.gates.AnnGates
 import graft.sim.Similarity.{Hit, Vec, cosine}
 
 /** The PQ tail (one heap pass + tree merge + driver rank) against a
@@ -90,13 +91,12 @@ class PqTailSpec extends SparkSpec {
   private def queriesOf(corpus: Dataset[Vec], n: Int): Array[Vec] =
     corpus.filter(_.vec_id < n).collect().sortBy(_.vec_id)
 
-  private def base(dir: String): String = new java.io.File(dir).getName
-
   private def checkPq(dir: String, k: Int, rerank: Int): Unit = {
-    val got = rowsOf(Pq.topKPq(spark, dir, k = k, rerank = rerank))
+    val got = rowsOf(Pq.topKPq(spark, dir, k = k, rerank = rerank,
+      booksDump = AnnGates.PqBooks.sink(dir)))
     val corpus = normalized(dir)
     val queries = queriesOf(corpus, 10)
-    val cb = booksFrom(Pq.booksDumpPath(base(dir)), queries.head.v.length)
+    val cb = booksFrom(AnnGates.PqBooks.glob(dir), queries.head.v.length)
     val want = rowsOf(referenceTail(corpus, queries, cb, k, rerank))
     assert(got.nonEmpty)
     assert(got === want)
@@ -104,8 +104,9 @@ class PqTailSpec extends SparkSpec {
 
   private def checkOpq(dir: String, k: Int, rerank: Int): Unit = {
     import spark.implicits._
-    val got = rowsOf(Opq.topKPqOpq(spark, dir, k = k, rerank = rerank))
-    val rot = spark.read.parquet(Opq.rotDumpPath(base(dir))).collect()
+    val got = rowsOf(Opq.topKPqOpq(spark, dir, k = k, rerank = rerank,
+      rotDump = AnnGates.OpqRot.sink(dir), booksDump = AnnGates.OpqBooks.sink(dir)))
+    val rot = spark.read.parquet(AnnGates.OpqRot.glob(dir)).collect()
       .map(r => (r.getInt(0), r.getSeq[Double](1).toArray)).sortBy(_._1).map(_._2)
     def rotate(x: Array[Double]): Array[Double] = rot.map { b =>
       var s = 0.0
@@ -115,7 +116,7 @@ class PqTailSpec extends SparkSpec {
     }
     val corpus = normalized(dir).map(v => Vec(v.vec_id, rotate(v.v), v.nrm))
     val queries = queriesOf(corpus, 10)
-    val cb = booksFrom(Opq.booksDumpPath(base(dir)), rot.length)
+    val cb = booksFrom(AnnGates.OpqBooks.glob(dir), rot.length)
     val want = rowsOf(referenceTail(corpus, queries, cb, k, rerank))
     assert(got.nonEmpty)
     assert(got === want)
@@ -151,8 +152,9 @@ class PqTailSpec extends SparkSpec {
       // the k cut, and some query's ADC order ties across rerank
       val corpus = normalized(path)
       val queries = queriesOf(corpus, 10)
-      Pq.topKPq(spark, path, k = k, rerank = rerank).collect()
-      val cb = booksFrom(Pq.booksDumpPath(base(path)), dim)
+      Pq.topKPq(spark, path, k = k, rerank = rerank,
+        booksDump = AnnGates.PqBooks.sink(path)).collect()
+      val cb = booksFrom(AnnGates.PqBooks.glob(path), dim)
       val all = corpus.collect()
       val adcTies = queries.count { q =>
         val t = Pq.adcTable(cb, q.v)

@@ -10,9 +10,11 @@ import graft.SparkSpec
 
 /** The ANN trainers run their rounds as plain scheduler jobs over one
   * persisted corpus, so the SQL executions a call starts are only the
-  * ones it cannot avoid: side-dump writes. A Dataset round added back
-  * to a trainer or to the PQ tail fails here instead of only slowing
-  * the benchmark. */
+  * ones it cannot avoid: the corpus scan and the collect of a local
+  * result. A library call writes no side dump (its sink discards), so
+  * no dump write is counted either. A Dataset round added back to a
+  * trainer or to the PQ tail, or a dump written without a gate, fails
+  * here instead of only slowing the benchmark. */
 class RoundBudgetSpec extends SparkSpec {
 
   /** (SQL executions, jobs) started while `body` runs. */
@@ -92,11 +94,21 @@ class RoundBudgetSpec extends SparkSpec {
   private lazy val scratch =
     java.nio.file.Files.createTempDirectory("graft-round-budget").toString
 
-  test("topKPqOpq: SQL executions are the corpus scan and the side-dump writes") {
+  test("topKPqOpq: SQL executions are the corpus scan and the result collect") {
     val (sql, jobs) = counted { Opq.topKPqOpq(spark, sf()).collect() }
     info(s"topKPqOpq: $sql SQL executions, $jobs jobs")
-    // the corpus scan behind the persisted RDD, the opq_rot and
-    // opq_books dumps, and the collect of the local result relation
+    // the corpus scan behind the persisted RDD and the collect of the
+    // local result relation
+    assert(sql === 2)
+    // PCA fit (fills the cache), the rotated-query collect, the PQ
+    // Lloyd rounds and the one-job re-rank tail
+    assert(jobs === 15)
+  }
+
+  test("simhashPairsWide (the crawl_dedup call): no side-dump round") {
+    val (sql, jobs) = counted { graft.dedup.Dedup.simhashPairsWide(spark, sf()).collect() }
+    info(s"simhashPairsWide: $sql SQL executions, $jobs jobs")
     assert(sql === 4)
+    assert(jobs === 13)
   }
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
-import java.io.File
 
 /** Streaming media ingest: the per-batch decode+hash landing replayed
   * through the delta-log (with its mid-stream staged compaction) must
@@ -12,7 +11,8 @@ class MediaStreamSpec extends SparkSpec {
 
   test("stream-landed index == one-shot signatures; pairs == the one-shot gate") {
     import spark.implicits._
-    val streamPairs = MediaStream.imageDedupStream(spark, sf())
+    val streamPairs = MediaStream.imageDedupStream(spark, sf(),
+        sigsDump = graft.gates.MediaGates.JpegStreamSigs.sink(sf()))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val oneShotPairs = graft.multimodal.Jpeg.imageDedupJpeg(spark, sf())
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -20,8 +20,7 @@ class MediaStreamSpec extends SparkSpec {
     assert(streamPairs.nonEmpty)
     // the streamed dump IS the one-shot signature frame, row for row
     val streamed = spark.read.parquet(
-        graft.streaming.MediaStream.dumpPath(
-          new File(sf()).getName))
+        graft.gates.MediaGates.JpegStreamSigs.glob(sf()))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val oneShot = spark.read.parquet(s"${sf()}/documents.parquet")
       .select("doc_id").as[Long]

@@ -1,8 +1,8 @@
 package graft.text
 
 import graft.SparkSpec
+import graft.gates.TextGates
 import org.apache.spark.sql.functions._
-import java.io.File
 
 /** In-JVM mirrors of the side-dump DuckDB oracles for the BPE and
   * trained-classifier gates (`SparkEntry.oracleSql`): the real gate
@@ -31,13 +31,16 @@ class OracleSideDumpSpec extends SparkSpec {
   private def wordsOf(text: String): Seq[String] =
     text.toLowerCase.split("[^a-z]+").filter(_.nonEmpty).toSeq
 
+  /** The BPE gates' merge-table dump sink for the test corpus. */
+  private def merges = TextGates.BpeMerges.sink(sf())
+
   private def dumpedMerges(): Seq[(String, String)] =
-    spark.read.parquet(Bpe.sideDumpPath(new File(sf()).getName))
+    spark.read.parquet(TextGates.BpeMerges.glob(sf()))
       .orderBy(col("ord"))
       .collect().map(r => (r.getAs[String]("a"), r.getAs[String]("b"))).toSeq
 
   test("BPE ids gate: dumped merges + replace-chain apply reproduce encodeIds") {
-    val got = Bpe.encodeIds(spark, sf()) // trains AND side-dumps
+    val got = Bpe.encodeIds(spark, sf(), mergesDump = merges) // trains AND dumps
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2))).toSet
     val ms = dumpedMerges()
     assert(ms.nonEmpty, "merge dump must be readable")
@@ -57,7 +60,7 @@ class OracleSideDumpSpec extends SparkSpec {
   }
 
   test("BPE oracle can fail: a truncated merge table changes the derivation") {
-    val got = Bpe.encodeIds(spark, sf())
+    val got = Bpe.encodeIds(spark, sf(), mergesDump = merges)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2))).toSet
     val ms = dumpedMerges()
     val tampered = ms.dropRight(1)
@@ -77,7 +80,7 @@ class OracleSideDumpSpec extends SparkSpec {
   }
 
   test("BPE vocab gate: dumped merges re-derive the vocab table") {
-    val got = Bpe.vocabDf(spark, sf())
+    val got = Bpe.vocabDf(spark, sf(), mergesDump = merges)
       .collect().map(r => (r.getInt(0), r.getString(1))).toSet
     val ms = dumpedMerges()
     val mirror = ((('a' to 'z').map(_.toString) :+ "</w>") ++
@@ -115,10 +118,10 @@ class OracleSideDumpSpec extends SparkSpec {
   }
 
   test("classifier gate: dumped weights + SQL-mirror margin reproduce classifyTrained") {
-    val got = QualityClassifier.classifyTrained(spark, sf())
+    val got = QualityClassifier.classifyTrained(spark, sf(),
+        weightsDump = TextGates.ClfWeights.sink(sf()))
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getInt(2))).toMap
-    val dump = spark.read.parquet(
-        QualityClassifier.sideDumpPath(new File(sf()).getName))
+    val dump = spark.read.parquet(TextGates.ClfWeights.glob(sf()))
       .collect().map(r => r.getAs[Int]("idx") -> r.getAs[Double]("w")).toMap
     val bias = dump(-1)
     val w = Array.tabulate(4096)(i => dump(i))
@@ -135,9 +138,9 @@ class OracleSideDumpSpec extends SparkSpec {
   }
 
   test("classifier oracle can fail: a perturbed weight is detected") {
-    QualityClassifier.classifyTrained(spark, sf()) // ensure dump exists
-    val dump = spark.read.parquet(
-        QualityClassifier.sideDumpPath(new File(sf()).getName))
+    QualityClassifier.classifyTrained(spark, sf(),
+      weightsDump = TextGates.ClfWeights.sink(sf())) // ensure dump exists
+    val dump = spark.read.parquet(TextGates.ClfWeights.glob(sf()))
       .collect().map(r => r.getAs[Int]("idx") -> r.getAs[Double]("w")).toMap
     val bias = dump(-1)
     val w = Array.tabulate(4096)(i => dump(i))
