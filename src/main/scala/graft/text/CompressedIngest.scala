@@ -33,21 +33,28 @@ object CompressedIngest {
     try {
       in = new java.util.zip.GZIPInputStream(
         new java.io.ByteArrayInputStream(b))
-      val out = new java.io.ByteArrayOutputStream(math.min(b.length * 3, 4096))
-      val buf = new Array[Byte](8192)
-      var n = in.read(buf)
-      while (n >= 0) {
-        if (out.size() + n > maxLen) return None
-        out.write(buf, 0, n)
-        n = in.read(buf)
-      }
-      Some(out.toByteArray)
+      readAtMost(in, maxLen)
     } catch {
       case _: java.io.IOException | _: RuntimeException |
         _: ArrayIndexOutOfBoundsException => None
     } finally {
       if (in != null) try in.close() catch { case _: java.io.IOException => }
     }
+  }
+
+  /** Read a decoding stream to its end, or None once it yields more
+    * than `maxLen` bytes: the bomb guard of the stream-backed decoders,
+    * a bounded read that never sizes a buffer from a declared length. */
+  private[text] def readAtMost(in: java.io.InputStream, maxLen: Int): Option[Array[Byte]] = {
+    val out = new java.io.ByteArrayOutputStream(4096)
+    val buf = new Array[Byte](8192)
+    var n = in.read(buf)
+    while (n >= 0) {
+      if (out.size() + n > maxLen) return None
+      out.write(buf, 0, n)
+      n = in.read(buf)
+    }
+    Some(out.toByteArray)
   }
 
   /** Decompress one DEFLATE document — the HTTP `deflate`
@@ -277,10 +284,11 @@ object CompressedIngest {
   }
 
   /** Gate surface (`text_snappy_ingest`): per document, compress the
-    * text with [[Snappy]] (snappy-java-pinned) — RAW blocks (the
-    * Parquet/Kafka shape) on most rows, the FRAMED format (.sz,
-    * checksummed chunks) on id % 7 == 1, truncated raw on
-    * id % 5 == 3 owing (-1, -1). Map-only over documents. */
+    * text with [[Snappy]] (blocks snappy-java decodes byte-exact) —
+    * RAW blocks (the Parquet/Kafka shape) on most rows, the FRAMED
+    * format (.sz, checksummed chunks) on id % 7 == 1, truncated raw on
+    * id % 5 == 3 owing (-1, -1) — and decode through
+    * [[Snappy.decompress]]. Map-only over documents. */
   def snappyIngestReport(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     spark.read.parquet(s"$sfDir/documents.parquet")

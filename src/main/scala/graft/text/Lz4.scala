@@ -1,200 +1,62 @@
 package graft.text
 
-/** LZ4 codec — pure JVM, public spec (the LZ4 block + frame format
-  * specifications, lz4.org): the compression Kafka topics, Hadoop
-  * sequence files and `.jsonl.lz4` shards actually carry. Fully
-  * GENERATIVE (token nibbles + LSIC length extension + 16-bit
-  * offsets — no normative tables), so unlike MP3/VP8 it is buildable
-  * and VERIFIABLE here: the reference implementation (lz4-java)
-  * ships on the Spark classpath and Lz4Spec differentials both
-  * directions — their frames through our decoder byte-exact, our
-  * frames through their `LZ4FrameInputStream`.
+import org.apache.commons.compress.compressors.lz4.FramedLZ4CompressorInputStream
+
+/** LZ4 frames (the LZ4 block + frame format specifications, lz4.org):
+  * the compression Kafka topics, Hadoop sequence files and
+  * `.jsonl.lz4` shards actually carry.
   *
-  * Scope:
-  *  - block format: token literal/match nibbles, 255-terminated
-  *    length extension bytes, 16-bit little-endian offsets,
-  *    overlap-safe match copy, the literals-only last sequence;
-  *  - frame format v1: magic, FLG/BD descriptor (version 01, block
-  *    independence AND block-linked modes — linked blocks reach back
-  *    across block boundaries through the frame window), optional
-  *    content size, optional dictionary ID (nonzero → the documented
-  *    None), header checksum (XXH32 >> 8), per-block uncompressed
-  *    flag (bit 31), optional block checksums, EndMark, optional
-  *    content checksum — both checksums VERIFIED when present;
-  *  - skippable frames (0x184D2A50-5F) and multi-frame
-  *    concatenation; the pre-frame "legacy" format (0x184C2102) is
-  *    the documented None.
+  * Decode runs on commons-compress's pure-Java frame reader (header,
+  * block and content checksums verified; linked and independent
+  * blocks; dictionary IDs and the legacy 0x184C2102 format decline)
+  * behind a walk over the concatenated frames: skippable frames
+  * (0x184D2A50-5F) are skipped, the input must end on a complete
+  * frame, and a frame whose declared content size is past `maxLen`
+  * declines before any decode or, when it disagrees with the decoded
+  * length, after it. Same decode-or-reject totality contract as
+  * [[Zstd]] (Lz4Spec fuzzes it).
   *
   * The compressor emits conforming frames (block-independent, greedy
   * hash-table match search honoring the end-of-block rules: last 5
   * bytes literal, no match starting within the last 12) with content
-  * size + content checksum. Same decode-or-reject totality contract
-  * as [[Zstd]] (Lz4Spec fuzzes it); 64 MiB bomb guard. */
+  * size + content checksum; lz4-java's `LZ4FrameInputStream` decodes
+  * them byte-exact (Lz4Spec). */
 object Lz4 {
 
   private val MaxBytes = 64 * 1024 * 1024
 
-  private final class Malformed extends RuntimeException(null, null, false, false)
+  /** The frame checksums' hash (xxHash32, seed 0). */
+  private val Xxh32 = net.jpountz.xxhash.XXHashFactory.safeInstance().hash32()
 
-  def decompress(b: Array[Byte], maxLen: Int = MaxBytes): Option[Array[Byte]] =
-    try Some(decode0(b, maxLen))
-    catch { case _: Malformed | _: ArrayIndexOutOfBoundsException |
-      _: NegativeArraySizeException => None }
+  private def le(b: Array[Byte], p: Int, n: Int): Long =
+    (0 until n).foldLeft(0L)((v, i) => v | ((b(p + i) & 0xffL) << (8 * i)))
 
-  private def u8(b: Array[Byte], p: Int): Int = {
-    if (p >= b.length) throw new Malformed
-    b(p) & 0xff
-  }
-  private def u32(b: Array[Byte], p: Int): Long =
-    u8(b, p) | (u8(b, p + 1).toLong << 8) | (u8(b, p + 2).toLong << 16) |
-      (u8(b, p + 3).toLong << 24)
-
-  /** Growable output with bomb guard (the [[Zstd]] Out shape). */
-  private final class Out(maxLen: Int) {
-    var buf = new Array[Byte](8192)
-    var n = 0
-    def ensure(extra: Int): Unit = {
-      if (extra < 0 || n + extra > maxLen) throw new Malformed
-      if (n + extra > buf.length) {
-        var cap = buf.length
-        while (cap < n + extra) cap <<= 1
-        buf = java.util.Arrays.copyOf(buf, math.min(cap, maxLen).max(n + extra))
-      }
-    }
-    def append(b: Array[Byte], off: Int, len: Int): Unit = {
-      if (len < 0 || off < 0 || off + len > b.length) throw new Malformed
-      ensure(len)
-      System.arraycopy(b, off, buf, n, len)
-      n += len
-    }
-    def copyMatch(offset: Int, len: Int, windowStart: Int): Unit = {
-      if (offset <= 0 || offset > n - windowStart) throw new Malformed
-      ensure(len)
-      var i = 0
-      val src = n - offset
-      while (i < len) { buf(n + i) = buf(src + i); i += 1 }
-      n += len
-    }
-    def toArray: Array[Byte] = java.util.Arrays.copyOf(buf, n)
-  }
-
-  /** Decode one LZ4 block from [p0, end) into out; matches may reach
-    * back to `windowStart` (the frame start for linked blocks, the
-    * block start for independent ones). */
-  private def block(b: Array[Byte], p0: Int, end: Int, out: Out,
-      windowStart: Int): Unit = {
-    // every read is bounded by the DECLARED block end, not the whole
-    // buffer: a corrupt block must never consume the next block's
-    // bytes and terminate cleanly with garbage (code-review r15)
-    def u8e(p: Int): Int = {
-      if (p >= end) throw new Malformed
-      b(p) & 0xff
-    }
-    var p = p0
-    while (p < end) {
-      val token = u8e(p); p += 1
-      var litLen = token >>> 4
-      if (litLen == 15) {
-        var x = 255
-        while (x == 255) { x = u8e(p); p += 1; litLen += x
-          if (litLen > MaxBytes) throw new Malformed }
-      }
-      if (p + litLen > end) throw new Malformed
-      out.append(b, p, litLen)
-      p += litLen
-      if (p < end) { // a match follows (the last sequence has none)
-        val offset = u8e(p) | (u8e(p + 1) << 8); p += 2
-        var mLen = (token & 15) + 4
-        if ((token & 15) == 15) {
-          var x = 255
-          while (x == 255) { x = u8e(p); p += 1; mLen += x
-            if (mLen > MaxBytes) throw new Malformed }
-        }
-        out.copyMatch(offset, mLen, windowStart)
-      }
-    }
-  }
-
-  private def decode0(b: Array[Byte], maxLen: Int): Array[Byte] = {
-    if (b.length == 0) throw new Malformed
-    val out = new Out(maxLen)
+  def decompress(b: Array[Byte], maxLen: Int = MaxBytes): Option[Array[Byte]] = {
+    if (b.isEmpty) return None
+    val out = new java.io.ByteArrayOutputStream()
     var p = 0
-    while (p < b.length) {
-      val magic = u32(b, p)
-      if ((magic & 0xfffffff0L) == 0x184d2a50L) { // skippable
-        val size = u32(b, p + 4)
-        if (size > Int.MaxValue - 8 || p + 8 + size > b.length)
-          throw new Malformed
-        p += 8 + size.toInt
-      } else if (magic == 0x184d2204L) {
-        p = frame(b, p + 4, out, maxLen)
-      } else throw new Malformed // incl. the legacy 0x184C2102 format
-    }
-    out.toArray
-  }
-
-  private def frame(b: Array[Byte], p0: Int, out: Out, maxLen: Int): Int = {
-    var p = p0
-    val hdrStart = p
-    val flg = u8(b, p); p += 1
-    if ((flg >>> 6) != 1) throw new Malformed // version must be 01
-    if ((flg & 2) != 0) throw new Malformed // reserved bit
-    val independent = (flg & 0x20) != 0
-    val blockChecksum = (flg & 0x10) != 0
-    val hasContentSize = (flg & 0x08) != 0
-    val contentChecksum = (flg & 0x04) != 0
-    val hasDictId = (flg & 0x01) != 0
-    val bd = u8(b, p); p += 1
-    if ((bd & 0x8f) != 0) throw new Malformed // reserved bits
-    val bsCode = (bd >>> 4) & 7
-    if (bsCode < 4) throw new Malformed
-    val blockMax = 1 << (8 + 2 * bsCode) // 4→64KB … 7→4MB
-    var contentSize = -1L
-    if (hasContentSize) {
-      contentSize = 0
-      var i = 0
-      while (i < 8) { contentSize |= u8(b, p).toLong << (8 * i); p += 1; i += 1 }
-      if (contentSize > maxLen) throw new Malformed
-    }
-    if (hasDictId) {
-      val did = u32(b, p); p += 4
-      if (did != 0) throw new Malformed // dictionaries: documented None
-    }
-    val hc = u8(b, p); p += 1
-    if (((Xxh32.hash(b, hdrStart, p - 1 - hdrStart, 0) >>> 8) & 0xff) != hc)
-      throw new Malformed
-    val frameStart = out.n
-    var done = false
-    while (!done) {
-      val bsize = u32(b, p); p += 4
-      if (bsize == 0) done = true // EndMark
-      else {
-        val raw = (bsize & 0x80000000L) != 0
-        val len = (bsize & 0x7fffffffL).toInt
-        if (len > blockMax + 16 || p + len > b.length) throw new Malformed
-        if (blockChecksum) {
-          val want = u32(b, p + len)
-          if ((Xxh32.hash(b, p, len, 0) & 0xffffffffL) != want)
-            throw new Malformed
+    try {
+      while (p < b.length) {
+        if ((le(b, p, 4) & 0xfffffff0L) == 0x184d2a50L) { // skippable frame
+          val size = le(b, p + 4, 4)
+          if (size > b.length - p - 8L) return None
+          p += 8 + size.toInt
+        } else {
+          val room = maxLen - out.size
+          // FLG bit 3: an 8-byte content size follows the BD byte
+          val declared = if ((b(p + 4) & 0x08) != 0) le(b, p + 6, 8) else -1L
+          if (declared > room || declared < -1) return None
+          val in = new java.io.ByteArrayInputStream(b, p, b.length - p)
+          CompressedIngest.readAtMost(new FramedLZ4CompressorInputStream(in, false), room) match {
+            case Some(frame) if declared < 0 || frame.length == declared =>
+              out.write(frame, 0, frame.length)
+            case _ => return None
+          }
+          p = b.length - in.available
         }
-        if (raw) out.append(b, p, len)
-        else {
-          val before = out.n
-          block(b, p, p + len, out,
-            if (independent) before else frameStart)
-          if (out.n - before > blockMax) throw new Malformed
-        }
-        p += len + (if (blockChecksum) 4 else 0)
       }
-    }
-    if (contentSize >= 0 && (out.n - frameStart).toLong != contentSize)
-      throw new Malformed
-    if (contentChecksum) {
-      val want = u32(b, p); p += 4
-      if ((Xxh32.hash(out.buf, frameStart, out.n - frameStart, 0) &
-        0xffffffffL) != want) throw new Malformed
-    }
-    p
+      Some(out.toByteArray)
+    } catch { case _: java.io.IOException | _: RuntimeException => None }
   }
 
   // ════════════════════════════ encoder ═══════════════════════════
@@ -284,55 +146,5 @@ object Lz4 {
     }
     emit(anchor, end - anchor, 0, 0) // literals-only last sequence
     out.toByteArray
-  }
-}
-
-/** XXH32 (public algorithm, Yann Collet) — the LZ4 frame format's
-  * header/block/content checksums. */
-private[text] object Xxh32 {
-  private val P1 = 0x9e3779b1
-  private val P2 = 0x85ebca77
-  private val P3 = 0xc2b2ae3d
-  private val P4 = 0x27d4eb2f
-  private val P5 = 0x165667b1
-
-  /** Returns the checksum as an UNSIGNED value in a Long. */
-  def hash(b: Array[Byte], off: Int, len: Int, seed: Int): Long = {
-    def u32le(p: Int): Int =
-      (b(p) & 0xff) | ((b(p + 1) & 0xff) << 8) |
-        ((b(p + 2) & 0xff) << 16) | (b(p + 3) << 24)
-    def rotl(x: Int, r: Int): Int = (x << r) | (x >>> (32 - r))
-    var p = off
-    val end = off + len
-    var h =
-      if (len >= 16) {
-        var a1 = seed + P1 + P2
-        var a2 = seed + P2
-        var a3 = seed
-        var a4 = seed - P1
-        while (p + 16 <= end) {
-          a1 = rotl(a1 + u32le(p) * P2, 13) * P1
-          a2 = rotl(a2 + u32le(p + 4) * P2, 13) * P1
-          a3 = rotl(a3 + u32le(p + 8) * P2, 13) * P1
-          a4 = rotl(a4 + u32le(p + 12) * P2, 13) * P1
-          p += 16
-        }
-        rotl(a1, 1) + rotl(a2, 7) + rotl(a3, 12) + rotl(a4, 18)
-      } else seed + P5
-    h += len
-    while (p + 4 <= end) {
-      h = rotl(h + u32le(p) * P3, 17) * P4
-      p += 4
-    }
-    while (p < end) {
-      h = rotl(h + (b(p) & 0xff) * P5, 11) * P1
-      p += 1
-    }
-    h ^= h >>> 15
-    h *= P2
-    h ^= h >>> 13
-    h *= P3
-    h ^= h >>> 16
-    h & 0xffffffffL
   }
 }

@@ -1,35 +1,30 @@
 package graft.text
 
-/** Snappy codec — pure JVM, public spec (google/snappy
-  * format_description.txt + framing_format.txt): the block
-  * compression Parquet pages, Kafka batches and Hadoop files carry.
-  * Fully generative (tag bytes + varints — no normative tables), and
-  * the REFERENCE implementation (snappy-java) ships on the Spark
-  * classpath, so SnappySpec differentials both directions: their
-  * blocks through our decoder byte-exact, ours through their
-  * `Snappy.uncompress`.
+import org.apache.commons.compress.compressors.snappy.{FramedSnappyCompressorInputStream,
+  FramedSnappyDialect, SnappyCompressorInputStream}
+
+/** Snappy (google/snappy format_description.txt + framing_format.txt):
+  * the block compression Parquet pages, Kafka batches and Hadoop
+  * files carry.
   *
-  * Scope:
-  *  - the raw block format: varint preamble (uncompressed length),
-  *    literals with 1-/2-/3-/4-/5-byte length encodings, copy ops
-  *    with 1-byte (len 4-11, 11-bit offset), 2-byte and 4-byte
-  *    offsets, overlap-safe copies;
-  *  - the FRAMING format (.sz): the sNaPpY stream identifier,
-  *    compressed (0x00) and uncompressed (0x01) chunks with masked
-  *    CRC32C verification, padding (0xfe) and skippable (0x80-0xfd)
-  *    chunks, unskippable reserved chunks rejected;
-  *  - [[decompress]] sniffs framed vs raw by the stream-identifier
-  *    magic.
+  * [[decompress]] sniffs the framing format's sNaPpY stream identifier
+  * and decodes with commons-compress's pure-Java readers: the framed
+  * reader verifies each chunk's masked CRC32C, skips padding and
+  * skippable chunks and rejects reserved unskippable ones; a raw block
+  * must fill exactly its varint-declared length from exactly the input,
+  * and a declared length past `maxLen` declines before any decode.
+  * Copy offsets reach back at most 64 KiB, the block size every snappy
+  * writer (this one included) compresses in. Same totality contract as
+  * [[Zstd]]/[[Lz4]].
   *
   * The compressor emits raw blocks (greedy hash-table matches,
   * 2-byte-offset copies) and [[compressFramed]] wraps them in
-  * checksummed frames. Same totality contract as [[Zstd]]/[[Lz4]];
-  * 64 MiB bomb guard. */
+  * checksummed frames; snappy-java's `Snappy.uncompress` decodes the
+  * raw blocks byte-exact (SnappySpec). */
 object Snappy {
 
   private val MaxBytes = 64 * 1024 * 1024
-
-  private final class Malformed extends RuntimeException(null, null, false, false)
+  private val Window = 1 << 16
 
   private val FrameMagic: Array[Byte] =
     Array[Byte](0xff.toByte, 0x06, 0x00, 0x00, 's', 'N', 'a', 'P', 'p', 'Y')
@@ -37,77 +32,17 @@ object Snappy {
   /** Sniff framed vs raw and decode; None on anything malformed. */
   def decompress(b: Array[Byte], maxLen: Int = MaxBytes): Option[Array[Byte]] =
     try {
-      if (b.length >= 10 && java.util.Arrays.equals(
-        java.util.Arrays.copyOf(b, 10), FrameMagic))
-        Some(framed(b, maxLen))
-      else Some(raw(b, 0, b.length, maxLen))
-    } catch { case _: Malformed | _: ArrayIndexOutOfBoundsException |
-      _: NegativeArraySizeException => None }
-
-  private def u8(b: Array[Byte], p: Int): Int = {
-    if (p >= b.length) throw new Malformed
-    b(p) & 0xff
-  }
-
-  /** Raw snappy block over [off, off+len). */
-  private def raw(b: Array[Byte], off: Int, len: Int, maxLen: Int): Array[Byte] = {
-    val end = off + len
-    if (end > b.length) throw new Malformed
-    // varint preamble: uncompressed length
-    var p = off
-    var expect = 0L
-    var shift = 0
-    var more = true
-    while (more) {
-      val v = u8(b, p); p += 1
-      expect |= (v & 0x7fL) << shift
-      shift += 7
-      if (shift > 35) throw new Malformed
-      more = (v & 0x80) != 0
-    }
-    if (expect > maxLen) throw new Malformed
-    val out = new Array[Byte](expect.toInt)
-    var n = 0
-    while (p < end) {
-      val tag = u8(b, p); p += 1
-      (tag & 3) match {
-        case 0 => // literal
-          var litLen = tag >>> 2
-          if (litLen >= 60) {
-            val extra = litLen - 59 // 1..4 length bytes, LE
-            litLen = 0
-            var i = 0
-            while (i < extra) { litLen |= u8(b, p) << (8 * i); p += 1; i += 1 }
-            if (litLen < 0) throw new Malformed
-          }
-          val cnt = litLen + 1
-          if (p + cnt > end || n + cnt > out.length) throw new Malformed
-          System.arraycopy(b, p, out, n, cnt)
-          p += cnt; n += cnt
-        case c =>
-          val (mLen, offset) = c match {
-            case 1 =>
-              (((tag >>> 2) & 7) + 4, ((tag >>> 5) << 8) | u8(b, { p += 1; p - 1 }))
-            case 2 =>
-              val o = u8(b, p) | (u8(b, p + 1) << 8); p += 2
-              ((tag >>> 2) + 1, o)
-            case _ =>
-              val o = u8(b, p) | (u8(b, p + 1) << 8) | (u8(b, p + 2) << 16) |
-                (u8(b, p + 3) << 24); p += 4
-              if (o < 0) throw new Malformed
-              ((tag >>> 2) + 1, o)
-          }
-          if (offset <= 0 || offset > n || n + mLen > out.length)
-            throw new Malformed
-          var i = 0
-          val src = n - offset
-          while (i < mLen) { out(n + i) = out(src + i); i += 1 }
-          n += mLen
+      val in = new java.io.ByteArrayInputStream(b)
+      if (b.length >= 10 && java.util.Arrays.equals(b, 0, 10, FrameMagic, 0, 10))
+        CompressedIngest.readAtMost(new FramedSnappyCompressorInputStream(
+          in, Window, FramedSnappyDialect.STANDARD), maxLen)
+      else {
+        val raw = new SnappyCompressorInputStream(in, Window)
+        if (raw.getSize > maxLen) None
+        else CompressedIngest.readAtMost(raw, maxLen)
+          .filter(out => out.length == raw.getSize && in.available == 0)
       }
-    }
-    if (n != out.length) throw new Malformed
-    out
-  }
+    } catch { case _: java.io.IOException | _: RuntimeException => None }
 
   /** CRC32C masked per the framing spec. */
   private def maskedCrc(b: Array[Byte], off: Int, len: Int): Long = {
@@ -115,58 +50,6 @@ object Snappy {
     c.update(b, off, len)
     val crc = c.getValue.toInt
     (((crc >>> 15) | (crc << 17)) + 0xa282ead8) & 0xffffffffL
-  }
-
-  private def framed(b: Array[Byte], maxLen: Int): Array[Byte] = {
-    // FORMAT-INHERENT CAVEAT (ADVICE r15): the framing format has no
-    // end-of-stream marker — end of input IS end of stream — so a
-    // framed stream truncated EXACTLY on a chunk boundary decodes to
-    // a silently-partial payload (truncation anywhere inside a chunk
-    // is caught by the length/CRC checks). Callers that know the
-    // uncompressed length must verify it; callers that need strict
-    // totality use a length-framed container (the gates' truncated
-    // class cuts mid-chunk, where detection is guaranteed).
-    // small initial capacity: b.length*2 would overflow Int past 1 GiB
-    // (an uncaught IllegalArgumentException breaking totality) and
-    // eagerly doubles the allocation for every normal input
-    val out = new java.io.ByteArrayOutputStream(
-      math.min(math.max(b.length, 64), 1 << 20))
-    var p = 0
-    var sawId = false
-    while (p < b.length) {
-      val tpe = u8(b, p)
-      val len = u8(b, p + 1) | (u8(b, p + 2) << 8) | (u8(b, p + 3) << 16)
-      p += 4
-      if (p + len > b.length) throw new Malformed
-      tpe match {
-        case 0xff => // stream identifier
-          if (len != 6 || b(p) != 's' || b(p + 1) != 'N' || b(p + 2) != 'a' ||
-            b(p + 3) != 'P' || b(p + 4) != 'p' || b(p + 5) != 'Y')
-            throw new Malformed
-          sawId = true
-        case 0x00 => // compressed chunk: masked CRC of the UNCOMPRESSED data
-          if (!sawId || len < 4) throw new Malformed
-          val want = (u8(b, p).toLong | (u8(b, p + 1).toLong << 8) |
-            (u8(b, p + 2).toLong << 16) | (u8(b, p + 3).toLong << 24))
-          val data = raw(b, p + 4, len - 4, maxLen - out.size())
-          if (maskedCrc(data, 0, data.length) != want) throw new Malformed
-          if (out.size() + data.length > maxLen) throw new Malformed
-          out.write(data, 0, data.length)
-        case 0x01 => // uncompressed chunk
-          if (!sawId || len < 4) throw new Malformed
-          val want = (u8(b, p).toLong | (u8(b, p + 1).toLong << 8) |
-            (u8(b, p + 2).toLong << 16) | (u8(b, p + 3).toLong << 24))
-          if (maskedCrc(b, p + 4, len - 4) != want) throw new Malformed
-          if (out.size() + len - 4 > maxLen) throw new Malformed
-          out.write(b, p + 4, len - 4)
-        case 0xfe => // padding
-        case t if t >= 0x80 && t <= 0xfd => // skippable
-        case _ => throw new Malformed // reserved unskippable
-      }
-      p += len
-    }
-    if (!sawId) throw new Malformed
-    out.toByteArray
   }
 
   // ════════════════════════════ encoder ═══════════════════════════

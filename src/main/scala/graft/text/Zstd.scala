@@ -1,59 +1,34 @@
 package graft.text
 
-/** Zstandard frame decode — pure JVM, public spec (RFC 8878):
-  * `.jsonl.zst` is the de-facto LLM-corpus distribution format and
-  * `content-encoding: zstd` is spreading through crawls, and both
-  * fell off the decode path entirely (r14 "What's missing #3" — the
-  * JDK ships no zstd codec). Scope — the full single-threaded frame
-  * format:
+import com.github.luben.zstd.{ZstdDecompressCtx, ZstdDictDecompress, ZstdException,
+  Zstd => Jni}
+
+/** Zstandard (RFC 8878): `.jsonl.zst` is the de-facto LLM-corpus
+  * distribution format and `content-encoding: zstd` is spreading
+  * through crawls.
   *
-  *  - frame header walk: magic, descriptor (content-size flag,
-  *    single-segment, checksum, dictionary-ID), window descriptor
-  *    (exponent/mantissa), all four content-size widths, SKIPPABLE
-  *    frames (magic 0x184D2A50-5F), multi-frame concatenation;
-  *  - blocks: raw, RLE, compressed, the 3-byte little-endian header;
-  *  - literals: raw, RLE, Huffman-compressed and treeless (the
-  *    within-frame table reuse), all four size formats, 1-stream and
-  *    4-stream (jump table) layouts; Huffman tree descriptions both
-  *    direct (4-bit packed weights) and FSE-compressed (two
-  *    interleaved states over a backward bitstream), the implied
-  *    last weight, the 11-bit code-length ceiling;
-  *  - FSE: the forward-bitstream normalized-count header (threshold
-  *    descent + 2-bit zero-repeat flags), table spread (lowprob
-  *    symbols at the high end, the (5/8·size + 3) step), decode
-  *    tables up to the per-category accuracy ceilings (LL 9, OF 8,
-  *    ML 9, weights 6);
-  *  - sequences: predefined / RLE / FSE-compressed / repeat table
-  *    modes for each of the three alphabets (the RFC's predefined
-  *    distributions are embedded and checksummed against 2^AL), the
-  *    backward bitstream with LL→OF→ML state init, OF→ML→LL
-  *    extra-bit reads, LL→ML→OF state updates, the code→(baseline,
-  *    bits) expansions derived generatively from their cumulative
-  *    structure, and the full three-slot repeat-offset history with
-  *    the literals-length-0 rotation;
-  *  - sequence execution against the in-frame window (overlap-safe
-  *    byte copy, offset bounded by frame position and window size);
-  *  - the XXH64-based content checksum, verified when present.
+  * Decode runs on zstd-jni (the reference C library, on Spark's
+  * classpath) behind a walk that keeps this object's contract: the
+  * input must be one or more complete frames (skippable frames
+  * allowed), a frame's Dictionary_ID resolves through the caller's map
+  * or the input declines, a declared content size past `maxLen`
+  * declines before any decode, and the output buffer grows from the
+  * input's own size, never from a size the input declares. Every
+  * malformed shape is None, never a throw ([[ZstdSpec]] fuzzes it).
   *
-  * Dictionaries (RFC 8878 §5): [[parseDictionary]] reads the full
-  * format (entropy tables seeding Treeless/Repeat modes, initial
-  * repcodes, content prefix for match offsets), the decompress
-  * overload resolves frames by Dictionary_ID, [[buildDictionary]]
-  * emits valid dictionaries, and the compress overload produces
-  * frames that reference one — ZstdDictSpec pins BOTH directions
-  * against the reference CLI (its trained dictionary + `-D` frames
-  * decode byte-exact here; it decodes ours). An unresolvable ID
-  * declines. Decode-or-reject totality ([[ZstdSpec]] fuzzes it):
-  * a 64 MiB bomb guard, every malformed shape declines, never a
-  * throw. Foreign pins: `src/test/resources/zstd_vectors/` holds
-  * frames produced by the REAL zstd CLI (v1.5.7) at levels 1/3/19
-  * over seven payload shapes — a conforming encoder this decoder
-  * must agree with byte-for-byte, which a mirrored self-roundtrip
-  * can never prove. */
+  * The encoder and the dictionary format are written here: gate
+  * corpora and the crawl fixtures are built with [[compress]], so its
+  * bytes are pinned. Dictionaries (RFC 8878 §5): [[parseDictionary]]
+  * validates the full format (entropy tables, initial repcodes,
+  * content prefix), [[buildDictionary]] emits valid ones, and the
+  * compress overload produces frames that reference one — ZstdDictSpec
+  * pins both against the reference CLI (its trained dictionary + `-D`
+  * frames decode byte-exact; it decodes ours). Foreign pins:
+  * `src/test/resources/zstd_vectors/` holds frames produced by the
+  * REAL zstd CLI (v1.5.7) at levels 1/3/19 over seven payload shapes. */
 object Zstd {
 
   private val MaxBytes = 64 * 1024 * 1024
-  private val MaxWindow = 128L * 1024 * 1024
 
   private final class Malformed extends RuntimeException(null, null, false, false)
 
@@ -64,26 +39,54 @@ object Zstd {
     decompress(b, maxLen, Map.empty[Long, Dict])
 
   /** [[decompress]] with dictionary resolution: a frame whose header
-    * carries a Dictionary_ID looks it up here (RFC 8878 §5) — its
-    * entropy tables seed the Treeless/Repeat modes, its repcodes the
-    * initial recent offsets, and its content the virtual past match
-    * offsets may reach into. An ID the map lacks declines. */
+    * carries a Dictionary_ID decodes against the map's dictionary for
+    * that ID (RFC 8878 §5). An ID the map lacks declines. */
   def decompress(b: Array[Byte], maxLen: Int,
-      dicts: Map[Long, Dict]): Option[Array[Byte]] =
-    try Some(decode0(b, maxLen, dicts))
-    catch { case _: Malformed | _: ArrayIndexOutOfBoundsException |
-      _: NegativeArraySizeException | _: OutOfBoundsException => None }
-
-  private final class OutOfBoundsException extends RuntimeException
+      dicts: Map[Long, Dict]): Option[Array[Byte]] = {
+    if (b.isEmpty) return None // zero frames ≠ empty payload
+    val ctx = new ZstdDecompressCtx
+    try {
+      val out = new java.io.ByteArrayOutputStream()
+      var p = 0
+      while (p < b.length) {
+        // throws on a truncated frame: the input must end on a frame boundary
+        val n = Jni.findFrameCompressedSize(b, p, b.length - p).toInt
+        if ((u32(b, p) & 0xfffffff0L) != 0x184d2a50L) { // not skippable
+          val room = maxLen - out.size
+          if (Jni.getFrameContentSize(b, p, n) > room) return None
+          ctx.reset()
+          val id = Jni.getDictIdFromFrame(
+            java.util.Arrays.copyOfRange(b, p, p + math.min(n, 18)))
+          if (id != 0) dicts.get(id) match {
+            case Some(d) => ctx.loadDict(d.ddict)
+            case None => return None
+          }
+          // start from four times the frame's own size; double on a full buffer
+          var cap = math.min(room.toLong, 4L * n).toInt
+          var got = -1
+          while (got < 0) {
+            val dst = new Array[Byte](cap)
+            try { got = ctx.decompressByteArray(dst, 0, cap, b, p, n); out.write(dst, 0, got) }
+            catch {
+              case e: ZstdException if e.getErrorCode == Jni.errDstSizeTooSmall && cap < room =>
+                cap = math.min(room.toLong, 2L * cap).toInt
+            }
+          }
+        }
+        p += n
+      }
+      Some(out.toByteArray)
+    } catch { case _: ZstdException | _: Malformed => None }
+    finally ctx.close()
+  }
 
   // ── little-endian scalar reads ────────────────────────────────────
   private def u8(b: Array[Byte], p: Int): Int = {
     if (p >= b.length) throw new Malformed
     b(p) & 0xff
   }
-  private def u16(b: Array[Byte], p: Int): Int = u8(b, p) | (u8(b, p + 1) << 8)
-  private def u24(b: Array[Byte], p: Int): Int = u16(b, p) | (u8(b, p + 2) << 16)
-  private def u32(b: Array[Byte], p: Int): Long = u24(b, p) | (u8(b, p + 3).toLong << 24)
+  private def u32(b: Array[Byte], p: Int): Long =
+    u8(b, p) | (u8(b, p + 1) << 8) | (u8(b, p + 2) << 16) | (u8(b, p + 3).toLong << 24)
 
   // ── forward bitstream (FSE normalized-count headers) ─────────────
   private final class FwdBits(b: Array[Byte], var pos: Int, val end: Int) {
@@ -102,12 +105,12 @@ object Zstd {
     def bytePos: Int = pos - (nbits >> 3)
   }
 
-  // ── backward bitstream (FSE/Huffman payload streams) ─────────────
+  // ── backward bitstream (FSE-coded Huffman weights) ──────────────
   /** Reads bits from the END of [start, end): the last byte's highest
     * set bit is the sentinel; reads return the highest remaining bits
     * first. Reads past the start zero-pad and drive bitsLeft
     * negative — the overflow marker the weight-stream termination
-    * uses; sequence/Huffman decode REJECTS a negative balance. */
+    * uses. */
   private final class BackBits(b: Array[Byte], start: Int, end: Int) {
     if (end <= start) throw new Malformed
     private val lastByte = b(end - 1) & 0xff
@@ -127,28 +130,13 @@ object Zstd {
       }
       v
     }
-    def peek(n: Int): Int = {
-      var v = 0
-      var i = 0
-      var bl = bitsLeft
-      while (i < n) {
-        bl -= 1
-        val bit =
-          if (bl < 0) 0
-          else (b(start + (bl >> 3)) >> (bl & 7)) & 1
-        v = (v << 1) | bit
-        i += 1
-      }
-      v
-    }
-    def skip(n: Int): Unit = bitsLeft -= n
   }
 
   // ── FSE ──────────────────────────────────────────────────────────
   /** A decode table: per state cell, the symbol, the bit count of the
     * update read, and the new-state baseline. */
-  private[text] final class FseTable(val accuracyLog: Int, val symbol: Array[Int],
-    val nbBits: Array[Int], val baseline: Array[Int]) extends Serializable
+  private final class FseTable(val accuracyLog: Int, val symbol: Array[Int],
+    val nbBits: Array[Int], val baseline: Array[Int])
 
   /** Parse a normalized-count header (forward bitstream, RFC 8878
     * §4.1.1) and return (counts, accuracyLog, bytesConsumed). */
@@ -245,18 +233,10 @@ object Zstd {
     new FseTable(al, symbol, nbBits, baseline)
   }
 
-  /** A single-symbol table (RLE sequence mode): 0-bit updates. */
-  private def rleFse(sym: Int): FseTable =
-    new FseTable(0, Array(sym), Array(0), Array(0))
-
   // ── Huffman ──────────────────────────────────────────────────────
-  private[text] final class HufTable(val tableLog: Int, val symbol: Array[Int],
-    val length: Array[Int]) extends Serializable
-
-  /** Weights → canonical table: the implied last weight completes the
-    * 2^k sum; table filled by (weight asc, symbol asc) — the zstd X1
-    * layout a top-bits peek indexes directly. */
-  private def buildHuf(weights: Array[Int]): HufTable = {
+  /** Tree-description check: every weight within the 11-bit ceiling,
+    * and an implied last weight (a power of two) completes the 2^k sum. */
+  private def checkHufWeights(weights: Array[Int]): Unit = {
     var total = 0L
     var i = 0
     while (i < weights.length) {
@@ -270,35 +250,10 @@ object Zstd {
     val rest = (1L << tableLog) - total
     // rest must itself be a power of two: it IS the implied weight
     if (rest <= 0 || (rest & (rest - 1)) != 0) throw new Malformed
-    val lastWeight = java.lang.Long.numberOfTrailingZeros(rest).toInt + 1
-    val all = weights :+ lastWeight
-    val size = 1 << tableLog.toInt
-    val symbol = new Array[Int](size)
-    val length = new Array[Int](size)
-    var u = 0
-    var w = 1
-    while (w <= tableLog) {
-      var sy = 0
-      while (sy < all.length) {
-        if (all(sy) == w) {
-          val span = 1 << (w - 1)
-          val len = tableLog.toInt + 1 - w
-          var k = 0
-          while (k < span) {
-            if (u >= size) throw new Malformed
-            symbol(u) = sy; length(u) = len; u += 1; k += 1
-          }
-        }
-        sy += 1
-      }
-      w += 1
-    }
-    if (u != size) throw new Malformed
-    new HufTable(tableLog.toInt, symbol, length)
   }
 
-  /** Huffman tree description at p: returns (table, bytesConsumed). */
-  private def readHufDesc(b: Array[Byte], p: Int, end: Int): (HufTable, Int) = {
+  /** Validate the Huffman tree description at p; returns its byte length. */
+  private def readHufDesc(b: Array[Byte], p: Int, end: Int): Int = {
     val hb = u8(b, p)
     if (hb < 128) {
       // FSE-compressed weights: ncount header (forward) then a
@@ -325,7 +280,8 @@ object Zstd {
           if (br.bitsLeft < 0) { ws += table.symbol(s1); done = true }
         }
       }
-      (buildHuf(ws.toArray), 1 + hb)
+      checkHufWeights(ws.toArray)
+      1 + hb
     } else {
       val n = hb - 127
       val ws = new Array[Int](n)
@@ -335,25 +291,9 @@ object Zstd {
         ws(i) = if ((i & 1) == 0) byte >> 4 else byte & 0xf
         i += 1
       }
-      (buildHuf(ws), 1 + (n + 1) / 2)
+      checkHufWeights(ws)
+      1 + (n + 1) / 2
     }
-  }
-
-  /** Decode exactly n symbols from one backward Huffman stream; the
-    * stream must be consumed exactly. */
-  private def hufStream(table: HufTable, b: Array[Byte], start: Int,
-      end: Int, dst: Array[Byte], d0: Int, n: Int): Unit = {
-    val br = new BackBits(b, start, end)
-    var d = d0
-    var i = 0
-    while (i < n) {
-      val idx = br.peek(table.tableLog)
-      dst(d) = table.symbol(idx).toByte
-      br.skip(table.length(idx))
-      if (br.bitsLeft < 0) throw new Malformed
-      d += 1; i += 1
-    }
-    if (br.bitsLeft != 0) throw new Malformed
   }
 
   // ── sequence code expansions (generative: cumulative baselines) ──
@@ -410,14 +350,13 @@ object Zstd {
     * reaches executor tasks on a real cluster. */
   final class Dict private[text] (
       private[text] val id: Long,
-      private[text] val huf: HufTable,
-      private[text] val ofT: FseTable,
-      private[text] val mlT: FseTable,
-      private[text] val llT: FseTable,
       private[text] val reps: Array[Long],
-      private[text] val content: Array[Byte]) extends Serializable {
+      private[text] val content: Array[Byte],
+      serialized: Array[Byte]) extends Serializable {
     def dictId: Long = id
     def contentSize: Int = content.length
+    /** The decoder's digested form, built once per JVM. */
+    @transient private[text] lazy val ddict = new ZstdDictDecompress(serialized)
   }
 
   /** Parse a serialized dictionary; None on anything malformed
@@ -426,21 +365,21 @@ object Zstd {
   def parseDictionary(b: Array[Byte]): Option[Dict] =
     try Some(parseDict0(b))
     catch { case _: Malformed | _: ArrayIndexOutOfBoundsException |
-      _: NegativeArraySizeException | _: OutOfBoundsException => None }
+      _: NegativeArraySizeException => None }
 
   private def parseDict0(b: Array[Byte]): Dict = {
     if (b.length < 8 || u32(b, 0) != 0xec30a437L) throw new Malformed
     val id = u32(b, 4)
     if (id == 0) throw new Malformed // ID 0 means "no dictionary"
+    // the entropy tables are validated here and applied by the decoder
     var p = 8
-    val (huf, hufBytes) = readHufDesc(b, p, b.length); p += hufBytes
+    p += readHufDesc(b, p, b.length)
     // FSE tables in stream order OF, ML, LL (same maxima as blocks)
-    val (ofC, ofAl, n1) = readNCount(b, p, b.length, 31, 8); p += n1
-    val ofT = buildFse(ofC, ofAl)
-    val (mlC, mlAl, n2) = readNCount(b, p, b.length, 52, 9); p += n2
-    val mlT = buildFse(mlC, mlAl)
-    val (llC, llAl, n3) = readNCount(b, p, b.length, 35, 9); p += n3
-    val llT = buildFse(llC, llAl)
+    for ((maxSymbol, maxLog) <- Seq((31, 8), (52, 9), (35, 9))) {
+      val (counts, al, n) = readNCount(b, p, b.length, maxSymbol, maxLog)
+      buildFse(counts, al)
+      p += n
+    }
     if (p + 12 > b.length) throw new Malformed
     val reps = new Array[Long](3)
     var i = 0
@@ -448,7 +387,7 @@ object Zstd {
     val content = java.util.Arrays.copyOfRange(b, p, b.length)
     // each recent offset must be non-zero and within the content
     for (r <- reps) if (r == 0 || r > content.length) throw new Malformed
-    new Dict(id, huf, ofT, mlT, llT, reps, content)
+    new Dict(id, reps, content, b.clone())
   }
 
   /** Serialize a normalized-count header — the exact inverse of
@@ -529,69 +468,6 @@ object Zstd {
     out.toByteArray
   }
 
-  // ── frame state carried across blocks ────────────────────────────
-  private final class FrameState {
-    var huf: HufTable = null
-    var llT: FseTable = null
-    var ofT: FseTable = null
-    var mlT: FseTable = null
-    val reps: Array[Long] = Array(1L, 4L, 8L)
-  }
-
-  /** Growable per-stream output with frame-window match copy. */
-  private final class Out(maxLen: Int) {
-    var buf = new Array[Byte](8192)
-    var n = 0
-    private def ensure(extra: Int): Unit = {
-      if (n + extra > maxLen) throw new Malformed // bomb guard
-      if (n + extra > buf.length) {
-        var cap = buf.length
-        while (cap < n + extra) cap <<= 1
-        buf = java.util.Arrays.copyOf(buf, math.min(cap, maxLen).max(n + extra))
-      }
-    }
-    def append(b: Array[Byte], off: Int, len: Int): Unit = {
-      if (len < 0 || off < 0 || off + len > b.length) throw new Malformed
-      ensure(len)
-      System.arraycopy(b, off, buf, n, len)
-      n += len
-    }
-    def fill(v: Byte, len: Int): Unit = {
-      ensure(len)
-      java.util.Arrays.fill(buf, n, n + len, v)
-      n += len
-    }
-    /** Overlap-safe match copy from `offset` bytes back; with a
-      * dictionary, offsets past the frame's own history reach into
-      * the dictionary content — the frame's virtual past (RFC 8878
-      * §5 content prefixing) — and a copy may cross from dictionary
-      * bytes into frame bytes. */
-    def copyMatch(offset: Long, len: Int, frameStart: Int, window: Long,
-        dict: Array[Byte]): Unit = {
-      val hist = (n - frameStart).toLong
-      val dictLen = if (dict == null) 0L else dict.length.toLong
-      if (offset <= 0 || offset > hist + dictLen || offset > window + dictLen)
-        throw new Malformed
-      ensure(len)
-      if (offset <= hist) {
-        var i = 0
-        val src = (n - offset).toInt
-        while (i < len) { buf(n + i) = buf(src + i); i += 1 }
-        n += len
-      } else {
-        var i = 0
-        var srcD = (dictLen - (offset - hist)).toInt
-        while (i < len && srcD < dict.length) {
-          buf(n + i) = dict(srcD); i += 1; srcD += 1
-        }
-        var src = frameStart // the copy crossed into the frame's output
-        while (i < len) { buf(n + i) = buf(src); i += 1; src += 1 }
-        n += len
-      }
-    }
-    def toArray: Array[Byte] = java.util.Arrays.copyOf(buf, n)
-  }
-
   // ════════════════════════════ encoder ═══════════════════════════
   // A real zstd COMPRESSOR — single-segment checksummed frames,
   // greedy hash-table LZ with repcode-1 reuse, Huffman-coded literals
@@ -601,6 +477,9 @@ object Zstd {
   // when the reference CLI is on the box, through the real `unzstd`.
   // Fixture writer for `text_zstd_ingest` and a usable library
   // surface for `.zst` output.
+
+  /** The content checksum's hash (xxHash64, seed 0). */
+  private val Xxh64 = net.jpountz.xxhash.XXHashFactory.safeInstance().hash64()
 
   /** Forward bit sink, LSB-first within bytes (the layout the
     * backward readers consume); close() appends the sentinel bit. */
@@ -966,358 +845,5 @@ object Zstd {
     bw.bits(sLl, LlPredef.accuracyLog)
     val stream = bw.close()
     out.write(stream, 0, stream.length)
-  }
-
-  private def decode0(b: Array[Byte], maxLen: Int,
-      dicts: Map[Long, Dict]): Array[Byte] = {
-    if (b.length == 0) throw new Malformed // zero frames ≠ empty payload
-    val out = new Out(maxLen)
-    var p = 0
-    while (p < b.length) {
-      if (p + 4 > b.length) throw new Malformed
-      val magic = u32(b, p)
-      if ((magic & 0xfffffff0L) == 0x184d2a50L) { // skippable frame
-        val size = u32(b, p + 4)
-        if (size > Int.MaxValue - 8 || p + 8 + size > b.length)
-          throw new Malformed
-        p += 8 + size.toInt
-      } else if (magic == 0xfd2fb528L) {
-        p = decodeFrame(b, p + 4, out, maxLen, dicts)
-      } else throw new Malformed
-    }
-    out.toArray
-  }
-
-  private def decodeFrame(b: Array[Byte], p0: Int, out: Out,
-      maxLen: Int, dicts: Map[Long, Dict]): Int = {
-    var p = p0
-    val fhd = u8(b, p); p += 1
-    val fcsFlag = (fhd >> 6) & 3
-    val singleSeg = ((fhd >> 5) & 1) == 1
-    if (((fhd >> 3) & 1) != 0) throw new Malformed // reserved bit
-    val hasChecksum = ((fhd >> 2) & 1) == 1
-    val didFlag = fhd & 3
-    var window = 0L
-    if (!singleSeg) {
-      val wd = u8(b, p); p += 1
-      val base = 1L << (10 + (wd >>> 3))
-      window = base + (base >>> 3) * (wd & 7)
-    }
-    val didBytes = didFlag match {
-      case 0 => 0; case 1 => 1; case 2 => 2; case _ => 4
-    }
-    var did = 0L
-    var i = 0
-    while (i < didBytes) { did |= u8(b, p).toLong << (8 * i); p += 1; i += 1 }
-    // dictionary resolution: an unresolvable ID declines (decode-or-
-    // reject totality — never guess a dictionary)
-    val dict: Dict =
-      if (did == 0) null
-      else dicts.getOrElse(did, throw new Malformed)
-    val fcsBytes = fcsFlag match {
-      case 0 => if (singleSeg) 1 else 0
-      case 1 => 2; case 2 => 4; case _ => 8
-    }
-    var fcs = -1L
-    if (fcsBytes > 0) {
-      fcs = 0
-      i = 0
-      while (i < fcsBytes) { fcs |= u8(b, p).toLong << (8 * i); p += 1; i += 1 }
-      if (fcsBytes == 2) fcs += 256
-    }
-    if (singleSeg) window = fcs
-    if (window > MaxWindow) throw new Malformed
-    if (fcs >= 0 && fcs > maxLen) throw new Malformed
-
-    // Block_Maximum_Size = min(Window_Size, 128 KB) — RFC 8878 §3.1.1:
-    // raw/RLE block sizes ARE regenerated sizes and compressed blocks
-    // may not regenerate past it either (ADVICE r15: the decoder
-    // previously accepted some nonconforming streams the reference
-    // rejects; memory was already bounded by the maxLen guard)
-    val blockMax =
-      math.min(if (window > 0) window else 1L << 17, 1L << 17).toInt
-    val st = new FrameState
-    if (dict != null) {
-      // the dictionary seeds Treeless/Repeat entropy modes and the
-      // initial recent offsets (RFC 8878 §5)
-      st.huf = dict.huf
-      st.llT = dict.llT; st.ofT = dict.ofT; st.mlT = dict.mlT
-      st.reps(0) = dict.reps(0); st.reps(1) = dict.reps(1)
-      st.reps(2) = dict.reps(2)
-    }
-    val dictContent = if (dict != null) dict.content else null
-    val frameStart = out.n
-    var last = false
-    while (!last) {
-      val bh = u24(b, p); p += 3
-      last = (bh & 1) == 1
-      val btype = (bh >> 1) & 3
-      val bsize = bh >>> 3
-      btype match {
-        case 0 =>
-          if (bsize > blockMax) throw new Malformed
-          out.append(b, p, bsize); p += bsize
-        case 1 =>
-          if (bsize > blockMax) throw new Malformed
-          out.fill(b(p), bsize); p += 1
-        case 2 =>
-          if (bsize > (1 << 17) || p + bsize > b.length)
-            throw new Malformed
-          val before = out.n
-          decodeBlock(b, p, p + bsize, out, st, frameStart,
-            if (window > 0) window else Long.MaxValue, dictContent)
-          if (out.n - before > blockMax) throw new Malformed
-          p += bsize
-        case _ => throw new Malformed
-      }
-    }
-    if (fcs >= 0 && (out.n - frameStart).toLong != fcs) throw new Malformed
-    if (hasChecksum) {
-      val want = u32(b, p); p += 4
-      val got = Xxh64.hash(out.buf, frameStart, out.n - frameStart, 0L) &
-        0xffffffffL
-      if (got != want) throw new Malformed
-    }
-    p
-  }
-
-  private def decodeBlock(b: Array[Byte], p0: Int, end: Int, out: Out,
-      st: FrameState, frameStart: Int, window: Long,
-      dictContent: Array[Byte]): Unit = {
-    var p = p0
-    // ── literals section ──
-    val h0 = u8(b, p)
-    val litType = h0 & 3
-    val sizeFormat = (h0 >> 2) & 3
-    var lits: Array[Byte] = null
-    var litOff = 0
-    var litLen = 0
-    if (litType <= 1) { // Raw / RLE
-      val rs =
-        if ((sizeFormat & 1) == 0) { p += 1; h0 >>> 3 }
-        else if (sizeFormat == 1) { val v = (h0 >>> 4) | (u8(b, p + 1) << 4); p += 2; v }
-        else { val v = (h0 >>> 4) | (u8(b, p + 1) << 4) | (u8(b, p + 2) << 12); p += 3; v }
-      if (litType == 0) {
-        if (p + rs > end) throw new Malformed
-        lits = b; litOff = p; litLen = rs; p += rs
-      } else {
-        lits = new Array[Byte](rs)
-        java.util.Arrays.fill(lits, b(p)); p += 1; litLen = rs
-      }
-    } else { // Compressed / Treeless
-      var rs = 0; var cs = 0; var streams = 4
-      sizeFormat match {
-        case 0 =>
-          streams = 1
-          rs = (h0 >>> 4) | ((u8(b, p + 1) & 0x3f) << 4)
-          cs = (u8(b, p + 1) >>> 6) | (u8(b, p + 2) << 2)
-          p += 3
-        case 1 =>
-          rs = (h0 >>> 4) | ((u8(b, p + 1) & 0x3f) << 4)
-          cs = (u8(b, p + 1) >>> 6) | (u8(b, p + 2) << 2)
-          p += 3
-        case 2 =>
-          rs = (h0 >>> 4) | (u8(b, p + 1) << 4) | ((u8(b, p + 2) & 3) << 12)
-          cs = (u8(b, p + 2) >>> 2) | (u8(b, p + 3) << 6)
-          p += 4
-        case _ =>
-          rs = (h0 >>> 4) | (u8(b, p + 1) << 4) | ((u8(b, p + 2) & 0x3f) << 12)
-          cs = (u8(b, p + 2) >>> 6) | (u8(b, p + 3) << 2) | (u8(b, p + 4) << 10)
-          p += 5
-      }
-      if (rs > (1 << 17) + 8) throw new Malformed
-      var streamsP = p
-      var streamsLen = cs
-      if (litType == 2) {
-        val (table, consumed) = readHufDesc(b, p, end)
-        st.huf = table
-        streamsP = p + consumed
-        streamsLen = cs - consumed
-        if (streamsLen < 0) throw new Malformed
-      } else if (st.huf == null) throw new Malformed // treeless, no table
-      p += cs
-      if (streamsP + streamsLen > end) throw new Malformed
-      lits = new Array[Byte](rs); litLen = rs
-      if (streams == 1) {
-        hufStream(st.huf, b, streamsP, streamsP + streamsLen, lits, 0, rs)
-      } else {
-        if (streamsLen < 6) throw new Malformed
-        val s1 = u16(b, streamsP)
-        val s2 = u16(b, streamsP + 2)
-        val s3 = u16(b, streamsP + 4)
-        val q = streamsP + 6
-        val s4 = streamsLen - 6 - s1 - s2 - s3
-        if (s4 < 0) throw new Malformed
-        val per = (rs + 3) / 4
-        val rest = rs - 3 * per
-        if (rest < 0) throw new Malformed
-        hufStream(st.huf, b, q, q + s1, lits, 0, per)
-        hufStream(st.huf, b, q + s1, q + s1 + s2, lits, per, per)
-        hufStream(st.huf, b, q + s1 + s2, q + s1 + s2 + s3, lits, 2 * per, per)
-        hufStream(st.huf, b, q + s1 + s2 + s3, streamsP + streamsLen,
-          lits, 3 * per, rest)
-      }
-      litOff = 0
-    }
-
-    // ── sequences section ──
-    if (p >= end) throw new Malformed
-    val s0 = u8(b, p); p += 1
-    val nbSeq =
-      if (s0 == 0) 0
-      else if (s0 < 128) s0
-      else if (s0 < 255) { val v = ((s0 - 128) << 8) + u8(b, p); p += 1; v }
-      else { val v = u8(b, p) + (u8(b, p + 1) << 8) + 0x7f00; p += 2; v }
-    if (nbSeq == 0) {
-      if (p != end) throw new Malformed
-      out.append(lits, litOff, litLen)
-      return
-    }
-    val modes = u8(b, p); p += 1
-    if ((modes & 3) != 0) throw new Malformed // reserved
-    def pickTable(mode: Int, predef: => FseTable, prev: FseTable,
-        maxSymbol: Int, maxLog: Int): FseTable = mode match {
-      case 0 => predef
-      case 1 =>
-        val sym = u8(b, p); p += 1
-        if (sym > maxSymbol) throw new Malformed
-        rleFse(sym)
-      case 2 =>
-        val (counts, al, n) = readNCount(b, p, end, maxSymbol, maxLog)
-        p += n
-        buildFse(counts, al)
-      case _ =>
-        if (prev == null) throw new Malformed
-        prev
-    }
-    // table order in the stream: LL, OF, ML
-    val llT = pickTable((modes >> 6) & 3, LlPredef, st.llT, 35, 9)
-    val ofT = pickTable((modes >> 4) & 3, OfPredef, st.ofT, 31, 8)
-    val mlT = pickTable((modes >> 2) & 3, MlPredef, st.mlT, 52, 9)
-    st.llT = llT; st.ofT = ofT; st.mlT = mlT
-
-    val br = new BackBits(b, p, end)
-    // state init order: LL, OF, ML
-    var llS = br.read(llT.accuracyLog)
-    var ofS = br.read(ofT.accuracyLog)
-    var mlS = br.read(mlT.accuracyLog)
-    var litP = litOff
-    var litRemaining = litLen
-    var i = 0
-    while (i < nbSeq) {
-      val ofCode = ofT.symbol(ofS)
-      val mlCode = mlT.symbol(mlS)
-      val llCode = llT.symbol(llS)
-      if (ofCode > 31 || mlCode > 52 || llCode > 35) throw new Malformed
-      // extra-bit read order: OF, ML, LL
-      val offValue = (1L << ofCode) + (if (ofCode > 0) {
-        var v = 0L; var k = ofCode
-        while (k > 24) { v = (v << 24) | br.read(24); k -= 24 }
-        (v << k) | br.read(k)
-      } else 0L)
-      val ml = MlBase(mlCode) + br.read(MlBits(mlCode))
-      val ll = LlBase(llCode) + br.read(LlBits(llCode))
-      if (br.bitsLeft < 0) throw new Malformed
-      // repeat-offset resolution (RFC 8878 §3.1.1.5)
-      val reps = st.reps
-      val offset: Long =
-        if (offValue > 3) {
-          val o = offValue - 3
-          reps(2) = reps(1); reps(1) = reps(0); reps(0) = o
-          o
-        } else {
-          val idx = if (ll != 0) offValue.toInt - 1 else offValue.toInt
-          if (idx == 0) reps(0)
-          else if (idx <= 2) {
-            val o = reps(idx)
-            if (idx == 2) reps(2) = reps(1)
-            reps(1) = reps(0); reps(0) = o
-            o
-          } else { // ll == 0, offValue == 3: rep1 - 1
-            val o = reps(0) - 1
-            if (o <= 0) throw new Malformed
-            reps(2) = reps(1); reps(1) = reps(0); reps(0) = o
-            o
-          }
-        }
-      if (ll > litRemaining) throw new Malformed
-      out.append(lits, litP, ll)
-      litP += ll; litRemaining -= ll
-      out.copyMatch(offset, ml, frameStart, window, dictContent)
-      i += 1
-      if (i < nbSeq) {
-        // state update order: LL, ML, OF
-        llS = llT.baseline(llS) + br.read(llT.nbBits(llS))
-        mlS = mlT.baseline(mlS) + br.read(mlT.nbBits(mlS))
-        ofS = ofT.baseline(ofS) + br.read(ofT.nbBits(ofS))
-        if (br.bitsLeft < 0) throw new Malformed
-      }
-    }
-    if (br.bitsLeft != 0) throw new Malformed // exact consumption
-    out.append(lits, litP, litRemaining)
-  }
-}
-
-/** XXH64 (the xxHash 64-bit variant zstd's content checksum uses;
-  * public algorithm, Yann Collet). */
-private[text] object Xxh64 {
-  private val P1 = 0x9e3779b185ebca87L
-  private val P2 = 0xc2b2ae3d27d4eb4fL
-  private val P3 = 0x165667b19e3779f9L
-  private val P4 = 0x85ebca77c2b2ae63L
-  private val P5 = 0x27d4eb2f165667c5L
-
-  def hash(b: Array[Byte], off: Int, len: Int, seed: Long): Long = {
-    def u64(p: Int): Long = {
-      var v = 0L; var i = 0
-      while (i < 8) { v |= (b(p + i) & 0xffL) << (8 * i); i += 1 }
-      v
-    }
-    def u32le(p: Int): Long = {
-      var v = 0L; var i = 0
-      while (i < 4) { v |= (b(p + i) & 0xffL) << (8 * i); i += 1 }
-      v
-    }
-    def rotl(x: Long, r: Int): Long = (x << r) | (x >>> (64 - r))
-    def round(acc: Long, lane: Long): Long = rotl(acc + lane * P2, 31) * P1
-    var p = off
-    val end = off + len
-    var h =
-      if (len >= 32) {
-        var a1 = seed + P1 + P2
-        var a2 = seed + P2
-        var a3 = seed
-        var a4 = seed - P1
-        while (p + 32 <= end) {
-          a1 = round(a1, u64(p)); a2 = round(a2, u64(p + 8))
-          a3 = round(a3, u64(p + 16)); a4 = round(a4, u64(p + 24))
-          p += 32
-        }
-        var x = rotl(a1, 1) + rotl(a2, 7) + rotl(a3, 12) + rotl(a4, 18)
-        x = (x ^ round(0, a1)) * P1 + P4
-        x = (x ^ round(0, a2)) * P1 + P4
-        x = (x ^ round(0, a3)) * P1 + P4
-        x = (x ^ round(0, a4)) * P1 + P4
-        x
-      } else seed + P5
-    h += len
-    while (p + 8 <= end) {
-      h = rotl(h ^ round(0, u64(p)), 27) * P1 + P4
-      p += 8
-    }
-    if (p + 4 <= end) {
-      h = rotl(h ^ (u32le(p) * P1), 23) * P2 + P3
-      p += 4
-    }
-    while (p < end) {
-      h = rotl(h ^ ((b(p) & 0xffL) * P5), 11) * P1
-      p += 1
-    }
-    h ^= h >>> 33
-    h *= P2
-    h ^= h >>> 29
-    h *= P3
-    h ^= h >>> 32
-    h
   }
 }

@@ -131,4 +131,31 @@ class DecodeAnySpec extends AnyFunSuite {
     assert(CompressedIngest.decodeAny(tiny).map(new String(_))
       === Some("abcd"))
   }
+
+  test("declared-size bombs decline without allocating the size") {
+    // a header declaring far more than maxLen over a tiny payload: the
+    // decoder must refuse on the declaration, not allocate it or decode
+    // up to the ceiling first
+    def le(v: Long, n: Int): Array[Byte] = Array.tabulate(n)(i => (v >>> (8 * i)).toByte)
+    val zstd = Array[Byte](0x28, 0xb5.toByte, 0x2f, 0xfd.toByte, 0xe0.toByte) ++ // single segment, 8-byte size
+      le(1L << 40, 8) ++ Array[Byte](0x01, 0x00, 0x00) // Frame_Content_Size 2^40, last raw block of 0
+    val snappy = Array[Byte](0xff.toByte, 0xff.toByte, 0xff.toByte, 0xff.toByte, 0x07, // varint 2^31-1
+      0x00, 0x41) // one literal byte
+    val lz4Header = Array[Byte](0x68, 0x40) ++ le(CompressedIngest.MaxBytes + 1L, 8) // v01, content size
+    val lz4 = le(0x184d2204L, 4) ++ lz4Header ++ Array((net.jpountz.xxhash.XXHashFactory
+      .safeInstance().hash32().hash(lz4Header, 0, lz4Header.length, 0) >>> 8).toByte) ++
+      le(0x80000002L, 4) ++ "hi".getBytes ++ le(0L, 4) // one stored block, EndMark
+    val threads = java.lang.management.ManagementFactory.getThreadMXBean
+      .asInstanceOf[com.sun.management.ThreadMXBean]
+    for ((name, decode) <- Seq[(String, () => Option[Array[Byte]])](
+      "zstd" -> (() => Zstd.decompress(zstd)),
+      "snappy" -> (() => Snappy.decompress(snappy)),
+      "lz4" -> (() => Lz4.decompress(lz4)))) {
+      decode() // load the codec's classes before measuring
+      val before = threads.getCurrentThreadAllocatedBytes
+      assert(decode().isEmpty, name)
+      val allocated = threads.getCurrentThreadAllocatedBytes - before
+      assert(allocated < (4L << 20), s"$name allocated $allocated bytes")
+    }
+  }
 }

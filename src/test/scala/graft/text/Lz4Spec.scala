@@ -148,18 +148,16 @@ class Lz4Spec extends AnyFunSuite {
     le32(0x184d2204L)
     val hdr = Array[Byte](0x60, 0x40) // v01 + independent, 64 KiB
     out.write(hdr, 0, 2)
-    out.write(((Xxh32.hash(hdr, 0, 2, 0) >>> 8) & 0xff).toInt)
+    out.write((net.jpountz.xxhash.XXHashFactory.safeInstance().hash32()
+      .hash(hdr, 0, 2, 0) >>> 8) & 0xff)
     le32(3L) // compressed block, 3 bytes
     out.write(0x14); out.write('A'); out.write(0x05) // truncated match
     le32(0L) // EndMark
     assert(Lz4.decompress(out.toByteArray).isEmpty)
   }
 
-  test("bomb guard and XXH32 vectors") {
+  test("bomb guard: output past the ceiling declines") {
     assert(Lz4.decompress(Lz4.compress(("x" * 100000).getBytes),
       maxLen = 1024).isEmpty)
-    // known XXH32 vectors (seed 0): empty and 'a' (public test values)
-    assert(Xxh32.hash(Array.emptyByteArray, 0, 0, 0) === 0x02cc5d05L)
-    assert(Xxh32.hash("a".getBytes, 0, 1, 0) === 0x550d7456L)
   }
 }
