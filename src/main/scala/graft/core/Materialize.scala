@@ -10,7 +10,12 @@ import org.apache.spark.sql.DataFrame
   * cost at gate scale and for idempotent batch jobs (a rerun is the
   * same answer). Its cluster-scale caveat (r14 "What's wrong #3"): a
   * lost executor invalidates locally-held blocks and FAILS the job
-  * instead of recomputing.
+  * instead of recomputing. With `eager = false` the local form is
+  * filled by its first reader instead of a job of its own: pass it
+  * only where that reader computes every partition at full width (a
+  * `coalesce(1)` dump as first reader would compute the whole frame
+  * in one task), and where nothing needs the frame fixed before the
+  * next step runs.
   *
   * Opt-in reliable form — Spark conf `graft.checkpoint.reliable=true`
   * (or env `SPARK_GRAFT_RELIABLE_CHECKPOINT=1`): write-through to
@@ -24,12 +29,12 @@ object Materialize {
 
   private val counter = new java.util.concurrent.atomic.AtomicLong(0)
 
-  def frame(df: DataFrame, tag: String): DataFrame = {
+  def frame(df: DataFrame, tag: String, eager: Boolean = true): DataFrame = {
     val spark = df.sparkSession
     val reliable = spark.conf.getOption("graft.checkpoint.reliable")
       .orElse(sys.env.get("SPARK_GRAFT_RELIABLE_CHECKPOINT"))
       .exists(v => v == "true" || v == "1")
-    if (!reliable) df.localCheckpoint()
+    if (!reliable) df.localCheckpoint(eager)
     else {
       val root = spark.conf.getOption("graft.scratch.dir").getOrElse("/tmp")
       val p = s"$root/graft_ckpt_${tag}_${counter.incrementAndGet()}_" +

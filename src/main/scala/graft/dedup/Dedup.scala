@@ -153,7 +153,11 @@ object Dedup {
   def minhashLsh(spark: SparkSession, sfDir: String, tau: Double = 0.5,
       maxBucket: Int = 1000): DataFrame = {
     import spark.implicits._
-    val sigs = docShingles(spark, sfDir)
+    // one scan and one shingling for the signatures and both verify
+    // joins; lazy, so the signature map (every partition, full width)
+    // fills it
+    val shs = docShingles(spark, sfDir).localCheckpoint(eager = false)
+    val sigs = shs
       .as[(Long, Seq[String])]
       .filter(_._2.nonEmpty)
       .map { case (id, sh) => MinhashRow(id, minhashSig(sh)) }
@@ -167,7 +171,7 @@ object Dedup {
       .groupBy(col("band"), col("h"))
       .agg(collect_set(col("doc_id")).as("members"))
       .filter(size(col("members")).between(2, maxBucket)))
-    verifyJaccard(spark, sfDir, candidates, tau)
+    verifyJaccard(shs, candidates, tau)
   }
 
   /** Pair-explosion SQL over a pre-sorted member array `m`: emits the
@@ -191,17 +195,15 @@ object Dedup {
       .distinct()
 
   /** Exact-jaccard verification of candidate (i, j) pairs against the
-    * full shingle sets. */
-  private[dedup] def verifyJaccard(spark: SparkSession, sfDir: String,
-      candidates: DataFrame, tau: Double): DataFrame = {
-    val shs = docShingles(spark, sfDir)
+    * full shingle sets `shs` ([[docShingles]]). */
+  private[dedup] def verifyJaccard(shs: DataFrame, candidates: DataFrame,
+      tau: Double): DataFrame =
     candidates
       .join(shs.select(col("doc_id").as("i"), col("sh").as("sa")), "i")
       .join(shs.select(col("doc_id").as("j"), col("sh").as("sb")), "j")
       .filter(size(array_intersect(col("sa"), col("sb"))).cast("double") /
         size(array_union(col("sa"), col("sb"))) >= tau)
       .select(col("i"), col("j"))
-  }
 
   /** Scale variant of [[ngramJaccard]]: Jaccard over the
     * DISCRIMINATIVE shingle universe — shingles with document
@@ -286,22 +288,28 @@ object Dedup {
     * map, so the simhash gates sharing one dump kind always overwrite it
     * with identical content. */
   private[graft] def simhashSigs(spark: SparkSession, sfDir: String,
-      sigsDump: DumpSink = DumpSink.discard): DataFrame = {
+      sigsDump: DumpSink = DumpSink.discard): DataFrame =
+    simhashSigsCounted(spark, sfDir, sigsDump)._1
+
+  /** [[simhashSigs]] and its row count. The one checkpoint of the
+    * signatures: the shingle scan is already widened
+    * ([[docShingles]]), so the checkpoint is cluster-wide, and it is
+    * filled before the dump runs: on a gate run the dump's
+    * coalesce(1) write would otherwise RECOMPUTE the shingle+simhash
+    * pass serially (measured 3.8 s, r17 stage audit). The count comes
+    * from the job that fills it. */
+  private def simhashSigsCounted(spark: SparkSession, sfDir: String,
+      sigsDump: DumpSink): (DataFrame, Long) = {
     import spark.implicits._
-    // checkpoint (widened when narrow): every downstream reader — the
-    // pair core's own checkpoint and, on a gate run, the dump's
-    // coalesce(1) write, which would otherwise RECOMPUTE the
-    // shingle+simhash pass serially (measured 3.8 s, r17 stage audit)
-    // — reads the one wide computation
-    val sigs = graft.core.Widen.ifNarrow(
-      docShingles(spark, sfDir)
-        .as[(Long, Seq[String])]
-        .filter(_._2.nonEmpty)
-        .map { case (id, feats) => SimhashRow(id, simhash64(feats)) }
-        .toDF()
-        .localCheckpoint())
+    val sigs = docShingles(spark, sfDir)
+      .as[(Long, Seq[String])]
+      .filter(_._2.nonEmpty)
+      .map { case (id, feats) => SimhashRow(id, simhash64(feats)) }
+      .toDF()
+      .localCheckpoint(eager = false)
+    val n = sigs.queryExecution.toRdd.count()
     sigsDump(sigs)
-    sigs
+    (sigs, n)
   }
 
   /** (doc_id, sig, band, h) — the 8 × 8-bit band postings of a
@@ -426,20 +434,14 @@ object Dedup {
     * distinct). */
   def simhashPairsWide(spark: SparkSession, sfDir: String,
       maxHamming: Int = 15, maxBucket: Int = 1000,
-      sizeHint: Option[Long] = None,
       sigsDump: DumpSink = DumpSink.discard): DataFrame = {
     requireWideBand(maxHamming)
-    // widened when narrow: the 4·697 probe-mask explode below is the
-    // heavy map stage, and a 1-partition checkpoint would run it
-    // serial — measured 9.4 s of the 11.4 s gate wall (r17 audit)
-    val sigs = graft.core.Widen.ifNarrow(
-      simhashSigs(spark, sfDir, sigsDump).localCheckpoint())
-    // regime pick: a caller-supplied size hint skips the count()
-    // pre-scan — composed pipelines at corpus scale should not pay a
-    // full pass over the signature frame just to choose a plan
-    // (r11 What's-wrong #3); the checkpointed frame is handed to the
-    // cores directly so neither regime re-checkpoints (one fewer job)
-    val n = sizeHint.getOrElse(sigs.count())
+    // the 4·697 probe-mask explode below is the heavy map stage; it
+    // runs over the signature checkpoint, which is cluster-wide (a
+    // 1-partition frame ran it serial — measured 9.4 s of the 11.4 s
+    // gate wall, r17 audit). The regime pick's count comes from the
+    // job that fills the checkpoint, so it costs no pass of its own.
+    val (sigs, n) = simhashSigsCounted(spark, sfDir, sigsDump)
     if (n >= WideBalancedAbove) wideBalancedCore(sigs, maxHamming, maxBucket)
     else wideCore(sigs, maxHamming, maxBucket)
   }
@@ -454,8 +456,7 @@ object Dedup {
       maxHamming: Int = 15, maxBucket: Int = 1000,
       sigsDump: DumpSink = DumpSink.discard): DataFrame = {
     requireWideBand(maxHamming)
-    wideBalancedCore(graft.core.Widen.ifNarrow(
-      simhashSigs(spark, sfDir, sigsDump).localCheckpoint()), maxHamming,
+    wideBalancedCore(simhashSigs(spark, sfDir, sigsDump), maxHamming,
       maxBucket)
   }
 
@@ -678,10 +679,10 @@ object Dedup {
     * The component computation runs over the EDGE GRAPH'S VERTICES
     * ONLY, never the corpus: a document with no near-dup pair can
     * never change label, so singletons stay out entirely and rejoin
-    * once at the end (broadcast — the converged label table is
-    * graph-sized). Two regimes behind one API:
+    * once at the end (a broadcast lookup on the driver path, where the
+    * converged label table is graph-sized). Two regimes behind one API:
     *
-    *  - Edge lists up to `driverMaxEdges` collapse to a DRIVER
+    *  - Edge lists up to `driverMaxEdges` pairs collapse to a DRIVER
     *    union-find (path-halving): the near-dup graph of even a
     *    petabyte corpus is usually megabytes, and a driver pass costs
     *    milliseconds where each distributed round costs a full
@@ -694,48 +695,79 @@ object Dedup {
     *    truncated with localCheckpoint — an iterative algorithm
     *    otherwise compounds its plan each round.
     *
+    * The regime is picked by the driver path itself, in one job: it
+    * collects the edge list only while it stays within the budget
+    * ([[collectAtMost]]), so no size hint or count pre-scan is trusted
+    * with the driver's memory, and an overflow falls through to
+    * hash-min. `pairs` is evaluated once either way: that job fills the
+    * edge checkpoint hash-min reads.
+    *
     * Output: (doc_id, cluster_id) for every document in `docs`
     * (singletons map to themselves). */
   def connectedComponents(docs: DataFrame, idCol: String, pairs: DataFrame,
-      maxIters: Int = 20, driverMaxEdges: Long = 4000000L,
-      pairCountHint: Option[Long] = None): DataFrame = {
-    val edges = pairs.select(col("i").as("src"), col("j").as("dst"))
-      .union(pairs.select(col("j").as("src"), col("i").as("dst")))
-      .localCheckpoint()
-    // regime pick: a caller that already knows (or bounds) its pair
-    // count passes the hint and skips the count() pre-scan — composed
-    // pipelines at corpus scale shouldn't pay a full pass over the
-    // edge frame just to choose a plan (r11 What's-wrong #3; the
-    // simhashPairsWide sizeHint twin). The count is of PAIRS; the
-    // doubled edge frame is compared against 2× the driver budget.
-    // A hint is trusted for the plan pick but NOT for driver safety:
-    // an underestimate would collect an unbounded edge list onto the
-    // driver (ADVICE r12), so the driver path is gated by a
-    // LIMIT-bounded probe of the already-materialized checkpoint —
-    // it stops at the cap instead of scanning everything, and an
-    // overflow degrades to hash-min instead of failing the job.
-    val edgeBudget = 2L * driverMaxEdges
-    val small = pairCountHint match {
-      case Some(h) => h <= driverMaxEdges &&
-        edges.limit(math.min(edgeBudget + 1, Int.MaxValue.toLong).toInt)
-          .count() <= edgeBudget
-      case None => edges.count() / 2 <= driverMaxEdges
-    }
+      maxIters: Int = 20, driverMaxEdges: Long = 4000000L): DataFrame = {
+    // both directions from one pass over the pairs (a union of the
+    // pairs with their mirror evaluated every pair producer twice);
+    // lazy, because its first reader — the bounded collect, or
+    // hash-min's label seed — scans every partition at full width
+    val edges = pairs
+      .select(explode(array(
+        struct(col("i").cast("long").as("src"), col("j").cast("long").as("dst")),
+        struct(col("j").cast("long").as("src"), col("i").cast("long").as("dst"))))
+        .as("e"))
+      .select(col("e.src").as("src"), col("e.dst").as("dst"))
+      .localCheckpoint(eager = false)
     lastHashMinIters = 0 // driver path reports 0; hash-min overwrites
-    val labels = if (small) driverUnionFind(edges) else hashMinLabels(edges, maxIters)
-    // broadcast only the driver-sized result; the large-regime label
-    // table is exactly what must NOT be collected to the driver
-    val joined = if (small) broadcast(labels) else labels
-    docs.select(col(idCol).as("doc_id"))
-      .join(joined, col("doc_id") === col("id"), "left")
-      .select(col("doc_id"), coalesce(col("comp"), col("doc_id")).as("cluster_id"))
+    val ids = docs.select(col(idCol).as("doc_id"))
+    val onDriver =
+      if (driverMaxEdges > 0) collectAtMost(edges, 2L * driverMaxEdges) else None
+    onDriver match {
+      case Some(e) =>
+        // the driver-sized label map goes out as a broadcast variable;
+        // the lookup is a map over the documents, no join
+        val bc = docs.sparkSession.sparkContext.broadcast(driverUnionFind(e))
+        val label = udf((id: Long) => bc.value.getOrElse(id, id))
+        ids.select(col("doc_id"), label(col("doc_id")).as("cluster_id"))
+      case None =>
+        // the large-regime label table is exactly what must NOT be
+        // collected to the driver
+        ids.join(hashMinLabels(edges, maxIters), col("doc_id") === col("id"), "left")
+          .select(col("doc_id"), coalesce(col("comp"), col("doc_id")).as("cluster_id"))
+    }
   }
 
-  /** Small-graph path: collect the edge list, union-find with path
-    * halving + min-id canonical roots, return (id, comp) rows. */
-  private def driverUnionFind(edges: DataFrame): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
+  /** The (src, dst) rows of `edges` as one flat array (src, dst, src,
+    * dst, …), or None when there are more than `budget`: one job, in
+    * which each task returns at most budget + 1 edges and the driver
+    * keeps no partition's edges once the running total passes the
+    * budget. */
+  private def collectAtMost(edges: DataFrame, budget: Long): Option[Array[Long]] = {
+    val cap = budget + 1
+    val parts = scala.collection.mutable.ArrayBuffer.empty[Array[Long]]
+    var n = 0L
+    edges.sparkSession.sparkContext.runJob(edges.queryExecution.toRdd,
+      (it: Iterator[org.apache.spark.sql.catalyst.InternalRow]) => {
+        val b = Array.newBuilder[Long]
+        var k = 0L
+        while (k < cap && it.hasNext) {
+          val r = it.next()
+          b += r.getLong(0)
+          b += r.getLong(1)
+          k += 1
+        }
+        b.result()
+      },
+      (_: Int, part: Array[Long]) =>
+        if (n <= budget) {
+          n += part.length / 2
+          if (n <= budget) parts += part
+        })
+    if (n <= budget) Some(parts.toArray.flatten) else None
+  }
+
+  /** Small-graph path: union-find with path halving + min-id
+    * canonical roots over a flat (src, dst) edge array; id → comp. */
+  private def driverUnionFind(edges: Array[Long]): Map[Long, Long] = {
     val parent = scala.collection.mutable.Map.empty[Long, Long]
     def find(x0: Long): Long = {
       var x = x0
@@ -745,15 +777,16 @@ object Dedup {
       }
       x
     }
-    edges.select(col("src").cast("long"), col("dst").cast("long"))
-      .collect().foreach { r =>
-        val (a, b) = (r.getLong(0), r.getLong(1))
-        parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
-        val (ra, rb) = (find(a), find(b))
-        // union by min id keeps the canonical-copy semantics explicit
-        if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
-      }
-    parent.keys.toSeq.map(id => (id, find(id))).toDF("id", "comp")
+    var e = 0
+    while (e < edges.length) {
+      val (a, b) = (edges(e), edges(e + 1))
+      parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
+      val (ra, rb) = (find(a), find(b))
+      // union by min id keeps the canonical-copy semantics explicit
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+      e += 2
+    }
+    parent.keys.toSeq.map(id => id -> find(id)).toMap
   }
 
   /** Iterations the last [[hashMinLabels]] run took to reach its

@@ -155,26 +155,30 @@ object EditDedup {
     * a ≤2-element set because L(·) is a slow step function; grams of
     * each such length at every position, posted once in their own
     * buckets (the chunk side carries the adjacency fanout). */
-  private def gramKeys(norm: DataFrame): DataFrame = {
-    val grams = norm.filter(col("len") >= 1L)
-      .withColumn("ls", expr(
-        s"""array_distinct(transform(
+  private def gramKeys(norm: DataFrame): DataFrame =
+    // no filter reaches `norm`, so a caller's widening exchange below
+    // it stays the one the chunk side reads: the empty-doc sentinel is
+    // a CASE arm, not a filtered branch, and the length set is
+    // exploded as an expression (an exploded ATTRIBUTE gets an
+    // inferred `size > 0` filter pushed down)
+    norm
+      .select(col("doc_id"), col("len"), col("nt"), explode(expr(
+        s"""CASE WHEN len = 0 THEN array(0L) ELSE array_distinct(transform(
            |  sequence(greatest(len - CAST($MaxDist AS BIGINT), 1L), len),
-           |  m -> greatest(1L, m DIV (least(CAST($MaxDist AS BIGINT), (m * 2) DIV 19) + 1L))))""".stripMargin))
-      .select(col("doc_id"), col("len"), col("nt"), explode(col("ls")).as("l"))
+           |  m -> greatest(1L, m DIV (least(CAST($MaxDist AS BIGINT), (m * 2) DIV 19) + 1L))))
+           |END""".stripMargin)).as("l"))
+      // lb is generated too: the join's not-null inference on a
+      // projected `len DIV PosBucket` would be pushed down the same way
       .select(col("doc_id"), col("len"), col("l"), explode(expr(
-        """transform(sequence(0L, len - l), p ->
+        s"""CASE WHEN len = 0 THEN array(named_struct('pos', 0L, 'k', 0L, 'lb', 0L))
+          |ELSE transform(sequence(0L, len - l), p ->
           |  named_struct('pos', p,
-          |    'k', xxhash64(substring(nt, CAST(p + 1L AS INT), CAST(l AS INT)))))""".stripMargin)).as("g"))
+          |    'k', xxhash64(substring(nt, CAST(p + 1L AS INT), CAST(l AS INT))),
+          |    'lb', len DIV $PosBucket))
+          |END""".stripMargin)).as("g"))
       .select(col("doc_id"), col("len"), col("l"),
-        col("g.k").as("k"), col("g.pos").as("pos"))
-    val sentinel = norm.filter(col("len") === 0L)
-      .select(col("doc_id"), col("len"), lit(0L).as("l"),
-        lit(0L).as("k"), lit(0L).as("pos"))
-    grams.unionByName(sentinel)
-      .withColumn("pb", expr(s"pos DIV $PosBucket"))
-      .withColumn("lb", expr(s"len DIV $PosBucket"))
-  }
+        col("g.k").as("k"), col("g.pos").as("pos"),
+        expr(s"g.pos DIV $PosBucket").as("pb"), col("g.lb").as("lb"))
 
   /** Block keys whose membership exceeds `cap` on a side — dropped
     * whole by [[editPairsOf]]. The recall-loss channel made
@@ -249,12 +253,18 @@ object EditDedup {
     // widen the RAW docs before normalized(): the 36-regexp cv
     // projection evaluates on the map side of the md5-window
     // exchange, 1-wide on a 1-file gate scan (r19 stage audit:
-    // 1.4 s single-task stage in the critical path)
+    // 1.4 s single-task stage in the critical path). Lazy: every
+    // reader below scans all of it, and the first one fills it.
     val all = graft.core.Materialize.frame(
       normalized(graft.core.Widen.ifNarrow(docs))
       .withColumn("gid", min(col("doc_id")).over(
-        Window.partitionBy(md5(col("nt"))))), "editdedup_all")
-    val members = all.select(col("gid"), col("doc_id"))
+        Window.partitionBy(md5(col("nt"))))), "editdedup_all", eager = false)
+    // the four member joins below read one identical projection (the
+    // null filters are the ones the within self-join's `<` infers), so
+    // they share one broadcast instead of one each
+    val members = all.filter(col("gid").isNotNull && col("doc_id").isNotNull)
+    def membersAs(g: String, d: String): DataFrame =
+      members.select(col("gid").as(g), col("doc_id").as(d))
     val norm = all.filter(col("doc_id") === col("gid"))
       .drop("gid")
     // df-cap, both sides: a key that is degenerate on either side is
@@ -290,7 +300,10 @@ object EditDedup {
         .drop("key_n")
     val theta = least(lit(MaxDist.toLong),
       expr(s"(a.len + b.len) DIV $LenBucket"))
-    val pairIds = capped(chunkKeys(normWide)).as("a")
+    // shuffle-hash, building on the chunk side, over the layout both
+    // windows leave: a broadcast of the chunk side would be one more
+    // job for a join that needs no exchange
+    val pairIds = capped(chunkKeys(normWide)).hint("shuffle_hash").as("a")
       .join(capped(gramKeys(normWide)).as("b"),
         col("a.l") === col("b.l") && col("a.k") === col("b.k") &&
           col("a.pb") === col("b.pb") && col("a.lb") === col("b.lb") &&
@@ -321,22 +334,18 @@ object EditDedup {
     //    higher-order functions are CodegenFallback, which both
     //    interprets the per-row lambdas (array allocation per pair)
     //    and kicks the enclosing join out of whole-stage codegen
-    //  - the L1 phase attaches only (len, cv) — ~300 B/row; the
-    //    multi-KB normalized TEXTS are joined AFTER the filter, so
-    //    only L1 survivors (the handful the bound can't separate)
-    //    are ever copied through a join row with payloads attached
+    //  - the DP is the second conjunct of ONE filter after the L1
+    //    bound, so `&&` short-circuits it to the L1 survivors
+    // Both sides read one payload projection of the reps (length,
+    // counts and text), so the two payload joins share one broadcast.
     val l1 = (0 until 36).map(i =>
       abs(element_at(col("cv_a"), i + 1) - element_at(col("cv_b"), i + 1)))
       .reduce(_ + _)
     val thetaPair = least(lit(MaxDist.toLong),
       expr(s"(len_a + len_b) DIV $LenBucket"))
-    val l1Survivors = pairIds
-      .join(norm.select(col("doc_id").as("doc_a"),
-        col("len").as("len_a"), col("cv").as("cv_a")), Seq("doc_a"))
-      .join(norm.select(col("doc_id").as("doc_b"),
-        col("len").as("len_b"), col("cv").as("cv_b")), Seq("doc_b"))
-      .filter(l1 <= thetaPair * 2)
-      .select(col("doc_a"), col("doc_b"), col("len_a"), col("len_b"))
+    def payload(side: String): DataFrame =
+      norm.select(col("doc_id").as(s"doc_$side"), col("len").as(s"len_$side"),
+        col("cv").as(s"cv_$side"), col("nt").as(s"nt_$side"))
     // the DP band is the PAIR's own acceptance threshold θ, not the
     // global MaxDist ceiling: levenshtein(a, b, θ) returns the true
     // distance iff it is ≤ θ and -1 otherwise, so `dist >= 0` IS the
@@ -345,29 +354,26 @@ object EditDedup {
     // into the join condition twice (r18 plan audit). Reps are
     // distinct texts, so no dist-0 fast path is needed here —
     // identical texts never reach the DP at all.
-    val repPairs = l1Survivors
-      .join(norm.select(col("doc_id").as("doc_a"), col("nt").as("nt_a")),
-        Seq("doc_a"))
-      .join(norm.select(col("doc_id").as("doc_b"), col("nt").as("nt_b")),
-        Seq("doc_b"))
-      .withColumn("dist", expr(
-        s"""CAST(levenshtein(nt_a, nt_b, CAST(
-           |  least(CAST($MaxDist AS BIGINT), (len_a + len_b) DIV $LenBucket)
-           |  AS INT)) AS BIGINT)""".stripMargin))
-      .filter(col("dist") >= 0)
-      .select(col("doc_a").as("ga"), col("doc_b").as("gb"), col("dist"))
+    val dp = expr(
+      s"""CAST(levenshtein(nt_a, nt_b, CAST(
+         |  least(CAST($MaxDist AS BIGINT), (len_a + len_b) DIV $LenBucket)
+         |  AS INT)) AS BIGINT)""".stripMargin)
+    val repPairs = pairIds
+      .join(payload("a"), Seq("doc_a"))
+      .join(payload("b"), Seq("doc_b"))
+      .filter(l1 <= thetaPair * 2 && dp >= 0)
+      .select(col("doc_a").as("ga"), col("doc_b").as("gb"), dp.as("dist"))
     // ── expansion back to document pairs ────────────────────────────
     // within-group: every two holders of one text are a dist-0 pair
     // (0 ≤ θ always, θ ≥ 0); cross-group: each rep pair's distance
     // and verdict apply verbatim to every (member × member) pair —
     // same texts, same lengths, same θ
-    val within = members.as("x").join(members.as("y"),
-        col("x.gid") === col("y.gid") && col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
-        lit(0L).as("dist"))
+    val within = membersAs("gx", "doc_a").join(membersAs("gy", "doc_b"),
+        col("gx") === col("gy") && col("doc_a") < col("doc_b"))
+      .select(col("doc_a"), col("doc_b"), lit(0L).as("dist"))
     val cross = repPairs
-      .join(members.select(col("gid").as("ga"), col("doc_id").as("da")), Seq("ga"))
-      .join(members.select(col("gid").as("gb"), col("doc_id").as("db")), Seq("gb"))
+      .join(membersAs("ga", "da"), Seq("ga"))
+      .join(membersAs("gb", "db"), Seq("gb"))
       .select(least(col("da"), col("db")).as("doc_a"),
         greatest(col("da"), col("db")).as("doc_b"), col("dist"))
     within.unionByName(cross)

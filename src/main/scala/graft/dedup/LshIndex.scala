@@ -102,7 +102,7 @@ object LshIndex {
     // would surface as a self-pair (i,i) from least/greatest collapsing
     // — trivially Jaccard-1, never a real duplicate; drop before verify
     val pairs = cross.union(within).distinct().filter(col("i") =!= col("j"))
-    Dedup.verifyJaccard(spark, sfDir, pairs, tau)
+    Dedup.verifyJaccard(Dedup.docShingles(spark, sfDir), pairs, tau)
   }
 
   // ── gate surface ───────────────────────────────────────────────────

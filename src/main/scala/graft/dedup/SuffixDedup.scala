@@ -245,12 +245,18 @@ object SuffixDedup {
     * per-doc collect of the (tiny) span list; docs without spans pass
     * through unchanged, tokenization is the engine-wide `[^a-z]+`
     * fold so excision composes with every other text operator. */
-  def exciseSpans(docs: DataFrame, spans: DataFrame): DataFrame = {
+  def exciseSpans(docs: DataFrame, spans: DataFrame): DataFrame =
+    exciseToks(docTokens(docs), spans)
+
+  /** (doc_id, toks): the engine-wide `[^a-z]+` token arrays. */
+  private def docTokens(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), expr(graft.text.Tok.alphaToks).as("toks"))
+
+  /** [[exciseSpans]] over already tokenized (doc_id, toks) rows. */
+  private def exciseToks(toks: DataFrame, spans: DataFrame): DataFrame = {
     val cuts = spans.groupBy(col("doc_id"))
       .agg(collect_list(struct(col("span_start"), col("span_end"))).as("cuts"))
-    docs
-      .select(col("doc_id"),
-        expr(graft.text.Tok.alphaToks).as("toks"))
+    toks
       .join(cuts, Seq("doc_id"), "left")
       .select(col("doc_id"), col("toks"),
         expr("""CASE WHEN cuts IS NULL THEN toks ELSE
@@ -268,11 +274,16 @@ object SuffixDedup {
     * act itself. */
   def exciseBenchmarkSpans(spark: SparkSession, sfDir: String,
       minSpan: Int = 8, benchMod: Int = 37, partitions: Int = 32,
-      chunk: Int = LeadChunk): DataFrame =
-    exciseSpans(
-      spark.read.parquet(s"$sfDir/documents.parquet")
-        .filter(col("doc_id") % benchMod =!= 0),
-      benchmarkSpans(spark, sfDir, minSpan, benchMod, partitions, chunk))
+      chunk: Int = LeadChunk): DataFrame = {
+    // one scan and one tokenization for the rank construction and the
+    // excision; lazy, because its first reader (the vocabulary pass
+    // over the rank postings) scans every partition
+    val toks = docTokens(spark.read.parquet(s"$sfDir/documents.parquet"))
+      .localCheckpoint(eager = false)
+    val (keyed, keyNames) = rankKeyedOf(toks, minSpan, partitions, chunk)
+    exciseToks(toks.filter(col("doc_id") % benchMod =!= 0),
+      benchmarkSpanHead(keyed, keyNames, minSpan, benchMod))
+  }
 
   /** THE DECONTAMINATION SUITE — the production shape of the span
     * family: ONE rank construction ([[rankKeyed]], the dominant cost),
@@ -303,20 +314,20 @@ object SuffixDedup {
       benchMod: Int = 37, pctThreshold: Int = 10, budget: Long = 512L,
       minTokens: Long = 5L, partitions: Int = 32,
       chunk: Int = LeadChunk): DataFrame = {
-    val (keyed, keyNames) = rankKeyed(spark, sfDir, minSpan, partitions, chunk)
+    // one scan and one tokenization, as in exciseBenchmarkSpans
+    val toks = docTokens(spark.read.parquet(s"$sfDir/documents.parquet"))
+      .localCheckpoint(eager = false)
+    val (keyed, keyNames) = rankKeyedOf(toks, minSpan, partitions, chunk)
     val nulL = lit(null).cast("long")
     val nulS = lit(null).cast("string")
     val spans = benchmarkSpanHead(keyed, keyNames, minSpan, benchMod)
       .localCheckpoint() // two consumers: the union row set + excision
-    val excised = exciseSpans(
-      spark.read.parquet(s"$sfDir/documents.parquet")
-        .filter(col("doc_id") % benchMod =!= 0),
-      spans)
+    val excised = exciseToks(toks.filter(col("doc_id") % benchMod =!= 0), spans)
       .localCheckpoint() // two consumers: the union row set + packing
     val leak = leakProfileHead(keyed, keyNames, benchMod, pctThreshold)
     val packed = graft.text.CorpusPipeline.prepareDf(
       excised.select(col("doc_id"), col("clean_text").as("text")),
-      budget, minTokens, partitions)
+      budget, minTokens)
     spans.select(lit("spans").as("part"), col("doc_id"),
         col("span_start").as("v1"), col("span_end").as("v2"),
         nulL.as("v3"), nulS.as("txt"))
@@ -470,7 +481,14 @@ object SuffixDedup {
 
   private[dedup] def rankKeyed(spark: SparkSession, sfDir: String, minSpan: Int,
       partitions: Int, chunk: Int,
-      vocabBytesCap: Long = VocabBytesCap): (DataFrame, Seq[String]) = {
+      vocabBytesCap: Long = VocabBytesCap): (DataFrame, Seq[String]) =
+    rankKeyedOf(docTokens(spark.read.parquet(s"$sfDir/documents.parquet")),
+      minSpan, partitions, chunk, vocabBytesCap)
+
+  /** [[rankKeyed]] over (doc_id, toks) token arrays. */
+  private def rankKeyedOf(toks: DataFrame, minSpan: Int, partitions: Int,
+      chunk: Int, vocabBytesCap: Long = VocabBytesCap): (DataFrame, Seq[String]) = {
+    val spark = toks.sparkSession
     import spark.implicits._
     rankKeyedRuns.incrementAndGet()
     val L = minSpan
@@ -480,22 +498,20 @@ object SuffixDedup {
     // one row per suffix; short suffixes can never flag (eligibility
     // below) but still serve as rank PROVIDERS for the doubling —
     // interior lookups of an eligible suffix stay inside its document
-    // three consumers (vocab size, vocab collect, round-0 rank) —
-    // materialize the tokenize+explode once instead of re-running the
-    // regex split per job
+    // two consumers (the vocab collect, the round-0 rank) —
+    // materialize the tokenize+explode once; lazy, because the first
+    // of them, the vocabulary's distinct, scans every partition
     // NOT widened (r17 audit): the tokenize pass is ~2.5 s serial at
     // gate scale, but every downstream doubling round inherits the
     // width, and the loop's ~30 small stages at 32 tasks each cost
     // MORE in per-task overhead (measured task_ms 26 k → 96 k, wall
     // up ~2×) than the serial tokenize saves. At production scale the
     // scan is wide on its own and the rounds carry real data per task.
-    val tokened = spark.read.parquet(s"$sfDir/documents.parquet")
-      .select(col("doc_id"),
-        expr(graft.text.Tok.alphaToks).as("toks"))
+    val tokened = toks
       .select(col("doc_id"), size(col("toks")).as("dlen"),
         posexplode(col("toks")).as(Seq("off", "tok")))
       .select(col("doc_id"), col("dlen"), col("off"), col("tok"))
-      .localCheckpoint()
+      .localCheckpoint(eager = false)
     // initial token rank: a vocabulary small enough to broadcast makes
     // round 0 a map-only pass (natural-language type counts fit ~1M
     // comfortably); otherwise the generic distributed rank. ONE job:
@@ -560,7 +576,9 @@ object SuffixDedup {
       .select((col("doc_id") +: col("dlen") +: col("off") +: keyCols): _*)
       .filter(col("dlen") - col("off") >= L) // suffix long enough to span
       .drop("dlen")
-      .localCheckpoint() // grouped and joined by the flagging heads
+      // grouped and joined by the flagging heads, whose first stage
+      // scans every partition: lazy, so that stage fills it
+      .localCheckpoint(eager = false)
     (keyed, keyNames)
   }
 

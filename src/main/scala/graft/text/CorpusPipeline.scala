@@ -24,9 +24,8 @@ object CorpusPipeline {
   /** (doc_id, n_tokens, pack_id) for the cleaned, quality-filtered,
     * deduplicated corpus, packed at `budget` tokens. */
   def prepare(spark: SparkSession, sfDir: String, budget: Long = 512L,
-      minTokens: Long = 5L, partitions: Int = 32): DataFrame =
-    prepareDf(spark.read.parquet(s"$sfDir/documents.parquet"),
-      budget, minTokens, partitions)
+      minTokens: Long = 5L): DataFrame =
+    prepareDf(spark.read.parquet(s"$sfDir/documents.parquet"), budget, minTokens)
 
   /** The pipeline upgraded to the ACTUAL training artifact: after
     * scrub → quality → dedup, documents are tokenized to BPE TOKEN IDS
@@ -39,7 +38,7 @@ object CorpusPipeline {
     * pins the manual stage composition and the standalone BPE-id
     * operator. */
   def prepareIds(spark: SparkSession, sfDir: String, budget: Long = 512L,
-      minTokens: Long = 5L, merges: Int = 8, partitions: Int = 32,
+      minTokens: Long = 5L, merges: Int = 8,
       mergesDump: DumpSink = DumpSink.discard): DataFrame = {
     import spark.implicits._
     // widen the 1-file scan before the regex scrub: the checkpoint
@@ -57,8 +56,9 @@ object CorpusPipeline {
           .cast("long").as("n_tokens"))
       .filter(col("n_tokens") >= minTokens)
       // dedup keys AND the semi-join probe read this; materialize the
-      // regex-heavy scrub once instead of twice
-      .localCheckpoint()
+      // regex-heavy scrub once instead of twice (lazy: the dedup key
+      // shuffle scans every partition and fills it)
+      .localCheckpoint(eager = false)
     val keep = toks
       .groupBy(md5(col("clean_text")).as("k"))
       .agg(min(col("doc_id")).as("doc_id"))
@@ -73,7 +73,7 @@ object CorpusPipeline {
       // two-column encode result so the per-doc BPE merge loop runs
       // once, not twice (the checkpointed frame is doc_id+count only)
       .localCheckpoint()
-    SequencePacking.packByPrefixSum(ids, budget, partitions).toDF()
+    SequencePacking.packByPrefixSum(ids, budget, spark.sparkContext.defaultParallelism).toDF()
       .select(col("doc_id"), col("n_tokens").as("n_bpe_tokens"), col("pack_id"))
   }
 
@@ -88,17 +88,20 @@ object CorpusPipeline {
     * oracle (the text_excise CTE chained into the packing CTEs). */
   def prepareDecontaminated(spark: SparkSession, sfDir: String,
       budget: Long = 512L, minTokens: Long = 5L, minSpan: Int = 8,
-      benchMod: Int = 37, partitions: Int = 32): DataFrame =
+      benchMod: Int = 37): DataFrame =
     prepareDf(
       graft.dedup.SuffixDedup.exciseBenchmarkSpans(spark, sfDir, minSpan, benchMod)
         .select(col("doc_id"), col("clean_text").as("text")),
-      budget, minTokens, partitions)
+      budget, minTokens)
 
   /** [[prepare]] on any (doc_id, text) frame — the batch twin the
     * streaming pipeline (graft.streaming.StreamingCorpusPipeline) is
-    * differential-tested against on every consumed prefix. */
+    * differential-tested against on every consumed prefix. Packing
+    * runs at the cluster's default parallelism: its range layout holds
+    * two longs per kept document, so more partitions than cores only
+    * add tasks. */
   def prepareDf(docs: DataFrame, budget: Long = 512L,
-      minTokens: Long = 5L, partitions: Int = 32): DataFrame = {
+      minTokens: Long = 5L): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
     // same widening rationale as prepareIds: the regex scrub must not
@@ -108,7 +111,7 @@ object CorpusPipeline {
         expr("size(filter(split(clean_text, '\\\\s+'), x -> x != ''))")
           .cast("long").as("n_tokens"))
       .filter(col("n_tokens") >= minTokens)
-      .localCheckpoint() // two consumers, one scrub (see prepareIds)
+      .localCheckpoint(eager = false) // two consumers, one scrub (see prepareIds)
     // keep the first (min doc_id) copy of each distinct cleaned text;
     // the shuffle key is the 16-byte digest, never the text
     val keep = toks
@@ -118,6 +121,6 @@ object CorpusPipeline {
     val kept = toks.select(col("doc_id"), col("n_tokens"))
       .join(keep, Seq("doc_id"), "left_semi")
       .as[SequencePacking.DocTokens]
-    SequencePacking.packByPrefixSum(kept, budget, partitions).toDF()
+    SequencePacking.packByPrefixSum(kept, budget, spark.sparkContext.defaultParallelism).toDF()
   }
 }

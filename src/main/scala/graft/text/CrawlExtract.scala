@@ -37,36 +37,41 @@ object CrawlExtract {
     val spark = shards.sparkSession
     import spark.implicits._
     shards.select("doc_id", "shard").as[(Long, Array[Byte])]
-      .flatMap { case (id, shard) =>
-        Warc.memberSlices(shard).getOrElse(Seq.empty).iterator.zipWithIndex
-          .flatMap { case (slice, i) =>
-            Warc.records(slice).getOrElse(Seq.empty).iterator
-              .filter(_.warcType == "response")
-              .flatMap { r =>
-                for {
-                  wire <- Warc.httpPayload(r.block)
-                  // transfer codings first (RFC 9112 §6.1: hop
-                  // framing), then content codings (RFC 9110),
-                  // then the charset — each layer wraps the next
-                  unframed <- Warc.httpHeader(r.block, "Transfer-Encoding") match {
-                    case Some(te) => Warc.transferDecode(te, wire)
-                    case None => Some(wire)
-                  }
-                  body <- Warc.httpHeader(r.block, "Content-Encoding") match {
-                    case Some(e) => CompressedIngest.contentDecode(e, unframed)
-                    case None => Some(unframed)
-                  }
-                  ctype = Warc.httpHeader(r.block, "Content-Type")
-                  (cs, decoded) = CharsetSniff.decode(ctype, body)
-                  text <- mediaType(ctype) match {
-                    case "text/html" | "application/xhtml+xml" =>
-                      Html.extractText(decoded)
-                    case "text/plain" => Some(decoded)
-                    case _ => None // JSON/PDF/images: decline, don't garble
-                  }
-                } yield Extracted(id, i, r.targetUri, cs, text)
-              }
-          }.toSeq
+      .mapPartitions { rows =>
+        // one content decoder per partition: a zstd body reuses its
+        // native context, which the task's completion frees
+        val decode = CompressedIngest.ContentDecoder.forTask()
+        rows.flatMap { case (id, shard) =>
+          Warc.memberSlices(shard).getOrElse(Seq.empty).iterator.zipWithIndex
+            .flatMap { case (slice, i) =>
+              Warc.records(slice).getOrElse(Seq.empty).iterator
+                .filter(_.warcType == "response")
+                .flatMap { r =>
+                  for {
+                    wire <- Warc.httpPayload(r.block)
+                    // transfer codings first (RFC 9112 §6.1: hop
+                    // framing), then content codings (RFC 9110),
+                    // then the charset — each layer wraps the next
+                    unframed <- Warc.httpHeader(r.block, "Transfer-Encoding") match {
+                      case Some(te) => Warc.transferDecode(te, wire)
+                      case None => Some(wire)
+                    }
+                    body <- Warc.httpHeader(r.block, "Content-Encoding") match {
+                      case Some(e) => decode(e, unframed)
+                      case None => Some(unframed)
+                    }
+                    ctype = Warc.httpHeader(r.block, "Content-Type")
+                    (cs, decoded) = CharsetSniff.decode(ctype, body)
+                    text <- mediaType(ctype) match {
+                      case "text/html" | "application/xhtml+xml" =>
+                        Html.extractText(decoded)
+                      case "text/plain" => Some(decoded)
+                      case _ => None // JSON/PDF/images: decline, don't garble
+                    }
+                  } yield Extracted(id, i, r.targetUri, cs, text)
+                }
+            }.toSeq
+        }
       }
   }
 

@@ -15,8 +15,9 @@ import org.apache.spark.sql.functions._
   * Classic two-pass formulation instead:
   *   1. range-partition + sort by the order column (global order
   *      across partitions, local order within);
-  *   2. per-partition token totals — one tiny row per partition — are
-  *      cumulated on the driver into per-partition START OFFSETS;
+  *   2. per-partition token totals — one long per partition, from the
+  *      job that fills the checkpoint of the layout — are cumulated on
+  *      the driver into per-partition START OFFSETS;
   *   3. a map-only second pass adds the broadcast offset to each
   *      partition's local running sum.
   * Both passes are narrow over the materialized layout; the only
@@ -42,17 +43,23 @@ object SequencePacking {
     val spark = toks.sparkSession
     import spark.implicits._
     // materialize the ordered layout once: both passes must see the
-    // SAME partition boundaries, and each row must carry its pid
-    // (localCheckpoint is eager, so pid values are pinned here)
+    // SAME partition boundaries, and each row must carry its pid. The
+    // checkpoint is lazy: its first reader is the totals job below,
+    // one task per partition, so that job pins the pid values
     val parts = toks.toDF()
       .repartitionByRange(partitions, col("doc_id"))
       .sortWithinPartitions(col("doc_id"))
       .withColumn("pid", spark_partition_id())
-      .localCheckpoint()
-    val totals = parts.groupBy("pid").agg(sum("n_tokens").as("t"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val offsets = (0 until partitions)
-      .scanLeft(0L)((acc, pid) => acc + totals.getOrElse(pid, 0L))
+      .localCheckpoint(eager = false)
+    // per-partition token totals in partition order, in one job
+    val nIdx = parts.schema.fieldIndex("n_tokens")
+    val totals = spark.sparkContext.runJob(parts.queryExecution.toRdd,
+      (it: Iterator[org.apache.spark.sql.catalyst.InternalRow]) => {
+        var t = 0L
+        it.foreach(r => t += r.getLong(nIdx))
+        t
+      })
+    val offsets = totals.scanLeft(0L)(_ + _)
     val bc = spark.sparkContext.broadcast(offsets)
     // rows within one upstream partition share a pid and stay
     // contiguous; the running sum re-initializes from the broadcast

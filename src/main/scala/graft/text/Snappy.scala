@@ -14,8 +14,9 @@ import org.apache.commons.compress.compressors.snappy.{FramedSnappyCompressorInp
   * must fill exactly its varint-declared length from exactly the input,
   * and a declared length past `maxLen` declines before any decode.
   * Copy offsets reach back at most 64 KiB, the block size every snappy
-  * writer (this one included) compresses in. Same totality contract as
-  * [[Zstd]]/[[Lz4]].
+  * writer (this one included) compresses in, and never past the start
+  * of the block: a raw block's copy window is its declared length,
+  * capped at 64 KiB. Same totality contract as [[Zstd]]/[[Lz4]].
   *
   * The compressor emits raw blocks (greedy hash-table matches,
   * 2-byte-offset copies) and [[compressFramed]] wraps them in
@@ -36,13 +37,28 @@ object Snappy {
       if (b.length >= 10 && java.util.Arrays.equals(b, 0, 10, FrameMagic, 0, 10))
         CompressedIngest.readAtMost(new FramedSnappyCompressorInputStream(
           in, Window, FramedSnappyDialect.STANDARD), maxLen)
-      else {
-        val raw = new SnappyCompressorInputStream(in, Window)
-        if (raw.getSize > maxLen) None
-        else CompressedIngest.readAtMost(raw, maxLen)
-          .filter(out => out.length == raw.getSize && in.available == 0)
+      else declaredLength(b).filter(_ <= maxLen).flatMap { n =>
+        // the reader allocates three windows; a copy cannot reach back
+        // further than the bytes the block declares
+        val raw = new SnappyCompressorInputStream(in, math.max(1L, math.min(n, Window)).toInt)
+        CompressedIngest.readAtMost(raw, maxLen)
+          .filter(out => out.length == n && in.available == 0)
       }
     } catch { case _: java.io.IOException | _: RuntimeException => None }
+
+  /** A raw block's varint preamble: its uncompressed length, or None
+    * when the preamble is cut short or longer than five bytes. */
+  private def declaredLength(b: Array[Byte]): Option[Long] = {
+    var n = 0L
+    var i = 0
+    while (i < 5 && i < b.length) {
+      val c = b(i) & 0xff
+      n |= (c & 0x7fL) << (7 * i)
+      if ((c & 0x80) == 0) return Some(n)
+      i += 1
+    }
+    None
+  }
 
   /** CRC32C masked per the framing spec. */
   private def maskedCrc(b: Array[Byte], off: Int, len: Int): Long = {

@@ -43,8 +43,27 @@ object Zstd {
     * that ID (RFC 8878 §5). An ID the map lacks declines. */
   def decompress(b: Array[Byte], maxLen: Int,
       dicts: Map[Long, Dict]): Option[Array[Byte]] = {
+    val d = new Decoder
+    try d.decompress(b, maxLen, dicts) finally d.close()
+  }
+
+  /** [[decompress]] over one native context held for many inputs:
+    * creating and freeing a context costs about 43 µs, more than
+    * decoding a small page. Not thread-safe; [[close]] frees the
+    * context, and no call may follow it. */
+  final class Decoder extends AutoCloseable {
+    private val ctx = new ZstdDecompressCtx
+
+    def decompress(b: Array[Byte], maxLen: Int = MaxBytes,
+        dicts: Map[Long, Dict] = Map.empty): Option[Array[Byte]] =
+      decodeFrames(ctx, b, maxLen, dicts)
+
+    def close(): Unit = ctx.close()
+  }
+
+  private def decodeFrames(ctx: ZstdDecompressCtx, b: Array[Byte], maxLen: Int,
+      dicts: Map[Long, Dict]): Option[Array[Byte]] = {
     if (b.isEmpty) return None // zero frames ≠ empty payload
-    val ctx = new ZstdDecompressCtx
     try {
       val out = new java.io.ByteArrayOutputStream()
       var p = 0
@@ -77,7 +96,6 @@ object Zstd {
       }
       Some(out.toByteArray)
     } catch { case _: ZstdException | _: Malformed => None }
-    finally ctx.close()
   }
 
   // ── little-endian scalar reads ────────────────────────────────────

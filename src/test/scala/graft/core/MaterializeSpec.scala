@@ -26,6 +26,10 @@ class MaterializeSpec extends SparkSpec {
       Materialize.frame(df, "spec_reliable").collect().map(_.toString).sorted
     }
     assert(a.toSeq === b.toSeq)
+    // the lazy local form, filled by its first reader
+    val c = Materialize.frame(df, "spec_lazy", eager = false).collect()
+      .map(_.toString).sorted
+    assert(a.toSeq === c.toSeq)
   }
 
   test("SigDump pair tail: identical pairs under both checkpoint forms") {

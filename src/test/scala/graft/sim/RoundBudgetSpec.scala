@@ -14,7 +14,12 @@ import graft.SparkSpec
   * result. A library call writes no side dump (its sink discards), so
   * no dump write is counted either. A Dataset round added back to a
   * trainer or to the PQ tail, or a dump written without a gate, fails
-  * here instead of only slowing the benchmark. */
+  * here instead of only slowing the benchmark.
+  *
+  * The crawl chain and the near-dup family are pinned the same way:
+  * under adaptive execution each shuffle or broadcast is one job, so a
+  * checkpoint that gets its own job again, a frame evaluated twice or
+  * a payload join that broadcasts once more shows up here. */
 class RoundBudgetSpec extends SparkSpec {
 
   /** (SQL executions, jobs) started while `body` runs. */
@@ -108,7 +113,76 @@ class RoundBudgetSpec extends SparkSpec {
   test("simhashPairsWide (the crawl_dedup call): no side-dump round") {
     val (sql, jobs) = counted { graft.dedup.Dedup.simhashPairsWide(spark, sf()).collect() }
     info(s"simhashPairsWide: $sql SQL executions, $jobs jobs")
-    assert(sql === 4)
-    assert(jobs === 13)
+    // the signature checkpoint and the pair query; the regime pick's
+    // count comes from the job that fills the checkpoint
+    assert(sql === 2)
+    assert(jobs === 7)
+  }
+
+  test("minhashLsh (the crawl_dedup call): one shingling pass") {
+    val (sql, jobs) = counted { graft.dedup.Dedup.minhashLsh(spark, sf()).collect() }
+    info(s"minhashLsh: $sql SQL executions, $jobs jobs")
+    assert(sql === 2)
+    // adaptive execution picks the first verify join's build side when
+    // the candidate stage finishes: the shingle broadcast the second
+    // join reads (6 jobs), or the candidates (7); which one varies from
+    // run to run
+    assert(jobs >= 6 && jobs <= 7)
+  }
+
+  test("EditDedup.editPairs (the crawl_dedup call): one broadcast per payload") {
+    val (sql, jobs) = counted { graft.dedup.EditDedup.editPairs(spark, sf()).collect() }
+    info(s"editPairs: $sql SQL executions, $jobs jobs")
+    assert(sql === 2)
+    assert(jobs === 10)
+  }
+
+  test("SuffixDedup.exciseBenchmarkSpans (the crawl_dedup call): one documents read") {
+    val (sql, jobs) = counted {
+      graft.dedup.SuffixDedup.exciseBenchmarkSpans(spark, sf()).collect()
+    }
+    info(s"exciseBenchmarkSpans: $sql SQL executions, $jobs jobs")
+    assert(sql === 5)
+    assert(jobs === 10)
+  }
+
+  test("CorpusPipeline.prepareDecontaminated (the crawl_dedup call)") {
+    val (sql, jobs) = counted {
+      graft.text.CorpusPipeline.prepareDecontaminated(spark, sf()).collect()
+    }
+    info(s"prepareDecontaminated: $sql SQL executions, $jobs jobs")
+    assert(sql === 7)
+    assert(jobs === 16)
+  }
+
+  private def pairsAndDocs() = {
+    val pairs = graft.dedup.Dedup.minhashLsh(spark, sf()).localCheckpoint()
+    (pairs, spark.read.parquet(s"${sf()}/documents.parquet").select("doc_id"))
+  }
+
+  test("connectedComponents (the crawl_dedup call): one bounded collect, no count") {
+    val (pairs, docs) = pairsAndDocs()
+    val (sql, jobs) = counted {
+      graft.dedup.Dedup.connectedComponents(docs, "doc_id", pairs).collect()
+    }
+    info(s"connectedComponents: $sql SQL executions, $jobs jobs")
+    assert(sql === 2)
+    assert(jobs === 2)
+  }
+
+  test("connectedComponents reads each pair row once, in both regimes") {
+    import spark.implicits._
+    val (pairs, docs) = pairsAndDocs()
+    val n = pairs.count()
+    assert(n > 1)
+    // the driver path, hash-min outright, and hash-min after the
+    // bounded collect overflows a one-pair budget
+    for (driverMaxEdges <- Seq(4000000L, 0L, 1L)) {
+      val read = spark.sparkContext.longAccumulator(s"pairs read ($driverMaxEdges)")
+      val tapped = pairs.as[(Long, Long)].map { p => read.add(1); p }.toDF("i", "j")
+      graft.dedup.Dedup.connectedComponents(docs, "doc_id", tapped,
+        driverMaxEdges = driverMaxEdges).collect()
+      assert(read.value === n, s"driverMaxEdges = $driverMaxEdges")
+    }
   }
 }

@@ -113,4 +113,22 @@ class SnappySpec extends AnyFunSuite {
     assert(Snappy.decompress(Snappy.compress(("y" * 90000).getBytes),
       maxLen = 512).isEmpty)
   }
+
+  test("a raw block declaring more than maxLen declines before decoding") {
+    // varint preamble for 2^30 bytes, then one valid 4-byte literal:
+    // only the declared length can make this decline
+    val declared = Array[Byte](0x80.toByte, 0x80.toByte, 0x80.toByte, 0x80.toByte, 0x04)
+    val body = Array[Byte](3 << 2, 'a', 'b', 'c', 'd')
+    assert(Snappy.decompress(declared ++ body, maxLen = 1 << 20).isEmpty)
+    // a preamble that never ends (six continuation bytes) declines too
+    assert(Snappy.decompress(Array.fill[Byte](6)(0x80.toByte) ++ body).isEmpty)
+    // the same literal under a preamble that declares it exactly decodes,
+    // with a copy window sized to the 4 declared bytes
+    assert(new String(Snappy.decompress(Array[Byte](4) ++ body).get) === "abcd")
+    // a copy reaching back past the start of a small block declines
+    val farCopy = Array[Byte](8, 3 << 2, 'a', 'b', 'c', 'd', ((4 - 1) << 2 | 2).toByte, 9, 0)
+    assert(Snappy.decompress(farCopy).isEmpty)
+    val nearCopy = Array[Byte](8, 3 << 2, 'a', 'b', 'c', 'd', ((4 - 1) << 2 | 2).toByte, 4, 0)
+    assert(new String(Snappy.decompress(nearCopy).get) === "abcdabcd")
+  }
 }

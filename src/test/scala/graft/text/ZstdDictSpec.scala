@@ -54,6 +54,22 @@ class ZstdDictSpec extends AnyFunSuite {
     assert(Zstd.decompress(vec("s00.zst"), 64 * 1024 * 1024, wrong) === None)
   }
 
+  test("one Decoder over many inputs answers as one-shot decompress does") {
+    // a held context must not carry a dictionary, a failed frame or a
+    // short output buffer from one input into the next
+    val dicts = Map(cliDict.dictId -> cliDict)
+    val plain = Zstd.compress(("plain text " * 500).getBytes("UTF-8"))
+    val inputs = Seq(
+      (vec("s00.zst"), dicts), (plain, dicts), (vec("s00.zst"), Map.empty[Long, Zstd.Dict]),
+      (java.util.Arrays.copyOf(plain, plain.length / 2), dicts), (plain, Map.empty[Long, Zstd.Dict]),
+      (vec("s07.zst"), dicts), (Array.empty[Byte], dicts), (vec("s01_l19.zst"), dicts))
+    val d = new Zstd.Decoder
+    try for (((b, ds), i) <- inputs.zipWithIndex) {
+      val want = Zstd.decompress(b, 64 * 1024 * 1024, ds).map(_.toSeq)
+      assert(d.decompress(b, 64 * 1024 * 1024, ds).map(_.toSeq) === want, s"input $i")
+    } finally d.close()
+  }
+
   test("built dictionary: parse roundtrip, then compress/decompress with it") {
     val samples = (0 until 8).map(i =>
       (s"sample $i " + "spark window merge query " * 40).getBytes("UTF-8"))
