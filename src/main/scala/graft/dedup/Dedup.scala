@@ -679,8 +679,8 @@ object Dedup {
     * The component computation runs over the EDGE GRAPH'S VERTICES
     * ONLY, never the corpus: a document with no near-dup pair can
     * never change label, so singletons stay out entirely and rejoin
-    * once at the end (a broadcast lookup on the driver path, where the
-    * converged label table is graph-sized). Two regimes behind one API:
+    * once at the end (broadcast — the converged label table is
+    * graph-sized). Two regimes behind one API:
     *
     *  - Edge lists up to `driverMaxEdges` pairs collapse to a DRIVER
     *    union-find (path-halving): the near-dup graph of even a
@@ -695,12 +695,12 @@ object Dedup {
     *    truncated with localCheckpoint — an iterative algorithm
     *    otherwise compounds its plan each round.
     *
-    * The regime is picked by the driver path itself, in one job: it
-    * collects the edge list only while it stays within the budget
-    * ([[collectAtMost]]), so no size hint or count pre-scan is trusted
-    * with the driver's memory, and an overflow falls through to
-    * hash-min. `pairs` is evaluated once either way: that job fills the
-    * edge checkpoint hash-min reads.
+    * The regime is picked by one job that fills the edge checkpoint
+    * and counts it, so `pairs` is evaluated once either way, and no
+    * size hint is trusted with the driver's memory: the edge list is
+    * collected only when that count is within the budget, so the
+    * driver never receives more than 2 · `driverMaxEdges` edges, and
+    * an overflow runs hash-min over the filled checkpoint.
     *
     * Output: (doc_id, cluster_id) for every document in `docs`
     * (singletons map to themselves). */
@@ -708,8 +708,8 @@ object Dedup {
       maxIters: Int = 20, driverMaxEdges: Long = 4000000L): DataFrame = {
     // both directions from one pass over the pairs (a union of the
     // pairs with their mirror evaluated every pair producer twice);
-    // lazy, because its first reader — the bounded collect, or
-    // hash-min's label seed — scans every partition at full width
+    // lazy, because its first reader — the count, or hash-min's label
+    // seed — scans every partition at full width
     val edges = pairs
       .select(explode(array(
         struct(col("i").cast("long").as("src"), col("j").cast("long").as("dst")),
@@ -717,57 +717,23 @@ object Dedup {
         .as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
       .localCheckpoint(eager = false)
+    val small = driverMaxEdges > 0 &&
+      edges.queryExecution.toRdd.count() / 2 <= driverMaxEdges
     lastHashMinIters = 0 // driver path reports 0; hash-min overwrites
-    val ids = docs.select(col(idCol).as("doc_id"))
-    val onDriver =
-      if (driverMaxEdges > 0) collectAtMost(edges, 2L * driverMaxEdges) else None
-    onDriver match {
-      case Some(e) =>
-        // the driver-sized label map goes out as a broadcast variable;
-        // the lookup is a map over the documents, no join
-        val bc = docs.sparkSession.sparkContext.broadcast(driverUnionFind(e))
-        val label = udf((id: Long) => bc.value.getOrElse(id, id))
-        ids.select(col("doc_id"), label(col("doc_id")).as("cluster_id"))
-      case None =>
-        // the large-regime label table is exactly what must NOT be
-        // collected to the driver
-        ids.join(hashMinLabels(edges, maxIters), col("doc_id") === col("id"), "left")
-          .select(col("doc_id"), coalesce(col("comp"), col("doc_id")).as("cluster_id"))
-    }
+    val labels = if (small) driverUnionFind(edges) else hashMinLabels(edges, maxIters)
+    // broadcast only the driver-sized result; the large-regime label
+    // table is exactly what must NOT be collected to the driver
+    val joined = if (small) broadcast(labels) else labels
+    docs.select(col(idCol).as("doc_id"))
+      .join(joined, col("doc_id") === col("id"), "left")
+      .select(col("doc_id"), coalesce(col("comp"), col("doc_id")).as("cluster_id"))
   }
 
-  /** The (src, dst) rows of `edges` as one flat array (src, dst, src,
-    * dst, …), or None when there are more than `budget`: one job, in
-    * which each task returns at most budget + 1 edges and the driver
-    * keeps no partition's edges once the running total passes the
-    * budget. */
-  private def collectAtMost(edges: DataFrame, budget: Long): Option[Array[Long]] = {
-    val cap = budget + 1
-    val parts = scala.collection.mutable.ArrayBuffer.empty[Array[Long]]
-    var n = 0L
-    edges.sparkSession.sparkContext.runJob(edges.queryExecution.toRdd,
-      (it: Iterator[org.apache.spark.sql.catalyst.InternalRow]) => {
-        val b = Array.newBuilder[Long]
-        var k = 0L
-        while (k < cap && it.hasNext) {
-          val r = it.next()
-          b += r.getLong(0)
-          b += r.getLong(1)
-          k += 1
-        }
-        b.result()
-      },
-      (_: Int, part: Array[Long]) =>
-        if (n <= budget) {
-          n += part.length / 2
-          if (n <= budget) parts += part
-        })
-    if (n <= budget) Some(parts.toArray.flatten) else None
-  }
-
-  /** Small-graph path: union-find with path halving + min-id
-    * canonical roots over a flat (src, dst) edge array; id → comp. */
-  private def driverUnionFind(edges: Array[Long]): Map[Long, Long] = {
+  /** Small-graph path: collect the edge list, union-find with path
+    * halving + min-id canonical roots, return (id, comp) rows. */
+  private def driverUnionFind(edges: DataFrame): DataFrame = {
+    val spark = edges.sparkSession
+    import spark.implicits._
     val parent = scala.collection.mutable.Map.empty[Long, Long]
     def find(x0: Long): Long = {
       var x = x0
@@ -777,16 +743,15 @@ object Dedup {
       }
       x
     }
-    var e = 0
-    while (e < edges.length) {
-      val (a, b) = (edges(e), edges(e + 1))
-      parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
-      val (ra, rb) = (find(a), find(b))
-      // union by min id keeps the canonical-copy semantics explicit
-      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
-      e += 2
-    }
-    parent.keys.toSeq.map(id => id -> find(id)).toMap
+    edges.select(col("src").cast("long"), col("dst").cast("long"))
+      .collect().foreach { r =>
+        val (a, b) = (r.getLong(0), r.getLong(1))
+        parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
+        val (ra, rb) = (find(a), find(b))
+        // union by min id keeps the canonical-copy semantics explicit
+        if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+      }
+    parent.keys.toSeq.map(id => (id, find(id))).toDF("id", "comp")
   }
 
   /** Iterations the last [[hashMinLabels]] run took to reach its

@@ -334,18 +334,27 @@ object EditDedup {
     //    higher-order functions are CodegenFallback, which both
     //    interprets the per-row lambdas (array allocation per pair)
     //    and kicks the enclosing join out of whole-stage codegen
-    //  - the DP is the second conjunct of ONE filter after the L1
-    //    bound, so `&&` short-circuits it to the L1 survivors
-    // Both sides read one payload projection of the reps (length,
-    // counts and text), so the two payload joins share one broadcast.
+    //  - the L1 phase attaches only (len, cv) — ~300 B/row; the
+    //    multi-KB normalized TEXTS are joined AFTER the filter, so
+    //    only L1 survivors (the handful the bound can't separate)
+    //    are ever copied through a join row with payloads attached
+    // Each phase's two joins read one projection of the reps, renamed
+    // per side, so each phase broadcasts once.
     val l1 = (0 until 36).map(i =>
       abs(element_at(col("cv_a"), i + 1) - element_at(col("cv_b"), i + 1)))
       .reduce(_ + _)
     val thetaPair = least(lit(MaxDist.toLong),
       expr(s"(len_a + len_b) DIV $LenBucket"))
-    def payload(side: String): DataFrame =
+    def counts(side: String): DataFrame =
       norm.select(col("doc_id").as(s"doc_$side"), col("len").as(s"len_$side"),
-        col("cv").as(s"cv_$side"), col("nt").as(s"nt_$side"))
+        col("cv").as(s"cv_$side"))
+    def texts(side: String): DataFrame =
+      norm.select(col("doc_id").as(s"doc_$side"), col("nt").as(s"nt_$side"))
+    val l1Survivors = pairIds
+      .join(counts("a"), Seq("doc_a"))
+      .join(counts("b"), Seq("doc_b"))
+      .filter(l1 <= thetaPair * 2)
+      .select(col("doc_a"), col("doc_b"), col("len_a"), col("len_b"))
     // the DP band is the PAIR's own acceptance threshold θ, not the
     // global MaxDist ceiling: levenshtein(a, b, θ) returns the true
     // distance iff it is ≤ θ and -1 otherwise, so `dist >= 0` IS the
@@ -354,15 +363,15 @@ object EditDedup {
     // into the join condition twice (r18 plan audit). Reps are
     // distinct texts, so no dist-0 fast path is needed here —
     // identical texts never reach the DP at all.
-    val dp = expr(
-      s"""CAST(levenshtein(nt_a, nt_b, CAST(
-         |  least(CAST($MaxDist AS BIGINT), (len_a + len_b) DIV $LenBucket)
-         |  AS INT)) AS BIGINT)""".stripMargin)
-    val repPairs = pairIds
-      .join(payload("a"), Seq("doc_a"))
-      .join(payload("b"), Seq("doc_b"))
-      .filter(l1 <= thetaPair * 2 && dp >= 0)
-      .select(col("doc_a").as("ga"), col("doc_b").as("gb"), dp.as("dist"))
+    val repPairs = l1Survivors
+      .join(texts("a"), Seq("doc_a"))
+      .join(texts("b"), Seq("doc_b"))
+      .withColumn("dist", expr(
+        s"""CAST(levenshtein(nt_a, nt_b, CAST(
+           |  least(CAST($MaxDist AS BIGINT), (len_a + len_b) DIV $LenBucket)
+           |  AS INT)) AS BIGINT)""".stripMargin))
+      .filter(col("dist") >= 0)
+      .select(col("doc_a").as("ga"), col("doc_b").as("gb"), col("dist"))
     // ── expansion back to document pairs ────────────────────────────
     // within-group: every two holders of one text are a dist-0 pair
     // (0 ≤ θ always, θ ≥ 0); cross-group: each rep pair's distance

@@ -360,47 +360,21 @@ object CompressedIngest {
     * it is missing or unknown bytes arrive). `identity` passes
     * through; gzip/x-gzip, deflate (both wild flavors), zstd and
     * snappy map to their decoders; an unknown coding declines —
-    * never guess past an explicit label. */
+    * never guess past an explicit label. A caller decoding many
+    * bodies passes one `zstd` decoder for all of them, so a zstd body
+    * reuses its native context instead of creating one per call. */
   def contentDecode(encoding: String, b: Array[Byte],
-      maxLen: Int = MaxBytes): Option[Array[Byte]] = {
-    val d = new ContentDecoder
-    try d(encoding, b, maxLen) finally d.close()
-  }
-
-  /** [[contentDecode]] for many bodies: a zstd body reuses one native
-    * context ([[Zstd.Decoder]]), created at the first zstd body and
-    * freed by [[close]]. Not thread-safe; one per partition, from
-    * [[ContentDecoder.forTask]]. */
-  final class ContentDecoder extends AutoCloseable {
-    private var zstd: Zstd.Decoder = null
-
-    def apply(encoding: String, b: Array[Byte],
-        maxLen: Int = MaxBytes): Option[Array[Byte]] =
-      encoding.trim.toLowerCase(java.util.Locale.ROOT) match {
-        case "" | "identity" => Some(b)
-        case "gzip" | "x-gzip" => gunzip(b, maxLen)
-        case "deflate" => inflate(b, maxLen)
-        case "zstd" =>
-          if (zstd == null) zstd = new Zstd.Decoder
-          zstd.decompress(b, maxLen)
-        case "snappy" => Snappy.decompress(b, maxLen)
-        case "lz4" => Lz4.decompress(b, maxLen)
-        case _ => None // br etc.: documented boundary, decline honestly
-      }
-
-    def close(): Unit = if (zstd != null) { zstd.close(); zstd = null }
-  }
-
-  object ContentDecoder {
-    /** A decoder closed when the running task completes (a plain one
-      * off a task: the caller closes it). */
-    def forTask(): ContentDecoder = {
-      val d = new ContentDecoder
-      Option(org.apache.spark.TaskContext.get)
-        .foreach(_.addTaskCompletionListener[Unit](_ => d.close()))
-      d
+      maxLen: Int = MaxBytes,
+      zstd: Option[Zstd.Decoder] = None): Option[Array[Byte]] =
+    encoding.trim.toLowerCase(java.util.Locale.ROOT) match {
+      case "" | "identity" => Some(b)
+      case "gzip" | "x-gzip" => gunzip(b, maxLen)
+      case "deflate" => inflate(b, maxLen)
+      case "zstd" => zstd.fold(Zstd.decompress(b, maxLen))(_.decompress(b, maxLen))
+      case "snappy" => Snappy.decompress(b, maxLen)
+      case "lz4" => Lz4.decompress(b, maxLen)
+      case _ => None // br etc.: documented boundary, decline honestly
     }
-  }
 
   /** Gate surface (`text_warc_split`): per document, build the same
     * 3-record WARC as [[warcIngestReport]] but ALWAYS per-record-gzip

@@ -38,9 +38,10 @@ object CrawlExtract {
     import spark.implicits._
     shards.select("doc_id", "shard").as[(Long, Array[Byte])]
       .mapPartitions { rows =>
-        // one content decoder per partition: a zstd body reuses its
-        // native context, which the task's completion frees
-        val decode = CompressedIngest.ContentDecoder.forTask()
+        // one zstd context per partition, freed when the task completes
+        val zstd = new Zstd.Decoder
+        Option(org.apache.spark.TaskContext.get)
+          .foreach(_.addTaskCompletionListener[Unit](_ => zstd.close()))
         rows.flatMap { case (id, shard) =>
           Warc.memberSlices(shard).getOrElse(Seq.empty).iterator.zipWithIndex
             .flatMap { case (slice, i) =>
@@ -57,7 +58,8 @@ object CrawlExtract {
                       case None => Some(wire)
                     }
                     body <- Warc.httpHeader(r.block, "Content-Encoding") match {
-                      case Some(e) => decode(e, unframed)
+                      case Some(e) =>
+                        CompressedIngest.contentDecode(e, unframed, zstd = Some(zstd))
                       case None => Some(unframed)
                     }
                     ctype = Warc.httpHeader(r.block, "Content-Type")

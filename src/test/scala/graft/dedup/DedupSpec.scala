@@ -88,8 +88,8 @@ class DedupSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(uf === hm)
     assert(Dedup.lastHashMinIters > 0, "forced threshold must engage hash-min")
-    // a positive budget the graph overflows: the bounded collect gives
-    // up and the call falls through to hash-min
+    // a positive budget the graph overflows: the edge count exceeds it,
+    // nothing is collected and the call falls through to hash-min
     val over = Dedup.connectedComponents(docs, "doc_id", pairs, driverMaxEdges = 1L)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(Dedup.lastHashMinIters > 0, "an overflowed budget must engage hash-min")

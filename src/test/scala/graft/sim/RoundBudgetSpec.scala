@@ -130,11 +130,13 @@ class RoundBudgetSpec extends SparkSpec {
     assert(jobs >= 6 && jobs <= 7)
   }
 
-  test("EditDedup.editPairs (the crawl_dedup call): one broadcast per payload") {
+  test("EditDedup.editPairs (the crawl_dedup call): one broadcast per payload phase") {
     val (sql, jobs) = counted { graft.dedup.EditDedup.editPairs(spark, sf()).collect() }
     info(s"editPairs: $sql SQL executions, $jobs jobs")
     assert(sql === 2)
-    assert(jobs === 10)
+    // one broadcast of (len, cv) for both L1 joins, one of the texts
+    // for both DP joins, one of the members for all four member joins
+    assert(jobs === 11)
   }
 
   test("SuffixDedup.exciseBenchmarkSpans (the crawl_dedup call): one documents read") {
@@ -160,14 +162,17 @@ class RoundBudgetSpec extends SparkSpec {
     (pairs, spark.read.parquet(s"${sf()}/documents.parquet").select("doc_id"))
   }
 
-  test("connectedComponents (the crawl_dedup call): one bounded collect, no count") {
+  test("connectedComponents (the crawl_dedup call): one counting fill, one collect") {
     val (pairs, docs) = pairsAndDocs()
     val (sql, jobs) = counted {
       graft.dedup.Dedup.connectedComponents(docs, "doc_id", pairs).collect()
     }
     info(s"connectedComponents: $sql SQL executions, $jobs jobs")
-    assert(sql === 2)
-    assert(jobs === 2)
+    // SQL executions: the lazy edge checkpoint, the edge collect and
+    // the result; jobs: the count that fills the checkpoint, the edge
+    // collect, the label broadcast and the result
+    assert(sql === 3)
+    assert(jobs === 4)
   }
 
   test("connectedComponents reads each pair row once, in both regimes") {
@@ -175,8 +180,8 @@ class RoundBudgetSpec extends SparkSpec {
     val (pairs, docs) = pairsAndDocs()
     val n = pairs.count()
     assert(n > 1)
-    // the driver path, hash-min outright, and hash-min after the
-    // bounded collect overflows a one-pair budget
+    // the driver path, hash-min outright, and hash-min after the count
+    // overflows a one-pair budget
     for (driverMaxEdges <- Seq(4000000L, 0L, 1L)) {
       val read = spark.sparkContext.longAccumulator(s"pairs read ($driverMaxEdges)")
       val tapped = pairs.as[(Long, Long)].map { p => read.add(1); p }.toDF("i", "j")
@@ -184,5 +189,49 @@ class RoundBudgetSpec extends SparkSpec {
         driverMaxEdges = driverMaxEdges).collect()
       assert(read.value === n, s"driverMaxEdges = $driverMaxEdges")
     }
+  }
+
+  test("connectedComponents over an overflowed budget ships no edge list to the driver") {
+    import org.apache.spark.sql.functions.col
+    // 100,000 two-document components in 4 partitions, over a 40,000-pair
+    // budget: the edge list the budget admits is 80,000 edges, at least
+    // 16 bytes each, and a collect that checked the budget per task
+    // would return all 200,000 edges before seeing the overflow
+    val budget = 40000L
+    val pairs = spark.range(0, 100000, 1, 4)
+      .select(col("id").as("i"), (col("id") + 100000).as("j"))
+    val docs = spark.range(0, 200000).toDF("doc_id")
+    val resultBytes = new java.util.concurrent.atomic.AtomicLong
+    val listener = new SparkListener {
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach(m => resultBytes.addAndGet(m.resultSize))
+    }
+    // hash-min's own joins would broadcast its label table, which also
+    // travels through the driver (bounded by the broadcast threshold,
+    // not by the edge budget): joins shuffle here, so the task results
+    // counted are the engine's own collects and counts
+    val noBroadcast = Seq("spark.sql.autoBroadcastJoinThreshold",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold")
+    val saved = noBroadcast.map(k => k -> spark.conf.getOption(k))
+    val sc = spark.sparkContext
+    ListenerDrain.waitUntilEmpty(sc)
+    noBroadcast.foreach(spark.conf.set(_, "-1"))
+    sc.addSparkListener(listener)
+    val clusters = try {
+      val n = graft.dedup.Dedup.connectedComponents(docs, "doc_id", pairs,
+        driverMaxEdges = budget).filter(col("cluster_id") =!= col("doc_id")).count()
+      ListenerDrain.waitUntilEmpty(sc)
+      n
+    } finally {
+      sc.removeSparkListener(listener)
+      saved.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    }
+    assert(graft.dedup.Dedup.lastHashMinIters > 0, "the overflow must run hash-min")
+    assert(clusters === 100000L)
+    info(s"task results: ${resultBytes.get} bytes")
+    assert(resultBytes.get < 2 * budget * 16)
   }
 }

@@ -23,11 +23,14 @@ Two modes:
         gain             the change wins at least 9/10 of the pairs and
                          its median is better by more than the parent's
                          interquartile distance
+        unresolved       the parent's own spread (interquartile distance
+                         over median) is wider than the metric's bound,
+                         and not every change run beats every parent run
         within bound     the change's median is no worse than the
-                         parent's by more than the metric's bound
+                         parent's by more than the bound (or, with a
+                         spread wider than the bound, every change run
+                         beats every parent run)
         worse than bound the change's median is worse by more than that
-        unresolved       worse by more than the bound while the parent's
-                         own spread is wider than the bound
       Bounds and directions come from BENCHMARK.json's `end_to_end` list.
       It also reports failed runs and whether each seed's output digest
       is equal on both sides.
@@ -76,14 +79,16 @@ def verdict(parent, change, wins, pairs, lower, bound):
     better = cmed < pmed if lower else cmed > pmed
     if better and wins * 10 >= 9 * pairs and abs(cmed - pmed) > pq3 - pq1:
         return "gain"
-    worse = (cmed - pmed) / pmed if lower else (pmed - cmed) / pmed
-    if bound is None or worse <= bound:
+    if bound is None:
         return "within bound"
+    # a spread wider than the bound cannot tell "unchanged" from
+    # "worse": only a change that beats the parent in every run passes
     if (pq3 - pq1) / pmed > bound:
         every = all(c < p for c in change for p in parent) if lower \
             else all(c > p for c in change for p in parent)
         return "within bound" if every else "unresolved"
-    return "worse than bound"
+    worse = (cmed - pmed) / pmed if lower else (pmed - cmed) / pmed
+    return "within bound" if worse <= bound else "worse than bound"
 
 
 def paired(path, bench):
